@@ -33,17 +33,18 @@ object SparkEntry {
     * unix_micros == the stored int64, so operators and collect-side
     * code (java.sql.Timestamp) are generation-independent.
     *
-    * SESSION CONTRACT (a deliberate, documented side effect): every
-    * `t()` call pins three session confs — UTC zone, nanosAsLong,
-    * inferTimestampNTZ=false — and does NOT restore them, because all
-    * three are read at EXECUTION time (zone by timestamp casts,
-    * the parquet annotations by each task's footer-to-Catalyst
-    * conversion), so a save/restore around the eager schema read
-    * would silently flip semantics when the action later runs.
-    * Queries in this object assume these settings for oracle parity;
-    * run them in a dedicated session (as Verify/Bench do, setting the
-    * same confs at construction) rather than one whose timestamp
-    * semantics other code depends on. */
+    * SESSION CONTRACT: queries in this object assume three session
+    * confs for oracle parity — UTC zone, nanosAsLong,
+    * inferTimestampNTZ=false. [[GraftSession]] sets them at
+    * construction for every session in this codebase (Bench, Verify,
+    * tools, tests). `t()` still pins them (a deliberate, documented
+    * side effect) for sessions built elsewhere, and does NOT restore
+    * them, because all three are read at EXECUTION time (zone by
+    * timestamp casts, the parquet annotations by each task's
+    * footer-to-Catalyst conversion), so a save/restore around the
+    * eager schema read would silently flip semantics when the action
+    * later runs. Run these queries in a GraftSession rather than one
+    * whose timestamp semantics other code depends on. */
   private val nanosCols: Map[String, Seq[String]] = Map("events" -> Seq("ts"))
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame = {

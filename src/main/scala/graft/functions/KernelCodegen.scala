@@ -15,8 +15,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, Codegen
   * identical cost class to the boxed call CodegenFallback made, and
   * noise next to the per-doc md5/scan loops inside. What changes is
   * the NEIGHBORS: measured on the MinHash signature→band-key chain
-  * at factor 100 (`tools/MinhashCodegenProbe`, BENCH_NOTES round
-  * 12), fusing the stage cut wall time ~11% and collapsed the
+  * at factor 100 (BENCH_NOTES "Round 12: kernel codegen A/B"),
+  * fusing the stage cut wall time ~11% and collapsed the
   * run-to-run spread. [[MinhashSig]] uses the same shape with a
   * direct static invoke (object static forwarder) — measured first,
   * kept as written; this trait generalizes the decision to kernels

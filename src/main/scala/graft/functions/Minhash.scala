@@ -223,8 +223,8 @@ case class DistinctShingles(child: Expression, k: Int)
   * is the ENCLOSING stage: CodegenFallback forces the whole stage
   * out of WholeStageCodegen, interpreting every surrounding
   * expression (tokenizer regexps, band-key md5/concat_ws), while
-  * this keeps the stage fused. Measured at factor 100 (probe
-  * `MinhashCodegenProbe`, BENCH_NOTES round 12) and adopted as the
+  * this keeps the stage fused. Measured at factor 100 (BENCH_NOTES
+  * "Round 12: kernel codegen A/B") and adopted as the
   * precedent for hot kernels; the fallback siblings sit in stages
   * whose surrounding work is trivial by comparison. */
 case class MinhashSig(child: Expression, k: Int, n: Int)

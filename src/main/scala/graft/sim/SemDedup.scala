@@ -537,7 +537,8 @@ object SemDedup {
     // then exact on the uncertain band and constant-true on the sure
     // band. One dataflow: no checkpoint, no second self-join (the
     // split-and-union formulations measured 2–2.5× this shape at
-    // f50 — SemLbStage), and the mid-pipeline exchange payload drops
+    // f50 — BENCH_NOTES "r19: SDC lower-bound rescore skip"), and the
+    // mid-pipeline exchange payload drops
     // from |pairs|·d floats to |uncertain|·d.
     val cand = joined.filter(admit)
       .select(col("id_a"), col("id_b"), sure.as("__sure"))

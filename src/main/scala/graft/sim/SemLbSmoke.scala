@@ -1,6 +1,5 @@
 package graft.sim
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Factor-scale A/B for the SDC pair stage's lower-bound rescore
@@ -15,7 +14,8 @@ import org.apache.spark.sql.functions._
   *
   * This is the corpus family the opt-in skip exists for —
   * duplication-heavy piles under a codebook that resolves them —
-  * complementing the q113 census ([[SemLbProbe]]), where a noisy
+  * complementing the q113 census (BENCH_NOTES "r19: SDC lower-bound
+  * rescore skip"), where a noisy
   * corpus keeps recon error at O(‖v‖) and the band never certifies.
   * The r19 measurement matrix (BENCH_NOTES) is why the skip stays
   * opt-in: on page-cache shuffle the payload cut it buys is free
@@ -25,11 +25,7 @@ import org.apache.spark.sql.functions._
 object SemLbSmoke {
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(50)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     import spark.implicits._
 
     val m = 4; val k = 16; val dsub = 16

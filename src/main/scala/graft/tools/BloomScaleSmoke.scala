@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Factor smoke for the Bloom contamination pre-screen (X78): at
@@ -20,25 +18,10 @@ import org.apache.spark.sql.functions._
   * Usage: `runMain graft.tools.BloomScaleSmoke [sfDir] [factor]`
   * (defaults `/root/testdata/sf0.1`, 100). */
 object BloomScaleSmoke {
-
-  private final class StageMetrics extends SparkListener {
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      if (m != null) shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(100)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val metrics = new StageMetrics
     spark.sparkContext.addSparkListener(metrics)
     import graft.text.{SketchOps, TextOps}

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Runtime join-strategy audit over the WHOLE oracle surface: runs
   * every `SparkEntry.queries` entry to completion and prints the
@@ -23,16 +22,7 @@ object ExecutedJoins {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val which = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val kinds = Seq("BroadcastHashJoin" -> "bhj", "SortMergeJoin" -> "smj",
       "ShuffledHashJoin" -> "shj", "BroadcastNestedLoopJoin" -> "bnlj",
       "CartesianProduct" -> "cart")

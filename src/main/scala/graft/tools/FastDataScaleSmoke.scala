@@ -4,8 +4,7 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.{FileInfo, TableMeta, VariableMeta}
@@ -32,19 +31,6 @@ import graft.pipeline.FastData
   * (defaults 100, 864000). Files land under /tmp/graft_fastsmoke.
   */
 object FastDataScaleSmoke {
-
-  private final class StageMetrics extends SparkListener {
-    val taskMs = new java.util.concurrent.atomic.AtomicLong
-    val gcMs = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      if (m != null) {
-        taskMs.addAndGet(m.executorRunTime)
-        gcMs.addAndGet(m.jvmGCTime)
-      }
-    }
-  }
-
   private val RecsPerFrame = 64
   private val RecSize = 6                       // IEEE4 + FP2
   private val FrameSize = 12 + RecsPerFrame * RecSize + 4
@@ -110,14 +96,7 @@ object FastDataScaleSmoke {
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(100)
     val rowsPerDay = args.lift(1).map(_.toInt).getOrElse(864000)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val metrics = new StageMetrics
     spark.sparkContext.addSparkListener(metrics)
 

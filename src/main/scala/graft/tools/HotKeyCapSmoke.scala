@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Hot-bucket proof for the r21 window-count cap rewrites (VERDICT
@@ -28,13 +27,7 @@ import org.apache.spark.sql.functions._
 object HotKeyCapSmoke {
   def main(args: Array[String]): Unit = {
     val nHot = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val spillMem = new java.util.concurrent.atomic.AtomicLong
     val spillDisk = new java.util.concurrent.atomic.AtomicLong
     val peakExec = new java.util.concurrent.atomic.AtomicLong

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Job-source census for one registry query: runs the query once
   * warm, then once counted, printing every Spark job's call site and
@@ -12,16 +11,7 @@ object JobSiteProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = args.lift(1).getOrElse("q41_dedup_components")
     val warm = args.lift(2).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val fn = graft.SparkEntry.queries(name)
     (1 to warm).foreach(_ => fn(spark, sfDir).count())
     // (site, ms) kept as TUPLES and escaped only at print time

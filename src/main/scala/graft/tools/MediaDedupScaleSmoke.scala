@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Factor-scale smoke for the image near-dup tier (X84): q154's
@@ -16,11 +15,7 @@ object MediaDedupScaleSmoke {
     val factor = args.headOption.map(_.toInt).getOrElse(100)
     val nDocs = 500L * factor
     val nSeeds = math.max(40L, nDocs / 100L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     import spark.implicits._
     import graft.multimodal.{MediaDedup, Multimodal}
 

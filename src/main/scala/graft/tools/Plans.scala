@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Plan audit: prints formatted physical plans for representative
   * queries so scan pruning (PushedFilters/ReadSchema), join strategy
@@ -11,10 +10,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val which = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (which.isEmpty || which.exists(name.startsWith)) {
         println(s"\n========== $name ==========")

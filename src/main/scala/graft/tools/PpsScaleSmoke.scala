@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Factor smoke for the systematic PPS sampler (X83): amplify the sf
@@ -19,13 +18,7 @@ object PpsScaleSmoke {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(50)
     val k = args.lift(2).map(_.toLong).getOrElse(100000L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     import graft.text.{PackOps, SampleOps, TextOps}
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -1,11 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Generic converged-floor probe — the Q54Probe methodology
-  * (VERDICT r16 ask #1) for ANY registry query: N warm in-JVM
-  * timings plus a Spark-job tally per rep, so a drifted bench
-  * reading can be split into (a) steady-state plan cost vs (b)
+/** Generic converged-floor probe — the q54 methodology (BENCH_NOTES
+  * "Round 16: q54_merge_legality re-adjudicated", VERDICT r16 ask #1)
+  * for ANY registry query: N warm in-JVM timings plus a Spark-job
+  * tally per rep, so a drifted bench reading can be split into (a) steady-state plan cost vs (b)
   * first-touch/JIT noise, and a recomputed-aggregation chain (the
   * q54 defect class: job count far above the plan's natural action
   * count) is visible directly. Usage:
@@ -19,14 +17,7 @@ object QueryProbe {
     val names =
       if (args.length > 2) args.drop(2).toSeq
       else Seq("q73_packed_blocks", "q61_l1_lifecycle")
-    val b0 = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val b0 = graft.GraftSession.builder()
     // A/B knob: SPARK_GRAFT_COALESCE=<advisory bytes> turns on
     // size-respecting AQE partition coalescing (guide §2.2/§9)
     val spark = (sys.env.get("SPARK_GRAFT_COALESCE") match {
@@ -36,7 +27,6 @@ object QueryProbe {
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", adv)
       case None => b0
     }).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val jobs = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** One-command scale smoke for the packing/dedup chain: amplify the
@@ -33,25 +32,6 @@ import org.apache.spark.sql.functions._
   * (phase, factor) plus a summary comparing Exchange counts.
   */
 object ScaleSmoke {
-
-  private final class StageMetrics extends SparkListener {
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    val shufRead = new java.util.concurrent.atomic.AtomicLong
-    val nStages = new java.util.concurrent.atomic.AtomicLong
-    val taskMs = new java.util.concurrent.atomic.AtomicLong
-    val gcMs = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      nStages.incrementAndGet()
-      if (m != null) {
-        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        taskMs.addAndGet(m.executorRunTime)
-        gcMs.addAndGet(m.jvmGCTime)
-      }
-    }
-  }
-
   private def exchanges(df: DataFrame): Int =
     "(?i)exchange".r
       .findAllIn(df.queryExecution.executedPlan.toString).length
@@ -59,10 +39,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(100)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = graft.GraftSession.builder()
       // Diagnostic headroom, NOT a fix: the 1 GB default exists to
       // catch accidental driver-side collection, and a factor-1000
       // run tripped it inside the ngram chain. Raising it here lets
@@ -72,9 +49,7 @@ object ScaleSmoke {
       // finding, never something this setting may hide.
       .config("spark.driver.maxResultSize",
         sys.env.getOrElse("SPARK_GRAFT_MAX_RESULT", "8g"))
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val metrics = new StageMetrics
     spark.sparkContext.addSparkListener(metrics)
 

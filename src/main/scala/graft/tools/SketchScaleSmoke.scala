@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Factor smoke for the batch sketch family (VERDICT r17 ask #5):
@@ -34,29 +32,10 @@ import org.apache.spark.sql.functions._
   * (defaults `/root/testdata/sf0.1`, 1000).
   */
 object SketchScaleSmoke {
-
-  private final class StageMetrics extends SparkListener {
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    val shufRecs = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      if (m != null) {
-        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shufRecs.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(1000)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val metrics = new StageMetrics
     spark.sparkContext.addSparkListener(metrics)
     import graft.text.SketchOps

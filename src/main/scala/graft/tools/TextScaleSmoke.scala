@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale smoke for the round-11 perf-fixed text operators:
@@ -21,23 +20,6 @@ import org.apache.spark.sql.functions._
   * (defaults `/root/testdata/sf0.1`, 100).
   */
 object TextScaleSmoke {
-
-  private final class StageMetrics extends SparkListener {
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    val shufRead = new java.util.concurrent.atomic.AtomicLong
-    val taskMs = new java.util.concurrent.atomic.AtomicLong
-    val gcMs = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      if (m != null) {
-        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        taskMs.addAndGet(m.executorRunTime)
-        gcMs.addAndGet(m.jvmGCTime)
-      }
-    }
-  }
-
   private def exchanges(df: DataFrame): Int =
     "(?i)exchange".r
       .findAllIn(df.queryExecution.executedPlan.toString).length
@@ -45,13 +27,7 @@ object TextScaleSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(100)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val metrics = new StageMetrics
     spark.sparkContext.addSparkListener(metrics)
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** d = 768 recall point for the wide-Hamming ladder (VERDICT r16 ask
@@ -32,13 +32,7 @@ object Wide768Recall {
     val nq = args.lift(2).map(_.toInt).getOrElse(200)
     val d = 768
     val clusters = 64
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     // uniform [-1, 1] from a 32-bit hash — deterministic plan math
     def u(seed: String, a: org.apache.spark.sql.Column,

@@ -44,11 +44,9 @@ class TobSpec extends SparkSpec {
     S.clearActiveSession(); S.clearDefaultSession()
     try {
       // with no active/default session, getOrCreate builds a fresh
-      // session (same context) and applies the extensions
-      val s2 = S.builder().master("local[2]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new graft.GraftExtensions)
-        .getOrCreate()
+      // session (same context) and applies the extensions that
+      // `spark.sql.extensions` names
+      val s2 = GraftSession()
       val out = s2.sql("SELECT fp2_decode(8205)").head().getDouble(0)
       assert(out == 1.3) // 0x200d
     } finally {

@@ -76,15 +76,19 @@ object FastData {
     * named `<prefix>_YYYY_MM_DD_HHMM.dat`, byte-identical to running
     * the single-file TOA5 writer per window (for unique timestamps —
     * ties within a window have no defined order in either shape).
+    * Returns the shard names in window order.
     *
-    * Scale shape: ONE shuffle and ONE write job for every shard — hash-
-    * partition on the window key so each window's rows land in exactly
-    * one task, sort within partitions so windows are contiguous and
-    * rows time-ordered, then stream each partition straight to its
-    * shard files. Job count is independent of the window count (the
-    * previous shape ran one filter+collect job per window — ~17.5k
-    * sequential driver-side jobs for a year of 30-min fast data — and
-    * leaked a `persist()`). Shards are opened through the Hadoop
+    * Scale shape: ONE shuffle and ONE write action for every shard —
+    * hash-partition on the window key so each window's rows land in
+    * exactly one task, sort within partitions so windows are contiguous
+    * and rows time-ordered, then stream each partition straight to its
+    * shard files. Each task emits the names of the shards it opened and
+    * the driver sorts them: the fixed-width `yyyy_MM_dd_HHmm` stamp
+    * sorts as the window key does, so no second pass over the input is
+    * needed for the name list. Job count is independent of the window
+    * count (the previous shape ran one filter+collect job per window —
+    * ~17.5k sequential driver-side jobs for a year of 30-min fast data
+    * — and leaked a `persist()`). Shards are opened through the Hadoop
     * `FileSystem` API, so `outDir` may be any supported scheme
     * (`file://`, `hdfs://`, `s3a://`, a bare local path); task
     * re-execution overwrites the same bytes, so speculative retries
@@ -105,13 +109,14 @@ object FastData {
     val outPath = new org.apache.hadoop.fs.Path(outDir)
     outPath.getFileSystem(hconf.value).mkdirs(outPath)
 
-    val projected = df.withColumn("__w", windowEnd(col(tsCol), stepMin))
+    df.withColumn("__w", windowEnd(col(tsCol), stepMin))
       .select((col("__w") +: col(tsCol) +: dataCols.map(col)): _*)
-    projected.repartition(col("__w"))
+      .repartition(col("__w"))
       .sortWithinPartitions(col("__w"), col(tsCol))
-      .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+      .mapPartitions { (it: Iterator[org.apache.spark.sql.Row]) =>
         val dir = new org.apache.hadoop.fs.Path(outDir)
         val fs = dir.getFileSystem(hconf.value)
+        val names = Seq.newBuilder[String]
         var cur: java.sql.Timestamp = null
         var out: java.io.Writer = null
         try {
@@ -120,9 +125,10 @@ object FastData {
             if (cur == null || !w.equals(cur)) {
               if (out != null) out.close()
               cur = w
+              val name = shardName(w, prefix)
+              names += name
               out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-                fs.create(new org.apache.hadoop.fs.Path(dir,
-                  shardName(w, prefix)), true),
+                fs.create(new org.apache.hadoop.fs.Path(dir, name), true),
                 java.nio.charset.StandardCharsets.UTF_8))
               out.write(header)
             }
@@ -130,10 +136,9 @@ object FastData {
               (0 until nData).map(i => r.get(i + 2)), stringIdx, naToken))
           }
         } finally if (out != null) out.close()
-      }
-    // tiny second job: the ordered shard-name list (window keys only)
-    projected.select("__w").distinct().orderBy("__w").collect()
-      .map(r => shardName(r.getTimestamp(0), prefix)).toSeq
+        names.result().iterator
+      }(org.apache.spark.sql.Encoders.STRING)
+      .collect().toSeq.sorted
   }
 
   /** Integer-preserving downcast check (D8): true when every non-null

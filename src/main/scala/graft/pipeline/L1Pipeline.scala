@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.TableMeta
@@ -96,25 +96,37 @@ object L1Pipeline {
     * the same information content as the netCDF global attributes
     * (title/time coverage/interval). Partition column `year` enables
     * partition pruning for the yearly readers (J4 becomes a plain
-    * partitioned read). */
+    * partitioned read).
+    *
+    * One Spark action: the time coverage and the row count ride an
+    * [[Observation]] on the written frame, so `attrs.json` is filled
+    * by the parquet write itself rather than by a second pass over the
+    * conditioned input. A frame with no rows (e.g. every timestamp
+    * unparseable) has no coverage and is refused with an
+    * `IllegalArgumentException` naming the site. */
   def writeLake(c: Conditioned, tsCol: String, intervalSec: Long,
       outDir: String, site: String): Unit = {
+    val coverage = Observation()
     val withYear = withQcFlags(c.df, tsCol)
       .withColumn("year", labelYear(col(tsCol), intervalSec))
+      .observe(coverage, count(lit(1)).as("rows"),
+        min(col(tsCol)).cast("string").as("start"),
+        max(col(tsCol)).cast("string").as("end"))
     withYear.write.mode("overwrite").partitionBy("year")
       .parquet(s"$outDir/data")
 
-    val span = c.df.agg(min(col(tsCol)).cast("string"),
-      max(col(tsCol)).cast("string")).head()
+    val span = coverage.get
+    if (span("rows").asInstanceOf[Long] == 0L)
+      throw new IllegalArgumentException(s"writeLake: no rows for site $site")
     val attrs = Map(
       "site" -> site,
-      "time_coverage_start" -> span.getString(0),
-      "time_coverage_end" -> span.getString(1),
+      "time_coverage_start" -> span("start").toString,
+      "time_coverage_end" -> span("end").toString,
       "interval_seconds" -> intervalSec.toString,
       "variables" -> c.meta.variables.map(v =>
         s"${v.name}:${v.units}:${v.sampling}").mkString(";"))
     val json = attrs.map { case (k, v) =>
-      "\"" + k + "\": \"" + v.replace("\"", "\\\"") + "\""
+      "\"" + k + "\": \"" + Status.esc(v) + "\""
     }.mkString("{", ", ", "}")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     java.nio.file.Files.write(

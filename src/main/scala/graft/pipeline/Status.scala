@@ -119,7 +119,9 @@ object Status {
     Xlsx.write(path, sheets, StatusFills)
   }
 
-  private def esc(s: String): String =
+  /** JSON string-body escape: quote, backslash and every control
+    * character, so any text renders as a valid JSON string. */
+  private[pipeline] def esc(s: String): String =
     s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

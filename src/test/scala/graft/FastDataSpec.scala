@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -109,9 +111,20 @@ class FastDataSpec extends SparkSpec {
     }
     assert(jobsBig == jobsSmall,
       s"job count grew with windows: $jobsSmall -> $jobsBig")
-    // AQE materializes each shuffle stage as its own job, so one
-    // foreachPartition action + one collect action surface as ~6 jobs;
-    // the scale property is the equality above (constant, not O(windows)).
-    assert(jobsSmall <= 6, s"too many jobs per call: $jobsSmall")
+    // One action: under AQE the window shuffle materializes as its own
+    // map job, then one result job writes the shards and returns their
+    // names. The scale property is the equality above (constant, not
+    // O(windows)); the bound pins that no second pass over the input runs.
+    assert(jobsSmall <= 2, s"too many jobs per call: $jobsSmall")
+  }
+
+  test("writeShards on an empty frame writes nothing and returns no names") {
+    val out = Files.createTempDirectory("shards_empty")
+    val names = FastData.writeShards(frame(0), meta, "DATETIME", 1,
+      out.toString, "Site_fast")
+    assert(names.isEmpty)
+    val dat = Files.list(out).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".dat")).toSeq
+    assert(dat.isEmpty, s"shards written for an empty frame: $dat")
   }
 }

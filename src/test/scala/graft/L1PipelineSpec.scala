@@ -19,6 +19,14 @@ class L1PipelineSpec extends SparkSpec {
     TableMeta(FileInfo.dummy,
       vars.map { case (n, u) => VariableMeta(n, u, "Avg") })
 
+  /** attrs.json parsed by a real JSON parser, so escaping is checked. */
+  private def readAttrs(dir: String): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(new java.io.File(s"$dir/attrs.json"),
+        classOf[java.util.Map[String, String]]).asScala.toMap
+  }
+
   test("condition: rename + dedup + regularize (DataHandler chain)") {
     val df = Seq(
       (ts("2024-01-01 00:30:00"), 1.0, 9.9),
@@ -74,8 +82,61 @@ class L1PipelineSpec extends SparkSpec {
     val back = L1Pipeline.readLake(spark, dir, Seq(2024))
     assert(back.count() == 2)
     assert(!back.columns.exists(_.endsWith("_QCFlag")))
-    assert(Files.readString(java.nio.file.Path.of(s"$dir/attrs.json"))
-      .contains("TestSite"))
+    val attrs = readAttrs(dir)
+    assert(attrs("site") == "TestSite")
+    assert(attrs("time_coverage_start") == "2024-01-01 00:00:00")
+    assert(attrs("time_coverage_end") == "2025-01-01 00:00:00")
+  }
+
+  test("writeLake runs exactly one Spark execution") {
+    val c = Conditioned(Seq(
+      (ts("2024-01-01 00:30:00"), 1.0), (ts("2024-01-01 01:00:00"), 2.0))
+      .toDF("DATETIME", "Ta"), meta(("Ta", "degC")))
+    val dir = Files.createTempDirectory("lake1").toString
+    val marker = "writeLake-execution-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      private def record(qe: org.apache.spark.sql.execution.QueryExecution) =
+        seen.add(if (qe.logical.toString.contains(marker)) marker else "run")
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = record(qe)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = record(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      L1Pipeline.writeLake(c, "DATETIME", 1800, dir, "TestSite")
+      // the listener bus is FIFO: once the marker query is seen, every
+      // execution writeLake started has been delivered before it
+      spark.sql(s"SELECT '$marker'").collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val events = seen.toArray.toSeq
+    assert(events.lastOption.contains(marker), s"marker not delivered: $events")
+    assert(events.count(_ == "run") == 1, s"executions: $events")
+  }
+
+  test("writeLake refuses a frame with no rows by site name") {
+    val empty = Conditioned(Seq((ts("2024-01-01 00:30:00"), 1.0))
+      .toDF("DATETIME", "Ta").filter(lit(false)), meta(("Ta", "degC")))
+    val dir = Files.createTempDirectory("lake0").toString
+    val e = intercept[IllegalArgumentException] {
+      L1Pipeline.writeLake(empty, "DATETIME", 1800, dir, "EmptySite")
+    }
+    assert(e.getMessage == "writeLake: no rows for site EmptySite")
+  }
+
+  test("attrs.json stays valid JSON for backslash, quote and control chars") {
+    val units = "a\\b \"q\""
+    val c = Conditioned(Seq((ts("2024-01-01 00:30:00"), 1.0))
+      .toDF("DATETIME", "Ta"), meta(("Ta", units)))
+    val dir = Files.createTempDirectory("lakej").toString
+    L1Pipeline.writeLake(c, "DATETIME", 1800, dir, "Site\tA")
+    val attrs = readAttrs(dir)
+    assert(attrs("site") == "Site\tA")
+    assert(attrs("variables") == s"Ta:$units:Avg")
   }
 
   test("netCDF-3 classic roundtrip: header, attrs, record interleave (K4)") {

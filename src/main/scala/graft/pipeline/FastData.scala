@@ -66,30 +66,28 @@ object FastData {
         col("n_rows").cast("double") / expected * 100.0)
   }
 
-  private def shardName(w: java.sql.Timestamp, prefix: String): String = {
-    val fmt = java.time.format.DateTimeFormatter
-      .ofPattern("yyyy_MM_dd_HHmm")
-    s"${prefix}_${w.toLocalDateTime.format(fmt)}.dat"
-  }
-
   /** Partition a decoded fast frame into per-window TOA5 shard files
-    * named `<prefix>_YYYY_MM_DD_HHMM.dat`, byte-identical to running
-    * the single-file TOA5 writer per window (for unique timestamps —
-    * ties within a window have no defined order in either shape).
-    * Returns the shard names in window order.
+    * named `<prefix>_YYYY_MM_DD_HHMM.dat` (the window end in the
+    * session time zone), byte-identical to running the single-file
+    * TOA5 writer per window (for unique timestamps — ties within a
+    * window have no defined order in either shape). Returns the shard
+    * names in window order.
     *
     * Scale shape: ONE shuffle and ONE write action for every shard —
     * hash-partition on the window key so each window's rows land in
-    * exactly one task, sort within partitions so windows are contiguous
-    * and rows time-ordered, then stream each partition straight to its
-    * shard files. Each task emits the names of the shards it opened and
-    * the driver sorts them: the fixed-width `yyyy_MM_dd_HHmm` stamp
-    * sorts as the window key does, so no second pass over the input is
-    * needed for the name list. Job count is independent of the window
-    * count (the previous shape ran one filter+collect job per window —
-    * ~17.5k sequential driver-side jobs for a year of 30-min fast data
-    * — and leaked a `persist()`). Shards are opened through the Hadoop
-    * `FileSystem` API, so `outDir` may be any supported scheme
+    * exactly one task, sort within partitions on the timestamp (the
+    * window is monotone in it, so windows come out contiguous and rows
+    * time-ordered with no window column in the shuffle or the sort),
+    * then stream each partition straight to its shard files. Tasks
+    * read Catalyst rows, derive each row's window from its epoch
+    * micros, and encode lines with [[Toa5.LineEncoder]], the encoder
+    * [[Toa5.write]] uses; the whole write is one SQL execution, so
+    * query-execution listeners see its plan. Each task returns the
+    * names of the shards it opened and the driver sorts them: the
+    * fixed-width `yyyy_MM_dd_HHmm` stamp sorts as the window key does,
+    * so no second pass over the input is needed. Job count is
+    * independent of the window count. Shards are opened through the
+    * Hadoop `FileSystem` API, so `outDir` may be any supported scheme
     * (`file://`, `hdfs://`, `s3a://`, a bare local path); task
     * re-execution overwrites the same bytes, so speculative retries
     * are idempotent. */
@@ -101,45 +99,48 @@ object FastData {
       s"header/data mismatch: data-only=${dataCols.diff(headerVars)} " +
       s"header-only=${headerVars.diff(dataCols)}")
     val header = Toa5.headerText(meta)
-    val stringIdx = Toa5.stringColumnIndices(df, dataCols)
-    val naToken = graft.core.FileFormat.Toa5.naToken
-    val nData = dataCols.length
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val stepUs = stepMin * 60L * 1000000L
     val hconf = new org.apache.spark.util.SerializableConfiguration(
       df.sparkSession.sparkContext.hadoopConfiguration)
     val outPath = new org.apache.hadoop.fs.Path(outDir)
     outPath.getFileSystem(hconf.value).mkdirs(outPath)
 
-    df.withColumn("__w", windowEnd(col(tsCol), stepMin))
-      .select((col("__w") +: col(tsCol) +: dataCols.map(col)): _*)
-      .repartition(col("__w"))
-      .sortWithinPartitions(col("__w"), col(tsCol))
-      .mapPartitions { (it: Iterator[org.apache.spark.sql.Row]) =>
+    val rows = df.select((col(tsCol) +: dataCols.map(col)): _*)
+      .repartition(windowEnd(col(tsCol), stepMin))
+      .sortWithinPartitions(col(tsCol))
+    val enc = Toa5.lineEncoder(rows)
+    Toa5.inExecution(rows, "writeShards") { plan =>
+      plan.execute().mapPartitions { it =>
         val dir = new org.apache.hadoop.fs.Path(outDir)
         val fs = dir.getFileSystem(hconf.value)
         val names = Seq.newBuilder[String]
-        var cur: java.sql.Timestamp = null
-        var out: java.io.Writer = null
+        var cur = Long.MinValue
+        var out: java.io.OutputStream = null
         try {
           it.foreach { r =>
-            val w = r.getTimestamp(0)
-            if (cur == null || !w.equals(cur)) {
+            require(!r.isNullAt(0), s"writeShards: null $tsCol")
+            val us = r.getLong(0)
+            val w = us + Math.floorMod(-us, stepUs)
+            if (out == null || w != cur) {
               if (out != null) out.close()
               cur = w
-              val name = shardName(w, prefix)
+              val name = prefix + "_" + enc.localTime(w).format(ShardStamp) + ".dat"
               names += name
-              out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-                fs.create(new org.apache.hadoop.fs.Path(dir, name), true),
-                java.nio.charset.StandardCharsets.UTF_8))
+              out = new java.io.BufferedOutputStream(
+                fs.create(new org.apache.hadoop.fs.Path(dir, name), true), 1 << 16)
               out.write(header)
             }
-            out.write(Toa5.bodyLine(r.getTimestamp(1),
-              (0 until nData).map(i => r.get(i + 2)), stringIdx, naToken))
+            enc.writeTo(r, out)
           }
         } finally if (out != null) out.close()
         names.result().iterator
-      }(org.apache.spark.sql.Encoders.STRING)
-      .collect().toSeq.sorted
+      }.collect().toSeq.sorted
+    }
   }
+
+  private val ShardStamp = java.time.format.DateTimeFormatter
+    .ofPattern("yyyy_MM_dd_HHmm")
 
   /** Integer-preserving downcast check (D8): true when every non-null
     * value of the column is integral (within 1e-9), i.e. safe to write

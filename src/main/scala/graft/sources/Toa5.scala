@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.{SQLExecution, SparkPlan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -128,8 +130,8 @@ object Toa5 {
 
   /** K1/K2 writer: byte-stable single-file TOA5 output — header block
     * then body rows, QUOTE_NONNUMERIC quoting, NA token, timestamp as
-    * leading `TIMESTAMP` string column (reference:
-    * code/file_handling/file_io.py:326-418,668-717).
+    * leading `TIMESTAMP` string column in the session time zone
+    * (reference: code/file_handling/file_io.py:326-418,668-717).
     *
     * The single-file, byte-ordered contract forces a driver-side write
     * (reference products are <= ~1e5 rows); the D6 header/data
@@ -144,15 +146,11 @@ object Toa5 {
       s"header/data mismatch: data-only=${dataCols.diff(headerVars)} " +
       s"header-only=${headerVars.diff(dataCols)}")
 
-    val stringIdx = stringColumnIndices(df, dataCols)
-    val rows = collectBounded(df.orderBy(col(tsCol))
-      .select((col(tsCol) +: dataCols.map(col)): _*), path)
-    val sb = new StringBuilder(headerText(meta))
-    rows.foreach { r =>
-      sb.append(bodyLine(r.getTimestamp(0),
-        dataCols.indices.map(i => r.get(i + 1)), stringIdx,
-        FileFormat.Toa5.naToken))
-    }
+    val sorted = df.orderBy(col(tsCol))
+      .select((col(tsCol) +: dataCols.map(col)): _*)
+    val enc = lineEncoder(sorted)
+    val sb = new java.lang.StringBuilder(headerText(meta))
+    collectBounded(sorted, path).foreach(enc.appendTo(_, sb))
     Files.createDirectories(Paths.get(path).getParent)
     Files.write(Paths.get(path),
       sb.toString.getBytes(StandardCharsets.UTF_8))
@@ -180,37 +178,142 @@ object Toa5 {
       .mkString("", "\r\n", "\r\n")
   }
 
-  /** Data-column indices holding strings (quoted on write). */
-  private[graft] def stringColumnIndices(df: DataFrame,
-      dataCols: Seq[String]): Set[Int] = {
-    val stringCols = df.schema.fields.collect {
-      case f if f.dataType == StringType => f.name }.toSet
-    dataCols.zipWithIndex.collect {
-      case (c, i) if stringCols(c) => i }.toSet
-  }
+  /** The body-line encoder for `rows`, whose first column is the
+    * timestamp and the rest the data cells in header order; the time
+    * zone is the session's. */
+  private[graft] def lineEncoder(rows: DataFrame): LineEncoder =
+    new LineEncoder(rows.schema.fields.tail.map(_.dataType),
+      rows.sparkSession.conf.get("spark.sql.session.timeZone"))
 
-  // immutable + thread-safe; shared across driver and executor callers
-  private val tsFmt = java.time.format.DateTimeFormatter
-    .ofPattern("yyyy-MM-dd HH:mm:ss")
-
-  /** One CRLF-terminated TOA5 body line: quoted timestamp then cells in
-    * header order (QUOTE_NONNUMERIC — strings quoted, numbers bare, NA
-    * token for nulls). Pure function of its arguments so executors can
-    * call it from a distributed shard writer. */
-  private[graft] def bodyLine(ts: java.sql.Timestamp, values: Seq[Any],
-      stringIdx: Set[Int], naToken: String): String = {
-    val sb = new StringBuilder
-    sb.append(quoteCell(ts.toLocalDateTime.format(tsFmt)))
-    values.zipWithIndex.foreach { case (v, i) =>
-      val cell =
-        if (v == null) naToken
-        else if (stringIdx.contains(i)) quoteCell(v.toString)
-        else formatNum(v)
-      sb.append(",").append(cell)
+  /** The TOA5 body-line encoder over Catalyst rows, shared by [[write]]
+    * and [[graft.pipeline.FastData.writeShards]] so the two writers are
+    * byte-identical by construction. A line is the quoted timestamp
+    * (`yyyy-MM-dd HH:mm:ss` of epoch micros in `timeZone`) then the
+    * data cells, QUOTE_NONNUMERIC: strings quoted, numbers bare as
+    * `Double.toString`/`Float.toString` print them (`1.0` stays
+    * `1.0`), a NaN double and every null as the NA token `NAN`;
+    * CRLF-terminated.
+    *
+    * Per row it allocates nothing for the common cell types: each
+    * cell is read with its typed getter into one reused builder, and
+    * the timestamp is formatted once per minute, then completed with
+    * its two second digits. One instance per thread. */
+  private[graft] final class LineEncoder(dataTypes: Array[DataType],
+      timeZone: String) extends Serializable {
+    private val kinds: Array[Int] = dataTypes.map {
+      case StringType => 0
+      case DoubleType => 1
+      case FloatType => 2
+      case LongType => 3
+      case IntegerType => 4
+      case BooleanType => 5
+      case _ => 6
     }
-    sb.append("\r\n")
-    sb.toString
+    private val toScala: Array[Any => Any] = dataTypes.zip(kinds).map {
+      case (t, 6) =>
+        org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(t)
+      case _ => null
+    }
+    @transient private lazy val zone = java.time.ZoneId.of(timeZone)
+    @transient private lazy val line = new java.lang.StringBuilder(256)
+    @transient private var chars: Array[Char] = _
+    @transient private var bytes: Array[Byte] = _
+    // the current second's local minute, as `"yyyy-MM-dd HH:mm:`, and
+    // its two second-of-minute digits
+    @transient private var second = Long.MinValue
+    @transient private var minute = Long.MinValue
+    @transient private var prefix: String = _
+    @transient private var ss: Int = 0
+    // the zone's offset if it never changes (UTC), else null
+    @transient private lazy val fixed: java.time.ZoneOffset =
+      if (zone.getRules.isFixedOffset)
+        zone.getRules.getOffset(java.time.Instant.EPOCH)
+      else null
+
+    /** Wall-clock time of epoch `micros` in the encoder's time zone. */
+    def localTime(micros: Long): java.time.LocalDateTime =
+      java.time.LocalDateTime.ofInstant(java.time.Instant.ofEpochSecond(
+        Math.floorDiv(micros, 1000000L)), zone)
+
+    /** Appends the TOA5 line of `row` to `sb`. */
+    def appendTo(row: InternalRow, sb: java.lang.StringBuilder): Unit = {
+      val sec = Math.floorDiv(row.getLong(0), 1000000L)
+      if (prefix == null || sec != second) {
+        second = sec
+        val offset = if (fixed != null) fixed else
+          zone.getRules.getOffset(java.time.Instant.ofEpochSecond(sec))
+        val local = sec + offset.getTotalSeconds    // wall clock, as epoch
+        val m = Math.floorDiv(local, 60L)
+        if (prefix == null || m != minute) {
+          minute = m
+          prefix = "\"" + java.time.LocalDateTime.ofEpochSecond(m * 60L, 0,
+            java.time.ZoneOffset.UTC).format(MinuteFmt)
+        }
+        ss = (local - m * 60L).toInt
+      }
+      sb.append(prefix).append((ss / 10 + '0').toChar)
+        .append((ss % 10 + '0').toChar).append('"')
+      appendCells(row, sb, ',', NaToken, quoteStrings = true)
+      sb.append("\r\n")
+    }
+
+    /** Appends `sep` then each data cell of `row`: `na` for a null,
+      * `NAN` for a NaN double. */
+    def appendCells(row: InternalRow, sb: java.lang.StringBuilder,
+        sep: Char, na: String, quoteStrings: Boolean): Unit = {
+      var i = 0
+      while (i < kinds.length) {
+        val o = i + 1
+        sb.append(sep)
+        if (row.isNullAt(o)) sb.append(na)
+        else kinds(i) match {
+          case 0 =>
+            if (quoteStrings) sb.append('"').append(row.getUTF8String(o)).append('"')
+            else sb.append(row.getUTF8String(o))
+          case 1 =>
+            val d = row.getDouble(o)
+            if (d.isNaN) sb.append(NaToken) else sb.append(d)
+          case 2 => sb.append(row.getFloat(o))
+          case 3 => sb.append(row.getLong(o))
+          case 4 => sb.append(row.getInt(o))
+          case 5 => sb.append(row.getBoolean(o))
+          case _ => sb.append(toScala(i)(row.get(o, dataTypes(i))))
+        }
+        i += 1
+      }
+    }
+
+    /** Writes the UTF-8 line of `row` to `out`, through reused buffers
+      * when the line is ASCII. */
+    def writeTo(row: InternalRow, out: java.io.OutputStream): Unit = {
+      val sb = line
+      sb.setLength(0)
+      appendTo(row, sb)
+      val n = sb.length
+      if (chars == null || chars.length < n) {
+        chars = new Array[Char](n); bytes = new Array[Byte](n)
+      }
+      val cs = chars
+      val bs = bytes
+      sb.getChars(0, n, cs, 0)
+      var ascii = true
+      var i = 0
+      while (i < n) {
+        val c = cs(i)
+        if (c >= 0x80) ascii = false
+        bs(i) = c.toByte
+        i += 1
+      }
+      if (ascii) out.write(bs, 0, n)
+      else out.write(sb.toString.getBytes(StandardCharsets.UTF_8))
+    }
   }
+
+  private val NaToken = FileFormat.Toa5.naToken
+
+  // `yyyy-MM-dd HH:mm:ss` up to the seconds; immutable + thread-safe
+  private val MinuteFmt = java.time.format.DateTimeFormatter
+    .ofPattern("yyyy-MM-dd HH:mm:")
 
   /** K3: EddyPro summary writer — tab-separated, 2 header lines
     * (names with leading DATAH/filename/date/time; units line led by
@@ -226,20 +329,18 @@ object Toa5 {
     val unitsLine = (Seq("DATAU", "", "[yyyy-mm-dd]", "[HH:MM]") ++
       dataCols.map(n => byName.get(n).map(_.units).getOrElse("")))
       .mkString("\t")
-    val rows = collectBounded(df.orderBy(col(tsCol))
-      .select((col(tsCol) +: dataCols.map(col)): _*), path)
+    val sorted = df.orderBy(col(tsCol))
+      .select((col(tsCol) +: dataCols.map(col)): _*)
+    val enc = lineEncoder(sorted)
     val dFmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd")
     val tFmt = java.time.format.DateTimeFormatter.ofPattern("HH:mm")
-    val sb = new StringBuilder
+    val sb = new java.lang.StringBuilder
     sb.append(namesLine).append("\r\n").append(unitsLine).append("\r\n")
-    rows.foreach { r =>
-      val ldt = r.getTimestamp(0).toLocalDateTime
-      sb.append(Seq("DATA", filename, ldt.format(dFmt), ldt.format(tFmt))
-        .mkString("\t"))
-      dataCols.indices.foreach { i =>
-        val v = r.get(i + 1)
-        sb.append("\t").append(if (v == null) "NaN" else formatNum(v))
-      }
+    collectBounded(sorted, path).foreach { r =>
+      val ldt = enc.localTime(r.getLong(0))
+      sb.append("DATA\t").append(filename).append('\t')
+        .append(ldt.format(dFmt)).append('\t').append(ldt.format(tFmt))
+      enc.appendCells(r, sb, '\t', "NaN", quoteStrings = false)
       sb.append("\r\n")
     }
     Files.createDirectories(Paths.get(path).getParent)
@@ -254,7 +355,7 @@ object Toa5 {
   private val MaxWriterRows = 2000000L
 
   private def collectBounded(df: DataFrame, path: String)
-      : Array[org.apache.spark.sql.Row] = {
+      : Array[InternalRow] = {
     // Two jobs on purpose: the count runs WITHOUT materializing rows
     // on the driver, so a bulk-frame misuse fails loudly before any
     // multi-GB collect. The duplicated sort only costs legitimate
@@ -264,15 +365,15 @@ object Toa5 {
       s"refusing to write $path: frame exceeds $MaxWriterRows rows — " +
       "single-file TOA5/EddyPro output is a driver-side artifact; " +
       "write bulk frames to parquet instead")
-    df.collect()
+    inExecution(df, "collect")(_.executeCollect())
   }
 
-  /** Numeric rendering: integral doubles without trailing .0 kept as
-    * pandas does ("1.0" stays "1.0"); we render shortest repr. */
-  private def formatNum(v: Any): String = v match {
-    case d: java.lang.Double =>
-      if (d.isNaN) "NAN" else d.toString
-    case f: java.lang.Float => f.toString
-    case x => x.toString
+  /** Runs `body` over `df`'s physical plan as one SQL execution named
+    * `name`, so query-execution listeners see it as they see any
+    * Dataset action, while `body` reads Catalyst rows directly. */
+  private[graft] def inExecution[T](df: DataFrame, name: String)(
+      body: SparkPlan => T): T = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(name))(body(qe.executedPlan))
   }
 }

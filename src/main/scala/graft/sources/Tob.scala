@@ -4,8 +4,11 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{FileInfo, TableMeta, VariableMeta}
 import graft.functions.Fp2
@@ -31,55 +34,67 @@ import graft.functions.Fp2
   *    holding only `offset bytes / record size` records. Sub-record i
   *    timestamps at header.seconds + i*subStep + subScale*subseconds.
   *
-  * Scale shape: `spark.read.format("binaryFile")` gives one row per
-  * file; daily TOB3 files are <= a few hundred MB, so one file = one
-  * task and a site-month parallelizes across the cluster. Decode runs
-  * in executors via flatMap over the file bytes.
+  * Scale shape: [[read]] decodes one file per task from
+  * `spark.read.format("binaryFile")` rows. The bulk path is
+  * `spark.read.format("tob")` ([[graft.sources.v2.TobDataSource]]),
+  * which cuts each file into frame-aligned splits and runs the same
+  * [[Records]] walker into reused Catalyst rows.
   */
 object Tob {
 
   // --- channel codecs -------------------------------------------------
 
+  /** One channel's codec: `put` decodes the value stored at absolute
+    * offset `at` straight into `row(k)`, reading `le` or `be` (two
+    * views of the same bytes) by the channel's byte order. */
   sealed trait Chan {
     def size: Int
     def dataType: DataType
-    def read(b: ByteBuffer): Any
+    def put(le: ByteBuffer, be: ByteBuffer, at: Int, row: InternalRow, k: Int): Unit
   }
+  private def view(order: ByteOrder, le: ByteBuffer, be: ByteBuffer) =
+    if (order == ByteOrder.LITTLE_ENDIAN) le else be
   case object Fp2Chan extends Chan {
     val size = 2; val dataType = DoubleType
-    def read(b: ByteBuffer): Any = {
-      val v = java.lang.Short.toUnsignedInt(b.order(ByteOrder.BIG_ENDIAN).getShort)
-      val d = Fp2.decode(v)
-      if (d.isNaN) null else d   // NaN sentinel -> null (engine norm, §7.4#1)
+    def put(le: ByteBuffer, be: ByteBuffer, at: Int, row: InternalRow, k: Int): Unit = {
+      val d = Fp2.decode(java.lang.Short.toUnsignedInt(be.getShort(at)))
+      if (d.isNaN) row.setNullAt(k)   // NaN sentinel -> null (engine norm, §7.4#1)
+      else row.setDouble(k, d)
     }
   }
   final case class F32(order: ByteOrder) extends Chan {
     val size = 4; val dataType = FloatType
-    def read(b: ByteBuffer): Any = b.order(order).getFloat
+    def put(le: ByteBuffer, be: ByteBuffer, at: Int, row: InternalRow, k: Int): Unit =
+      row.setFloat(k, view(order, le, be).getFloat(at))
   }
   final case class U16(order: ByteOrder) extends Chan {
     val size = 2; val dataType = IntegerType
-    def read(b: ByteBuffer): Any =
-      java.lang.Short.toUnsignedInt(b.order(order).getShort)
+    def put(le: ByteBuffer, be: ByteBuffer, at: Int, row: InternalRow, k: Int): Unit =
+      row.setInt(k, java.lang.Short.toUnsignedInt(view(order, le, be).getShort(at)))
   }
   final case class I32(order: ByteOrder) extends Chan {
     val size = 4; val dataType = IntegerType
-    def read(b: ByteBuffer): Any = b.order(order).getInt
+    def put(le: ByteBuffer, be: ByteBuffer, at: Int, row: InternalRow, k: Int): Unit =
+      row.setInt(k, view(order, le, be).getInt(at))
   }
   final case class U32(order: ByteOrder) extends Chan {
     val size = 4; val dataType = LongType
-    def read(b: ByteBuffer): Any =
-      java.lang.Integer.toUnsignedLong(b.order(order).getInt)
+    def put(le: ByteBuffer, be: ByteBuffer, at: Int, row: InternalRow, k: Int): Unit =
+      row.setLong(k, java.lang.Integer.toUnsignedLong(view(order, le, be).getInt(at)))
   }
   case object BoolChan extends Chan {
     val size = 1; val dataType = BooleanType
-    def read(b: ByteBuffer): Any = b.get != 0
+    def put(le: ByteBuffer, be: ByteBuffer, at: Int, row: InternalRow, k: Int): Unit =
+      row.setBoolean(k, le.get(at) != 0)
   }
   final case class AsciiChan(n: Int) extends Chan {
     val size = n; val dataType = StringType
-    def read(b: ByteBuffer): Any = {
-      val arr = new Array[Byte](n); b.get(arr)
-      new String(arr.takeWhile(_ != 0), StandardCharsets.US_ASCII)
+    def put(le: ByteBuffer, be: ByteBuffer, at: Int, row: InternalRow, k: Int): Unit = {
+      val bytes = le.array()
+      var len = 0
+      while (len < n && bytes(at + len) != 0) len += 1
+      row.update(k, UTF8String.fromString(
+        new String(bytes, at, len, StandardCharsets.US_ASCII)))
     }
   }
 
@@ -148,41 +163,7 @@ object Tob {
       })
   }
 
-  // --- TOB1 -----------------------------------------------------------
-
-  /** Decode one TOB1 file's bytes to rows of (DATETIME us, fields...).
-    * Leading SECONDS/NANOSECONDS channels collapse into the timestamp. */
-  def decodeTob1(bytes: Array[Byte]): (Seq[Row], TobHeader) = {
-    val (it, h) = decodeTob1Rows(bytes)
-    (it.toVector, h)
-  }
-
-  /** Streaming TOB1 decode: records are stored sequentially (no
-    * frame reordering exists in TOB1), so file order IS the
-    * contract order and the iterator never materializes the file's
-    * row set — O(one record) live memory per reader. */
-  def decodeTob1Rows(bytes: Array[Byte]): (Iterator[Row], TobHeader) = {
-    val (h, dataStart) = parseHeader(bytes)
-    require(h.format == "TOB1", s"expected TOB1, got ${h.format}")
-    val chans = h.types.map(channel(_, tob1 = true))
-    val recSize = chans.map(_.size).sum
-    val nRec = (bytes.length - dataStart) / recSize
-    require(h.names.take(2).map(_.toUpperCase) ==
-      Seq("SECONDS", "NANOSECONDS"),
-      s"TOB1 must lead with SECONDS,NANOSECONDS (got ${h.names.take(2)})")
-    val buf = ByteBuffer.wrap(bytes)
-    val it = (0 until nRec).iterator.map { i =>
-      buf.position(dataStart + i * recSize)
-      val vals = chans.map(_.read(buf))
-      val us = Epoch1990Us +
-        vals(0).asInstanceOf[Long] * 1000000L +
-        vals(1).asInstanceOf[Long] / 1000L
-      Row.fromSeq(us +: vals.drop(2))
-    }
-    (it, h)
-  }
-
-  // --- TOB3 -----------------------------------------------------------
+  // --- TOB3 frame grammar ---------------------------------------------
 
   final case class Tob3Spec(
       frameSize: Int, validation: Int, validationAlt: Int,
@@ -219,133 +200,250 @@ object Tob {
     Tob3Spec(l1(2).trim.toInt, stamp, 0xffff - stamp, subStepUs, subScaleUs)
   }
 
+  private val FrameHeader = 12
+  private val FrameFooter = 4
+
+  /** The TOB3 frame grammar, written down once for the record walker,
+    * the order probe and the split planner. A frame is `frameSize`
+    * bytes: a 12-byte little-endian header (seconds, subseconds, begin
+    * record number), `perFrame` record slots, and a 4-byte footer of
+    * two LE u16 words (word0, validation stamp). A frame is valid iff
+    * its stamp equals the header-declared one or its ones-complement;
+    * word0 == 0 marks a major (full) frame, otherwise word0's low 12
+    * bits count the used bytes including header and footer (a minor
+    * frame). Record i is stamped seconds + i*subStep +
+    * subScale*subseconds. All reads are absolute, from a little-endian
+    * view of the bytes. */
+  final class Tob3Frames(val spec: Tob3Spec, recSize: Int) {
+    val frameSize: Int = spec.frameSize
+    val perFrame: Int = (frameSize - FrameHeader - FrameFooter) / recSize
+
+    /** Usable records of the frame at `pos`: 0 if its stamp is invalid. */
+    def records(le: ByteBuffer, pos: Int): Int = {
+      val word0 = java.lang.Short.toUnsignedInt(
+        le.getShort(pos + frameSize - FrameFooter))
+      val stamp = java.lang.Short.toUnsignedInt(le.getShort(pos + frameSize - 2))
+      if (stamp != spec.validation && stamp != spec.validationAlt) 0
+      else if (word0 == 0) perFrame
+      else math.min(perFrame, math.max(0,
+        ((word0 & 0x0fff) - FrameHeader - FrameFooter) / recSize))
+    }
+
+    def beginRecord(le: ByteBuffer, pos: Int): Long =
+      java.lang.Integer.toUnsignedLong(le.getInt(pos + 8))
+
+    def micros(le: ByteBuffer, pos: Int, i: Int): Long =
+      Epoch1990Us +
+        java.lang.Integer.toUnsignedLong(le.getInt(pos)) * 1000000L +
+        i * spec.subStepUs +
+        java.lang.Integer.toUnsignedLong(le.getInt(pos + 4)) * spec.subScaleUs
+
+    /** True iff the valid frames in [from, until) carry non-overlapping,
+      * nondecreasing record RANGES, i.e. file order already is record
+      * order. Nondecreasing begin records alone are not enough: two
+      * valid frames with overlapping ranges (a duplicated flush) would
+      * stream out of record order, so each frame's begin must be >=
+      * the previous valid frame's end. False for ring-buffer wraps. */
+    def inOrder(le: ByteBuffer, from: Int, until: Int): Boolean = {
+      var pos = from
+      var lastEnd = Long.MinValue
+      while (pos + frameSize <= until) {
+        val n = records(le, pos)
+        if (n > 0) {
+          val beg = beginRecord(le, pos)
+          if (beg < lastEnd) return false
+          lastEnd = beg + n
+        }
+        pos += frameSize
+      }
+      true
+    }
+  }
+
+  // --- record walker --------------------------------------------------
+
+  /** A TOB file's record layout, from its header: channel codecs and
+    * their offsets inside a record, and the TOB3 frame grammar. The
+    * data region is a run of fixed-size units, whole records (TOB1)
+    * or whole frames (TOB3), and splits cut it only between units. */
+  final class Layout(val header: TobHeader) {
+    val tob1: Boolean = header.format == "TOB1"
+    require(tob1 || header.format == "TOB3", s"not a TOB format: ${header.format}")
+    val chans: Array[Chan] = header.types.map(channel(_, tob1)).toArray
+    val offsets: Array[Int] = chans.scanLeft(0)(_ + _.size)
+    val recSize: Int = offsets.last
+    if (tob1) {
+      require(header.names.take(2).map(_.toUpperCase) ==
+        Seq("SECONDS", "NANOSECONDS"),
+        s"TOB1 must lead with SECONDS,NANOSECONDS (got ${header.names.take(2)})")
+      require(chans.take(2).forall(_ == U32(ByteOrder.LITTLE_ENDIAN)),
+        s"TOB1 SECONDS,NANOSECONDS must be ULONG (got ${header.types.take(2)})")
+    }
+    val frames: Tob3Frames =
+      if (tob1) null else new Tob3Frames(tob3Spec(header), recSize)
+    val unitSize: Int = if (tob1) recSize else frames.frameSize
+    val schema: StructType = sparkSchema(header)
+  }
+
+  /** Streams the records of `bytes[from, until)`, whole units of
+    * `layout`, into ONE reused row holding the full-schema columns
+    * `fields` (DATETIME as epoch micros). Only those columns are
+    * decoded, straight from the bytes: no per-record `Row`, `Seq` or
+    * boxing. Callers that keep a row past the next `next()` copy it.
+    *
+    * Rows come in file order. With `recordOrder`, a TOB3 range whose
+    * valid frames are out of record order (a ring-buffer wrap) comes
+    * stably sorted by record number instead, the order of [[decodeTob3]];
+    * the sort holds a few primitive words per record, never the rows. */
+  final class Records(bytes: Array[Byte], from: Int, until: Int,
+      layout: Layout, fields: Array[Int], recordOrder: Boolean)
+      extends Iterator[InternalRow] {
+    private val le = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    private val be = ByteBuffer.wrap(bytes)
+    private val frames = layout.frames
+    private val chans = layout.chans
+    private val offsets = layout.offsets
+    private val unit = layout.unitSize
+    private val row = new SpecificInternalRow(
+      fields.toSeq.map(layout.schema(_).dataType))
+    // per output column: -1 DATETIME, -2 RECORD, else its channel
+    private val src: Array[Int] = fields.map { f =>
+      if (f == 0) -1
+      else if (layout.tob1) f + 1
+      else if (f == 1) -2
+      else f - 2
+    }
+
+    // stably record-sorted slots (frame * perFrame + i), or null to stream
+    private val slots: Array[Int] =
+      if (frames == null || !recordOrder || frames.inOrder(le, from, until)) null
+      else {
+        val nFrames = (until - from) / unit
+        var total = 0
+        var f = 0
+        while (f < nFrames) { total += frames.records(le, from + f * unit); f += 1 }
+        val rec = new Array[Long](total)
+        val slot = new Array[Int](total)
+        var j = 0
+        f = 0
+        while (f < nFrames) {
+          val pos = from + f * unit
+          val n = frames.records(le, pos)
+          val beg = frames.beginRecord(le, pos)
+          var i = 0
+          while (i < n) {
+            rec(j) = beg + i; slot(j) = f * frames.perFrame + i
+            i += 1; j += 1
+          }
+          f += 1
+        }
+        val order = Array.range(0, total)
+        scala.util.Sorting.stableSort(order, (a: Int, b: Int) => rec(a) < rec(b))
+        order.map(slot)
+      }
+    private var cursor = 0
+
+    // streaming cursor: record i of the n usable ones of the unit at pos
+    private var pos = 0
+    private var nextUnit = from
+    private var i = 0
+    private var n = 0
+    private def seek(): Unit =
+      while (i >= n && nextUnit + unit <= until) {
+        pos = nextUnit; nextUnit += unit; i = 0
+        n = if (frames == null) 1 else frames.records(le, pos)
+      }
+    if (slots == null) seek()
+
+    private def fill(pos: Int, i: Int): Unit = {
+      val at = if (frames == null) pos else pos + FrameHeader + i * layout.recSize
+      var k = 0
+      while (k < src.length) {
+        val c = src(k)
+        if (c >= 0) chans(c).put(le, be, at + offsets(c), row, k)
+        else if (c == -2) row.setLong(k, frames.beginRecord(le, pos) + i)
+        else if (frames != null) row.setLong(k, frames.micros(le, pos, i))
+        else row.setLong(k, Epoch1990Us +
+          java.lang.Integer.toUnsignedLong(le.getInt(at)) * 1000000L +
+          java.lang.Integer.toUnsignedLong(le.getInt(at + offsets(1))) / 1000L)
+        k += 1
+      }
+    }
+
+    override def hasNext: Boolean =
+      if (slots != null) cursor < slots.length else i < n
+
+    override def next(): InternalRow = {
+      if (slots != null) {
+        val s = slots(cursor); cursor += 1
+        fill(from + s / frames.perFrame * unit, s % frames.perFrame)
+      } else {
+        fill(pos, i); i += 1; seek()
+      }
+      row
+    }
+  }
+
+  /** `Row` view of a whole file's bytes, for [[read]] and the specs:
+    * (DATETIME us, [RECORD,] fields...) in full-schema order, strings
+    * as `String`. A truncated tail unit is ignored. */
+  private def rowView(bytes: Array[Byte], format: String,
+      recordOrder: Boolean): (Iterator[Row], TobHeader) = {
+    val (h, dataStart) = parseHeader(bytes)
+    require(h.format == format, s"expected $format, got ${h.format}")
+    val layout = new Layout(h)
+    val end = dataStart +
+      (bytes.length - dataStart) / layout.unitSize * layout.unitSize
+    val types = layout.schema.fields.map(_.dataType)
+    val recs = new Records(bytes, dataStart, end, layout,
+      types.indices.toArray, recordOrder)
+    (recs.map { r =>
+      Row.fromSeq(types.indices.map { k =>
+        r.get(k, types(k)) match {
+          case s: UTF8String => s.toString
+          case v => v
+        }
+      })
+    }, h)
+  }
+
+  // --- TOB1 -----------------------------------------------------------
+
+  /** Decode one TOB1 file's bytes to rows of (DATETIME us, fields...).
+    * Leading SECONDS/NANOSECONDS channels collapse into the timestamp. */
+  def decodeTob1(bytes: Array[Byte]): (Seq[Row], TobHeader) = {
+    val (it, h) = decodeTob1Rows(bytes)
+    (it.toVector, h)
+  }
+
+  /** Streaming TOB1 decode: records are stored sequentially (no frame
+    * reordering exists in TOB1), so file order IS the contract order. */
+  def decodeTob1Rows(bytes: Array[Byte]): (Iterator[Row], TobHeader) =
+    rowView(bytes, "TOB1", recordOrder = false)
+
+  // --- TOB3 -----------------------------------------------------------
+
   /** Decode one TOB3 file: frames -> (DATETIME us, RECORD, fields...).
     * Invalid-stamp frames are skipped; minor frames contribute only
     * their declared record count; output sorted by record number
-    * (reference sorts by timestamp; record no is the same order).
-    * Materializes the file's row set for the sort — streaming callers
-    * that can prove the order use [[decodeTob3Rows]] instead. */
+    * (reference sorts by timestamp; record no is the same order). */
   def decodeTob3(bytes: Array[Byte]): (Seq[Row], TobHeader) = {
-    val (it, h) = decodeTob3Rows(bytes)
-    (it.toVector.sortBy(_.getLong(1)), h)
+    val (it, h) = rowView(bytes, "TOB3", recordOrder = true)
+    (it.toVector, h)
   }
 
-  /** Streaming TOB3 decode: rows in FILE order, O(one frame) live
-    * memory — nothing file-sized is ever materialized, so 32
-    * concurrent partition readers hold 32 frames, not 32 files' row
-    * sets (the difference between a few KB and a few GB of old-gen
-    * pressure on a wide executor). File order equals the
-    * [[decodeTob3]] record-number order iff valid frames are stored
-    * with nondecreasing begin-record numbers — the normal shape for
-    * a closed-out daily file; [[tob3FramesInOrder]] checks exactly
-    * that from frame headers alone (16 bytes per frame, no record
-    * decode), and callers fall back to [[decodeTob3]] on ring-buffer
-    * wraps. */
-  def decodeTob3Rows(bytes: Array[Byte]): (Iterator[Row], TobHeader) = {
-    val (h, dataStart) = parseHeader(bytes)
-    require(h.format == "TOB3", s"expected TOB3, got ${h.format}")
-    val spec = tob3Spec(h)
-    val chans = h.types.map(channel(_, tob1 = false))
-    val recSize = chans.map(_.size).sum
-    val hdrSize = 12; val footSize = 4
-    val nRecFrame = (spec.frameSize - hdrSize - footSize) / recSize
+  /** Streaming TOB3 decode: rows in FILE order. File order equals the
+    * [[decodeTob3]] record-number order iff [[tob3FramesInOrder]]. */
+  def decodeTob3Rows(bytes: Array[Byte]): (Iterator[Row], TobHeader) =
+    rowView(bytes, "TOB3", recordOrder = false)
 
-    val it = new Iterator[Row] {
-      private val buf = ByteBuffer.wrap(bytes)
-      private var pos = dataStart
-      private var framePos = 0
-      private var i = 0
-      private var nRecs = 0
-      private var seconds = 0L
-      private var subSeconds = 0L
-      private var begRecord = 0L
-
-      /** Advance to the next frame with >= 1 usable record. */
-      private def advanceFrame(): Unit = {
-        nRecs = 0; i = 0
-        while (nRecs == 0 && pos + spec.frameSize <= bytes.length) {
-          val b = ByteBuffer.wrap(bytes, pos, spec.frameSize)
-            .order(ByteOrder.LITTLE_ENDIAN)
-          seconds = java.lang.Integer.toUnsignedLong(b.getInt)
-          subSeconds = java.lang.Integer.toUnsignedLong(b.getInt)
-          begRecord = java.lang.Integer.toUnsignedLong(b.getInt)
-          val fb = ByteBuffer.wrap(bytes,
-            pos + spec.frameSize - footSize, footSize)
-            .order(ByteOrder.LITTLE_ENDIAN)
-          val word0 = java.lang.Short.toUnsignedInt(fb.getShort)
-          val stamp = java.lang.Short.toUnsignedInt(fb.getShort)
-          if (stamp == spec.validation || stamp == spec.validationAlt) {
-            // minor frame: low 12 bits of word0 = used byte count
-            // incl. header+footer; major frame: word0 == 0 -> all.
-            nRecs =
-              if (word0 == 0) nRecFrame
-              else math.min(nRecFrame, math.max(0,
-                ((word0 & 0x0fff) - hdrSize - footSize) / recSize))
-          }
-          framePos = pos
-          pos += spec.frameSize
-        }
-      }
-      advanceFrame()
-
-      override def hasNext: Boolean = i < nRecs
-      override def next(): Row = {
-        buf.position(framePos + hdrSize + i * recSize)
-        val vals = chans.map(_.read(buf))
-        val us = Epoch1990Us + seconds * 1000000L +
-          i * spec.subStepUs + subSeconds * spec.subScaleUs
-        val r = Row.fromSeq(us +: (begRecord + i) +: vals)
-        i += 1
-        if (i >= nRecs) advanceFrame()
-        r
-      }
-    }
-    (it, h)
-  }
-
-  /** Header-only order probe: true iff the file's VALID frames carry
-    * non-overlapping, nondecreasing record RANGES (16 bytes read per
-    * frame — no record decode), i.e. streaming file order satisfies
-    * the record-number sort contract. Nondecreasing begin records
-    * alone are not enough: two valid frames with equal or overlapping
-    * begin records (e.g. a duplicated flush) would stream out of
-    * record order, so each frame's begin must be >= the previous
-    * valid frame's END (begin + record count, derived from the same
-    * word0 footer arithmetic the decoder uses). False for ring-buffer
-    * wraps and overlapping flushes. */
+  /** Header-only order probe over a whole file: see [[Tob3Frames.inOrder]]. */
   def tob3FramesInOrder(bytes: Array[Byte]): Boolean = {
     val (h, dataStart) = parseHeader(bytes)
     require(h.format == "TOB3", s"expected TOB3, got ${h.format}")
-    val spec = tob3Spec(h)
-    val chans = h.types.map(channel(_, tob1 = false))
-    val recSize = chans.map(_.size).sum
-    val hdrSize = 12; val footSize = 4
-    val nRecFrame = (spec.frameSize - hdrSize - footSize) / recSize
-    var pos = dataStart
-    var lastEnd = Long.MinValue
-    var ok = true
-    while (ok && pos + spec.frameSize <= bytes.length) {
-      val b = ByteBuffer.wrap(bytes, pos, 12)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      b.getInt; b.getInt
-      val beg = java.lang.Integer.toUnsignedLong(b.getInt)
-      val fb = ByteBuffer.wrap(bytes,
-        pos + spec.frameSize - footSize, footSize)
-        .order(ByteOrder.LITTLE_ENDIAN)
-      val word0 = java.lang.Short.toUnsignedInt(fb.getShort)
-      val stamp = java.lang.Short.toUnsignedInt(fb.getShort)
-      if (stamp == spec.validation || stamp == spec.validationAlt) {
-        val nRecs =
-          if (word0 == 0) nRecFrame
-          else math.min(nRecFrame, math.max(0,
-            ((word0 & 0x0fff) - hdrSize - footSize) / recSize))
-        if (nRecs > 0) {
-          if (beg < lastEnd) ok = false else lastEnd = beg + nRecs
-        }
-      }
-      pos += spec.frameSize
-    }
-    ok
+    new Layout(h).frames.inOrder(
+      ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN),
+      dataStart, bytes.length)
   }
 
   /** TOB1 encoder (test/round-trip utility): rows of

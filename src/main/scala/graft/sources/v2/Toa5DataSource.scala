@@ -159,6 +159,7 @@ private[v2] class Toa5PartitionReader(file: String,
           while (i < srcIdx.length) {
             val si = srcIdx(i)
             if (si < 0) out.update(i, ts)
+            else if (si >= cells.length) out.update(i, null) // short row
             else {
               val raw = Toa5V2.unquote(cells(si))
               required.fields(i).dataType match {
@@ -190,9 +191,13 @@ object Toa5V2 {
   private val tsFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
 
   /** Which cells carry the event time, and their joined pattern —
-    * TOA5 has a TIMESTAMP column, EddyPro splits date and time. */
+    * TOA5 has a TIMESTAMP column, EddyPro splits date and time. The
+    * formatter is built once per spec, i.e. once per reader. */
   final case class TsSpec(idxs: Array[Int], pattern: String)
-      extends Serializable
+      extends Serializable {
+    @transient lazy val formatter: DateTimeFormatter =
+      DateTimeFormatter.ofPattern(pattern)
+  }
 
   def tsSpecOf(file: String): (FileFormat, TsSpec) = {
     val (fmt, header) = Toa5.probeHeader(file)
@@ -212,13 +217,12 @@ object Toa5V2 {
     if (spec.idxs.exists(i => i < 0 || i >= cells.length))
       return Long.MinValue
     parseTsMicros(spec.idxs.map(i => unquote(cells(i))).mkString(" "),
-      spec.pattern)
+      spec.formatter)
   }
 
-  def parseTsMicros(s: String, pattern: String): Long =
+  def parseTsMicros(s: String, fmt: DateTimeFormatter): Long =
     try {
-      val ldt = LocalDateTime.parse(s,
-        DateTimeFormatter.ofPattern(pattern))
+      val ldt = LocalDateTime.parse(s, fmt)
       ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
         ldt.getNano / 1000L
     } catch { case _: Exception => Long.MinValue }
@@ -259,12 +263,7 @@ object Toa5V2 {
     else s
 
   /** Micros since epoch (UTC wall-clock), Long.MinValue if unparseable. */
-  def parseTsMicros(s: String): Long =
-    try {
-      val ldt = LocalDateTime.parse(s, tsFmt)
-      ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
-        ldt.getNano / 1000L
-    } catch { case _: Exception => Long.MinValue }
+  def parseTsMicros(s: String): Long = parseTsMicros(s, tsFmt)
 
   /** (lowerMicros, upperMicros) implied by a DATETIME filter, if any. */
   def tsBound(f: Filter): Option[(Long, Long)] = {

@@ -1,16 +1,19 @@
 package graft.sources.v2
 
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.Tob
 
@@ -19,13 +22,13 @@ import graft.sources.Tob
   *
   * SURVEY §7.3's second phase-2 item (the frame decoder inside a
   * `PartitionReader`). Schema comes from a driver-side header probe of
-  * the first file (~4 KB); each file is one partition (a fast-data
-  * site-day is many daily files — parallelism with no shuffle); the
-  * frame/record decode runs inside the partition reader, reusing the
-  * tested [[graft.sources.Tob]] decoders (validation stamps, minor
-  * frames, FP2 NaN -> null). Column pruning happens at row
-  * materialization — fixed-width binary decode is IO-bound, so the
-  * win is skipping per-cell conversion and row width, not bytes read.
+  * the first file. Each file is cut into byte ranges of whole frames
+  * (TOB3) or whole records (TOB1), sized by Spark's own file-split
+  * rule, so one logger day decodes on several cores with no shuffle.
+  * The decode runs inside the partition reader on the tested
+  * [[graft.sources.Tob]] record walker (validation stamps, minor
+  * frames, FP2 NaN -> null), which converts only the columns Catalyst
+  * asks for into one reused row.
   */
 class TobDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "tob"
@@ -57,13 +60,42 @@ private[v2] class TobScanBuilder(fullSchema: StructType, path: String)
   override def build(): Scan = new TobScan(path, fullSchema, required)
 }
 
+/** One split: the data bytes [from, until) of `file`, whole units of
+  * its layout; the reader also reads the header, [0, dataStart). */
+private[v2] case class TobSplit(file: String, dataStart: Int,
+    from: Long, until: Long) extends InputPartition
+
 private[v2] class TobScan(path: String, fullSchema: StructType,
     required: StructType) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    Toa5V2.listFiles(path)
-      .map(f => Toa5InputPartition(f): InputPartition).toArray
+
+  /** Cuts every file into unit-aligned splits. The split size is
+    * Spark's own for file sources (`FilePartition.maxSplitBytes`:
+    * `spark.sql.files.maxPartitionBytes`, `openCostInBytes`,
+    * `minPartitionNum`, else the default parallelism); a file is cut
+    * into that many equal runs of units, so its splits are even. A
+    * truncated tail unit belongs to no split, and every file gets at
+    * least one split, so every header is checked by a reader. */
+  override def planInputPartitions(): Array[InputPartition] = {
+    val files = Toa5V2.listFiles(path).map { f =>
+      val (h, dataStart) = TobV2.header(f)
+      (f, dataStart, Files.size(Paths.get(f)), new Tob.Layout(h).unitSize)
+    }
+    val openCost = SQLConf.get.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(SparkSession.active,
+      files.map(_._3 + openCost).sum)
+    files.flatMap { case (f, dataStart, len, unit) =>
+      val units = math.max(0L, len - dataStart) / unit
+      val n = math.max(1L, math.min(units, (units * unit + maxSplit - 1) / maxSplit))
+      val per = (units + n - 1) / n
+      (0L until n).map { k =>
+        TobSplit(f, dataStart, dataStart + math.min(units, k * per) * unit,
+          dataStart + math.min(units, (k + 1) * per) * unit): InputPartition
+      }
+    }.toArray
+  }
+
   override def createReaderFactory(): PartitionReaderFactory =
     new TobReaderFactory(fullSchema, required)
 }
@@ -71,21 +103,27 @@ private[v2] class TobScan(path: String, fullSchema: StructType,
 private[v2] class TobReaderFactory(fullSchema: StructType,
     required: StructType) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new TobPartitionReader(
-      partition.asInstanceOf[Toa5InputPartition].file, fullSchema, required)
+    new TobPartitionReader(partition.asInstanceOf[TobSplit], fullSchema, required)
 }
 
-/** Frame decode to InternalRow with required-column pruning. The file
-  * BYTES are read whole (one logger day — bounded per task); the ROWS
-  * stream frame-by-frame whenever the frame order already satisfies
-  * the record-number contract, so live heap per task is one frame,
-  * not one file's boxed rows. */
-private[v2] class TobPartitionReader(file: String,
+/** Decodes one split into one reused row with required-column pruning.
+  * It reads the file's header and its own byte range, never the whole
+  * file. Records stream in file order; a TOB3 split whose valid
+  * frames are out of record order (a ring-buffer wrap) is emitted in
+  * record order within the split. */
+private[v2] class TobPartitionReader(split: TobSplit,
     fullSchema: StructType, required: StructType)
     extends PartitionReader[InternalRow] {
-  private val rows: Iterator[org.apache.spark.sql.Row] = {
-    val bytes = Files.readAllBytes(Paths.get(file))
-    val (fh, _) = Tob.parseHeader(bytes)
+  private val rows: Iterator[InternalRow] = {
+    val ch = FileChannel.open(Paths.get(split.file))
+    val (head, body) = try {
+      (TobV2.readAt(ch, 0L, split.dataStart),
+        TobV2.readAt(ch, split.from, (split.until - split.from).toInt))
+    } finally ch.close()
+    val (fh, dataStart) = Tob.parseHeader(head)
+    val file = split.file
+    require(dataStart == split.dataStart,
+      s"TOB header of $file changed while planning the scan")
     // the scan's schema came from a single probe file: a file whose
     // own header disagrees would mis-bind columns — fail loudly.
     // Names + types must match exactly; a user-declared schema
@@ -102,55 +140,49 @@ private[v2] class TobPartitionReader(file: String,
         s"declared schema marks ${d.name} non-nullable but the TOB " +
         s"decoder can emit nulls for it in $file")
     }
-    // TOB3 streams frame-by-frame when valid frames are already in
-    // record order (the normal closed-out daily file — checked from
-    // frame headers alone): O(one frame) live memory per task
-    // instead of the whole file's boxed row set, which at 32
-    // concurrent day-file readers is the difference between KBs and
-    // GBs of old-gen pressure. Ring-buffer wraps (out-of-order
-    // frames) take the materialize+sort path, preserving the
-    // record-number order contract exactly.
-    if (fh.format == "TOB1") Tob.decodeTob1Rows(bytes)._1
-    else if (Tob.tob3FramesInOrder(bytes)) Tob.decodeTob3Rows(bytes)._1
-    else Tob.decodeTob3(bytes)._1.iterator
+    new Tob.Records(body, 0, body.length, new Tob.Layout(fh),
+      required.fields.map(f => fullSchema.fieldIndex(f.name)),
+      recordOrder = true)
   }
-  // decode rows are in full-schema field order
-  private val srcIdx: Array[Int] =
-    required.fields.map(f => fullSchema.fieldIndex(f.name))
 
   private var current: InternalRow = _
 
   override def next(): Boolean =
     if (!rows.hasNext) false
-    else {
-      val r = rows.next()
-      val out = new GenericInternalRow(srcIdx.length)
-      var i = 0
-      while (i < srcIdx.length) {
-        val v = r.get(srcIdx(i))
-        out.update(i, v match {
-          case null => null
-          case s: String => UTF8String.fromString(s)
-          case other => other   // us-long timestamp + primitives as-is
-        })
-        i += 1
-      }
-      current = out
-      true
-    }
+    else { current = rows.next(); true }
 
   override def get(): InternalRow = current
   override def close(): Unit = ()
 }
 
 private[v2] object TobV2 {
-  /** Driver-side probe: header lives in the first few hundred bytes. */
-  def fullSchema(path: String): StructType = {
-    val first = Toa5V2.listFiles(path).head
-    val head = new Array[Byte](4096)
-    val in = Files.newInputStream(Paths.get(first))
-    val n = try in.readNBytes(head, 0, head.length) finally in.close()
-    val (h, _) = Tob.parseHeader(java.util.Arrays.copyOf(head, n))
-    Tob.sparkSchema(h)
+  /** Driver-side probe: the first file's header is the scan schema. */
+  def fullSchema(path: String): StructType =
+    Tob.sparkSchema(header(Toa5V2.listFiles(path).head)._1)
+
+  /** A file's header and data offset, read in growing prefixes (the
+    * header is a few hundred bytes unless the table is very wide). */
+  def header(file: String): (Tob.TobHeader, Int) = {
+    val ch = FileChannel.open(Paths.get(file))
+    try {
+      val len = ch.size()
+      var n = 4096L
+      var parsed: Option[(Tob.TobHeader, Int)] = None
+      while (parsed.isEmpty) {
+        val head = readAt(ch, 0L, math.min(n, len).toInt)
+        parsed =
+          try Some(Tob.parseHeader(head))
+          catch { case e: IllegalArgumentException if n < len => None }
+        n *= 4
+      }
+      parsed.get
+    } finally ch.close()
+  }
+
+  def readAt(ch: FileChannel, at: Long, n: Int): Array[Byte] = {
+    val buf = ByteBuffer.allocate(n)
+    while (buf.hasRemaining && ch.read(buf, at + buf.position()) >= 0) ()
+    require(!buf.hasRemaining, s"short read: wanted $n bytes at $at")
+    buf.array()
   }
 }

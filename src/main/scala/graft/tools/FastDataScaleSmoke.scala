@@ -18,14 +18,16 @@ import graft.pipeline.FastData
   * factor N, recording wall seconds, decoded rows, shard files
   * written, plan Exchange counts, and task/GC seconds.
   *
-  * What must hold at scale: the DSv2 scan is file-parallel (one
-  * partition per logger file, so N files = N-way decode with no
+  * What must hold at scale: the DSv2 scan is split-parallel (each
+  * logger file is cut into frame-aligned byte ranges sized by
+  * Spark's file-split rule, so N files decode at least N-way with no
   * driver involvement), `windowStats` is one partial-aggregated
   * groupBy on the window key, and `writeShards` runs ONE shuffle and
   * ONE write job regardless of window count. So wall should scale
-  * far sublinearly with N on a 32-core box until N exceeds core
-  * count, exchange counts must be factor-invariant, and shard count
-  * must scale exactly linearly (48 half-hour shards per day).
+  * far sublinearly with N on a 32-core box until the splits exceed
+  * the core count, exchange counts must be factor-invariant, and
+  * shard count must scale exactly linearly (48 half-hour shards per
+  * day).
   *
   * Usage: `runMain graft.tools.FastDataScaleSmoke [factor] [rowsPerDay]`
   * (defaults 100, 864000). Files land under /tmp/graft_fastsmoke.

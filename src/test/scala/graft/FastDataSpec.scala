@@ -127,4 +127,40 @@ class FastDataSpec extends SparkSpec {
       .filter(_.getFileName.toString.endsWith(".dat")).toSeq
     assert(dat.isEmpty, s"shards written for an empty frame: $dat")
   }
+
+  test("writeShards is one SQL execution with one exchange") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    def exchanges(p: SparkPlan): Int =
+      (p match { case _: Exchange => 1; case _ => 0 }) + (p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case _ => p.children
+      }).map(exchanges).sum
+    val marker = "writeShards-execution-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      private def record(f: String, qe: QueryExecution) =
+        seen.add(if (qe.logical.toString.contains(marker)) (marker, 0)
+          else (f, exchanges(qe.executedPlan)))
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = record(f, qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = record(f, qe)
+    }
+    val out = Files.createTempDirectory("shards_qe")
+    val df = frame(2)
+    spark.listenerManager.register(listener)
+    try {
+      FastData.writeShards(df, meta, "DATETIME", 1, out.toString, "Site_fast")
+      // the listener bus is FIFO: once the marker query is seen, every
+      // execution writeShards started has been delivered before it
+      spark.sql(s"SELECT '$marker'").collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.toArray.exists(_ == ((marker, 0))) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val events = seen.toArray.toSeq.map(_.asInstanceOf[(String, Int)])
+    assert(events.lastOption.contains((marker, 0)), s"marker not delivered: $events")
+    assert(events.init == Seq(("writeShards", 1)), s"executions: $events")
+  }
 }

@@ -106,4 +106,93 @@ class Toa5Spec extends SparkSpec {
     }
     assert(ex.getMessage.contains("ps_Avg"))
   }
+
+  // ---- the one body-line encoder behind both TOA5 writers ----
+
+  private val encMeta = graft.core.TableMeta(
+    graft.core.FileInfo("TOA5", "Site", "CR3000", "1", "os", "prog", "99", "fast"),
+    Seq(graft.core.VariableMeta("TIMESTAMP", "TS", ""),
+      graft.core.VariableMeta("d", "m/s", "Avg"),
+      graft.core.VariableMeta("f", "degC", "Smp"),
+      graft.core.VariableMeta("n", "", "Tot"),
+      graft.core.VariableMeta("s", "", "Smp")))
+
+  /** Rows at epoch micros `us` (UTC), one column per cell type. */
+  private def encFrame(rows: Seq[(Long, java.lang.Double, java.lang.Float,
+      java.lang.Long, String)]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("us", LongType),
+      StructField("d", DoubleType), StructField("f", FloatType),
+      StructField("n", LongType), StructField("s", StringType)))
+    spark.createDataFrame(java.util.Arrays.asList(rows.map(r =>
+      Row(r._1, r._2, r._3, r._4, r._5)): _*), schema)
+      .select(timestamp_micros(col("us")).as("DATETIME"),
+        col("d"), col("f"), col("n"), col("s"))
+  }
+
+  private def utcMicros(s: String): Long =
+    java.time.LocalDateTime.parse(s.replace(' ', 'T'))
+      .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
+
+  test("both TOA5 writers encode cells and timestamps to the same golden text") {
+    val t0 = utcMicros("2024-03-01 00:00:00")
+    val frame = encFrame(Seq(
+      (t0 + 100000L, null, 1.5f, 7L, "x y"),
+      (t0 + 200000L, java.lang.Double.NaN, -0.25f, -3L, null),
+      (t0 + 1000000L, 1.0, 0.1f, Long.MaxValue, "q"),
+      (t0 + 1500000L, 1.0e-7, 1.0e10f, null, "a,b"),
+      (t0 + 59000000L, 0.1 + 0.2, null, 0L, "")))
+    val golden =
+      "\"TOA5\",\"Site\",\"CR3000\",\"1\",\"os\",\"prog\",\"99\",\"fast\"\r\n" +
+      "\"TIMESTAMP\",\"d\",\"f\",\"n\",\"s\"\r\n" +
+      "\"TS\",\"m/s\",\"degC\",\"\",\"\"\r\n" +
+      "\"\",\"Avg\",\"Smp\",\"Tot\",\"Smp\"\r\n" +
+      "\"2024-03-01 00:00:00\",NAN,1.5,7,\"x y\"\r\n" +
+      "\"2024-03-01 00:00:00\",NAN,-0.25,-3,NAN\r\n" +
+      "\"2024-03-01 00:00:01\",1.0,0.1,9223372036854775807,\"q\"\r\n" +
+      "\"2024-03-01 00:00:01\",1.0E-7,1.0E10,NAN,\"a,b\"\r\n" +
+      "\"2024-03-01 00:00:59\",0.30000000000000004,NAN,0,\"\"\r\n"
+    val dir = Files.createTempDirectory("toa5enc")
+    Toa5.write(frame, encMeta, dir.resolve("one.dat").toString)
+    assert(new String(Files.readAllBytes(dir.resolve("one.dat")),
+      StandardCharsets.UTF_8) == golden)
+    val names = graft.pipeline.FastData.writeShards(frame, encMeta,
+      "DATETIME", 1, dir.resolve("shards").toString, "Site")
+    assert(names == Seq("Site_2024_03_01_0001.dat"))
+    assert(new String(Files.readAllBytes(dir.resolve("shards").resolve(names.head)),
+      StandardCharsets.UTF_8) == golden)
+  }
+
+  test("TOA5 writers render the session time zone, not the JVM default") {
+    val jvm = java.util.TimeZone.getDefault
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    java.util.TimeZone.setDefault(
+      java.util.TimeZone.getTimeZone("Australia/Sydney"))
+    try {
+      val us = utcMicros("2024-03-01 00:30:00")
+      val frame = encFrame(Seq((us, 1.5, 2.5f, 1L, "a")))
+      val dir = Files.createTempDirectory("toa5tz")
+      val out = dir.resolve("tz.dat").toString
+      Toa5.write(frame, encMeta, out)
+      assert(Files.readAllLines(dir.resolve("tz.dat")).get(4)
+        .startsWith("\"2024-03-01 00:30:00\","))
+      val back = Toa5.read(spark, out).data
+        .select(unix_micros(col("DATETIME"))).collect().map(_.getLong(0))
+      assert(back.toSeq == Seq(us))
+      val names = graft.pipeline.FastData.writeShards(frame, encMeta,
+        "DATETIME", 30, dir.resolve("shards").toString, "F")
+      assert(names == Seq("F_2024_03_01_0030.dat"))
+      // a session zone with DST rules moves both writers alike (AEDT +11)
+      spark.conf.set("spark.sql.session.timeZone", "Australia/Sydney")
+      try {
+        Toa5.write(frame, encMeta, out)
+        assert(Files.readAllLines(dir.resolve("tz.dat")).get(4)
+          .startsWith("\"2024-03-01 11:30:00\","))
+        assert(graft.pipeline.FastData.writeShards(frame, encMeta, "DATETIME",
+          30, dir.resolve("shards_syd").toString, "F") ==
+          Seq("F_2024_03_01_1130.dat"))
+      } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+    } finally java.util.TimeZone.setDefault(jvm)
+  }
 }

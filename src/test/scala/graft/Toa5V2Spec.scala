@@ -33,13 +33,16 @@ class Toa5V2Spec extends SparkSpec {
       "\"2024-01-01 00:30:00\",1.5,50",
       "\"2024-01-01 01:00:00\",NAN,51",
       "\"bad-timestamp\",9,9",
-      "\"2024-01-01 01:30:00\",2.5,garbage"))
+      "\"2024-01-01 01:30:00\",2.5,garbage",
+      "\"2024-01-01 02:00:00\",3.5"))  // truncated last line: RH missing
     val v2 = spark.read.format("toa5").load(dir.toString)
       .select("DATETIME", "Ta", "RH").orderBy("DATETIME")
     val codec = graft.sources.Toa5.read(spark, dir.toString).data
       .select("DATETIME", "Ta", "RH").orderBy("DATETIME")
     assert(v2.collect().toSeq == codec.collect().toSeq)
-    assert(v2.count() == 3)  // bad-timestamp row dropped
+    assert(v2.count() == 4)  // bad-timestamp row dropped
+    val short = v2.collect().last
+    assert(short.getDouble(1) == 3.5 && short.isNullAt(2))
   }
 
   test("v2 scan prunes columns to the projection") {

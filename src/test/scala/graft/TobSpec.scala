@@ -115,6 +115,46 @@ class TobSpec extends SparkSpec {
     header ++ good1 ++ bad ++ minor
   }
 
+  /** Runs `body` with session confs set, restoring them after. */
+  private def withConf[A](kv: (String, String)*)(body: => A): A = {
+    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** A 12-frame TOB3 file of 28-byte frames (2 records each, begin
+    * records 0, 2, ...): frame 3 has an invalid stamp, frames 4 and 7
+    * (the first and last of the middle third) are minor with 1
+    * record, one FP2 cell is the NaN sentinel, and a 10-byte truncated
+    * tail follows. `order` permutes the frames. */
+  private def tob3SplitFixture(order: Seq[Int]): Array[Byte] = {
+    val header = tob3Fixture().dropRight(3 * 28)
+    val frames = (0 until 12).map { f =>
+      val stamp = if (f == 3) 12345 else 43981
+      val word0 = if (f == 4 || f == 7) 22 else 0
+      val fp2 = if (f == 9) 0x9ffe else f
+      tob3Frame(1000 + f, 0, 2 * f, word0, stamp,
+        Seq((f + 0.5f, fp2.toShort), (f + 0.75f, (f + 100).toShort)))
+    }
+    header ++ order.flatMap(frames(_)) ++ Array.fill[Byte](10)(7)
+  }
+
+  /** (DATETIME us, RECORD, Ux, Ts) of decoded rows. */
+  private def tuples(rows: Seq[org.apache.spark.sql.Row]) =
+    rows.map(r => (r.getLong(0), r.getLong(1), r.getFloat(2),
+      if (r.isNullAt(3)) None else Some(r.getDouble(3))))
+
+  private def scanTuples(dir: Path) = {
+    import org.apache.spark.sql.functions._
+    val df = spark.read.format("tob").load(dir.toString)
+      .select(unix_micros(col("DATETIME")), col("RECORD"), col("Ux"), col("Ts"))
+    (tuples(df.collect().toSeq).sortBy(_._2), df.rdd.getNumPartitions)
+  }
+
   // ---- decode tests ----
 
   test("TOB1 decode builds 1990-epoch timestamps and channels (S8)") {
@@ -235,5 +275,53 @@ class TobSpec extends SparkSpec {
       out.toString, "Site_fast")
     assert(names == Seq("Site_fast_2024_01_01_0001.dat"))
     assert(Files.exists(out.resolve(names.head)))
+  }
+
+  test("TOB3 frame-aligned splits decode exactly what decodeTob3 does") {
+    val inOrder = tob3SplitFixture(0 until 12)
+    val want = tuples(Tob.decodeTob3(inOrder)._1)
+    assert(want.length == 20)     // 12 frames: 1 invalid, 2 minor
+    assert(want.exists(_._4.isEmpty))
+    // a ring-buffer wrap of the same frames: the same row set
+    val ring = tob3SplitFixture((6 until 12) ++ (0 until 6))
+    assert(tuples(Tob.decodeTob3(ring)._1) == want)
+    withConf("spark.sql.files.maxPartitionBytes" -> "112") {
+      val dir = Files.createTempDirectory("tob3split")
+      Files.write(dir.resolve("a.dat"), inOrder)
+      val (got, parts) = scanTuples(dir)
+      assert(parts == 3)          // 336 data bytes in 112-byte splits
+      assert(got == want)
+      val dirRing = Files.createTempDirectory("tob3splitring")
+      Files.write(dirRing.resolve("a.dat"), ring)
+      val (gotRing, partsRing) = scanTuples(dirRing)
+      assert(partsRing == 3)
+      assert(gotRing == want)
+      // the wrapped middle split (frames 10, 11, 0, 1) is record-sorted
+      val perSplit = spark.read.format("tob").load(dirRing.toString)
+        .select("RECORD").rdd.glom().collect()
+        .map(_.map(_.getLong(0)).toSeq).toSeq
+      assert(perSplit.forall(p => p == p.sorted), perSplit)
+      assert(perSplit.flatten.sorted == want.map(_._2))
+    }
+  }
+
+  test("TOB1 record-aligned splits decode exactly what decodeTob1 does") {
+    val dir = Files.createTempDirectory("tob1split")
+    val base = 1000000000000000L
+    Tob.writeTob1(s"$dir/a.dat",
+      Seq("TOB1", "Site", "CR6", "1", "os", "prog", "1", "Fast"),
+      Seq("Ux", "Uy"),
+      (0 until 50).map(i => (base + i * 100000L, Seq(i.toFloat, -i.toFloat))))
+    val want = Tob.decodeTob1(Files.readAllBytes(dir.resolve("a.dat")))._1
+      .map(r => (r.getLong(0), r.getFloat(1), r.getFloat(2)))
+    withConf("spark.sql.files.maxPartitionBytes" -> "256") {
+      import org.apache.spark.sql.functions._
+      val df = spark.read.format("tob").load(dir.toString)
+        .select(unix_micros(col("DATETIME")), col("Ux"), col("Uy"))
+      assert(df.rdd.getNumPartitions == 4)  // 800 data bytes
+      val got = df.collect().toSeq
+        .map(r => (r.getLong(0), r.getFloat(1), r.getFloat(2)))
+      assert(got.sortBy(_._1) == want)
+    }
   }
 }

@@ -10,9 +10,18 @@ falls on both sides alike. Each run's result is its last JSON line.
 
 Prints, for every end-to-end metric of the change's BENCHMARK.json,
 each side's median and quartiles (Q1/Q3, inclusive method) and how
-many pairs the change won (ties count for neither side); then, per
-pair, the job count of every timed rep and whether the two output
-digests match. Exits non-zero if any run failed or was not `correct`.
+many pairs the change won (ties count for neither side). Then one
+verdict line per metric:
+
+    <metric>: gain rule: PASS|FAIL (...); bound: ok|WORSE (...)
+
+`gain rule` passes when the change won at least 9/10 of the pairs run
+and the median gap (in the metric's better direction) exceeds the
+parent's IQR; `bound` is WORSE when the change's median is worse than
+the parent's by more than the metric's `bound` (a fraction of the
+parent's median). Then, per pair, the job count of every timed rep
+and whether the two output digests match. Exits non-zero if any run
+failed or was not `correct`.
 
 Nothing is written inside either checkout beyond what run.py itself
 writes (`.bench_build/`, `.bench_out/`); this script only prints.
@@ -64,7 +73,8 @@ def main():
     a = ap.parse_args()
 
     manifest = json.loads((a.change / "BENCHMARK.json").read_text())
-    metrics = [(m["name"], m["unit"], m["better"]) for m in manifest["end_to_end"]]
+    metrics = [(m["name"], m["unit"], m["better"], m["bound"])
+               for m in manifest["end_to_end"]]
     sides = {"parent": a.parent.resolve(), "change": a.change.resolve()}
     pairs = []
     for i in range(a.pairs):
@@ -82,7 +92,8 @@ def main():
           f"{a.seed0}..{a.seed0 + a.pairs - 1}")
     print(f"{'metric':<14}{'parent Q1/med/Q3':>30}{'change Q1/med/Q3':>30}"
           f"{'change wins':>13}")
-    for name, unit, better in metrics:
+    verdicts = []
+    for name, unit, better, bound in metrics:
         done = [p for p in pairs
                 if name in p["parent"]["metrics"] and name in p["change"]["metrics"]]
         if not done:
@@ -94,6 +105,19 @@ def main():
         fmt = lambda q: "/".join(f"{v:.4g}" for v in q)
         print(f"{name + ' (' + unit + ')':<14}{fmt(quartiles(par)):>30}"
               f"{fmt(quartiles(chg)):>30}{f'{wins}/{len(done)}':>13}")
+        pq1, pmed, pq3 = quartiles(par)
+        cmed = statistics.median(chg)
+        gap = sign * (pmed - cmed)          # > 0: the change is better
+        delta = (cmed - pmed) / pmed if pmed else 0.0
+        gain = 10 * wins >= 9 * len(done) and gap > pq3 - pq1
+        verdicts.append(
+            f"{name}: gain rule: {'PASS' if gain else 'FAIL'} ({wins}/{len(done)} "
+            f"wins, median gap {gap:.4g} vs parent IQR {pq3 - pq1:.4g}); "
+            f"bound: {'WORSE' if sign * delta > bound else 'ok'} "
+            f"(median {delta:+.1%} vs parent, worse past {sign * bound:+.0%})")
+    print()
+    for v in verdicts:
+        print(v)
     print("\nper pair: seed, jobs per timed rep (parent | change), digests equal")
     for p in pairs:
         same = (p["parent"]["digest"] is not None

@@ -111,27 +111,6 @@ object Bench {
     val sentinelBefore = sentinelSec()
     val parBefore = parProbeSec(nCores)
     val ioMbs = ioProbeMbs(s"$sfDir/lineitem.parquet")
-    // `runs` timed executions per query, report the min: the first run
-    // pays one-time plan codegen + JIT for that query's generated
-    // classes (±40% noise run-to-run); the min is the steady-state
-    // per-query cost a warm cluster pays. min/median/max are all
-    // emitted so a reader can tell noise from regression.
-    // A rep that throws is recorded by NAME in `failedQueries` and
-    // surfaced in the JSON line (ADVICE r17) — its wall-time still
-    // enters the sample so totals stay schema-stable, but no reader
-    // can mistake a crash-time for a measurement.
-    val failedQueries = scala.collection.mutable.LinkedHashSet[String]()
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (name, _) => SparkEntry.benchExclude(name) }
-      .map { case (name, fn) =>
-        val times = (1 to runs).map { _ =>
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() }
-          catch { case _: Throwable => failedQueries += name; -1L }
-          (System.nanoTime() - t0) / 1e9
-        }.sorted
-        name -> times
-      }
     // Opt-in converged-floor mode (VERDICT r16 ask #3 — the q54
     // lesson institutionalized): job-heavy sub-second queries stay
     // JIT-cold across a 3-run min (each run launches tens of tiny
@@ -157,7 +136,10 @@ object Bench {
     // maintaining as queries speed up or land); the historically
     // pinned job-heavy class stays listed explicitly so its floors
     // survive even if a clean run dips below the threshold.
-    val convergedPinned = Seq("q54_merge_legality", "q57_merge_units",
+    // Both name lists resolve here, before the timed reps, so an
+    // unregistered name fails the run at once, naming itself.
+    val convergedPinned = SparkEntry.lookup(Seq(
+      "q54_merge_legality", "q57_merge_units",
       "q61_l1_lifecycle", "q73_packed_blocks",
       "q148_bloom_contamination",
       // r18: the checkpoint/CC-loop class — their 3-run mins read
@@ -165,20 +147,42 @@ object Bench {
       // vs 2.55, q113 6.71 vs 5.04-6.03 across sessions), so the
       // artifact carries the floors round-over-round comparisons
       // should use.
-      "q87_semdedup", "q94_fuzzy_dedup", "q113_semdedup_pq")
+      "q87_semdedup", "q94_fuzzy_dedup", "q113_semdedup_pq")).map(_.name)
+    val convergedEnv: Option[Seq[String]] =
+      sys.env.get("SPARK_GRAFT_CONVERGED") match {
+        case None | Some("default") | Some("1") => None
+        case Some("none") | Some("off") | Some("0") => Some(Seq.empty)
+        case Some(v) => Some(SparkEntry.lookup(
+          v.split(",").map(_.trim).filter(_.nonEmpty).toSeq).map(_.name))
+      }
+    // `runs` timed executions per query, report the min: the first run
+    // pays one-time plan codegen + JIT for that query's generated
+    // classes (±40% noise run-to-run); the min is the steady-state
+    // per-query cost a warm cluster pays. min/median/max are all
+    // emitted so a reader can tell noise from regression.
+    // A rep that throws is recorded by NAME in `failedQueries` and
+    // surfaced in the JSON line (ADVICE r17) — its wall-time still
+    // enters the sample so totals stay schema-stable, but no reader
+    // can mistake a crash-time for a measurement.
+    val failedQueries = scala.collection.mutable.LinkedHashSet[String]()
+    val results = SparkEntry.timed.map { q =>
+      val (name, fn) = (q.name, q.run)
+      val times = (1 to runs).map { _ =>
+        val t0 = System.nanoTime()
+        try { fn(spark, sfDir).count() }
+        catch { case _: Throwable => failedQueries += name; -1L }
+        (System.nanoTime() - t0) / 1e9
+      }.sorted
+      name -> times
+    }
     val convergedDefault = (convergedPinned ++
       results.collect { case (name, times) if times.min >= 0.5 => name })
       .distinct
-    val convergedSet: Seq[String] =
-      (sys.env.get("SPARK_GRAFT_CONVERGED") match {
-        case None | Some("default") | Some("1") => convergedDefault
-        case Some("none") | Some("off") | Some("0") => Seq.empty
-        case Some(v) => v.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      }).filter(SparkEntry.queries.contains)
+    val convergedSet = convergedEnv.getOrElse(convergedDefault)
     val convergedReps =
       sys.env.getOrElse("SPARK_GRAFT_CONVERGED_REPS", "6").toInt
     val converged = convergedSet.map { name =>
-      val fn = SparkEntry.queries(name)
+      val fn = SparkEntry.lookup(Seq(name)).head.run
       // Failure-aware (ADVICE r17): a throwing rep must NOT leave its
       // wall-time in the sample — a query that dies in 50 ms would
       // otherwise report a bogus tiny "converged" floor. Failed reps

@@ -121,7 +121,7 @@ object Status {
 
   /** JSON string-body escape: quote, backslash and every control
     * character, so any text renders as a valid JSON string. */
-  private[pipeline] def esc(s: String): String =
+  def esc(s: String): String =
     s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

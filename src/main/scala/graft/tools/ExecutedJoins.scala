@@ -2,7 +2,7 @@ package graft.tools
 
 
 /** Runtime join-strategy audit over the WHOLE oracle surface: runs
-  * every `SparkEntry.queries` entry to completion and prints the
+  * every registry query to completion and prints the
   * EXECUTED (post-AQE) join strategy counts per query — static plan
   * dumps ([[Plans]]) cannot see runtime broadcast conversions, and
   * the round-13 factor-1000 failures came exactly from
@@ -27,7 +27,8 @@ object ExecutedJoins {
       "ShuffledHashJoin" -> "shj", "BroadcastNestedLoopJoin" -> "bnlj",
       "CartesianProduct" -> "cart")
     var flagged = 0
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    graft.SparkEntry.registry.foreach { q =>
+      val (name, fn) = (q.name, q.run)
       if (which.isEmpty || which.exists(name.startsWith)) {
         try {
           val df = fn(spark, dir)

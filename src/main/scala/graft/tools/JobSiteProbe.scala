@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.pipeline.Status.esc
 
 /** Job-source census for one registry query: runs the query once
   * warm, then once counted, printing every Spark job's call site and
@@ -12,7 +13,7 @@ object JobSiteProbe {
     val name = args.lift(1).getOrElse("q41_dedup_components")
     val warm = args.lift(2).map(_.toInt).getOrElse(2)
     val spark = graft.GraftSession()
-    val fn = graft.SparkEntry.queries(name)
+    val fn = graft.SparkEntry.lookup(Seq(name)).head.run
     (1 to warm).foreach(_ => fn(spark, sfDir).count())
     // (site, ms) kept as TUPLES and escaped only at print time
     // (ADVICE r21): call-site strings can carry quotes/backslashes,
@@ -22,13 +23,6 @@ object JobSiteProbe {
       new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Long)]()
     val starts =
       new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
-    def esc(s: String): String =
-      s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(

@@ -11,7 +11,8 @@ object Plans {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val which = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
     val spark = graft.GraftSession()
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    graft.SparkEntry.registry.foreach { q =>
+      val (name, fn) = (q.name, q.run)
       if (which.isEmpty || which.exists(name.startsWith)) {
         println(s"\n========== $name ==========")
         try println(fn(spark, dir).queryExecution.explainString(

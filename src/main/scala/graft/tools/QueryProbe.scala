@@ -17,6 +17,7 @@ object QueryProbe {
     val names =
       if (args.length > 2) args.drop(2).toSeq
       else Seq("q73_packed_blocks", "q61_l1_lifecycle")
+    val queries = graft.SparkEntry.lookup(names)
     val b0 = graft.GraftSession.builder()
     // A/B knob: SPARK_GRAFT_COALESCE=<advisory bytes> turns on
     // size-respecting AQE partition coalescing (guide §2.2/§9)
@@ -34,8 +35,8 @@ object QueryProbe {
             j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
           jobs.incrementAndGet()
       })
-    names.foreach { name =>
-      val fn = graft.SparkEntry.queries(name)
+    queries.foreach { q =>
+      val (name, fn) = (q.name, q.run)
       val times = (1 to reps).map { i =>
         val j0 = jobs.get()
         val t0 = System.nanoTime()

@@ -129,13 +129,13 @@ class L1PipelineSpec extends SparkSpec {
   }
 
   test("attrs.json stays valid JSON for backslash, quote and control chars") {
-    val units = "a\\b \"q\""
+    val units = "a\\b \"q\" r\rn\n\u0001"
     val c = Conditioned(Seq((ts("2024-01-01 00:30:00"), 1.0))
       .toDF("DATETIME", "Ta"), meta(("Ta", units)))
     val dir = Files.createTempDirectory("lakej").toString
-    L1Pipeline.writeLake(c, "DATETIME", 1800, dir, "Site\tA")
+    L1Pipeline.writeLake(c, "DATETIME", 1800, dir, "Site\tA\r\n\u0001")
     val attrs = readAttrs(dir)
-    assert(attrs("site") == "Site\tA")
+    assert(attrs("site") == "Site\tA\r\n\u0001")
     assert(attrs("variables") == s"Ta:$units:Avg")
   }
 

@@ -37,10 +37,13 @@ if os.path.exists(f"{OUT}/verify_errors.json"):
     verrs = json.load(open(f"{OUT}/verify_errors.json"))
 n_pass = n_fail = 0
 for name in sorted(oracle):
+    # A query that threw in this run FAILS even if an older run's dump
+    # is still on disk: comparing that stale dump could PASS it.
+    if name in verrs:
+        print(f"FAIL {name}: {verrs[name]}"); n_fail += 1; continue
     files = glob.glob(f"{OUT}/{name}/*.parquet")
     if not files:
-        why = verrs.get(name, "no spark output")
-        print(f"FAIL {name}: {why}"); n_fail += 1; continue
+        print(f"FAIL {name}: no spark output"); n_fail += 1; continue
     try:
         grel = con.sql(f"SELECT * FROM '{OUT}/{name}/*.parquet'")
         erel = con.sql(oracle[name])
@@ -108,4 +111,6 @@ for name in sorted(oracle):
                       f" (n_diff={int(neq.sum())})")
         n_fail += 1
 print(f"== {n_pass} pass / {n_fail} fail ==")
-sys.exit(1 if n_fail else 0)
+# Zero queries compared is a broken run (e.g. an empty oracle_sql.json),
+# never a pass.
+sys.exit(1 if n_fail or not n_pass else 0)

@@ -279,9 +279,8 @@ object L1Pipeline {
   }
 
   /** J4/S11 at scale: a DIRECTORY of yearly products decoded one file
-    * per task (binaryFile source — the same fan-out shape as the TOB
-    * scans): a decade of site-years parallelizes across executors
-    * with no driver materialization. Every file must carry the probe
+    * per task (binaryFile source): a decade of site-years
+    * parallelizes across executors with no driver materialization. Every file must carry the probe
     * file's schema (mismatches fail loudly with the decoded schema). */
   def readNetCdfDir(spark: SparkSession, path: String): DataFrame = {
     import graft.sources.NetCdf

@@ -536,8 +536,9 @@ object EtlQueries {
 
   /** S8 TOB1 binary round-trip: events encoded to a TOB1 file
     * (1990-epoch SECONDS/NANOSECONDS + IEEE4 value), decoded back by
-    * the distributed binary source; hash-matches the plain projection
-    * oracle iff timestamps and float payloads survive bit-exactly. */
+    * `Tob.read` (the V2 `format("tob")` scan); hash-matches the plain
+    * projection oracle iff timestamps and float payloads survive
+    * bit-exactly. */
   Query("q36_tob1_roundtrip") { (s, dir) =>
     val path = tobFixture(s, dir, "graft_q36")
     graft.sources.Tob.read(s, path).data
@@ -665,8 +666,8 @@ object EtlQueries {
 
   /** DSv2 TOA5 scan (SURVEY §7.3 phase-2): the q34 product read back
     * through `format("toa5")` with a projection + DATETIME filter —
-    * column pruning and best-effort file pruning on the V2 path,
-    * oracle-checked like any other query. */
+    * column pruning into the V2 parse, the filter evaluated by Spark
+    * above the scan, oracle-checked like any other query. */
   Query("q44_toa5_v2_scan") { (s, dir) =>
     import graft.core.{FileInfo, TableMeta, VariableMeta}
     val agg = t(s, dir, "events")

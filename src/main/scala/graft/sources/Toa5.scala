@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.{FileFormat, FileInfo, TableMeta, VariableMeta}
+import graft.sources.v2.Toa5V2
 
 /** TOA5 / EddyPro codec.
   *
@@ -23,11 +24,10 @@ import graft.core.{FileFormat, FileInfo, TableMeta, VariableMeta}
   *
   * Spark-first design: the header block is probed driver-side (a few
   * hundred bytes, no job), producing a `StructType` + [[TableMeta]];
-  * the body scans distributedly via `spark.read.text` + `from_csv`
-  * with the computed schema, filtering the header lines by literal
-  * equality (cheap, exact, and works for multi-file globs where every
-  * file repeats the same header — cross-file header equality is
-  * enforced first, reference D7: code/utils/fast_file_io.py:294-341).
+  * the body scans distributedly through the V2 source
+  * `format("toa5")`, one task per file, each task checking its file's
+  * header against the scan schema (reference D7:
+  * code/utils/fast_file_io.py:294-341).
   */
 object Toa5 {
 
@@ -45,9 +45,11 @@ object Toa5 {
     } finally it.close()
   }
 
-  private def splitLine(line: String, fmt: FileFormat): Seq[String] =
-    line.split(java.util.regex.Pattern.quote(fmt.separator), -1).toSeq
-      .map(_.replaceAll("^\"|\"$", ""))
+  private def splitLine(line: String, fmt: FileFormat): Seq[String] = {
+    val cells = new Toa5V2.Cells(fmt.separator.head)
+    cells.split(line)
+    (0 until cells.count).map(cells(_))
+  }
 
   /** Build TableMeta from probed header lines. */
   def parseHeader(fmt: FileFormat, header: Seq[String]): TableMeta = {
@@ -68,64 +70,28 @@ object Toa5 {
   }
 
   /** Schema: declared non-numeric columns are strings, all else double
-    * (D3 numeric coercion happens inside the csv parse: non-numeric
-    * garbage in a double column -> null under PERMISSIVE mode). */
+    * (D3: the scan reads non-numeric garbage in a double column as
+    * null). */
   def schemaFor(fmt: FileFormat, meta: TableMeta): StructType =
     StructType(meta.variableNames.map { n =>
       if (fmt.nonNumericCols.contains(n)) StructField(n, StringType)
       else StructField(n, DoubleType)
     })
 
-  /** Distributed scan of one file or a glob of header-identical files.
+  /** Reads a file, a directory or a glob leaf (a pattern such as
+    * `*.dat` as the last path element) of header-identical files through the V2 scan
+    * ([[graft.sources.v2.Toa5DataSource]]), with the first file's
+    * header as the [[TableMeta]].
     *
     * Produces the conditioned frame: DATETIME built (F27), unparseable
-    * timestamps dropped (D4), value columns coerced (D3). Dedup/
-    * regularize are separate operators (TimeSeriesOps) — same
-    * separation as the reference's FileHandler vs file_io.
+    * timestamps dropped (D4), value columns coerced (D3), every file's
+    * header checked against the first (D7). Dedup/regularize are
+    * separate operators (TimeSeriesOps) — same separation as the
+    * reference's FileHandler vs file_io.
     */
   def read(spark: SparkSession, path: String): Parsed = {
-    val (fmt, header) = probeHeader(firstFileOf(path))
-    val meta = parseHeader(fmt, header)
-    val schema = schemaFor(fmt, meta)
-    val opts = Map("sep" -> fmt.separator, "nullValue" -> fmt.naToken,
-      "mode" -> "PERMISSIVE")
-
-    val raw = spark.read.text(path)
-      .filter(!col("value").isin(header: _*))   // strip header lines
-      .filter(length(col("value")) > 0)
-    val parsed = raw.select(
-      from_csv(col("value"), schema, opts).as("r")).select("r.*")
-
-    val withTs = fmt.name match {
-      case "TOA5" =>
-        parsed.withColumn("DATETIME",  // D4: unparseable -> null -> drop
-          try_to_timestamp(col("TIMESTAMP"), lit("yyyy-MM-dd HH:mm:ss")))
-      case "EddyPro" =>
-        parsed.withColumn("DATETIME",
-          try_to_timestamp(concat_ws(" ", col("date"), col("time")),
-            lit("yyyy-MM-dd HH:mm")))
-      case other => throw new IllegalArgumentException(other)
-    }
-    Parsed(withTs.filter(col("DATETIME").isNotNull), meta)
-  }
-
-  /** D7 cross-file header equality: every file of a set must carry the
-    * same header block before concatenation. */
-  def assertHeadersEqual(paths: Seq[String]): Unit = {
-    val headers = paths.map(p => probeHeader(p)._2)
-    val first = headers.head
-    val bad = paths.zip(headers).collect {
-      case (p, h) if h != first => p }
-    require(bad.isEmpty,
-      s"header mismatch vs ${paths.head}: ${bad.mkString(", ")}")
-  }
-
-  private def firstFileOf(path: String): String = {
-    val p = Paths.get(path)
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.toSeq
-        .filter(f => !Files.isDirectory(f)).map(_.toString).sorted.head
-    else path
+    val (fmt, header) = probeHeader(Toa5V2.listFiles(path).head)
+    Parsed(spark.read.format("toa5").load(path), parseHeader(fmt, header))
   }
 
   /** K1/K2 writer: byte-stable single-file TOA5 output — header block

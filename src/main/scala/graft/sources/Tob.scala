@@ -3,15 +3,15 @@ package graft.sources
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{FileInfo, TableMeta, VariableMeta}
 import graft.functions.Fp2
+import graft.sources.v2.{Toa5V2, TobV2}
 
 /** Campbell Scientific TOB1/TOB3 binary sources (S8/S9).
   *
@@ -34,11 +34,11 @@ import graft.functions.Fp2
   *    holding only `offset bytes / record size` records. Sub-record i
   *    timestamps at header.seconds + i*subStep + subScale*subseconds.
   *
-  * Scale shape: [[read]] decodes one file per task from
-  * `spark.read.format("binaryFile")` rows. The bulk path is
-  * `spark.read.format("tob")` ([[graft.sources.v2.TobDataSource]]),
-  * which cuts each file into frame-aligned splits and runs the same
-  * [[Records]] walker into reused Catalyst rows.
+  * Scale shape: [[read]] is `spark.read.format("tob")`
+  * ([[graft.sources.v2.TobDataSource]]), which cuts each file into
+  * frame-aligned splits and runs the [[Records]] walker into reused
+  * Catalyst rows. The whole-file `decodeTob*` views are the reference
+  * the specs hold the splits to.
   */
 object Tob {
 
@@ -384,7 +384,7 @@ object Tob {
     }
   }
 
-  /** `Row` view of a whole file's bytes, for [[read]] and the specs:
+  /** `Row` view of a whole file's bytes, for the specs:
     * (DATETIME us, [RECORD,] fields...) in full-schema order, strings
     * as `String`. A truncated tail unit is ignored. */
   private def rowView(bytes: Array[Byte], format: String,
@@ -553,40 +553,13 @@ object Tob {
 
   final case class Parsed(data: DataFrame, meta: TableMeta)
 
-  /** Distributed read of a file/glob/directory of TOB files: one task
-    * per file via the binaryFile source, whole-file decode per task. */
+  /** Reads a file, a directory or a glob leaf of TOB files through
+    * the V2 scan ([[graft.sources.v2.TobDataSource]]), with the first
+    * file's header as the [[TableMeta]]. Planning reads headers only
+    * and runs no Spark job; each split's reader rejects a file whose
+    * header differs from the first. */
   def read(spark: SparkSession, path: String): Parsed = {
-    val bin = spark.read.format("binaryFile").load(path)
-      .select("path", "content")
-    val probe = bin.select("content").head().getAs[Array[Byte]](0)
-    val (h, _) = parseHeader(probe)
-    val schema = sparkSchema(h)
-    // decode emits micros for DATETIME; swap in LongType during decode
-    val decodeSchema = StructType(
-      schema.fields.map(f => if (f.name == "DATETIME")
-        f.copy(dataType = LongType) else f))
-    implicit val enc: Encoder[Row] = Encoders.row(decodeSchema)
-
-    val isTob1 = h.format == "TOB1"
-    // Every file decodes under ITS OWN header (decodeTob1/3 parse it),
-    // but the frame's schema comes from the single probe file — a
-    // directory mixing formats or channel lists would mis-bind columns
-    // silently. Validate each file's header against the probe and
-    // fail loudly with the offending path.
-    val (pFormat, pNames, pTypes) = (h.format, h.names, h.types)
-    val decoded = bin.select("path", "content").flatMap { r =>
-      val path = r.getString(0)
-      val bytes = r.getAs[Array[Byte]](1)
-      val (fh, _) = parseHeader(bytes)
-      require(fh.format == pFormat && fh.names == pNames
-          && fh.types == pTypes,
-        s"TOB header mismatch in $path: format=${fh.format} " +
-        s"names=${fh.names} types=${fh.types} differ from probed " +
-        s"($pFormat/$pNames/$pTypes) — decode a homogeneous directory")
-      if (isTob1) decodeTob1(bytes)._1 else decodeTob3(bytes)._1
-    }
-    val df = decoded.withColumn("DATETIME",
-      timestamp_micros(col("DATETIME")))
-    Parsed(df, tableMeta(h))
+    val (h, _) = TobV2.header(Toa5V2.listFiles(path).head)
+    Parsed(spark.read.format("tob").load(path), tableMeta(h))
   }
 }

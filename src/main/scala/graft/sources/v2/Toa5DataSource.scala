@@ -1,19 +1,19 @@
 package graft.sources.v2
 
-import java.io.RandomAccessFile
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
-import java.time.LocalDateTime
-import java.time.format.DateTimeFormatter
-import java.util.regex.Pattern
+import java.nio.file.{Files, Paths}
+import java.time.{LocalDateTime, ZoneId}
+import java.time.format.{DateTimeFormatter, ResolverStyle}
+import java.util.OptionalLong
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -21,38 +21,32 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.core.FileFormat
 import graft.sources.Toa5
 
-/** DataSource V2 for TOA5 logger files: `spark.read.format("toa5")
-  * .load(dir)`.
+/** DataSource V2 for TOA5 and EddyPro logger files:
+  * `spark.read.format("toa5").load(path)`, where `path` is a file, a
+  * directory or a glob leaf (a pattern such as `*.dat` as the last
+  * path element). This is the one TOA5
+  * reader: [[graft.sources.Toa5.read]] is this scan plus the header's
+  * [[graft.core.TableMeta]].
   *
-  * SURVEY §7.3's phase-2 item. What V2 buys over the codec path
-  * ([[graft.sources.Toa5.read]], which parses via `from_csv`):
-  *
-  *  - '''Column pruning into the parse''': `from_csv` materializes
-  *    every declared column regardless of projection; this reader
-  *    converts only the fields Catalyst asks for (ReadSchema), so a
-  *    2-column projection over a 200-column logger table does ~1% of
-  *    the conversion work.
-  *  - '''File-level time-range pruning''': TOA5 files are appended in
-  *    time order, so first/mid/last row samples bound the file's
-  *    span. DATETIME range filters prune whole files at planning time
-  *    by probing ~3 lines per file — the file-granular analog of
-  *    parquet row-group stats, and exactly how the reference's
-  *    date-named file layout is used (SURVEY §2.1 S6/S7).
-  *    PRECONDITION: pruning assumes per-file timestamps are (near-)
-  *    monotonic — the normal append-only logger case. A file whose
-  *    interior excursions (clock stepped backward/forward) escape all
-  *    three probe samples can have matching rows pruned with the
-  *    file; for such data pass `.option("spanPruning", false)` to
-  *    disable the probe (filters still apply row-level — Spark
-  *    re-evaluates them above the scan either way, so within a kept
-  *    file correctness never depends on the probe).
+  *  - '''Column pruning into the parse''': only the fields Catalyst
+  *    asks for (ReadSchema) are converted, so a 2-column projection
+  *    over a 200-column logger table does ~1% of the conversion work.
+  *  - '''Size statistics''': the scan reports the listed files' total
+  *    size, so AQE and the join planner plan against a real size.
   *  - '''One partition per file''': a site-year is hundreds of daily
-  *    files — natural parallelism across executors with no shuffle.
+  *    files, natural parallelism across executors with no shuffle. A
+  *    file larger than `maxPartitionBytes` is still one task.
   *
-  * Row semantics match the codec path: declared non-numeric columns
-  * are strings, all else double with bad cells -> null (D3); DATETIME
-  * parsed from TIMESTAMP, unparseable rows dropped (D4); header lines
-  * skipped per format. Reference: code/file_handling/file_io.py:61-262.
+  * Row semantics (reference: code/file_handling/file_io.py:61-262):
+  * the schema comes from the first file's header, and every file's
+  * own header must name the same columns in the same order (D7), else
+  * its reader throws naming the file. Header lines are skipped per
+  * format; a line splits at the separator outside double quotes and
+  * each cell loses its enclosing quotes. Declared non-numeric columns
+  * are strings, all else double with NA and bad cells -> null (D3).
+  * DATETIME is TIMESTAMP (TOA5) or date + time (EddyPro) read as
+  * wall-clock time in the session time zone, the zone the TOA5
+  * writers render; a row with an unparseable timestamp is dropped (D4).
   */
 class Toa5DataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "toa5"
@@ -74,73 +68,75 @@ private[v2] class Toa5Table(tableSchema: StructType, path: String)
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new Toa5ScanBuilder(tableSchema, Toa5V2.pathOf(options),
-      options.getBoolean("spanPruning", true))
+    new Toa5ScanBuilder(tableSchema, Toa5V2.pathOf(options))
 }
 
-private[v2] class Toa5ScanBuilder(fullSchema: StructType, path: String,
-    spanPruning: Boolean)
-    extends ScanBuilder
-    with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
+private[v2] class Toa5ScanBuilder(fullSchema: StructType, path: String)
+    extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = fullSchema
-  private var pushed: Array[Filter] = Array.empty
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  /** Keep DATETIME range filters for file pruning; everything is
-    * returned as residual (Spark re-evaluates), so the probe is pure
-    * optimization. */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(f => Toa5V2.tsBound(f).isDefined)
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def build(): Scan =
-    new Toa5Scan(path, fullSchema, required,
-      if (spanPruning) Toa5V2.boundsOf(pushed) else Toa5V2.Unbounded)
+  override def build(): Scan = new Toa5Scan(path, fullSchema, required,
+    SQLConf.get.sessionLocalTimeZone)
 }
 
 private[v2] case class Toa5InputPartition(file: String) extends InputPartition
 
 private[v2] class Toa5Scan(path: String, fullSchema: StructType,
-    required: StructType, bounds: (Long, Long)) extends Scan with Batch {
+    required: StructType, timeZone: String)
+    extends Scan with Batch with SupportsReportStatistics {
+  private lazy val files = Toa5V2.listFiles(path)
+
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val files = Toa5V2.listFiles(path)
-    val kept =
-      if (bounds == Toa5V2.Unbounded) files
-      else files.filter(f => Toa5V2.overlaps(f, bounds))
-    kept.map(f => Toa5InputPartition(f): InputPartition).toArray
+  override def estimateStatistics(): Statistics = {
+    val bytes = files.map(f => Files.size(Paths.get(f))).sum
+    new Statistics {
+      override def sizeInBytes(): OptionalLong = OptionalLong.of(bytes)
+      override def numRows(): OptionalLong = OptionalLong.empty()
+    }
   }
 
+  override def planInputPartitions(): Array[InputPartition] =
+    files.map(f => Toa5InputPartition(f): InputPartition).toArray
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new Toa5ReaderFactory(fullSchema, required)
+    new Toa5ReaderFactory(fullSchema, required, timeZone)
 }
 
 private[v2] class Toa5ReaderFactory(fullSchema: StructType,
-    required: StructType) extends PartitionReaderFactory {
+    required: StructType, timeZone: String) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new Toa5PartitionReader(
-      partition.asInstanceOf[Toa5InputPartition].file, fullSchema, required)
+    new Toa5PartitionReader(partition.asInstanceOf[Toa5InputPartition].file,
+      fullSchema, required, ZoneId.of(timeZone))
 }
 
-/** Streams one file: skips the header block, splits each row, converts
-  * ONLY the required fields, drops rows with unparseable timestamps. */
+/** Streams one file: checks its header against the scan schema, skips
+  * the header block, splits each row, converts ONLY the required
+  * fields, drops rows with unparseable timestamps. */
 private[v2] class Toa5PartitionReader(file: String,
-    fullSchema: StructType, required: StructType)
+    fullSchema: StructType, required: StructType, zone: ZoneId)
     extends PartitionReader[InternalRow] {
-  private val (fmt, tsSpec) = Toa5V2.tsSpecOf(file)
-  private val sep = Pattern.compile(Pattern.quote(fmt.separator))
-  // full-schema index of each required output column (DATETIME is
+  private val (fmt, names) = {
+    val (fmt, header) = Toa5.probeHeader(file)
+    (fmt, Toa5.parseHeader(fmt, header).variableNames)
+  }
+  private val scanNames = fullSchema.fieldNames.toSeq.filter(_ != "DATETIME")
+  if (names != scanNames) throw new IllegalArgumentException(
+    s"TOA5 header mismatch in $file: columns ${names.mkString(",")} " +
+    s"differ from the scan's ${scanNames.mkString(",")}")
+  private val ts = new Toa5V2.TsSpec(fmt, names)
+  // own-header index of each required output column (DATETIME is
   // derived: TIMESTAMP for TOA5, date+time for EddyPro)
   private val srcIdx: Array[Int] = required.fields.map {
     case f if f.name == "DATETIME" => -1
-    case f => fullSchema.fieldIndex(f.name)
+    case f => names.indexOf(f.name)
   }
+  private val isDouble = required.fields.map(_.dataType == DoubleType)
+  private val cells = new Toa5V2.Cells(fmt.separator.head)
   private val reader = Files.newBufferedReader(
     Paths.get(file), StandardCharsets.UTF_8)
   (0 until fmt.headerLines).foreach(_ => reader.readLine())
@@ -151,24 +147,21 @@ private[v2] class Toa5PartitionReader(file: String,
     var line = reader.readLine()
     while (line != null) {
       if (line.nonEmpty) {
-        val cells = sep.split(line, -1)
-        val ts = Toa5V2.cellsTsMicros(tsSpec, cells)
-        if (ts != Long.MinValue) {          // D4: bad timestamp -> drop
+        cells.split(line)
+        val micros = ts.micros(cells, zone)
+        if (micros != Long.MinValue) {      // D4: bad timestamp -> drop
           val out = new GenericInternalRow(srcIdx.length)
           var i = 0
           while (i < srcIdx.length) {
             val si = srcIdx(i)
-            if (si < 0) out.update(i, ts)
-            else if (si >= cells.length) out.update(i, null) // short row
+            if (si < 0) out.update(i, micros)
+            else if (si >= cells.count) out.update(i, null) // short row
             else {
-              val raw = Toa5V2.unquote(cells(si))
-              required.fields(i).dataType match {
-                case DoubleType =>
-                  if (raw == fmt.naToken || raw.isEmpty) out.update(i, null)
-                  else try out.update(i, raw.toDouble)
-                  catch { case _: NumberFormatException => out.update(i, null) }
-                case _ => out.update(i, UTF8String.fromString(raw))
-              }
+              val raw = cells(si)
+              if (!isDouble(i)) out.update(i, UTF8String.fromString(raw))
+              else if (raw == fmt.naToken || raw.isEmpty) out.update(i, null)
+              else try out.update(i, raw.toDouble)
+              catch { case _: NumberFormatException => out.update(i, null) }
             }
             i += 1
           }
@@ -187,45 +180,82 @@ private[v2] class Toa5PartitionReader(file: String,
 
 /** Pure helpers shared by planner and reader (unit-tested directly). */
 object Toa5V2 {
-  val Unbounded: (Long, Long) = (Long.MinValue, Long.MaxValue)
-  private val tsFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
 
-  /** Which cells carry the event time, and their joined pattern —
-    * TOA5 has a TIMESTAMP column, EddyPro splits date and time. The
-    * formatter is built once per spec, i.e. once per reader. */
-  final case class TsSpec(idxs: Array[Int], pattern: String)
-      extends Serializable {
-    @transient lazy val formatter: DateTimeFormatter =
-      DateTimeFormatter.ofPattern(pattern)
+  /** The cells of one line split at `sep` outside double quotes, as
+    * Spark's CSV parser splits it: a quote opens a quoted cell only at
+    * the cell's start, and `""` inside one is an escaped quote. Cell k
+    * is the text between its separators with its enclosing quotes
+    * stripped. The one cell grammar of TOA5/EddyPro header and body
+    * lines; a reader reuses one instance for every line. */
+  final class Cells(sep: Char) {
+    private var line: String = ""
+    private var starts = new Array[Int](16)
+    private var ends = new Array[Int](16)
+    private var n = 0
+
+    def count: Int = n
+
+    def split(s: String): Unit = {
+      line = s
+      n = 0
+      var start = 0
+      var quoted = false
+      var i = 0
+      while (i < s.length) {
+        val c = s.charAt(i)
+        if (c == '"') {
+          if (!quoted) quoted = i == start
+          else if (i + 1 < s.length && s.charAt(i + 1) == '"') i += 1
+          else quoted = false
+        } else if (c == sep && !quoted) {
+          add(start, i)
+          start = i + 1
+        }
+        i += 1
+      }
+      add(start, s.length)
+    }
+
+    private def add(from: Int, until: Int): Unit = {
+      if (n == starts.length) {
+        starts = java.util.Arrays.copyOf(starts, n * 2)
+        ends = java.util.Arrays.copyOf(ends, n * 2)
+      }
+      val q = until - from >= 2 && line.charAt(from) == '"' &&
+        line.charAt(until - 1) == '"'
+      starts(n) = if (q) from + 1 else from
+      ends(n) = if (q) until - 1 else until
+      n += 1
+    }
+
+    def apply(k: Int): String = line.substring(starts(k), ends(k))
   }
 
-  def tsSpecOf(file: String): (FileFormat, TsSpec) = {
-    val (fmt, header) = Toa5.probeHeader(file)
-    val names = Toa5.parseHeader(fmt, header).variableNames
-    fmt.name match {
-      case "TOA5" =>
-        (fmt, TsSpec(Array(names.indexOf("TIMESTAMP")), "yyyy-MM-dd HH:mm:ss"))
+  /** Which cells of a `fmt` file whose header names `names` carry the
+    * event time, and how to parse them: TOA5 has a TIMESTAMP column,
+    * EddyPro splits date and time. The pattern resolves strictly, as
+    * Spark's own timestamp parser does (no 2024-02-30). */
+  final class TsSpec(fmt: FileFormat, names: Seq[String]) {
+    private val (idxs, pattern) = fmt.name match {
+      case "TOA5" => (Array(names.indexOf("TIMESTAMP")), "uuuu-MM-dd HH:mm:ss")
       case "EddyPro" =>
-        (fmt, TsSpec(Array(names.indexOf("date"), names.indexOf("time")),
-          "yyyy-MM-dd HH:mm"))
+        (Array(names.indexOf("date"), names.indexOf("time")), "uuuu-MM-dd HH:mm")
       case other => throw new IllegalArgumentException(other)
     }
-  }
+    private val formatter = DateTimeFormatter.ofPattern(pattern)
+      .withResolverStyle(ResolverStyle.STRICT)
 
-  /** Event-time micros of a split row, Long.MinValue if unparseable. */
-  def cellsTsMicros(spec: TsSpec, cells: Array[String]): Long = {
-    if (spec.idxs.exists(i => i < 0 || i >= cells.length))
-      return Long.MinValue
-    parseTsMicros(spec.idxs.map(i => unquote(cells(i))).mkString(" "),
-      spec.formatter)
+    /** Event time of a split line as epoch micros, its wall-clock
+      * time read in `zone`; Long.MinValue if missing or unparseable. */
+    def micros(cells: Cells, zone: ZoneId): Long =
+      if (idxs.exists(i => i < 0 || i >= cells.count)) Long.MinValue
+      else try {
+        val s = if (idxs.length == 1) cells(idxs(0))
+          else idxs.map(cells(_)).mkString(" ")
+        val t = LocalDateTime.parse(s, formatter).atZone(zone)
+        t.toEpochSecond * 1000000L + t.getNano / 1000L
+      } catch { case _: java.time.DateTimeException => Long.MinValue }
   }
-
-  def parseTsMicros(s: String, fmt: DateTimeFormatter): Long =
-    try {
-      val ldt = LocalDateTime.parse(s, fmt)
-      ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
-        ldt.getNano / 1000L
-    } catch { case _: Exception => Long.MinValue }
 
   def pathOf(options: CaseInsensitiveStringMap): String = {
     val p = options.get("path")
@@ -233,126 +263,26 @@ object Toa5V2 {
     p
   }
 
+  /** The files of a file, a directory or a glob leaf, sorted. */
   def listFiles(path: String): Seq[String] = {
     val p = Paths.get(path)
     val name = Option(p.getFileName).map(_.toString).getOrElse("")
-    if (name.exists(c => c == '*' || c == '?' || c == '[')) {
-      // glob leaf (dir/*.dat): match within the parent directory
-      val stream = Files.newDirectoryStream(p.getParent, name)
+    val glob = name.exists(c => c == '*' || c == '?' || c == '[')
+    if (!glob && !Files.isDirectory(p)) Seq(path)
+    else {
+      // a glob leaf (dir/*.dat) matches within the parent directory
+      val stream =
+        if (glob) Files.newDirectoryStream(p.getParent, name)
+        else Files.newDirectoryStream(p)
       try stream.iterator().asScala
         .filter(f => !Files.isDirectory(f)).map(_.toString).toSeq.sorted
       finally stream.close()
-    } else if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala
-        .filter(f => !Files.isDirectory(f)).map(_.toString).toSeq.sorted
-    else Seq(path)
+    }
   }
-
-  def formatOf(file: String): FileFormat = Toa5.probeHeader(file)._1
 
   def fullSchema(path: String): StructType = {
-    val first = listFiles(path).head
-    val (fmt, header) = Toa5.probeHeader(first)
+    val (fmt, header) = Toa5.probeHeader(listFiles(path).head)
     val meta = Toa5.parseHeader(fmt, header)
     Toa5.schemaFor(fmt, meta).add("DATETIME", TimestampType)
-  }
-
-  def unquote(s: String): String =
-    if (s.length >= 2 && s.charAt(0) == '"' && s.charAt(s.length - 1) == '"')
-      s.substring(1, s.length - 1)
-    else s
-
-  /** Micros since epoch (UTC wall-clock), Long.MinValue if unparseable. */
-  def parseTsMicros(s: String): Long = parseTsMicros(s, tsFmt)
-
-  /** (lowerMicros, upperMicros) implied by a DATETIME filter, if any. */
-  def tsBound(f: Filter): Option[(Long, Long)] = {
-    def micros(v: Any): Option[Long] = v match {
-      case t: java.sql.Timestamp => Some(t.getTime * 1000L + t.getNanos / 1000 % 1000)
-      case i: java.time.Instant =>
-        Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
-      case _ => None
-    }
-    f match {
-      case GreaterThan("DATETIME", v) => micros(v).map(m => (m + 1, Long.MaxValue))
-      case GreaterThanOrEqual("DATETIME", v) => micros(v).map(m => (m, Long.MaxValue))
-      case LessThan("DATETIME", v) => micros(v).map(m => (Long.MinValue, m - 1))
-      case LessThanOrEqual("DATETIME", v) => micros(v).map(m => (Long.MinValue, m))
-      case EqualTo("DATETIME", v) => micros(v).map(m => (m, m))
-      case _ => None
-    }
-  }
-
-  /** Intersection of all pushed timestamp bounds. */
-  def boundsOf(filters: Array[Filter]): (Long, Long) =
-    filters.flatMap(tsBound).foldLeft(Unbounded) { case ((lo, hi), (l, h)) =>
-      (math.max(lo, l), math.min(hi, h)) }
-
-  /** Probe a file's [first, last] row timestamps (2 reads: head line
-    * after the header block, tail block of the file) and test overlap
-    * with the bound. Unparseable probes keep the file (safe). */
-  def overlaps(file: String, bounds: (Long, Long)): Boolean = {
-    val span = fileTimeSpan(file)
-    span.forall { case (lo, hi) => hi >= bounds._1 && lo <= bounds._2 }
-  }
-
-  def fileTimeSpan(file: String): Option[(Long, Long)] =
-    try {
-      val (fmt, spec) = tsSpecOf(file)
-      val reader = Files.newBufferedReader(
-        Paths.get(file), StandardCharsets.UTF_8)
-      val firstData =
-        try {
-          (0 until fmt.headerLines).foreach(_ => reader.readLine())
-          Iterator.continually(reader.readLine())
-            .takeWhile(_ != null).find(_.nonEmpty)
-        } finally reader.close()
-      val lastData = lastNonEmptyLine(file)
-      // A third sample from the middle of the file widens the span
-      // for mildly non-monotonic files (logger clock stepped back):
-      // if the mid row falls outside [first, last] the probe catches
-      // it. An interior excursion that misses all three samples can
-      // still be pruned away — hence the monotonic-file precondition
-      // and the spanPruning=false escape hatch.
-      val midData = lineAtOffset(file, fmt)
-      def ts(line: String): Long =
-        cellsTsMicros(spec, line.split(Pattern.quote(fmt.separator), -1))
-      for {
-        f <- firstData; l <- lastData
-        samples = (Seq(ts(f), ts(l)) ++ midData.map(ts))
-          .filter(_ != Long.MinValue)
-        if samples.nonEmpty
-      } yield (samples.min, samples.max)
-    } catch { case _: Exception => None }
-
-  /** First complete non-empty line at/after the file's byte midpoint
-    * (None for small files where the tail read already covers it). */
-  private def lineAtOffset(file: String, fmt: FileFormat): Option[String] = {
-    val raf = new RandomAccessFile(file, "r")
-    try {
-      val len = raf.length()
-      if (len < 32768) return None
-      raf.seek(len / 2)
-      raf.readLine() // discard the (likely partial) current line
-      Option(raf.readLine()).filter(_.nonEmpty)
-    } finally raf.close()
-  }
-
-  /** Last complete non-empty line via a bounded tail read. */
-  private def lastNonEmptyLine(file: String, tailBytes: Int = 8192): Option[String] = {
-    val raf = new RandomAccessFile(file, "r")
-    try {
-      val len = raf.length()
-      val start = math.max(0L, len - tailBytes)
-      raf.seek(start)
-      val buf = new Array[Byte]((len - start).toInt)
-      raf.readFully(buf)
-      val text = new String(buf, StandardCharsets.UTF_8)
-      val lines = text.split("\r?\n").filter(_.nonEmpty)
-      // if we started mid-file the first fragment may be partial - the
-      // LAST line is what we want and is complete (trailing newline or
-      // end-of-file)
-      lines.lastOption.filter(_ => lines.length > 1 || start == 0)
-    } finally raf.close()
   }
 }

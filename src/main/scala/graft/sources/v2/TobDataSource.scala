@@ -155,7 +155,7 @@ private[v2] class TobPartitionReader(split: TobSplit,
   override def close(): Unit = ()
 }
 
-private[v2] object TobV2 {
+private[sources] object TobV2 {
   /** Driver-side probe: the first file's header is the scan schema. */
   def fullSchema(path: String): StructType =
     Tob.sparkSchema(header(Toa5V2.listFiles(path).head)._1)

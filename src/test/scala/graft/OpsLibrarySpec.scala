@@ -70,7 +70,7 @@ class OpsLibrarySpec extends SparkSpec {
     assert(out(1).getDouble(1) == 2.0)  // backup contributes new ts
   }
 
-  test("D7 assertHeadersEqual rejects mismatched file sets") {
+  test("D7 Toa5.read rejects a file set with mismatched headers") {
     import java.nio.file.Files
     import java.nio.charset.StandardCharsets.UTF_8
     val dir = Files.createTempDirectory("hdr")
@@ -79,11 +79,13 @@ class OpsLibrarySpec extends SparkSpec {
     val h2 = h1.replace("\"A\"", "\"B\"")
     Files.write(dir.resolve("a.dat"), (h1 + "\"2024-01-01 00:30:00\",1\r\n").getBytes(UTF_8))
     Files.write(dir.resolve("b.dat"), (h2 + "\"2024-01-01 01:00:00\",2\r\n").getBytes(UTF_8))
-    val ex = intercept[IllegalArgumentException] {
-      graft.sources.Toa5.assertHeadersEqual(
-        Seq(dir.resolve("a.dat").toString, dir.resolve("b.dat").toString))
+    val e = intercept[Exception] {
+      graft.sources.Toa5.read(spark, dir.toString).data.collect()
     }
-    assert(ex.getMessage.contains("b.dat"))
+    // the check runs in b.dat's scan task: find it under the job failure
+    val ex = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case x: IllegalArgumentException => x }
+    assert(ex.exists(_.getMessage.contains("b.dat")), e)
   }
 
   test("bucketed tables join without a shuffle") {

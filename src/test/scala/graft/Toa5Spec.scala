@@ -2,6 +2,7 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
@@ -194,5 +195,40 @@ class Toa5Spec extends SparkSpec {
           Seq("F_2024_03_01_1130.dat"))
       } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
     } finally java.util.TimeZone.setDefault(jvm)
+  }
+
+  test("Toa5.read reads a session-zone TOA5 file back to the same instants") {
+    val us = Seq(utcMicros("2024-01-01 10:00:00"), utcMicros("2024-07-01 10:00:00"))
+    val frame = encFrame(us.map(u => (u, 1.5, 2.5f, 1L, "a")))
+    val out = Files.createTempDirectory("toa5syd").resolve("syd.dat").toString
+    spark.conf.set("spark.sql.session.timeZone", "Australia/Sydney")
+    try {
+      Toa5.write(frame, encMeta, out)
+      // AEDT (+11) in January, AEST (+10) in July
+      assert(Files.readAllLines(java.nio.file.Paths.get(out)).asScala
+        .drop(4).map(_.take(21)) == Seq(
+          "\"2024-01-01 21:00:00\"", "\"2024-07-01 20:00:00\""))
+      for (df <- Seq(Toa5.read(spark, out).data,
+          spark.read.format("toa5").load(out)))
+        assert(df.select(unix_micros(col("DATETIME")).as("us")).orderBy("us")
+          .collect().map(_.getLong(0)).toSeq == us)
+    } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+  }
+
+  test("Toa5.read reads every file a glob names and nothing else") {
+    val dir = Files.createTempDirectory("toa5glob")
+    val lines = fixture.split("\r\n")
+    Files.write(dir.resolve("a.dat"),
+      (lines.take(5).mkString("\r\n") + "\r\n").getBytes(StandardCharsets.UTF_8))
+    Files.write(dir.resolve("b.dat"),
+      ((lines.take(4) :+ lines(5)).mkString("\r\n") + "\r\n")
+        .getBytes(StandardCharsets.UTF_8))
+    Files.write(dir.resolve("notes.txt"),
+      "not a logger file".getBytes(StandardCharsets.UTF_8))
+    val parsed = Toa5.read(spark, s"$dir/*.dat")
+    assert(parsed.meta.info.stationName == "TestSite")
+    assert(parsed.data.select(date_format(col("DATETIME"), "HH:mm"))
+      .orderBy(col("DATETIME")).collect().map(_.getString(0)).toSeq ==
+      Seq("00:30", "01:00"))
   }
 }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.v2.Toa5V2
 
-/** DataSource V2 TOA5 scan: codec-path equivalence, column pruning,
-  * and file-level time-range pruning. */
+/** DataSource V2 TOA5 scan behind `Toa5.read`: row semantics, column
+  * pruning, size statistics, quoting, time zone and header checks. */
 class Toa5V2Spec extends SparkSpec {
 
   private def toa5(rows: Seq[String]): String = {
@@ -40,9 +40,14 @@ class Toa5V2Spec extends SparkSpec {
     val codec = graft.sources.Toa5.read(spark, dir.toString).data
       .select("DATETIME", "Ta", "RH").orderBy("DATETIME")
     assert(v2.collect().toSeq == codec.collect().toSeq)
-    assert(v2.count() == 4)  // bad-timestamp row dropped
-    val short = v2.collect().last
-    assert(short.getDouble(1) == 3.5 && short.isNullAt(2))
+    // bad-timestamp row dropped; NAN and garbage -> null
+    assert(v2.select(date_format(col("DATETIME"), "yyyy-MM-dd HH:mm:ss"),
+        col("Ta"), col("RH")).collect().toSeq
+      .map(r => (r.getString(0), Option(r.get(1)), Option(r.get(2)))) == Seq(
+      ("2024-01-01 00:30:00", Some(1.5), Some(50.0)),
+      ("2024-01-01 01:00:00", None, Some(51.0)),
+      ("2024-01-01 01:30:00", Some(2.5), None),
+      ("2024-01-01 02:00:00", Some(3.5), None)))  // short row: RH null
   }
 
   test("v2 scan prunes columns to the projection") {
@@ -54,47 +59,6 @@ class Toa5V2Spec extends SparkSpec {
     assert(plan.contains("BatchScan") && plan.matches(
       "(?s).*BatchScan[^\\[]*\\[Ta#\\d+\\].*"), plan)
     assert(df.collect().map(_.getDouble(0)).toSeq == Seq(1.5))
-  }
-
-  test("file time-span probe and overlap pruning") {
-    val dir = Files.createTempDirectory("toa5v2s")
-    val jan = writeFile(dir, "jan.dat", Seq(
-      "\"2024-01-01 00:30:00\",1,1", "\"2024-01-31 23:30:00\",2,2"))
-    val feb = writeFile(dir, "feb.dat", Seq(
-      "\"2024-02-01 00:30:00\",3,3", "\"2024-02-28 23:30:00\",4,4"))
-    val janSpan = Toa5V2.fileTimeSpan(jan).get
-    assert(janSpan._1 == Toa5V2.parseTsMicros("2024-01-01 00:30:00"))
-    assert(janSpan._2 == Toa5V2.parseTsMicros("2024-01-31 23:30:00"))
-    val febOnly = (Toa5V2.parseTsMicros("2024-02-01 00:00:00"), Long.MaxValue)
-    assert(!Toa5V2.overlaps(jan, febOnly))
-    assert(Toa5V2.overlaps(feb, febOnly))
-    // end-to-end: filter past January must still return feb rows only
-    val df = spark.read.format("toa5").load(dir.toString)
-      .filter(col("DATETIME") >= lit(java.sql.Timestamp.valueOf("2024-02-01 00:00:00")))
-    assert(df.count() == 2)
-    assert(df.agg(min("Ta")).head().getDouble(0) == 3.0)
-    // spanPruning=false disables the probe: same rows, no file pruned
-    val noPrune = spark.read.format("toa5")
-      .option("spanPruning", "false").load(dir.toString)
-      .filter(col("DATETIME") >= lit(java.sql.Timestamp.valueOf("2024-02-01 00:00:00")))
-    assert(noPrune.count() == 2)
-  }
-
-  test("non-monotonic file: mid-row excursion survives via spanPruning=false") {
-    val dir = Files.createTempDirectory("toa5v2nm")
-    // logger clock stepped back mid-file: an interior March row inside
-    // a January-spanning file
-    writeFile(dir, "odd.dat", Seq(
-      "\"2024-01-01 00:30:00\",1,1",
-      "\"2024-03-15 12:00:00\",9,9",
-      "\"2024-01-31 23:30:00\",2,2"))
-    val marchOnly = col("DATETIME") >=
-      lit(java.sql.Timestamp.valueOf("2024-03-01 00:00:00"))
-    val noPrune = spark.read.format("toa5")
-      .option("spanPruning", "false").load(dir.toString)
-      .filter(marchOnly)
-    assert(noPrune.count() == 1)
-    assert(noPrune.head().getDouble(1) == 9.0)
   }
 
   test("v2 scan accepts glob paths") {
@@ -137,10 +101,13 @@ class Toa5V2Spec extends SparkSpec {
       (0 until 100).map(i => (base + i * 100000L,
         Seq(i.toFloat, -i.toFloat))))
     val v2 = spark.read.format("tob").load(dir.toString)
-      .select("DATETIME", "Ux", "Uy").orderBy("DATETIME")
-    val codec = graft.sources.Tob.read(spark, dir.toString).data
-      .select("DATETIME", "Ux", "Uy").orderBy("DATETIME")
-    assert(v2.collect().toSeq == codec.collect().toSeq)
+      .select(unix_micros(col("DATETIME")).as("us"), col("Ux"), col("Uy"))
+      .orderBy("us")
+    val codec = graft.sources.Tob.decodeTob1(
+      Files.readAllBytes(dir.resolve("a.dat")))._1
+    assert(v2.collect().toSeq == codec)
+    assert(codec.length == 100 && codec(7) ==
+      org.apache.spark.sql.Row(base + 700000L, 7.0f, -7.0f))
     val pruned = spark.read.format("tob").load(dir.toString).select("Uy")
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.matches("(?s).*BatchScan[^\\[]*\\[Uy#\\d+\\].*"), plan)
@@ -156,5 +123,48 @@ class Toa5V2Spec extends SparkSpec {
     val df = spark.read.format("toa5").load(dir.toString)
       .filter(col("DATETIME") < lit(java.sql.Timestamp.valueOf("2024-02-01 00:00:00")))
     assert(df.count() == 1)
+  }
+
+  test("a quoted cell holding the separator stays one cell") {
+    val dir = Files.createTempDirectory("toa5v2q")
+    writeFile(dir, "a.dat", Seq(
+      "\"2024-01-01 00:30:00\",\"x,y\",50",
+      "\"2024-01-01 01:00:00\",\"1.5\",\"51\""))
+    for (df <- Seq(spark.read.format("toa5").load(dir.toString),
+        graft.sources.Toa5.read(spark, dir.toString).data)) {
+      val rows = df.orderBy("DATETIME").select("Ta", "RH").collect()
+      assert(rows.map(r => (Option(r.get(0)), r.getDouble(1))).toSeq ==
+        Seq((None, 50.0), (Some(1.5), 51.0)))
+    }
+    val cells = new Toa5V2.Cells(',')
+    cells.split("\"a,\"\"b\",c,\"\",d\"e")
+    assert((0 until cells.count).map(cells(_)) ==
+      Seq("a,\"\"b", "c", "", "d\"e"))
+  }
+
+  test("a file whose header differs from the first fails naming it (D7)") {
+    val dir = Files.createTempDirectory("toa5v2h")
+    writeFile(dir, "a.dat", Seq("\"2024-01-01 00:30:00\",20,50"))
+    val swapped = toa5(Seq("\"2024-01-01 01:00:00\",51,21"))
+      .replace("\"Ta\",\"RH\"", "\"RH\",\"Ta\"")
+    Files.write(dir.resolve("b.dat"), swapped.getBytes(UTF_8))
+    val e = intercept[Exception] {
+      graft.sources.Toa5.read(spark, dir.toString).data.collect()
+    }
+    val bad = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case x: IllegalArgumentException => x }
+    assert(bad.exists(_.getMessage.contains("b.dat")), e)
+  }
+
+  test("the scan reports the listed files' total size") {
+    val dir = Files.createTempDirectory("toa5v2st")
+    val files = Seq(
+      writeFile(dir, "a.dat", Seq("\"2024-01-01 00:30:00\",1,1")),
+      writeFile(dir, "b.dat", Seq("\"2024-01-01 01:00:00\",2,2",
+        "\"2024-01-01 01:30:00\",3,3")))
+    val df = spark.read.format("toa5").load(dir.toString)
+    val scan = df.queryExecution.optimizedPlan.collectLeaves()
+    assert(scan.map(_.stats.sizeInBytes) ==
+      Seq(BigInt(files.map(f => Files.size(java.nio.file.Paths.get(f))).sum)))
   }
 }

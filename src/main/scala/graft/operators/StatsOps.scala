@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -13,12 +12,11 @@ import org.apache.spark.storage.StorageLevel
   * across implementations — this engine's oracle discipline wants
   * the EXACT value at the EXACT rank, bit-identical in any engine.
   *
-  * Shape: one range exchange on (value, id) — the same two-pass
-  * substrate as [[graft.text.InterleaveOps]] — then per-partition
-  * counts (driver collect = one Long per partition) place each
-  * requested rank in its partition, and a second scan emits only the
-  * hit rows. No corpus-wide window, no driver-side sort, no
-  * collect beyond the partition-count array and the |probs| result.
+  * Shape: one [[PrefixScan]] of a count on (value, id) — per-
+  * partition counts (driver collect = one Long per partition) give
+  * every row its `rank = excl + 1`, and only the hit ranks are kept.
+  * No corpus-wide window, no driver-side sort, no collect beyond the
+  * partition-count array and the |probs| result.
   *
   * Rank convention matches [[graft.text.SampleOps.sampleRankCuts]]:
   * the p-quantile is the value at 1-based rank `ceil(p·n)` under the
@@ -38,56 +36,28 @@ object StatsOps {
     require(probs.nonEmpty &&
       probs.forall { case (n, d) => n > 0 && n <= d },
       s"exactQuantiles: malformed probs $probs")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val nPart = math.max(1,
-      spark.sessionState.conf.numShufflePartitions)
-    val ranged = df
-      .filter(col(valueCol).isNotNull)
-      .select(col(valueCol).cast("double").as("__v"),
-        col(idCol).cast("long").as("__id"))
-      .repartitionByRange(nPart, col("__v"), col("__id"))
-      .sortWithinPartitions(col("__v"), col("__id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val scan = PrefixScan(df
+        .filter(col(valueCol).isNotNull)
+        .select(col(valueCol).cast("double").as("__v"),
+          col(idCol).cast("long").as("__id")),
+      Seq(col("__v"), col("__id")), Seq("__excl" -> lit(1L)))
     try {
-      val counts = ranged.select(lit(1L))
-        .queryExecution.toRdd.mapPartitions { it =>
-          var c = 0L
-          while (it.hasNext) { it.next(); c += 1L }
-          Iterator((TaskContext.getPartitionId(), c))
-        }.collect().toMap
-      val offs = new Array[Long](nPart)
-      var acc = 0L
-      (0 until nPart).foreach { p =>
-        offs(p) = acc; acc += counts.getOrElse(p, 0L)
-      }
-      val n = acc
+      val n = scan.total(0)
       require(n > 0, s"exactQuantiles: no non-null '$valueCol' rows")
       // target 1-based ranks, exact ceil in BigInt; probs sharing a
       // rank each emit their own row
       val byRank: Map[Long, Seq[(Long, Long)]] =
         probs.groupBy { case (pn, pd) =>
           ((BigInt(n) * pn + pd - 1) / pd).toLong }
-      val hits = ranged.mapPartitions { it =>
-        var r = offs(TaskContext.getPartitionId())
-        it.flatMap { row =>
-          r += 1L
-          byRank.get(r) match {
-            case None => Iterator.empty
-            case Some(ps) => ps.iterator.map { case (pn, pd) =>
-              Row(pn, pd, r, row.getDouble(0))
-            }
-          }
-        }
-      }(org.apache.spark.sql.Encoders.row(
-        new org.apache.spark.sql.types.StructType()
-          .add("p_num", org.apache.spark.sql.types.LongType, false)
-          .add("p_den", org.apache.spark.sql.types.LongType, false)
-          .add("rank", org.apache.spark.sql.types.LongType, false)
-          .add("value", org.apache.spark.sql.types.DoubleType, false)))
-      hits.localCheckpoint(eager = true,
-        StorageLevel.MEMORY_AND_DISK_SER)
-    } finally ranged.unpersist(blocking = false)
+      scan.rows
+        .withColumn("rank", col("__excl") + 1L)
+        .filter(col("rank").isin(byRank.keys.toSeq: _*))
+        .select(explode(element_at(typedLit(byRank), col("rank"))).as("p"),
+          col("rank"), col("__v").as("value"))
+        .select(col("p._1").as("p_num"), col("p._2").as("p_den"),
+          col("rank"), col("value"))
+        .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+    } finally scan.release()
   }
 
   /** Quantile-bounded outlier filter — the length/perplexity tail

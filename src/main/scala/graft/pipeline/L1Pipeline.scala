@@ -262,33 +262,18 @@ object L1Pipeline {
     }
   }
 
-  /** S11 netCDF scan seam: one yearly product file back to a frame
-    * (DATETIME + data/flag columns; NaN -> null). Driver-side decode
-    * for the single-file case; use [[readNetCdfDir]] for a multi-year
-    * directory. */
+  /** S11/J4 netCDF scan seam: a yearly product file, or a directory
+    * of them, back to a frame (DATETIME + data/flag columns; NaN ->
+    * null). Files decode one per task (binaryFile source), so a
+    * decade of site-years parallelizes across executors with no
+    * driver materialization. The schema comes from the first listed
+    * file, parsed on the driver, so the read runs no Spark job; every
+    * file must carry that schema (mismatches fail loudly with the
+    * decoded schema). */
   def readNetCdf(spark: SparkSession, path: String): DataFrame = {
-    val ds = graft.sources.NetCdf.read(path)
-    val rows = ncRows(ds)
-    val list = new java.util.ArrayList[org.apache.spark.sql.Row](rows.size)
-    rows.foreach(list.add)
-    val longSchema = org.apache.spark.sql.types.StructType(
-      ncSchema(ds).fields.map(f => if (f.name == "DATETIME")
-        f.copy(dataType = org.apache.spark.sql.types.LongType) else f))
-    spark.createDataFrame(list, longSchema)
-      .withColumn("DATETIME", timestamp_micros(col("DATETIME")))
-  }
-
-  /** J4/S11 at scale: a DIRECTORY of yearly products decoded one file
-    * per task (binaryFile source): a decade of site-years
-    * parallelizes across executors with no driver materialization. Every file must carry the probe
-    * file's schema (mismatches fail loudly with the decoded schema). */
-  def readNetCdfDir(spark: SparkSession, path: String): DataFrame = {
     import graft.sources.NetCdf
-    val bin = spark.read.format("binaryFile").load(path)
-      .select("path", "content")
-    val probe = NetCdf.parse(bin.select("content").head()
-      .getAs[Array[Byte]](0))
-    val schema = ncSchema(probe)
+    val (bin, first) = graft.sources.BinaryFiles.scan(spark, path)
+    val schema = ncSchema(NetCdf.parse(first))
     val decodeSchema = org.apache.spark.sql.types.StructType(
       schema.fields.map(f => if (f.name == "DATETIME")
         f.copy(dataType = org.apache.spark.sql.types.LongType) else f))

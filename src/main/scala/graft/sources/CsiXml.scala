@@ -131,10 +131,12 @@ object CsiXml {
       sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
+  /** Reads a CSIXML file, directory or glob, one file per task, with
+    * the first listed file's head (parsed on the driver, so the read
+    * runs no Spark job) as the [[TableMeta]]. */
   def read(spark: SparkSession, path: String): Parsed = {
-    val bin = spark.read.format("binaryFile").load(path)
-      .select("content")
-    val meta = probeMeta(bin.head().getAs[Array[Byte]](0))
+    val (bin, first) = BinaryFiles.scan(spark, path)
+    val meta = probeMeta(first)
     val valueVars = meta.variables.drop(2)
     val decodeSchema = StructType(
       StructField("time_str", StringType) ::
@@ -142,7 +144,7 @@ object CsiXml {
       valueVars.map(v => StructField(v.name, DoubleType)).toList)
     implicit val enc: Encoder[Row] = Encoders.row(decodeSchema)
     val n = valueVars.length
-    val rows = bin.flatMap(r => decode(r.getAs[Array[Byte]](0), n))
+    val rows = bin.flatMap(r => decode(r.getAs[Array[Byte]](1), n))
     val df = rows
       .withColumn("DATETIME",
         try_to_timestamp(col("time_str"),

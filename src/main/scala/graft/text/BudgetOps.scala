@@ -1,10 +1,11 @@
 package graft.text
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 import org.apache.spark.storage.StorageLevel
+
+import graft.operators.PrefixScan
+import graft.operators.PrefixScan.freshName
 
 /** Token-budget corpus selection: the "fill the training budget"
   * step every large-scale pipeline runs last — rank the scored pool
@@ -26,13 +27,11 @@ import org.apache.spark.storage.StorageLevel
   * The hard part at scale is the same GLOBAL prefix sum as
   * [[PackOps]]: every document needs its absolute token offset in
   * priority order, and a `Window.orderBy` over the corpus is a
-  * single-partition stage. This uses the identical two-pass
-  * distributed scan — range-shuffle on the order key (persisted so
-  * both passes read the SAME sampled range bounds), per-partition
-  * totals whose driver collect is bounded by the shuffle-partition
-  * count, then a second pass adding each partition's exclusive
-  * prefix — so the only corpus-wide movement is the one range
-  * exchange any global ordering costs.
+  * single-partition stage. Both run on the two-pass
+  * [[graft.operators.PrefixScan]], so the only corpus-wide movement
+  * is the one range exchange any global ordering costs; the policy
+  * here is `selected = excl < budget`, `cum_tokens = excl + tok`
+  * over its exclusive token prefix `excl`.
   *
   * Contract: the result is eagerly materialized (serialized
   * localCheckpoint) and the shuffle substrate released before
@@ -85,14 +84,13 @@ object BudgetOps {
     * budget is reached. `budgets` maps stratum (as string) to its
     * budget; absent strata get `defaultBudget` (0 = excluded).
     *
-    * Same two-pass distributed scan, range-partitioned on
-    * (stratum, priority DESC, id): rows of a stratum are contiguous
-    * across the partition sequence, so pass 1's driver collect is
-    * one row per (partition, stratum-run) — bounded by the partition
-    * count plus the stratum cardinality, which is parameter-sized by
-    * assumption (sources/languages — the same contract as
-    * [[SampleOps.stratifiedSample]]'s broadcast rate table). A NULL
-    * stratum folds to the empty string.
+    * Same [[graft.operators.PrefixScan]], stratified: pass 1's
+    * driver collect is bounded by the partition count plus the
+    * stratum cardinality, which is parameter-sized by assumption
+    * (sources/languages — the same contract as
+    * [[SampleOps.stratifiedSample]]'s broadcast rate table), and the
+    * budgets ride the plan as a literal map. A NULL stratum folds to
+    * the empty string.
     *
     * Output adds `cum_tokens` (within-stratum inclusive running
     * total), `budget` (the stratum's resolved budget), `selected`. */
@@ -171,146 +169,54 @@ object BudgetOps {
       })
   }
 
-  /** Internal working-column name that cannot collide with any input
-    * column: `base`, or `base` + the first integer suffix free in
-    * `cols`. Keeps the only reserved OUTPUT names the documented
-    * three (cum_tokens/selected/budget). */
-  private def freshName(base: String, cols: Seq[String]): String = {
-    var n = base
-    var i = 0
-    while (cols.contains(n)) { i += 1; n = base + i }
-    n
-  }
-
-  private def adaptiveRangeParts(df: DataFrame): Int =
-    SampleOps.adaptiveRangeParts(df)
-
   private def runPerStratum(df0: DataFrame, idCol: String,
       tokenCol: String, priorityCol: String, stratumCol: String,
       budgetsOf: Map[String, Long] => Map[String, Long]): DataFrame = {
     // reserved-name contract, as in run()
     val df = df0.drop("cum_tokens", "selected", "budget")
-    val spark = df.sparkSession
-    val n = adaptiveRangeParts(df)
     val tokC = freshName("__tok", df.columns)
     val priC = freshName("__pri", df.columns)
     val stratC = freshName("__strat", df.columns)
-
-    val ranged = df
-      .withColumn(tokC, coalesce(col(tokenCol).cast("long"), lit(0L)))
-      .withColumn(priC, col(priorityCol).cast("double"))
-      .withColumn(stratC,
-        coalesce(col(stratumCol).cast("string"), lit("")))
-      .repartitionByRange(n, col(stratC), col(priC).desc,
-        col(idCol))
-      .sortWithinPartitions(col(stratC), col(priC).desc,
-        col(idCol))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val exclC = freshName("__excl", df.columns)
+    val scan = PrefixScan(df
+        .withColumn(tokC, coalesce(col(tokenCol).cast("long"), lit(0L)))
+        .withColumn(priC, col(priorityCol).cast("double"))
+        .withColumn(stratC,
+          coalesce(col(stratumCol).cast("string"), lit(""))),
+      Seq(col(priC).desc, col(idCol)), Seq(exclC -> col(tokC)),
+      stratum = Some(col(stratC)))
     try {
-      val tokIdx = ranged.schema.fieldIndex(tokC)
-      val stratIdx = ranged.schema.fieldIndex(stratC)
-
-      // Pass 1: per-(partition, stratum) totals. Strata are contiguous
-      // across the partition sequence, so this collect is bounded by
-      // partitions + strata, never by data size.
-      val totalsRows = ranged.select(col(stratC), col(tokC))
-        .queryExecution.toRdd.mapPartitions { it =>
-          val pid = TaskContext.getPartitionId()
-          val acc = scala.collection.mutable.LinkedHashMap
-            .empty[String, Long]
-          while (it.hasNext) {
-            val r = it.next()
-            val s = r.getUTF8String(0).toString
-            acc(s) = acc.getOrElse(s, 0L) + r.getLong(1)
-          }
-          acc.iterator.map { case (s, t) => (pid, s, t) }
-        }.collect()
-      val stratTotals = totalsRows.groupBy(_._2)
-        .map { case (s, rs) => s -> rs.map(_._3).sum }
-      val budgets = budgetsOf(stratTotals)
-      val prefix: Map[(Int, String), Long] =
-        totalsRows.groupBy(_._2).flatMap { case (s, rs) =>
-          var acc = 0L
-          rs.sortBy(_._1).map { case (pid, _, t) =>
-            val entry = ((pid, s), acc); acc += t; entry
-          }
-        }
-
-      // Pass 2: per-stratum running sums within the SAME partitions.
-      val outSchema = ranged.schema
-        .add("cum_tokens", LongType, nullable = false)
-        .add("budget", LongType, nullable = false)
-      ranged.mapPartitions { it =>
-        val pid = TaskContext.getPartitionId()
-        val run = scala.collection.mutable.HashMap.empty[String, Long]
-        it.map { r =>
-          val s = r.getString(stratIdx)
-          val cur = run.getOrElse(s, prefix.getOrElse((pid, s), 0L)) +
-            r.getLong(tokIdx)
-          run(s) = cur
-          Row.fromSeq(r.toSeq :+ cur :+ budgets.getOrElse(s, 0L))
-        }
-      }(Encoders.row(outSchema))
-        .withColumn("selected",
-          col("cum_tokens") - col(tokC) < col("budget"))
-        .drop(tokC, priC, stratC)
+      val budgets = budgetsOf(scan.totals.map { case (s, t) => s -> t(0) })
+      scan.rows
+        .withColumn("cum_tokens", col(exclC) + col(tokC))
+        .withColumn("budget", coalesce(
+          try_element_at(typedLit(budgets), col(stratC)), lit(0L)))
+        .withColumn("selected", col(exclC) < col("budget"))
+        .drop(tokC, priC, stratC, exclC)
         .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
-    } finally ranged.unpersist(blocking = false)
+    } finally scan.release()
   }
 
   private def run(df0: DataFrame, idCol: String, tokenCol: String,
       priorityCol: String, budgetOf: Long => Long): DataFrame = {
     // honor the reserved-name contract: pre-existing output-named
-    // columns are replaced, not duplicated (schema.add would emit an
-    // ambiguous twin)
+    // columns are replaced, not duplicated
     val df = df0.drop("cum_tokens", "selected", "budget")
-    val spark = df.sparkSession
-    val n = adaptiveRangeParts(df)
     val tokC = freshName("__tok", df.columns)
     val priC = freshName("__pri", df.columns)
-
-    val ranged = df
-      .withColumn(tokC, coalesce(col(tokenCol).cast("long"), lit(0L)))
-      .withColumn(priC, col(priorityCol).cast("double"))
-      .repartitionByRange(n, col(priC).desc, col(idCol))
-      .sortWithinPartitions(col(priC).desc, col(idCol))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val exclC = freshName("__excl", df.columns)
+    val scan = PrefixScan(df
+        .withColumn(tokC, coalesce(col(tokenCol).cast("long"), lit(0L)))
+        .withColumn(priC, col(priorityCol).cast("double")),
+      Seq(col(priC).desc, col(idCol)), Seq(exclC -> col(tokC)))
     try {
-      val tokIdx = ranged.schema.fieldIndex(tokC)
-
-      // Pass 1: per-partition totals (materializes the persist; one
-      // row per partition, so the collect is partition-count-bounded).
-      val totals = ranged.select(col(tokC))
-        .queryExecution.toRdd.mapPartitions { it =>
-          val pid = TaskContext.getPartitionId()
-          var s = 0L
-          while (it.hasNext) s += it.next().getLong(0)
-          Iterator((pid, s))
-        }.collect().toMap
-      val prefix = new Array[Long](n)
-      var acc = 0L
-      (0 until n).foreach { p =>
-        prefix(p) = acc
-        acc += totals.getOrElse(p, 0L)
-      }
-      val budget = budgetOf(acc)
-
-      // Pass 2: running sum within the SAME persisted partitions.
-      val outSchema = ranged.schema
-        .add("cum_tokens", LongType, nullable = false)
-      ranged.mapPartitions { it =>
-        val pid = TaskContext.getPartitionId()
-        var run = prefix(pid)
-        it.map { r =>
-          run += r.getLong(tokIdx)
-          Row.fromSeq(r.toSeq :+ run)
-        }
-      }(Encoders.row(outSchema))
-        .withColumn("selected",
-          col("cum_tokens") - col(tokC) < lit(budget))
+      val budget = budgetOf(scan.total(0))
+      scan.rows
+        .withColumn("cum_tokens", col(exclC) + col(tokC))
+        .withColumn("selected", col(exclC) < lit(budget))
         .withColumn("budget", lit(budget))
-        .drop(tokC, priC)
+        .drop(tokC, priC, exclC)
         .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
-    } finally ranged.unpersist(blocking = false)
+    } finally scan.release()
   }
 }

@@ -1,10 +1,16 @@
 package graft.text
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.storage.StorageLevel
+
+import graft.operators.PrefixScan
+import graft.operators.PrefixScan.freshName
 
 /** Proportional mixture interleave — the deterministic TRAINING
   * ORDER a mixture recipe implies: lay the corpus out so that every
@@ -36,16 +42,16 @@ import org.apache.spark.storage.StorageLevel
   * the key itself then provably fit in Long (see
   * [[proportionalInterleave]]).
   *
-  * Scale shape — two range exchanges, no corpus-wide window:
-  *   1. per-stratum rank k: range-shuffle on (stratum, id) +
-  *      two-pass per-(partition, stratum) counts (the
-  *      [[BudgetOps.budgetSelectPerStratum]] scan — a hot stratum
-  *      spans many range partitions, so there is no
+  * Scale shape — two [[graft.operators.PrefixScan]]s, no
+  * corpus-wide window:
+  *   1. per-stratum rank `mix_k = excl + 1` (and the token prefix,
+  *      sized variant): a stratified scan on (stratum, id) — a hot
+  *      stratum spans many range partitions, so there is no
   *      one-reducer-per-stratum skew, unlike a
-  *      `Window.partitionBy(stratum)`).
-  *   2. global position `seq`: range-shuffle on (key, stratum, k) +
-  *      the same two-pass count scan (a `Window.orderBy` over the
-  *      corpus would be a single-partition stage).
+  *      `Window.partitionBy(stratum)`.
+  *   2. global position `seq = excl + 1`: a count scan on
+  *      (key, stratum, k) (a `Window.orderBy` over the corpus would
+  *      be a single-partition stage).
   * Driver collects are bounded by partitions + strata. The weight
   * table is L rows, broadcast.
   *
@@ -96,12 +102,6 @@ object InterleaveOps {
     acc
   }
 
-  private def freshName(base: String, cols: Seq[String]): String = {
-    var n = base; var i = 0
-    while (cols.contains(n)) { i += 1; n = s"$base$i" }
-    n
-  }
-
   /** Interleave `df` into the stride-scheduled mixture order.
     * `weights` maps stratum → positive integer parts (reduced by
     * their gcd internally); strata absent from the map are DROPPED
@@ -143,9 +143,9 @@ object InterleaveOps {
     * `mix_key = floor((2·cum_prev + size)·M / (2·w_s))` with
     * cum_prev the stratum's exclusive token prefix in id order —
     * for size ≡ 1 this is EXACTLY the stride schedule (2k−1)/(2w),
-    * so the doc-count operator is the special case. Same two-pass
-    * range substrate (the prefix scan accumulates token sums instead
-    * of counts); same post-pass overflow cap with the stratum token
+    * so the doc-count operator is the special case. Same prefix
+    * scan (it accumulates token sums beside the counts); same
+    * post-pass overflow cap with the stratum token
     * TOTALS in place of ranks. `sizeCol` must be a non-negative
     * integral column; null or negative sizes fail loudly with the
     * offending stratum (a silent 0 would quietly starve a doc, a
@@ -164,7 +164,6 @@ object InterleaveOps {
     val df = df0.drop("mix_k", "mix_key", "seq")
     val spark = df.sparkSession
     import spark.implicits._
-    val n = SampleOps.adaptiveRangeParts(df)
     val g = weights.valuesIterator.reduce(gcdL)
     val red = weights.map { case (s, w) => (s, w / g) }
     val m =
@@ -174,79 +173,23 @@ object InterleaveOps {
 
     val stratC = freshName("__strat", df.columns)
     val wC = freshName("__w", df.columns)
+    val kC = freshName("__kexcl", df.columns)
     val cumC = freshName("__cum", df.columns)
+    val seqC = freshName("__sexcl", df.columns)
     val wDf = red.toSeq.toDF(stratC, wC)
 
     // Pass A: per-stratum rank (and token prefix, sized variant)
-    // without per-stratum reducers — range partition on (stratum,
-    // id), (count, size-sum) per (partition, stratum) (bounded
-    // collect: strata are contiguous in the partition sequence),
-    // then a local running scan + exclusive prefix.
-    val ranged = df
-      .withColumn(stratC, coalesce(col(stratumCol).cast("string"), lit("")))
-      .join(broadcast(wDf), Seq(stratC))
-      .repartitionByRange(n, col(stratC), col(idCol))
-      .sortWithinPartitions(col(stratC), col(idCol))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // without per-stratum reducers — a stratified prefix scan on
+    // (stratum, id) of a count and the checked size.
+    val sizeW = sizeCol.map(c => ColumnBridge.column(CheckedSize(
+      ColumnBridge.expression(col(c).cast("long")),
+      ColumnBridge.expression(col(stratC)), c)))
+    val scanA = PrefixScan(df
+        .withColumn(stratC, coalesce(col(stratumCol).cast("string"), lit("")))
+        .join(broadcast(wDf), Seq(stratC)),
+      Seq(col(idCol)), (kC -> lit(1L)) +: sizeW.map(cumC -> _).toSeq,
+      stratum = Some(col(stratC)))
     try {
-      val stratIdx = ranged.schema.fieldIndex(stratC)
-      val sizeIdx = sizeCol.map(ranged.schema.fieldIndex)
-      def sizeOf(r: Row): Long = sizeIdx match {
-        case None => 1L
-        case Some(i) =>
-          if (r.isNullAt(i)) throw new IllegalArgumentException(
-            s"proportionalInterleaveByTokens: null ${sizeCol.get} in " +
-              s"stratum '${r.getString(stratIdx)}'")
-          val v = r.get(i) match {
-            case x: Number => x.longValue()
-            case x => throw new IllegalArgumentException(
-              s"proportionalInterleaveByTokens: non-numeric " +
-                s"${sizeCol.get} ($x)")
-          }
-          if (v < 0L) throw new IllegalArgumentException(
-            s"proportionalInterleaveByTokens: negative ${sizeCol.get}" +
-              s"=$v in stratum '${r.getString(stratIdx)}'")
-          v
-      }
-      val countsSizes = {
-        val sC = stratC; val szC = sizeCol
-        val base = ranged.select((col(sC) +:
-          szC.map(c => col(c).cast("long")).toSeq): _*)
-        base.queryExecution.toRdd.mapPartitions { it =>
-          val pid = TaskContext.getPartitionId()
-          val acc = scala.collection.mutable.LinkedHashMap
-            .empty[String, (Long, Long)]
-          while (it.hasNext) {
-            val r = it.next()
-            val s = r.getUTF8String(0).toString
-            val sz =
-              if (szC.isEmpty) 1L
-              else if (r.isNullAt(1)) throw new IllegalArgumentException(
-                s"proportionalInterleaveByTokens: null ${szC.get} in " +
-                  s"stratum '$s'")
-              else {
-                val v = r.getLong(1)
-                if (v < 0L) throw new IllegalArgumentException(
-                  s"proportionalInterleaveByTokens: negative " +
-                    s"${szC.get}=$v in stratum '$s'")
-                v
-              }
-            val (c0, u0) = acc.getOrElse(s, (0L, 0L))
-            acc(s) = (c0 + 1L, u0 + sz)
-          }
-          acc.iterator.map { case (s, (c, u)) => (pid, s, c, u) }
-        }.collect()
-      }
-      // exclusive prefixes per (partition, stratum): rank offset and
-      // (sized variant) token offset
-      val prefix: Map[(Int, String), (Long, Long)] =
-        countsSizes.groupBy(_._2).flatMap { case (s, rs) =>
-          var accC = 0L; var accU = 0L
-          rs.sortBy(_._1).map { case (pid, _, c, u) =>
-            val entry = ((pid, s), (accC, accU))
-            accC += c; accU += u; entry
-          }
-        }
       // Overflow cap (r14 finding): per-stratum totals are now known,
       // so bound M such that U_max·M and 2·w_max·M both stay under
       // Long.MaxValue — the two largest intermediates of
@@ -255,34 +198,14 @@ object InterleaveOps {
       // Without this, many coprime small weights push the lcm M to
       // its 2^42 cap while w_s stays small, and (x div 2w)·M wraps
       // negative around x ≈ w·2^22.
-      val uMax = math.max(1L, countsSizes.groupBy(_._2).valuesIterator
-        .map(rs => rs.iterator
-          .map(r => if (sizeCol.isEmpty) r._3 else r._4).sum)
-        .foldLeft(0L)(math.max))
+      val uMax = math.max(1L, scanA.totals.valuesIterator
+        .map(_.last).foldLeft(0L)(math.max))
       val wMax = red.valuesIterator.foldLeft(1L)(math.max)
       val mSafe = math.max(1L,
         math.min(m, Long.MaxValue / (2L * math.max(uMax, wMax))))
-      val kSchema = ranged.schema
-        .add("mix_k", LongType, nullable = false)
-        .add(cumC, LongType, nullable = false)
-      val withK = ranged.mapPartitions { it =>
-        val pid = TaskContext.getPartitionId()
-        val run = scala.collection.mutable.HashMap
-          .empty[String, (Long, Long)]
-        it.map { r =>
-          val s = r.getString(stratIdx)
-          val (k0, u0) = run.getOrElse(s,
-            prefix.getOrElse((pid, s), (0L, 0L)))
-          val k = k0 + 1L
-          val u = u0 + sizeOf(r)
-          run(s) = (k, u)
-          // cumC carries the EXCLUSIVE prefix (u0) for the key
-          Row.fromSeq(r.toSeq :+ k :+ u0)
-        }
-      }(Encoders.row(kSchema))
 
-      // Virtual time, then pass B: global position by the same
-      // two-pass scan over the (key, stratum, k) range order.
+      // Virtual time, then pass B: global position by a count scan
+      // over the (key, stratum, k) order.
       val keyCol = sizeCol match {
         case None => mulDivFloorC(
           col("mix_k") * 2 - 1, lit(mSafe), col(wC) * 2)
@@ -290,32 +213,45 @@ object InterleaveOps {
           col(cumC) * 2 + col(sz).cast("long"), lit(mSafe),
           col(wC) * 2)
       }
-      val keyed = withK
-        .withColumn("mix_key", keyCol)
-        .repartitionByRange(n, col("mix_key"), col(stratC), col("mix_k"))
-        .sortWithinPartitions(col("mix_key"), col(stratC), col("mix_k"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val sizes = keyed.select(lit(1L))
-          .queryExecution.toRdd.mapPartitions { it =>
-            val pid = TaskContext.getPartitionId()
-            var c = 0L
-            while (it.hasNext) { it.next(); c += 1L }
-            Iterator((pid, c))
-          }.collect().toMap
-        val offs = new Array[Long](n)
-        var acc = 0L
-        (0 until n).foreach { p =>
-          offs(p) = acc; acc += sizes.getOrElse(p, 0L)
-        }
-        val outSchema = keyed.schema.add("seq", LongType, nullable = false)
-        keyed.mapPartitions { it =>
-          var pos = offs(TaskContext.getPartitionId())
-          it.map { r => pos += 1L; Row.fromSeq(r.toSeq :+ pos) }
-        }(Encoders.row(outSchema))
-          .drop(stratC, wC, cumC)
-          .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
-      } finally keyed.unpersist(blocking = false)
-    } finally ranged.unpersist(blocking = false)
+      val scanB = PrefixScan(scanA.rows
+          .withColumn("mix_k", col(kC) + 1L)
+          .withColumn("mix_key", keyCol),
+        Seq(col("mix_key"), col(stratC), col("mix_k")),
+        Seq(seqC -> lit(1L)))
+      try scanB.rows
+        .withColumn("seq", col(seqC) + 1L)
+        .drop(stratC, wC, kC, cumC, seqC)
+        .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+      finally scanB.release()
+    } finally scanA.release()
   }
+}
+
+/** A token-interleave size as a long, or an IllegalArgumentException
+  * naming the stratum for a null or negative size. Thrown from the
+  * task, the failure reaches the caller as the failed job's
+  * SparkException (`raise_error` would surface unwrapped, as a
+  * SparkRuntimeException). */
+private case class CheckedSize(size: Expression, stratum: Expression,
+    name: String) extends BinaryExpression with CodegenFallback {
+
+  override def left: Expression = size
+  override def right: Expression = stratum
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any = {
+    val v = size.eval(input)
+    if (v == null) throw new IllegalArgumentException(
+      s"proportionalInterleaveByTokens: null $name in stratum " +
+        s"'${stratum.eval(input)}'")
+    if (v.asInstanceOf[Long] < 0L) throw new IllegalArgumentException(
+      s"proportionalInterleaveByTokens: negative $name=$v in stratum " +
+        s"'${stratum.eval(input)}'")
+    v
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): CheckedSize =
+    copy(size = newLeft, stratum = newRight)
 }

@@ -1,10 +1,11 @@
 package graft.text
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 import org.apache.spark.storage.StorageLevel
+
+import graft.operators.PrefixScan
+import graft.operators.PrefixScan.freshName
 
 /** Sequence packing for LLM training-data pipelines: lay the corpus
   * out as ONE deterministic token stream and chunk it into fixed-size
@@ -14,24 +15,10 @@ import org.apache.spark.storage.StorageLevel
   * block boundaries).
   *
   * The hard part at scale is the GLOBAL prefix sum: every document
-  * needs its absolute token offset in the stream. A naive
-  * `sum(...).over(Window.orderBy(...))` is a single-partition
-  * WindowExec — the exact shape that stops scaling first. This
-  * implements the classic two-pass distributed scan instead, in the
-  * same substrate idiom as the keyless TimeSeriesOps paths:
-  *
-  *   1. range-shuffle rows by the deterministic order key so
-  *      partition p holds a contiguous slice of the stream, sorted
-  *      within the partition; persist the substrate so every pass
-  *      reads IDENTICAL partitions (RangePartitioner bounds come from
-  *      nondeterministic sampling — recomputation could re-bucket);
-  *   2. one `mapPartitions` pass emits per-partition token totals —
-  *      one row per partition, so the driver collect is bounded by
-  *      the shuffle-partition count, never by data size — and the
-  *      driver turns them into exclusive prefix offsets;
-  *   3. a second `mapPartitions` pass over the SAME persisted
-  *      partitions adds the running sum to the partition's prefix
-  *      offset — no further exchange, no window.
+  * needs its absolute token offset in the stream. That is the
+  * two-pass [[graft.operators.PrefixScan]] over the deterministic
+  * order key; the policy here is `start_off = excl`,
+  * `end_off = excl + tok` over its exclusive token prefix `excl`.
   *
   * The layout depends only on (salt, id) — like everything in
   * [[SampleOps]], re-runs on any cluster size emit identical blocks,
@@ -78,67 +65,20 @@ object PackOps {
   /** [[packOffsets]] plus the persisted substrate handle, so callers
     * that fully materialize their result ([[packedBlocks]]) can
     * unpersist immediately instead of retaining session-wide. */
-  /** Internal working-column name that cannot collide with any input
-    * column (the [[BudgetOps]] convention): `base`, or `base` + the
-    * first free integer suffix. */
-  private def freshName(base: String, cols: Seq[String]): String = {
-    var nm = base
-    var i = 0
-    while (cols.contains(nm)) { i += 1; nm = base + i }
-    nm
-  }
-
   private def packOffsetsRetaining(df: DataFrame, idCol: String,
       tokenCol: String, salt: String): (DataFrame, DataFrame) = {
-    val spark = df.sparkSession
-    val n = SampleOps.adaptiveRangeParts(df)
     val tokC = freshName("__tok", df.columns)
     val coordC = freshName("__coord", df.columns)
-
-    val ranged = df
-      .withColumn(tokC, coalesce(col(tokenCol).cast("long"), lit(0L)))
-      .withColumn(coordC, SampleOps.hashCoord(col(idCol), salt))
-      .repartitionByRange(n, col(coordC), col(idCol))
-      .sortWithinPartitions(col(coordC), col(idCol))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // on success the substrate stays persisted BY CONTRACT (the lazy
-    // result re-reads it); a pass-1 failure would otherwise leak an
-    // untracked persist, so unpersist on that path only
-    try {
-      val tokIdx = ranged.schema.fieldIndex(tokC)
-
-      // Pass 1: per-partition totals (materializes the persist).
-      val totals = ranged.select(col(tokC))
-        .queryExecution.toRdd.mapPartitions { it =>
-          val pid = TaskContext.getPartitionId()
-          var s = 0L
-          while (it.hasNext) s += it.next().getLong(0)
-          Iterator((pid, s))
-        }.collect().toMap
-      val prefix = new Array[Long](n)
-      var acc = 0L
-      (0 until n).foreach { p =>
-        prefix(p) = acc
-        acc += totals.getOrElse(p, 0L)
-      }
-
-      // Pass 2: running sum within the SAME partitions + prefix offset.
-      val outSchema = ranged.schema
-        .add("end_off", LongType, nullable = false)
-        .add("start_off", LongType, nullable = false)
-      val out = ranged.mapPartitions { it =>
-        val pid = TaskContext.getPartitionId()
-        var run = prefix(pid)
-        it.map { r =>
-          val tok = r.getLong(tokIdx)
-          run += tok
-          Row.fromSeq(r.toSeq :+ run :+ (run - tok))
-        }
-      }(Encoders.row(outSchema))
-      (out.drop(tokC, coordC), ranged)
-    } catch { case t: Throwable =>
-      ranged.unpersist(blocking = false); throw t
-    }
+    val exclC = freshName("__excl", df.columns)
+    val scan = PrefixScan(df
+        .withColumn(tokC, coalesce(col(tokenCol).cast("long"), lit(0L)))
+        .withColumn(coordC, SampleOps.hashCoord(col(idCol), salt)),
+      Seq(col(coordC), col(idCol)), Seq(exclC -> col(tokC)))
+    val out = scan.rows
+      .withColumn("end_off", col(exclC) + col(tokC))
+      .withColumn("start_off", col(exclC))
+      .drop(tokC, coordC, exclC)
+    (out, scan.substrate)
   }
 
   /** Absolute [start, end) token offsets per document in the
@@ -147,8 +87,8 @@ object PackOps {
     * `end_off` (longs). Null `tokenCol` values count as 0 tokens —
     * null- and zero-token docs get an empty span at their position.
     *
-    * Cost: one range shuffle + two per-partition scans of the
-    * persisted substrate; the only driver traffic is one row per
+    * Cost: one range shuffle + the two [[PrefixScan]] passes over
+    * the persisted substrate; the only driver traffic is one row per
     * partition.
     *
     * RETAINS its persisted substrate until [[releaseSubstrates]] (see

@@ -2,6 +2,10 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+
+import graft.operators.PrefixScan
+import graft.operators.PrefixScan.freshName
 
 /** Deterministic sampling / splitting / ordering primitives for
   * training-data pipelines: data mixing (per-source rates),
@@ -34,29 +38,6 @@ object SampleOps {
     * `('0x' || substr(md5(salt || ':' || id), 1, 8))::BIGINT
     * / 4294967296.0`). Distinct salts give independent draws — a row's
     * sampling fate never correlates with its split assignment. */
-  /** Range-partition count derived from the INPUT SIZE, capped by
-    * the session shuffle-partition conf (r22, guide §2 "make
-    * partitioning scale-adaptive rather than a constant"): every
-    * two-pass prefix-scan operator (PackOps / BudgetOps /
-    * InterleaveOps / the exact samplers here) runs 3-4 sliver-task
-    * stages over its range substrate, and sizing them to the conf
-    * constant spawns `conf` near-empty tasks per stage on a few-MB
-    * input (measured: q98 29% slower warm at 32 cores than 8 — pure
-    * task overhead). ~32 MB per partition; unknown stats
-    * (defaultSizeInBytes = Long.Max) blow past the cap and degrade
-    * to the conf, which remains the 100 TB scale knob — real inputs
-    * reach it immediately. Partition count never changes output
-    * content: every consumer's prefix logic is boundary-exact for
-    * any n >= 1 (their documented determinism-on-any-partitioning
-    * contract). */
-  private[graft] def adaptiveRangeParts(df: DataFrame): Int = {
-    val conf = math.max(1,
-      df.sparkSession.sessionState.conf.numShufflePartitions)
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val target = BigInt(32L << 20)
-    ((bytes + target - 1) / target).min(BigInt(conf)).max(BigInt(1)).toInt
-  }
-
   def hashCoord(id: Column, salt: String): Column =
     conv(substring(md5(concat(lit(salt + ":"), id.cast("string"))), 1, 8),
       16, 10).cast("long").cast("double") / 4294967296.0
@@ -273,7 +254,7 @@ object SampleOps {
     * quality-weighted training mixes. k grid points sit at rational
     * positions (s + j·W)/k (j = 0..k−1) over the corpus laid out in
     * [[hashCoord]] order with exact cumulative integer weights (the
-    * [[PackOps.packOffsets]] two-pass prefix sum — no corpus-wide
+    * [[PackOps.packOffsets]] prefix scan — no corpus-wide
     * window); a row whose [start, end) weight interval contains m
     * grid points is emitted with `n_hits` = m. The start s ∈ [0, W)
     * is the salt's md5 (first 15 hex digits mod W — a plan literal
@@ -354,11 +335,11 @@ object SampleOps {
     * everything here — membership is partition- and re-run-invariant
     * and auditor-re-derivable.
     *
-    * Scale shape: one range exchange on (stratum, coord, id) + the
-    * two-pass per-(partition, stratum) count scan (bounded collect —
-    * strata are contiguous in the partition sequence; the
-    * [[graft.text.InterleaveOps]] substrate, so a hot stratum spans
-    * partitions instead of hitting one reducer). Fractions are
+    * Scale shape: one stratified [[graft.operators.PrefixScan]] of
+    * a count on (stratum, coord, id) — a hot stratum spans
+    * partitions instead of hitting one reducer — with
+    * `sample_rank = excl + 1` and `sampled` against a literal
+    * per-stratum budget map. Fractions are
     * integer rationals; budgets compute in BigInt. Unknown strata
     * use `defaultNum/defaultDen`; NULL strata fold to "". Returns
     * EVERY row plus `sample_rank` (1-based within-stratum hash rank)
@@ -370,71 +351,27 @@ object SampleOps {
     require(defaultDen > 0 && defaultNum >= 0 &&
       fracs.valuesIterator.forall { case (n, d) => d > 0 && n >= 0 },
       s"stratifiedSampleExact: malformed fractions")
-    val spark = df0.sparkSession
-    val nPart = adaptiveRangeParts(df0)
-    val stratC = {
-      var n = "__strat"; var i = 0
-      while (df0.columns.contains(n)) { i += 1; n = s"__strat$i" }
-      n
-    }
-    val hC = {
-      var n = "__h"; var i = 0
-      while (df0.columns.contains(n)) { i += 1; n = s"__h$i" }
-      n
-    }
-    val df = df0.drop("sample_rank", "sampled")
-    val ranged = df
-      .withColumn(stratC, coalesce(col(strataCol).cast("string"),
-        lit("")))
-      .withColumn(hC, hashCoord(col(idCol), salt))
-      .repartitionByRange(nPart, col(stratC), col(hC), col(idCol))
-      .sortWithinPartitions(col(stratC), col(hC), col(idCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val stratC = freshName("__strat", df0.columns)
+    val hC = freshName("__h", df0.columns)
+    val exclC = freshName("__excl", df0.columns)
+    val scan = PrefixScan(df0.drop("sample_rank", "sampled")
+        .withColumn(stratC, coalesce(col(strataCol).cast("string"),
+          lit("")))
+        .withColumn(hC, hashCoord(col(idCol), salt)),
+      Seq(col(hC), col(idCol)), Seq(exclC -> lit(1L)),
+      stratum = Some(col(stratC)))
     try {
-      import org.apache.spark.TaskContext
-      val stratIdx = ranged.schema.fieldIndex(stratC)
-      val counts = ranged.select(col(stratC))
-        .queryExecution.toRdd.mapPartitions { it =>
-          val pid = TaskContext.getPartitionId()
-          val acc = scala.collection.mutable.LinkedHashMap
-            .empty[String, Long]
-          while (it.hasNext) {
-            val s = it.next().getUTF8String(0).toString
-            acc(s) = acc.getOrElse(s, 0L) + 1L
-          }
-          acc.iterator.map { case (s, c) => (pid, s, c) }
-        }.collect()
-      val prefix: Map[(Int, String), Long] =
-        counts.groupBy(_._2).flatMap { case (s, rs) =>
-          var acc = 0L
-          rs.sortBy(_._1).map { case (pid, _, c) =>
-            val entry = ((pid, s), acc); acc += c; entry
-          }
-        }
-      val budgets: Map[String, Long] = counts.groupBy(_._2)
-        .map { case (s, rs) =>
-          val ns = rs.iterator.map(_._3).sum
-          val (num, den) = fracs.getOrElse(s, (defaultNum, defaultDen))
-          s -> (BigInt(ns) * num / den).toLong
-        }
-      import org.apache.spark.sql.{Encoders, Row}
-      val outSchema = ranged.schema
-        .add("sample_rank", org.apache.spark.sql.types.LongType, false)
-        .add("sampled", org.apache.spark.sql.types.BooleanType, false)
-      ranged.mapPartitions { it =>
-        val pid = TaskContext.getPartitionId()
-        val run = scala.collection.mutable.HashMap.empty[String, Long]
-        it.map { r =>
-          val s = r.getString(stratIdx)
-          val k = run.getOrElse(s, prefix.getOrElse((pid, s), 0L)) + 1L
-          run(s) = k
-          Row.fromSeq(r.toSeq :+ k :+ (k <= budgets.getOrElse(s, 0L)))
-        }
-      }(Encoders.row(outSchema))
-        .drop(stratC, hC)
-        .localCheckpoint(eager = true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    } finally ranged.unpersist(blocking = false)
+      val budgets = scan.totals.map { case (s, t) =>
+        val (num, den) = fracs.getOrElse(s, (defaultNum, defaultDen))
+        s -> (BigInt(t(0)) * num / den).toLong
+      }
+      scan.rows
+        .withColumn("sample_rank", col(exclC) + 1L)
+        .withColumn("sampled", col("sample_rank") <= coalesce(
+          try_element_at(typedLit(budgets), col(stratC)), lit(0L)))
+        .drop(stratC, hC, exclC)
+        .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+    } finally scan.release()
   }
 
   /** Leakage-safe train/val/test split: assign whole GROUPS (URL
@@ -457,8 +394,9 @@ object SampleOps {
     *
     * Scale shape: one map-side-combining groupBy (group table, may be
     * corpus-scale — near-dup components are), one range exchange over
-    * the group table for the two-pass exclusive prefix (driver
-    * collect = one sum per partition), and one SHUFFLE_HASH-pinned
+    * the group table for the [[graft.operators.PrefixScan]] of the
+    * sizes (driver collect = one sum per partition; `split` is a
+    * CASE over the integer cuts), and one SHUFFLE_HASH-pinned
     * join back to the corpus — the group table is corpus-derived and
     * must never be estimate-broadcast. NULL groups fold to "" (the
     * [[graft.text.MixOps]] convention). Returns every input row plus
@@ -473,69 +411,41 @@ object SampleOps {
       .product / d }.sum
     require(one == BigInt(splits.map(_._3).product),
       s"groupSplit fractions must sum to exactly 1: $splits")
-    val spark = df.sparkSession
-    val gC = col(groupCol)
     val out = df.withColumn("__g",
-      coalesce(gC.cast("string"), lit("")))
+      coalesce(col(groupCol).cast("string"), lit("")))
     val szAgg = sizeCol match {
       case None => count(lit(1)).cast("long").as("__sz")
       case Some(c) => sum(col(c).cast("long")).as("__sz")
     }
-    val grp0 = out.groupBy("__g").agg(szAgg)
-    // sized on the GROUP frame (group-cardinality-bounded), not the
-    // corpus — the substrate here is one row per group
-    val nPart = adaptiveRangeParts(grp0)
-    val grp = grp0
-      .withColumn("__h", hashCoord(col("__g"), salt))
-      .repartitionByRange(nPart, col("__h"), col("__g"))
-      .sortWithinPartitions(col("__h"), col("__g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the substrate is the GROUP table (one row per group), so the
+    // scan sizes its partitions on it, not on the corpus
+    val scan = PrefixScan(out.groupBy("__g").agg(szAgg)
+        .withColumn("__h", hashCoord(col("__g"), salt)),
+      Seq(col("__h"), col("__g")), Seq("__excl" -> col("__sz")))
     try {
-      import org.apache.spark.TaskContext
-      val szIdx = grp.schema.fieldIndex("__sz")
-      val partSums = grp.select(col("__sz"))
-        .queryExecution.toRdd.mapPartitions { it =>
-          var s = 0L
-          while (it.hasNext) s += it.next().getLong(0)
-          Iterator((TaskContext.getPartitionId(), s))
-        }.collect().toMap
-      val offs = new Array[Long](nPart)
-      var acc = 0L
-      (0 until nPart).foreach { p =>
-        offs(p) = acc; acc += partSums.getOrElse(p, 0L)
-      }
-      val total = acc
-      // integer cuts from cumulative fractions; exact in BigInt on
-      // the driver, the last cut pinned to total so rounding can
-      // never leave a group unassigned
-      val cuts: Array[Long] = {
+      val total = scan.total(0)
+      // integer cuts from cumulative fractions, exact in BigInt on
+      // the driver; a group goes to the first split whose cut its
+      // exclusive prefix is below, and the last split takes the rest,
+      // so rounding can never leave a group unassigned
+      val cuts: Seq[Long] = {
         var cn = BigInt(0); var cd = BigInt(1)
-        val cs = splits.init.map { case (_, n, d) =>
+        splits.init.map { case (_, n, d) =>
           cn = cn * d + BigInt(n) * cd; cd = cd * d
           (BigInt(total) * cn / cd).toLong
         }
-        (cs :+ total).toArray
       }
-      val names = splits.map(_._1).toArray
-      val gIdx = grp.schema.fieldIndex("__g")
-      import org.apache.spark.sql.{Encoders, Row}
-      val aSchema = new org.apache.spark.sql.types.StructType()
-        .add("__g", org.apache.spark.sql.types.StringType, false)
-        .add("split", org.apache.spark.sql.types.StringType, false)
-      val assignment = grp.mapPartitions { it =>
-        var p = offs(TaskContext.getPartitionId())
-        it.map { r =>
-          var i = 0
-          while (i < cuts.length - 1 && p >= cuts(i)) i += 1
-          val row = Row(r.getString(gIdx), names(i))
-          p += r.getLong(szIdx)
-          row
+      val split = splits.init.zip(cuts)
+        .foldLeft(Option.empty[Column]) { case (acc, ((name, _, _), cut)) =>
+          val c = col("__excl") < cut
+          Some(acc.fold(when(c, name))(_.when(c, name)))
         }
-      }(Encoders.row(aSchema))
+        .fold(lit(splits.last._1))(_.otherwise(splits.last._1))
+      val assignment = scan.rows.select(col("__g"), split.as("split"))
       out.join(assignment.hint("shuffle_hash"), Seq("__g"))
         .drop("__g")
-        .localCheckpoint(eager = true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    } finally grp.unpersist(blocking = false)
+        .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+    } finally scan.release()
   }
+
 }

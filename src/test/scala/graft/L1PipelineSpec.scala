@@ -228,7 +228,7 @@ class L1PipelineSpec extends SparkSpec {
       java.nio.file.Path.of(s"$ncDir/y2024.nc"))
     java.nio.file.Files.copy(java.nio.file.Path.of(nc),
       java.nio.file.Path.of(s"$ncDir/y2024b.nc"))
-    val multi = L1Pipeline.readNetCdfDir(spark, ncDir)
+    val multi = L1Pipeline.readNetCdf(spark, ncDir)
     assert(multi.count() == 6)
     assert(multi.filter(col("Ta").isNull).count() == 2)
   }

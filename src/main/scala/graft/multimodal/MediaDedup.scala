@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.Materialize
+
 /** Image NEAR-duplicate tier (VERDICT r18 ask #1) — the gap between
   * byte-exact media fingerprints and embedding SemDeDup: a 64-bit
   * difference hash ("dHash", the public perceptual-hash family à la
@@ -464,14 +466,12 @@ object MediaDedup {
     // shape): the groupBy + shuffle_hash anti-join this replaced
     // paid two extra exchanges to learn a per-hash count one
     // exchange computes in place; per-key window work is row-linear.
-    val fh = (if (maxVideosPerHash > 0L)
+    val fh = Materialize.checkpoint(if (maxVideosPerHash > 0L)
       fh0.withColumn("__n", count(lit(1)).over(
           org.apache.spark.sql.expressions.Window.partitionBy("h")))
         .filter(col("__n") <= maxVideosPerHash)
         .drop("__n")
     else fh0)
-      .localCheckpoint(eager = true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     fh.as("a").join(fh.as("b").hint("merge"),
         col("a.h") === col("b.h") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
@@ -613,10 +613,8 @@ object MediaDedup {
     // pass over the media corpus (the one-decode guarantee the dual
     // kernel exists for, defeated one call downstream). Payload
     // bytes never enter the checkpoint: three longs per row.
-    val slim = hashed
-      .select(col(idCol), col(dhashCol), col(ahashCol))
-      .localCheckpoint(eager = true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val slim = Materialize.checkpoint(
+      hashed.select(col(idCol), col(dhashCol), col(ahashCol)))
     val dp = nearDupPairs(slim, idCol, dhashCol, maxHamming)
       .withColumnRenamed("hdist", "hdist_dhash")
     val ap = nearDupPairs(slim, idCol, ahashCol, maxHamming)
@@ -669,11 +667,8 @@ object MediaDedup {
     // over resident blocks — a second checkpoint there is a pure
     // job + storage tax (r22, guide §5 cache-only-when-reused).
     val sh = if (materializedLeaf(hashed)) sh0
-      else sh0.localCheckpoint(eager = true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val dh = sh.select("h").distinct()
-      .localCheckpoint(eager = true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      else Materialize.checkpoint(sh0)
+    val dh = Materialize.checkpoint(sh.select("h").distinct())
     val banded0 = bandExplode(dh)
     // Optional oversize-bucket cap (the LSH/q107 discipline): a
     // (band, word) bucket holding > maxBucket DISTINCT signatures
@@ -772,14 +767,13 @@ object MediaDedup {
     // (r21): the shuffle_hash join of the labeled frame back onto the
     // quality projection this replaced was a second corpus-sized
     // exchange pair on the same id key the relabel already joins on.
-    val labeled = graft.text.DedupOps.connectedComponents(
+    val labeled = Materialize.checkpoint(
+      graft.text.DedupOps.connectedComponents(
         q.select(col(idCol).as("id"), col("quality")),
         pairs.select(col("id_a").cast("long").as("id_a"),
           col("id_b").cast("long").as("id_b")),
         markLabeled = true)
-      .withColumnRenamed("id", idCol)
-      .localCheckpoint(eager = true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .withColumnRenamed("id", idCol))
     // first over (quality DESC NULLS LAST, id ASC): highest quality,
     // then SMALLEST id among equals — a total order (ids are unique),
     // bit-identical to the max_by lexicographic (quality, -id) pick

@@ -8,13 +8,12 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType}
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The result of one [[PrefixScan]]: `rows` is the range-sorted
   * substrate plus one exclusive-prefix long column per weight;
   * `totals` maps each stratum (`""` for a global scan) to its
-  * per-weight sums; `substrate` is the persisted frame both passes
+  * per-weight sums; `substrate` is the cached frame both passes
   * read, which `rows` reads lazily. */
 private[graft] final case class PrefixScan(rows: DataFrame,
     substrate: DataFrame, totals: Map[String, IndexedSeq[Long]]) {
@@ -22,9 +21,9 @@ private[graft] final case class PrefixScan(rows: DataFrame,
   /** Weight `i` summed over every stratum. */
   def total(i: Int): Long = totals.valuesIterator.map(_(i)).sum
 
-  /** Unpersist the substrate — only once `rows` has been fully
+  /** Release the substrate — only once `rows` has been fully
     * consumed (collected, written or eagerly checkpointed). */
-  def release(): Unit = substrate.unpersist(blocking = false)
+  def release(): Unit = Materialize.release(substrate)
 }
 
 /** The one distributed running sum in a total order: budget fills,
@@ -37,7 +36,7 @@ private[graft] final case class PrefixScan(rows: DataFrame,
   *   1. range-partition on (stratum, order) and sort within
   *      partitions, so partition p holds a contiguous slice of the
   *      order and every stratum's rows are contiguous across the
-  *      partition sequence; PERSIST that substrate, because
+  *      partition sequence; CACHE that substrate, because
   *      RangePartitioner bounds come from sampling — a recomputed
   *      shuffle could lay rows out differently from the driver-held
   *      starts of pass 1, so both passes (and every later read of
@@ -60,7 +59,7 @@ private[graft] object PrefixScan {
     * the weight's exclusive running sum within the row's stratum.
     * The order must be total (end it with a unique key) for the
     * prefixes to be deterministic. `numPartitions` overrides the
-    * adaptive range-partition count. The substrate stays persisted:
+    * adaptive range-partition count. The substrate stays cached:
     * call [[PrefixScan.release]] once `rows` is consumed. */
   def apply(df: DataFrame, order: Seq[Column],
       prefixes: Seq[(String, Column)], stratum: Option[Column] = None,
@@ -68,15 +67,13 @@ private[graft] object PrefixScan {
     val n = numPartitions.getOrElse(adaptiveRangeParts(df))
     val strat = stratum.map(s => coalesce(s.cast("string"), lit("")))
     val keys = strat.toSeq ++ order
-    val substrate = df.repartitionByRange(n, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val substrate = Materialize.cache(df.repartitionByRange(n, keys: _*)
+      .sortWithinPartitions(keys: _*))
     try {
       val stratKey = strat.getOrElse(lit(""))
       val weights = prefixes.map(_._2.cast("long"))
       val k = weights.length
-      // Pass 1: per-(partition, stratum-run) sums; materializes the
-      // persist.
+      // Pass 1: per-(partition, stratum-run) sums; fills the cache.
       val runs = substrate.select(stratKey +: weights: _*)
         .queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
           val acc = scala.collection.mutable.LinkedHashMap
@@ -110,7 +107,7 @@ private[graft] object PrefixScan {
             entry
           }
         }
-      // Pass 2: one projection over the same persisted partitions.
+      // Pass 2: one projection over the same cached partitions.
       val prefixCols = prefixes.zip(weights).zipWithIndex.map {
         case (((name, _), w), i) =>
           ColumnBridge.column(ExclusivePrefix(ColumnBridge.expression(w),
@@ -120,7 +117,7 @@ private[graft] object PrefixScan {
       PrefixScan(substrate.select(col("*") +: prefixCols: _*), substrate,
         totals)
     } catch { case t: Throwable =>
-      substrate.unpersist(blocking = false); throw t
+      Materialize.release(substrate); throw t
     }
   }
 

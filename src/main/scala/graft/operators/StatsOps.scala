@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.functions.CheckNonNegative
 
 /** Exact order statistics at corpus scale — the exact sibling of
   * [[graft.text.SampleOps.sampleRankCuts]] (which rank-cuts a
@@ -49,14 +50,13 @@ object StatsOps {
       val byRank: Map[Long, Seq[(Long, Long)]] =
         probs.groupBy { case (pn, pd) =>
           ((BigInt(n) * pn + pd - 1) / pd).toLong }
-      scan.rows
+      Materialize.checkpoint(scan.rows
         .withColumn("rank", col("__excl") + 1L)
         .filter(col("rank").isin(byRank.keys.toSeq: _*))
         .select(explode(element_at(typedLit(byRank), col("rank"))).as("p"),
           col("rank"), col("__v").as("value"))
         .select(col("p._1").as("p_num"), col("p._2").as("p_den"),
-          col("rank"), col("value"))
-        .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+          col("rank"), col("value")))
     } finally scan.release()
   }
 
@@ -123,17 +123,15 @@ object StatsOps {
     * [[graft.streaming.StreamingSketch.cmCells]] state shape.
     *
     * NULL values drop (no rank — the [[exactQuantiles]] convention);
-    * a NEGATIVE value throws (`raise_error`): counts/lengths/sizes
-    * are the domain, and silently folding sign into string buckets
-    * would corrupt the order guarantee. */
+    * a NEGATIVE value throws ([[CheckNonNegative]]): counts/lengths/
+    * sizes are the domain, and silently folding sign into string
+    * buckets would corrupt the order guarantee. */
   def rankSketchCells(df: DataFrame, valueCol: String,
       groupCol: String, sigDigits: Int = 2): DataFrame = {
     require(sigDigits >= 1 && sigDigits <= 4, s"sigDigits=$sigDigits")
     val v = col(valueCol).cast("long")
-    val checked = when(v < 0L, raise_error(concat(
-        lit(s"rankSketchCells($valueCol): negative value "),
-        v.cast("string")))).otherwise(v)
-    val s = checked.cast("string")
+    val s = CheckNonNegative(v, s"rankSketchCells($valueCol)", "value")
+      .cast("string")
     df.filter(v.isNotNull)
       .select(coalesce(col(groupCol).cast("string"), lit(""))
           .as("group"),

@@ -126,8 +126,7 @@ object TimeSeriesOps {
         h.iterator.map { case (d, n) => (0, pid, d, n) } ++
           Iterator((1, pid, first, prev))
       }
-    }.toDF("kind", "pid", "a", "b")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }.toDF("kind", "pid", "a", "b").transform(Materialize.cache)
     try {
       val bounds = partial.filter(col("kind") === 1)
         .select("pid", "a", "b").collect()
@@ -139,11 +138,11 @@ object TimeSeriesOps {
         .unionAll(boundary.toDF("delta_sec", "n"))
         .groupBy("delta_sec").agg(sum("n").as("n"))
       // Eagerly materialize (tiny: one row per distinct delta) so the
-      // persisted partial can be released before returning.
-      val out = hist.localCheckpoint()
+      // cached partial can be released before returning.
+      val out = Materialize.checkpoint(hist)
       warnNullDrops(obs, "intervalHistogram", tsCol)
       out
-    } finally partial.unpersist()
+    } finally Materialize.release(partial)
   }
 
   /** Distributed keyless A6/A7 substrate: same shape as
@@ -178,8 +177,7 @@ object TimeSeriesOps {
         // the final `prev` after the pair scan finishes.
         pairs ++ Iterator((1, pid, first, prev))
       }
-    }.toDF("kind", "pid", "a", "b")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }.toDF("kind", "pid", "a", "b").transform(Materialize.cache)
     try {
       val bounds = partial.filter(col("kind") === 1)
         .select("pid", "a", "b").collect()
@@ -194,10 +192,10 @@ object TimeSeriesOps {
         .withColumn("gap_sec", expr(
           s"(unix_micros($tsCol) - unix_micros(prev_ts)) div 1000000"))
         .withColumn("n_records", expr(s"gap_sec div $intervalSec") - 1)
-      val result = out.localCheckpoint()
+      val result = Materialize.checkpoint(out)
       warnNullDrops(obs, "gaps", tsCol)
       result
-    } finally partial.unpersist()
+    } finally Materialize.release(partial)
   }
 
   /** D1: drop rows that duplicate an earlier row in all columns.
@@ -230,10 +228,12 @@ object TimeSeriesOps {
     val h = intervalHistogram(df, tsCol, keys)
     // One action for both statistics: mode = delta maximizing
     // (n, -delta) — i.e. highest count, ties to the smallest delta.
-    val r = h.agg(
+    // The keyless histogram is a checkpoint read by this action only.
+    val r = try h.agg(
       max_by(col("delta_sec"), struct(col("n"), col("delta_sec") * -1))
         .as("mode"),
       org.apache.spark.sql.functions.min("delta_sec").as("min")).head()
+    finally Materialize.release(h)
     require(!r.isNullAt(0),
       s"cannot infer interval of '$tsCol': fewer than two distinct timestamps")
     (r.getLong(0), r.getLong(1))
@@ -441,10 +441,11 @@ object TimeSeriesOps {
     *
     * Scale/durability caveat (keyless path only): the keyless variant
     * materializes its full row-per-input-row output before returning —
-    * by default via `localCheckpoint`, i.e. NON-replicated executor
-    * storage: an executor lost after return aborts downstream jobs
+    * by default via a local [[Materialize]] checkpoint, i.e.
+    * NON-replicated executor storage: an executor lost after return
+    * fails downstream jobs with `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`
     * instead of recomputing, and while the operator runs the input is
-    * transiently resident ~2x (persisted substrate + checkpointed
+    * transiently resident ~2x (cached substrate + checkpointed
     * result). Fine at the sizes keyless sessionization is usually
     * asked for; for very large keyless inputs set a Spark checkpoint
     * directory (`sc.setCheckpointDir`) and pass
@@ -546,7 +547,7 @@ object TimeSeriesOps {
         }
       }
     }(org.apache.spark.sql.Encoders.row(tagSchema))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize.cache)
     try {
       val interior = tagged
         .filter(col("idx") > 0 && col("idx") < col("n_islands") - 1)
@@ -588,10 +589,10 @@ object TimeSeriesOps {
           timestamp_micros(col("start_us")).as("start_ts"),
           timestamp_micros(col("end_us")).as("end_ts"),
           col("n_records"))
-      val result = out.localCheckpoint()
+      val result = Materialize.checkpoint(out)
       warnNullDrops(obs, "islands", tsCol)
       result
-    } finally tagged.unpersist()
+    } finally Materialize.release(tagged)
   }
 
   /** Distributed keyless sessionization: pass 1 summarizes each range
@@ -602,7 +603,7 @@ object TimeSeriesOps {
     * gap is within `gapSec`; pass 2 re-scans and labels each row
     * `offset + local session index`. Ids match the keyed single-group
     * running-sum convention (first session = 1). The ranged substrate
-    * is persisted before the summary pass and released after the
+    * is cached before the summary pass and released after the
     * labeling result is checkpointed: RangePartitioner bounds come
     * from order-sensitive reservoir sampling, so recomputing the
     * shuffle for the second pass could see a different partition
@@ -615,8 +616,7 @@ object TimeSeriesOps {
     val spark = df.sparkSession
     import spark.implicits._
     val (ranged, obs) = rangedRows(df, tsCol, tieBreak)
-    val src = ranged
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val src = Materialize.cache(ranged)
     try {
       val usIdx = src.columns.indexOf("__us")
       val summary = src.mapPartitions { it =>
@@ -664,16 +664,13 @@ object TimeSeriesOps {
           }
         }
       }(org.apache.spark.sql.Encoders.row(outSchema))
-      // Eagerly materialize so the persisted substrate can be released
-      // before returning. Unlike keylessIslands/keylessGaps (whose
-      // checkpointed outputs are bounded), this is one row per input
-      // row — see the durability caveat on [[sessionize]]; reliable
-      // checkpointing trades write cost for fault tolerance.
-      val result =
-        if (reliableCheckpoint) labeled.checkpoint()
-        else labeled.localCheckpoint()
+      // Eagerly materialize so the cached substrate can be released
+      // before returning: one row per input row, unlike islands and
+      // gaps — see the durability caveat on [[sessionize]].
+      val result = Materialize.checkpoint(labeled,
+        reliable = reliableCheckpoint)
       warnNullDrops(obs, "sessionize", tsCol)
       result
-    } finally src.unpersist()
+    } finally Materialize.release(src)
   }
 }

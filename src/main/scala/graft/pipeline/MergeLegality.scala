@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.TableMeta
+import graft.operators.Materialize
 import graft.operators.TimeSeriesOps
 
 /** J2 merge-legality analysis (reference:
@@ -77,7 +78,7 @@ object MergeLegality {
     def prepare(df: DataFrame): (DataFrame, Boolean) = {
       val ts = df.select(col(tsCol))
       if (cheapToRecompute(df)) (ts, false)
-      else (ts.localCheckpoint(true), true)
+      else (Materialize.checkpoint(ts), true)
     }
     val (mTs, mOwn) = prepare(master)
     val (cTs, cOwn) = prepare(candidate)
@@ -92,8 +93,8 @@ object MergeLegality {
       Report(newDates, mInt == cInt, mInt, cInt, common,
         mVars.diff(cVars), cVars.diff(mVars), conflicts)
     } finally {
-      if (mOwn) mTs.unpersist(blocking = false)
-      if (cOwn) cTs.unpersist(blocking = false)
+      if (mOwn) Materialize.release(mTs)
+      if (cOwn) Materialize.release(cTs)
     }
   }
 

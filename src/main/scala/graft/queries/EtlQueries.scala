@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.{rnd, t}
 import graft.functions.Conversions
-import graft.operators.{JoinOps, TimeSeriesOps}
+import graft.operators.{JoinOps, Materialize, TimeSeriesOps}
 
 /** The flux-tower ETL spine and its relational substrate (SURVEY.md
   * §2.1-§2.8, §2.10, E1-E4): TPC-H-shaped aggregation, joins, windows
@@ -1439,7 +1439,7 @@ object EtlQueries {
     // full condition lineage. A conditioned site-file is a bounded
     // artifact, so the checkpoint is cheap at any corpus scale.
     def ckpt(c: Conditioned): Conditioned =
-      c.copy(df = c.df.localCheckpoint())
+      c.copy(df = Materialize.checkpoint(c.df))
     val condA1 = ckpt(L1Pipeline.condition(
       Conditioned(fileA1, metaA), "hour_ts", 3600, usecolsA))
     val condA2 = ckpt(L1Pipeline.condition(

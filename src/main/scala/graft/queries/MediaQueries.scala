@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.t
+import graft.operators.Materialize
 
 /** The media tier (SURVEY.md §2.12): image, audio and video decode,
   * perceptual hashes, media near-dup pairs and canonicalization over
@@ -591,11 +592,10 @@ object MediaQueries {
     // into nearDupPairs' checkpoint, once for the header sniff). The
     // payload never enters the checkpoint — §8's rule (decide on
     // light proxies) is what the fusion preserves.
-    val meta = MediaDedup.withDhash(Multimodal.headerMeta(media))
-      .select(col("media_id"), col("dhash"),
-        (col("meta_width") * col("meta_height")).as("quality"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val meta = Materialize.checkpoint(
+      MediaDedup.withDhash(Multimodal.headerMeta(media))
+        .select(col("media_id"), col("dhash"),
+          (col("meta_width") * col("meta_height")).as("quality")))
     val pairs = MediaDedup.nearDupPairs(meta, "media_id", "dhash", 3)
     val nodes = meta.select(col("media_id"), col("quality"))
     MediaDedup.canonicalMedia(nodes, pairs)
@@ -858,8 +858,8 @@ object MediaQueries {
         }
         (id, avi)
       }.toDF("media_id", "payload")
-    val fh = MediaDedup.videoFrameHashTable(media)
-      .localCheckpoint(true) // fans into pairing AND the audit
+    // fans into pairing AND the audit
+    val fh = Materialize.checkpoint(MediaDedup.videoFrameHashTable(media))
     val pairs = MediaDedup.sharedFrameVideoPairs(fh, minShared = 3)
     val nodes = MediaDedup.videoDecodeAudit(fh)
       .select(col("media_id"), col("n_frames").as("quality"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.{rnd, t}
+import graft.operators.Materialize
 
 /** The LLM-corpus text tier (SURVEY.md §2.12): token statistics,
   * language ID, exact and near dedup over documents, quality filters,
@@ -2556,11 +2557,10 @@ object TextQueries {
     val docs = t(s, dir, "documents")
       .select(col("doc_id"),
         TextOps.tokenCount(col("text")).cast("long").as("n_tok"))
-    val out = SampleOps.samplePpsSystematic(docs, "doc_id", "n_tok",
-        300L, "q153")
+    val out = Materialize.checkpoint(SampleOps.samplePpsSystematic(docs,
+        "doc_id", "n_tok", 300L, "q153")
       .select("doc_id", "n_tok", "n_hits")
-      .orderBy("doc_id")
-      .localCheckpoint(eager = true)
+      .orderBy("doc_id"))
     graft.text.PackOps.releaseSubstrates()
     out
   } (oracle =

@@ -2,7 +2,8 @@ package graft.sim
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.operators.Materialize
 
 /** Corpus clustering over an embedding column — deterministic Lloyd
   * k-means for curation workloads (cluster-balanced mixing à la
@@ -31,7 +32,7 @@ import org.apache.spark.storage.StorageLevel
   *     centroid costs at most half a micro-unit per dimension —
   *     identical on every engine, which is the point.
   *
-  * Scale shape: the quantized substrate is localCheckpointed once and
+  * Scale shape: the quantized substrate is checkpointed once and
   * scanned `iters+1` times; assignment is NARROW (per-row k·d lambda
   * arithmetic against a broadcast centroid literal — the corpus never
   * shuffles to learn its cluster); the update is one
@@ -51,9 +52,6 @@ import org.apache.spark.storage.StorageLevel
   * is the argmin against the centroids AFTER `iters` updates and
   * `dist` is that exact L1 distance in micro-units. */
 object ClusterOps {
-
-  private def ckptSer(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
 
   /** One assignment pass: argmin-by-L1 against a literal centroid
     * matrix. Staged projections (dists → min → position) so each
@@ -81,7 +79,8 @@ object ClusterOps {
       s"k=$k iters=$iters scaleBits=$scaleBits")
     val scale  = (1L << scaleBits).toDouble
     val offset = 1L << (scaleBits + 1)
-    val q = ckptSer(df.select(col(idCol).cast("long").as("id"),
+    val q = Materialize.checkpoint(df.select(
+      col(idCol).cast("long").as("id"),
       transform(col(vecCol), x =>
         floor(x.cast("double") * lit(scale) + lit(0.5d)) + lit(offset))
         .as("qv")))

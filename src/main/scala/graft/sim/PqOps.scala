@@ -2,7 +2,8 @@ package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.operators.Materialize
 
 /** Product quantization (PQ) for embedding search at corpus scale —
   * the memory-compression leg of the ANN family (Jégou, Douze &
@@ -66,9 +67,6 @@ object PqOps {
     def dim: Int = subspaces * subDim
   }
 
-  private def ckptSer(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
-
   /** Quantize a float/double array column to positive BIGINT
     * micro-units (the [[ClusterOps]] grid — offsets cancel in every
     * L1 difference, so only the update's floor division needs the
@@ -130,7 +128,7 @@ object PqOps {
     // caching-only-when-reused; q109's iters=0 path paid it every
     // run). Iterating trainers keep the checkpoint: pool + each
     // Lloyd round re-read the frame.
-    val q = if (iters == 0) q0 else ckptSer(q0)
+    val q = if (iters == 0) q0 else Materialize.checkpoint(q0)
     pqTrainOnQuantized(q, subspaces, k, iters, scaleBits, seedPool)
   }
 
@@ -384,7 +382,8 @@ object PqOps {
     lazy val stride =
       if (centroidStride > 0L) centroidStride
       else math.max(1L, corpus.count() / math.max(1, numCoarse))
-    val qcorp = ckptSer(corpus.select(col(idCol).cast("long").as("id"),
+    val qcorp = Materialize.checkpoint(corpus.select(
+      col(idCol).cast("long").as("id"),
       quantize(col(vecCol), model.scaleBits).as("qv")))
     // Coarse centroids: quantized id-modulo sample (ordered by id so
     // list ids are stable) or the greedy-d² farthest-point seeds,
@@ -580,7 +579,9 @@ object PqOps {
     * the coarse quantizer before assignment ([[coarseCentroids]],
     * the [[ivfPqTopK]] knob) — list quality matters MOST here, since
     * both the residual magnitudes and the codebook train against
-    * the assigned centroid (VERDICT r15 ask #8). */
+    * the assigned centroid (VERDICT r15 ask #8). Durability: the
+    * quantized corpus and the result are local checkpoints; see
+    * [[graft.operators.Materialize]] for what a lost executor does. */
   def ivfPqTopKResidual(queries: DataFrame, corpus: DataFrame, k: Int,
       subspaces: Int = 4, codes: Int = 16, iters: Int = 1,
       numCoarse: Int = 256, nProbe: Int = 2,
@@ -593,7 +594,8 @@ object PqOps {
       if (centroidStride > 0L) centroidStride
       else math.max(1L, corpus.count() / math.max(1, numCoarse))
     val offR = 1L << (scaleBits + 2)
-    val qcorp = ckptSer(corpus.select(col(idCol).cast("long").as("id"),
+    val qcorp = Materialize.checkpoint(corpus.select(
+      col(idCol).cast("long").as("id"),
       quantize(col(vecCol), scaleBits).as("qv")))
     val cents: Array[Array[Long]] =
       coarseSeedSet(qcorp, stride, numCoarse, coarseSeed, coarseIters)
@@ -604,7 +606,7 @@ object PqOps {
         .limit(0)
     val cl = cbLit(cents)
     // Narrow per-row residual: assigned list + re-offset subtraction.
-    // Persisted (NOT localCheckpoint'd) so training iterations and
+    // Cached (NOT checkpointed) so training iterations and
     // the encode pass re-read the residual, not the assignment
     // arithmetic. A checkpoint here is a correctness mine: the
     // list_id alias's equality constraint references the raw qv that
@@ -613,18 +615,17 @@ object PqOps {
     // InferFiltersFromConstraints substitute it onto the QUERY side,
     // where the raw corpus qv is unresolvable
     // (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND at execution). With
-    // persist the plan survives, constraints prune normally, and the
+    // a cache the plan survives, constraints prune normally, and the
     // cache still makes every scan read materialized residuals.
-    val resCorp = qcorp
+    val resCorp = Materialize.cache(qcorp
       .withColumn("list_id",
         element_at(nearestListsCol(col("qv"), cents, 1), 1))
       .select(col("id"), col("list_id"),
         zip_with(col("qv"), element_at(cl, col("list_id") + 1),
-          (a, b) => a - b + lit(offR)).as("qv"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+          (a, b) => a - b + lit(offR)).as("qv")))
     // The corpus-scale residual cache is released once the (query·k
     // bounded) result is materialized — without the eager checkpoint
-    // + finally-unpersist, each call would leak a cached corpus RDD
+    // + finally-release, each call would leak a cached corpus RDD
     // for the session lifetime (ADVICE r14).
     try {
       val model = pqTrainOnQuantized(resCorp.select("id", "qv"),
@@ -649,13 +650,12 @@ object PqOps {
             (a, b) => a - b + lit(offR)))
         .select(col("q_id"), col("list_id"),
           lutCol(col("__qrv"), model).as("__lut"))
-      graft.functions.TopK.perQueryCut(
+      Materialize.checkpoint(graft.functions.TopK.perQueryCut(
         probes.join(lists.hint("merge"), "list_id")
           .filter(col("q_id") =!= col("n_id"))
           .select(col("q_id"), col("n_id"),
             adcSum(model.subspaces).as("adist")),
-        k, col("adist"), "adist")
-        .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
-    } finally resCorp.unpersist(blocking = false)
+        k, col("adist"), "adist"))
+    } finally Materialize.release(resCorp)
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize
+
 /** Prototype-based diversity pruning — the "SSL prototypes" data
   * pruning metric (Sorscher et al., "Beyond neural scaling laws:
   * beating power law scaling via data pruning", NeurIPS 2022) as
@@ -115,14 +117,13 @@ object PruneOps {
     * cluster, rank locally, then add cross-partition offsets from a
     * (partitions × clusters)-row counts frame. The scored projection
     * is materialized first (three narrow columns, distributed —
-    * the [[PqOps]] `ckptSer` convention) because the range
+    * a [[graft.operators.Materialize]] checkpoint) because the range
     * partitioner's sampling pass plus the shuffle would otherwise
     * recompute the centroid-scoring kernel per read; the checkpoint
     * is retained since the returned frame reads it. */
   private def skewSafeRankCut(scored: DataFrame, fracNum: Long,
       fracDen: Long): DataFrame = {
-    val mat = scored.localCheckpoint(eager = true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val mat = Materialize.checkpoint(scored)
     // range bounds are sampled per run, but rank/keep are invariant
     // to where the bounds fall: the key is total, so partition p's
     // rows all order strictly before partition p+1's within a cluster.
@@ -135,11 +136,9 @@ object PruneOps {
     // ranks. Freezing the pids makes correctness independent of the
     // optimizer's reuse decision; the frame is three narrow columns
     // plus an int.
-    val parts = mat.repartitionByRange(col("cluster").asc,
-        col("cos_c").desc_nulls_last, col("id").asc)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(eager = true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val parts = Materialize.checkpoint(mat.repartitionByRange(
+        col("cluster").asc, col("cos_c").desc_nulls_last, col("id").asc)
+      .withColumn("__pid", spark_partition_id()))
     val wLocal = Window.partitionBy(col("__pid"), col("cluster"))
       .orderBy(col("cos_c").desc_nulls_last, col("id").asc)
     val local = parts.withColumn("__lr", row_number().over(wLocal))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize
+
 /** Semantic deduplication over an embedding column — the SemDeDup
   * method (Abbas et al. 2023, arXiv:2303.09540): coarse-cluster the
   * corpus with a small quantizer, connect members whose pairwise
@@ -190,12 +192,12 @@ object SemDedup {
     // feeds FOUR consumers — both sides of the pair self-join, the
     // CC node set, and the final labeling — which would otherwise
     // re-run the quantizer per consumer (the multi-action recompute
-    // class VERDICT_r10 flagged in DSIR). MEMORY_AND_DISK_SER: the
+    // class VERDICT_r10 flagged in DSIR). The
     // checkpoint carries the embeddings, which step 4's join needs
     // resident anyway. `cluster` is staged as its own projection and
     // referenced three times below, so CollapseProject cannot
     // re-inline the kernel per consumer (the ClusterOps staging rule).
-    val members = base
+    val members = Materialize.checkpoint(base
       .withColumn("cluster", element_at(
         graft.functions.NearestCentroids.topIds(col("vec"), cIds, cVecs,
           1, roundScale), 1))
@@ -203,9 +205,7 @@ object SemDedup {
       .withColumn("c_norm", element_at(cNormLit, col("cluster")))
       .withColumn("cos_c",
         rcos(p)(col("vec"), col("norm"), col("c_vec"), col("c_norm")))
-      .select("id", "vec", "norm", "cluster", "cos_c")
-      .localCheckpoint(eager = true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .select("id", "vec", "norm", "cluster", "cos_c"))
     val keyed = pairKeys(members, pairBudget, roundScale,
       nTotalHint = nKnown)
     val pairs = pq match {
@@ -405,9 +405,8 @@ object SemDedup {
       // size check twice plus both sides of the pair self-join, and
       // the when-chain embeds |oversize| fused assignment kernels
       // that must not re-run per consumer.
-      fr = fr.withColumn("pk", coalesce(subExpr, col("pk")))
-        .localCheckpoint(eager = true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      fr = Materialize.checkpoint(
+        fr.withColumn("pk", coalesce(subExpr, col("pk"))))
       refined = true
       depth += 1
     }
@@ -462,11 +461,9 @@ object SemDedup {
     // recompute per consumer (measured 2× ≈ 10 s at the sf0.1 bench
     // point). The checkpointed projection carries only attributes and
     // scalars sized ~50 B/row.
-    val slim = PqOps.withPqMeta(members, "vec", model)
+    val slim = Materialize.checkpoint(PqOps.withPqMeta(members, "vec", model)
       .select(col("pk"), col("id"), col("norm"),
-        col("__codes"), col("__pqerr"), col("__pqnorm"))
-      .localCheckpoint(eager = true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        col("__codes"), col("__pqerr"), col("__pqnorm")))
     val a = slim.select(col("pk"), col("id").as("id_a"),
       col("norm").as("na"), col("__codes").as("ca"),
       col("__pqerr").as("ea"), col("__pqnorm").as("ra"))

@@ -2,6 +2,8 @@ package graft.sim
 
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize
+
 /** Factor-scale A/B for the SDC pair stage's lower-bound rescore
   * skip (VERDICT r18 ask #5): a pile corpus whose subspace slices
   * are drawn from exactly k per-subspace prototypes — the codebook
@@ -41,8 +43,8 @@ object SemLbSmoke {
       val v = (0 until m).flatMap(s => proto(s, (g * (2 * s + 3) + s) % k))
       (0 until pileSize).map(r => ((k + g * pileSize + r).toLong, v))
     }
-    val df = (enumRows ++ pileRows).toDF("vec_id", "embedding")
-      .repartition(32).localCheckpoint(true)
+    val df = Materialize.checkpoint(
+      (enumRows ++ pileRows).toDF("vec_id", "embedding").repartition(32))
     val n = df.count()
 
     def arm(lbSkip: Boolean): (Double, Long, Long) = {

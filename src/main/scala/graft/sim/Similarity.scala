@@ -3,6 +3,8 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize
+
 /** Approximate-nearest-neighbor search over embedding columns.
   *
   * Baseline: brute-force cosine top-k (query-set broadcast x corpus
@@ -17,19 +19,6 @@ import org.apache.spark.sql.functions._
   * list_inner_product matches exactly).
   */
 object Similarity {
-
-  /** Eager lineage-cutting materialization at SERIALIZED storage —
-    * same rationale as DedupOps.ckptSer: these checkpoints are
-    * corpus-sized (banded/bucketed vector tables carry the full
-    * embedding arrays), their per-row object form is ~3x the packed
-    * footprint, and every consumer is a shuffle that re-serializes
-    * anyway. The packed form is what keeps a 10-100x scale step from
-    * GC-thrashing a single JVM (measured on the dedup chain's
-    * factor-10 smoke) and an executor's storage fraction on a
-    * cluster. */
-  private def ckptSer(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
 
   /** Cosine similarity of two array<float|double> columns (double math,
     * sequential summation). 0-norm vectors yield null. */
@@ -153,10 +142,9 @@ object Similarity {
     // (HyperplaneBits) — the composed per-plane expression tree is
     // O(planes·dim) literal nodes and falls out of codegen at the
     // 128-plane scale default. posexplode supplies the band ordinal.
-    // localCheckpoint (eager) rather than persist: the banded sliver
-    // feeds both sides of the self-join — checkpointing materializes
-    // it once, cuts the hyperplane-expression lineage out of the join
-    // plan, and leaves no CacheManager entry behind.
+    // Checkpointed: the banded sliver feeds both sides of the
+    // self-join, and its hyperplane-expression lineage stays out of
+    // the join plan.
     val banded = capBuckets(df
       .select(col(idCol).as("id"), col(vecCol).as("vec"))
       .withColumn("norm", sqrt(dot(col("vec"), col("vec"))))
@@ -164,7 +152,7 @@ object Similarity {
         posexplode(graft.functions.HyperplaneBits.bandKeys(col("vec"),
           hp.map(_.toIndexedSeq).toIndexedSeq, bands, rowsPerBand))
           .as(Seq("band", "key")))
-      .transform(ckptSer), maxBucketSize)
+      .transform(Materialize.checkpoint(_)), maxBucketSize)
     val scored = banded.as("a").join(banded.as("b").hint("merge"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key")
           && col("a.id") < col("b.id"))
@@ -305,8 +293,8 @@ object Similarity {
     import spark.implicits._
     val n = corpus.count()
     val stride = math.max(1L, n / math.max(1, numCentroids))
-    val vecs = ckptSer(corpus.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("vec")))
+    val vecs = Materialize.checkpoint(corpus.select(col(idCol).as("id"),
+      col(vecCol).cast("array<double>").as("vec")))
     var cent = vecs.filter(pmod(col("id"), lit(stride)) === 0)
       .orderBy("id").select(col("vec").as("c_vec")).collect()
       .map(_.getSeq[Double](0).toArray)
@@ -363,7 +351,7 @@ object Similarity {
             hp.map(_.toIndexedSeq).toIndexedSeq, 1, nPlanes), 1))
         .withColumn("norm", sqrt(dot(col("vec"), col("vec"))))
         .withColumn("band", lit(0))
-        .transform(ckptSer), maxBucketSize)
+        .transform(Materialize.checkpoint(_)), maxBucketSize)
       .withColumnRenamed("key", "bucket").drop("band")
     val pairs = bucketed.as("a").join(bucketed.as("b").hint("merge"),
         col("a.bucket") === col("b.bucket") && col("a.id") =!= col("b.id"))

@@ -3,6 +3,8 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize
+
 /** Scalar quantization (SQ8) for embedding search — the
   * per-DIMENSION compression leg of the ANN family, completing the
   * quantizer tier next to PQ/IVFADC ([[PqOps]]): each dimension is
@@ -177,10 +179,9 @@ object SqOps {
     // AND the list assignment — on the "farthest" path that is
     // numCoarse − 1 sequential TakeOrdered passes (q137: 11), each of
     // which re-scanned and re-quantized the source per pass here.
-    val qcorp = corpus.select(col(idCol).cast("long").as("id"),
-        PqOps.quantize(col(vecCol), model.scaleBits).as("__qv"))
-      .localCheckpoint(eager = true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val qcorp = Materialize.checkpoint(corpus.select(
+      col(idCol).cast("long").as("id"),
+      PqOps.quantize(col(vecCol), model.scaleBits).as("__qv")))
     val cents: Array[Array[Long]] = PqOps.coarseSeedSet(
       qcorp, stride, numCoarse, coarseSeed, coarseIters, qvC = "__qv")
     if (cents.isEmpty)

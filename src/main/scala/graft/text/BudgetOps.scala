@@ -2,8 +2,8 @@ package graft.text
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.operators.Materialize
 import graft.operators.PrefixScan
 import graft.operators.PrefixScan.freshName
 
@@ -187,13 +187,12 @@ object BudgetOps {
       stratum = Some(col(stratC)))
     try {
       val budgets = budgetsOf(scan.totals.map { case (s, t) => s -> t(0) })
-      scan.rows
+      Materialize.checkpoint(scan.rows
         .withColumn("cum_tokens", col(exclC) + col(tokC))
         .withColumn("budget", coalesce(
           try_element_at(typedLit(budgets), col(stratC)), lit(0L)))
         .withColumn("selected", col(exclC) < col("budget"))
-        .drop(tokC, priC, stratC, exclC)
-        .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+        .drop(tokC, priC, stratC, exclC))
     } finally scan.release()
   }
 
@@ -211,12 +210,11 @@ object BudgetOps {
       Seq(col(priC).desc, col(idCol)), Seq(exclC -> col(tokC)))
     try {
       val budget = budgetOf(scan.total(0))
-      scan.rows
+      Materialize.checkpoint(scan.rows
         .withColumn("cum_tokens", col(exclC) + col(tokC))
         .withColumn("selected", col(exclC) < lit(budget))
         .withColumn("budget", lit(budget))
-        .drop(tokC, priC, exclC)
-        .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+        .drop(tokC, priC, exclC))
     } finally scan.release()
   }
 }

@@ -2,7 +2,8 @@ package graft.text
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.operators.Materialize
 
 /** Model-based quality filtering — the "quality classifier" stage of
   * the GPT-3/LLaMA curation recipes (Brown et al. 2020 trained a
@@ -61,15 +62,14 @@ object ClassifierOps {
         .hint("shuffle_hash"), Seq(idCol))
     // B rows by construction; checkpointed so the totals action and
     // the weight projection read one materialization.
-    val byClass = counts.groupBy("bucket")
+    val byClass = Materialize.checkpoint(counts.groupBy("bucket")
       .agg(sum(when(col("__y"), col("n")).otherwise(0L)).as("c_pos"),
-        sum(when(!col("__y"), col("n")).otherwise(0L)).as("c_neg"))
-      .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+        sum(when(!col("__y"), col("n")).otherwise(0L)).as("c_neg")))
     val tot = byClass.agg(
       coalesce(sum("c_pos"), lit(0L)), coalesce(sum("c_neg"), lit(0L)))
       .head()
     val (tPos, tNeg) = (tot.getLong(0), tot.getLong(1))
-    val weights = spark.range(buckets)
+    val weights = Materialize.checkpoint(spark.range(buckets)
       .select(col("id").as("bucket"))
       .join(byClass, Seq("bucket"), "left")
       .select(col("bucket"),
@@ -77,8 +77,7 @@ object ClassifierOps {
             / lit(tPos.toDouble + buckets))
           - log((coalesce(col("c_neg"), lit(0L)) + 1.0)
             / lit(tNeg.toDouble + buckets)))
-          * MicroScale + 0.5).cast("long").as("w_micro"))
-      .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+          * MicroScale + 0.5).cast("long").as("w_micro")))
     val nd = labeled.agg(
       sum(when(y, 1L).otherwise(0L)), sum(when(!y, 1L).otherwise(0L)))
       .head()

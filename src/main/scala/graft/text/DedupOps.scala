@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize
+
 /** Corpus-scale deduplication operators.
   *
   * Four tiers, in increasing recall / cost:
@@ -21,23 +23,6 @@ import org.apache.spark.sql.functions._
 object DedupOps {
 
   import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.storage.StorageLevel
-
-  /** Eager lineage-cutting materialization at SERIALIZED storage.
-    * Corpus-sized checkpoints (shingle / signature / banded tables)
-    * then hold packed byte buffers instead of one JVM object per row —
-    * roughly a 3x smaller resident footprint for these narrow
-    * long-pair rows. That footprint is exactly what bounds a local[n]
-    * driver (and an executor's storage fraction on a cluster) once the
-    * corpus is 10-100x the test SF: a factor-100 scale smoke of the
-    * ngram chain GC-thrashed holding two deserialized checkpoints of a
-    * ~150M-row shingle table, and the deserialization saving is
-    * irrelevant here because every consumer is a shuffle that
-    * re-serializes anyway. Sliver-sized iterative checkpoints
-    * (connectedComponents' per-round labels) stay deserialized — they
-    * are read repeatedly and are edge-sliver-sized by construction. */
-  private def ckptSer(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
 
   /** k-shingle table: (id, shingle) rows, distinct per doc — one
     * NARROW explode of the fused [[graft.functions.DistinctShingles]]
@@ -82,12 +67,10 @@ object DedupOps {
       k: Int, minJaccard: Double, maxShingleFreq: Long = 1000L)
       : DataFrame = {
     // Checkpoint the shingle table: it feeds both sides of the pair
-    // join plus the size aggregate — localCheckpoint materializes it
-    // once and cuts the window-function lineage out of the self-join
-    // plan (no CacheManager entry to leak across calls). Shingles are
+    // join plus the size aggregate. Shingles are
     // hashed to longs BEFORE the checkpoint, so the materialized table
     // (and every shuffle fed from it) never carries shingle text.
-    val sh = ckptSer(shingleRows(docs, idCol, textCol, k)
+    val sh = Materialize.checkpoint(shingleRows(docs, idCol, textCol, k)
       .select(col("id"), xxhash64(col("shingle")).as("shingle")))
     // Pair-join prune: a shingle held by a single doc cannot produce a
     // pair, and most shingles are singletons — dropping them up front
@@ -106,7 +89,7 @@ object DedupOps {
     // with it min 2.64 s / median 2.75 s, without it 2.71 / 2.82 —
     // materializing the capped table once beats recomputing it for
     // both sides of the self-join, so it stays.
-    val capped = ckptSer(sh
+    val capped = Materialize.checkpoint(sh
       .withColumn("__freq",
         count(lit(1)).over(Window.partitionBy("shingle")))
       .filter(col("__freq") >= 2 && col("__freq") <= maxShingleFreq)
@@ -192,7 +175,8 @@ object DedupOps {
   def dupSpans(docs: DataFrame, k: Int, minOcc: Long = 2L,
       idCol: String = "doc_id", textCol: String = "text",
       portableHash: Boolean = false): DataFrame = {
-    val win = ckptSer(windowRows(docs, idCol, textCol, k, portableHash))
+    val win = Materialize.checkpoint(
+      windowRows(docs, idCol, textCol, k, portableHash))
     val dupSet = win.groupBy("wh").agg(count(lit(1)).as("__occ"))
       .filter(col("__occ") >= minOcc)
       .select("wh")
@@ -307,7 +291,7 @@ object DedupOps {
       textCol: String, k: Int, bands: Int, rows: Int,
       maxBandFreq: Long = Long.MaxValue): DataFrame = {
     // feeds both sides of the candidate-pair self-join
-    val banded0 = ckptSer(
+    val banded0 = Materialize.checkpoint(
       minhashBandKeys(docs, idCol, textCol, k, bands, rows))
     // Cap via a window count on the self-join's OWN (band, key)
     // partitioning (r21): the groupBy + shuffle_hash left-semi this
@@ -397,7 +381,7 @@ object DedupOps {
 
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
       maxIters: Int = 10, markLabeled: Boolean = false): DataFrame = {
-    // localCheckpoint rather than persist: an iterative dataflow must
+    // checkpoint rather than cache: an iterative dataflow must
     // CUT LINEAGE each round, or each round's plan embeds the
     // previous round's twice over and Catalyst re-analysis grows
     // exponentially with the iteration count. Checkpointed frames
@@ -406,8 +390,8 @@ object DedupOps {
     // loop), so materializing them is cheap even at corpus scale.
     // materialize the (expensive) pair pipeline once, then symmetrize
     // the checkpointed sliver by unioning with its own swap
-    val half = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .localCheckpoint(eager = true)
+    val half = Materialize.checkpoint(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
     // Symmetrized edges hash-partitioned on dst ONCE and CACHED
     // (r22, guide §2.4 establish-the-partitioning-once): every
     // round's neighbor join keys on dst, and round 1's min-neighbor
@@ -416,20 +400,15 @@ object DedupOps {
     // exchange serves the whole loop and the per-round edge-side
     // re-exchange of this STATIC table (the loop's single biggest
     // stage-count driver: 7 rounds on the SemDedup ε-graph = 7
-    // identical shuffles) disappears. persist, NOT localCheckpoint:
-    // Spark 4's checkpoint drops outputPartitioning to Unknown
-    // (measured — AdaptiveSparkPlan reports none pre-execution),
-    // while InMemoryRelation preserves it (AQE leaves cached-plan
-    // partitioning alone by default). Lineage stays shallow — the
+    // identical shuffles) disappears. A cache, because a checkpoint
+    // loses the dst partitioning. Lineage stays shallow — the
     // cached plan reads the half CHECKPOINT, so nothing of the pair
     // pipeline re-enters any round's plan — and the entry is
-    // unpersisted at loop end (no CacheManager leak across calls).
-    // Deserialized MEMORY_AND_DISK: read every round, sliver-sized.
-    val edges = half.union(
+    // released at loop end.
+    val edges = Materialize.cache(half.union(
         half.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(half.sparkSession.sessionState.conf.numShufflePartitions,
-        col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("dst")))
     var labels: DataFrame = null
     var iter = 0
     var converged = false
@@ -486,7 +465,7 @@ object DedupOps {
       // (stable under every edge), so the jump is the identity there
       // and the stop decision is unchanged from testing the
       // post-jump frame.
-      val ck = hop.localCheckpoint(eager = false)
+      val ck = Materialize.checkpoint(hop, eager = false)
       val changed = {
         // when/otherwise fixes the output to non-null LONG whatever
         // integral type the caller's ids carry
@@ -543,7 +522,7 @@ object DedupOps {
     lastCcRounds = iter
     // the loop is the only consumer of the cached edges (the relabel
     // below reads checkpointed labels) — release before any exit
-    edges.unpersist(blocking = false)
+    Materialize.release(edges)
     // Hop+jump covers ~2^maxIters diameter, so hitting this bound
     // means the graph is far outside any plausible near-dup shape —
     // fail loudly rather than silently mislabel.
@@ -663,7 +642,7 @@ object DedupOps {
     * (4 × 2¹⁶ keys) and whose recall within the radius is exact. */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int): DataFrame = {
-    val sh = ckptSer(simhashTable(docs, idCol, textCol))
+    val sh = Materialize.checkpoint(simhashTable(docs, idCol, textCol))
     val bucketed = sh.withColumn("bucket", shiftright(col("sh"), 8))
     bucketed.as("a").join(bucketed.as("b").hint("merge"),
         col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
@@ -703,7 +682,7 @@ object DedupOps {
     require(maxHamming <= 3,
       s"simhashPairs64 guarantees recall only for radius <= 3 over 4 " +
       s"bands (pigeonhole); got $maxHamming")
-    val sh = ckptSer(simhashTable64(docs, idCol, textCol))
+    val sh = Materialize.checkpoint(simhashTable64(docs, idCol, textCol))
     val banded = sh.select(
       (col("id") +: (0 until 4).map(j => col(s"w$j"))) :+
         explode(array((0 until 4).map(b =>
@@ -787,15 +766,15 @@ object DedupOps {
     // checkpoint: candidates feed the doc prefilter AND the
     // verification join, and the band self-join behind them is the
     // expensive part of the chain
-    val cands = ckptSer(minhashCandidatePairs(docs, idCol, textCol, k,
-        bands, rows, maxBandFreq)
+    val cands = Materialize.checkpoint(minhashCandidatePairs(docs, idCol,
+        textCol, k, bands, rows, maxBandFreq)
       .select("id_a", "id_b"))
     // verification only needs shingles of docs that appear in some
     // candidate pair — semi-filter BEFORE shingling so non-candidate
     // docs pay nothing past the banding stage
     val candDocs = cands.select(col("id_a").as(idCol))
       .union(cands.select(col("id_b").as(idCol))).distinct()
-    val sh = ckptSer(shingleRows(
+    val sh = Materialize.checkpoint(shingleRows(
         docs.select(col(idCol), col(textCol))
           .join(candDocs.hint("shuffle_hash"), Seq(idCol), "left_semi"),
         idCol, textCol, k)
@@ -858,7 +837,7 @@ object DedupOps {
     // (r21): the shuffle_hash join of the labeled frame back onto
     // the quality projection this replaced was a second corpus-sized
     // exchange pair on the same id key the relabel already joins on.
-    val labeled = ckptSer(fuzzyComponents(docs,
+    val labeled = Materialize.checkpoint(fuzzyComponents(docs,
         docs.select(col(idCol).cast("long").as("id"),
           quality.cast("long").as("quality")),
         idCol, textCol, k, bands, rows, minJaccard, maxBandFreq,

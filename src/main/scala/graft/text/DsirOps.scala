@@ -2,7 +2,8 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.operators.Materialize
 
 /** Data Selection via Importance Resampling — DSIR (Xie et al. 2023,
   * arXiv:2302.03169): pick the corpus subset that looks most like a
@@ -76,27 +77,24 @@ object DsirOps {
     * `reuseCounts=false` skips the corpus-sized checkpoint and
     * recomputes featurization per consumer (3×) — the right trade
     * when the (id, bucket, n) frame would dwarf cluster storage.
-    * Checkpoint caveats at scale: storage is serialized
-    * MEMORY_AND_DISK_SER (the deserialized default pins ~3-4× the
-    * footprint), and `localCheckpoint` truncates lineage — executor
-    * loss makes the job unrecoverable; on a preemptible cluster
-    * prefer `reuseCounts=false` or reliable `checkpoint()` against
-    * the checkpoint dir. */
+    * Checkpoint caveats at scale: the checkpoints are local
+    * [[graft.operators.Materialize]] checkpoints (serialized, lineage
+    * cut), so a lost executor fails the job with
+    * `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND` instead of recomputing; on a
+    * preemptible cluster prefer `reuseCounts=false`. */
   def importanceWeights(corpus: DataFrame, target: DataFrame,
       idCol: String, textCol: String, buckets: Int = 1024,
       seed: Int = 7, reuseCounts: Boolean = true): DataFrame = {
     require(buckets > 0, s"buckets=$buckets")
     // corpusCounts feeds the q̂-total action, the λ table, AND the
-    // per-doc weight join — localCheckpoint (eager) so featurization
+    // per-doc weight join — checkpoint (eager) so featurization
     // runs once, not once per action. The checkpoint holds only
     // (id, bucket, n) — ≤ B buckets per doc, never the text (the
     // same contract as LmOps.perplexityBuckets' scoring frame).
     val rawCounts = hashedNgramCounts(corpus, idCol, textCol,
       buckets, seed)
     val corpusCounts =
-      if (reuseCounts)
-        rawCounts.localCheckpoint(eager = true,
-          StorageLevel.MEMORY_AND_DISK_SER)
+      if (reuseCounts) Materialize.checkpoint(rawCounts)
       else rawCounts
 
     // ≤ B rows by construction — eager checkpoint makes the total
@@ -104,8 +102,8 @@ object DsirOps {
     // instead of re-aggregating (the target side would otherwise
     // re-featurize for each consumer).
     def dist(counts: DataFrame): (DataFrame, Long) = {
-      val byBucket = counts.groupBy("bucket").agg(sum("n").as("c"))
-        .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+      val byBucket = Materialize.checkpoint(
+        counts.groupBy("bucket").agg(sum("n").as("c")))
       val total = byBucket.agg(coalesce(sum("c"), lit(0L))).head().getLong(0)
       (byBucket, total)
     }
@@ -150,15 +148,14 @@ object DsirOps {
       concat(lit(salt), lit(":"), col(idCol).cast("string")), seed)
       + 0.5) / 4294967296.0
     // keyed is consumed twice — the kth top-k collect and the final
-    // selected-flag materialization. localCheckpoint (eager) holds
+    // selected-flag materialization. checkpoint (eager) holds
     // the 5 bounded numeric columns + id, so the weighting pipeline
     // (two shuffles + the λ join) runs once, not per action.
-    val keyed = importanceWeights(corpus, target, idCol, textCol,
-        buckets, seed)
+    val keyed = Materialize.checkpoint(importanceWeights(corpus, target,
+        idCol, textCol, buckets, seed)
       .withColumn("g_micro",
         floor(-log(-log(u)) * MicroScale + 0.5).cast("long"))
-      .withColumn("key_micro", col("logw_micro") + col("g_micro"))
-      .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+      .withColumn("key_micro", col("logw_micro") + col("g_micro")))
 
     // k-th threshold under (key DESC, id ASC): a parameter-bounded
     // driver merge (TakeOrderedAndProject), never a global sort.

@@ -1,14 +1,10 @@
 package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType}
-import org.apache.spark.storage.StorageLevel
 
+import graft.functions.CheckNonNegative
+import graft.operators.Materialize
 import graft.operators.PrefixScan
 import graft.operators.PrefixScan.freshName
 
@@ -124,7 +120,7 @@ object InterleaveOps {
     * (1-based global position; unique — `ORDER BY seq` IS the
     * training order). Those are reserved output names — pre-existing
     * columns are overwritten. The result is eagerly materialized
-    * (serialized localCheckpoint, the [[BudgetOps]] retention
+    * (serialized checkpoint, the [[BudgetOps]] retention
     * contract) and the shuffle substrate released. */
   def proportionalInterleave(df0: DataFrame, stratumCol: String,
       idCol: String, weights: Map[String, Long],
@@ -181,9 +177,9 @@ object InterleaveOps {
     // Pass A: per-stratum rank (and token prefix, sized variant)
     // without per-stratum reducers — a stratified prefix scan on
     // (stratum, id) of a count and the checked size.
-    val sizeW = sizeCol.map(c => ColumnBridge.column(CheckedSize(
-      ColumnBridge.expression(col(c).cast("long")),
-      ColumnBridge.expression(col(stratC)), c)))
+    val sizeW = sizeCol.map(c => CheckNonNegative(col(c),
+      "proportionalInterleaveByTokens", c, Some(col(stratC)),
+      nullFails = true))
     val scanA = PrefixScan(df
         .withColumn(stratC, coalesce(col(stratumCol).cast("string"), lit("")))
         .join(broadcast(wDf), Seq(stratC)),
@@ -218,40 +214,10 @@ object InterleaveOps {
           .withColumn("mix_key", keyCol),
         Seq(col("mix_key"), col(stratC), col("mix_k")),
         Seq(seqC -> lit(1L)))
-      try scanB.rows
+      try Materialize.checkpoint(scanB.rows
         .withColumn("seq", col(seqC) + 1L)
-        .drop(stratC, wC, kC, cumC, seqC)
-        .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+        .drop(stratC, wC, kC, cumC, seqC))
       finally scanB.release()
     } finally scanA.release()
   }
-}
-
-/** A token-interleave size as a long, or an IllegalArgumentException
-  * naming the stratum for a null or negative size. Thrown from the
-  * task, the failure reaches the caller as the failed job's
-  * SparkException (`raise_error` would surface unwrapped, as a
-  * SparkRuntimeException). */
-private case class CheckedSize(size: Expression, stratum: Expression,
-    name: String) extends BinaryExpression with CodegenFallback {
-
-  override def left: Expression = size
-  override def right: Expression = stratum
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = false
-
-  override def eval(input: InternalRow): Any = {
-    val v = size.eval(input)
-    if (v == null) throw new IllegalArgumentException(
-      s"proportionalInterleaveByTokens: null $name in stratum " +
-        s"'${stratum.eval(input)}'")
-    if (v.asInstanceOf[Long] < 0L) throw new IllegalArgumentException(
-      s"proportionalInterleaveByTokens: negative $name=$v in stratum " +
-        s"'${stratum.eval(input)}'")
-    v
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): CheckedSize =
-    copy(size = newLeft, stratum = newRight)
 }

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize
+
 /** N-gram language-model perplexity scoring — the CCNet-style corpus
   * quality signal (Wenzek et al. 2020: docs are binned by the
   * perplexity of a small LM trained on a trusted reference corpus;
@@ -161,16 +163,15 @@ object LmOps {
     * in the lower bucket on every engine. Empty docs (null ppl) get
     * a null bucket: unscoreable is not a quality verdict.
     *
-    * The perplexity frame is localCheckpoint'ed once (eager): the
+    * The perplexity frame is checkpointed once (eager): the
     * cuts pass and the labeling pass share one scoring of the
     * corpus — the checkpoint holds the 4-column projection
     * (id + three numerics), not the text. */
   def perplexityBuckets(corpus: DataFrame, ref: DataFrame,
       idCol: String, textCol: String, sampleSize: Int = 400,
       lambda: Double = 0.75, salt: String = "qs"): DataFrame = {
-    val ppl = perplexity(corpus, ref, idCol, textCol, lambda)
-      .localCheckpoint(eager = true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val ppl = Materialize.checkpoint(
+      perplexity(corpus, ref, idCol, textCol, lambda))
     val cuts = SampleOps.sampleRankCuts(ppl, "ppl", idCol,
       Seq(1.0 / 3, 2.0 / 3), sampleSize, salt)
     ppl.withColumn("bucket",

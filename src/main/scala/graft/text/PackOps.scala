@@ -2,8 +2,8 @@ package graft.text
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.operators.Materialize
 import graft.operators.PrefixScan
 import graft.operators.PrefixScan.freshName
 
@@ -27,7 +27,7 @@ import graft.operators.PrefixScan.freshName
   * it lazily; unpersisting earlier would recompute the shuffle with
   * fresh range bounds and desynchronize the driver-held prefix
   * offsets). Every retained substrate is tracked and surfaced:
-  * [[releaseSubstrates]] unpersists them all once the results are
+  * [[releaseSubstrates]] releases them all once the results are
   * consumed — a long-lived session doing repeated packs calls it
   * between runs instead of hunting cache entries in the UI
   * (`spark.catalog.clearCache()` remains the blunt escape).
@@ -49,13 +49,13 @@ object PackOps {
   private val retained =
     scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-  /** Unpersist every substrate retained by prior packing runs. Call
+  /** Release every substrate retained by prior packing runs. Call
     * AFTER those runs' results are fully consumed (collected or
     * written) — a result DataFrame read after release recomputes its
     * shuffle with fresh sampled range bounds and may lay the stream
     * out differently than the driver-held offsets it was built with. */
   def releaseSubstrates(): Unit = retained.synchronized {
-    retained.foreach(_.unpersist(blocking = false))
+    retained.foreach(Materialize.release)
     retained.clear()
   }
 
@@ -64,7 +64,7 @@ object PackOps {
 
   /** [[packOffsets]] plus the persisted substrate handle, so callers
     * that fully materialize their result ([[packedBlocks]]) can
-    * unpersist immediately instead of retaining session-wide. */
+    * release it immediately instead of retaining session-wide. */
   private def packOffsetsRetaining(df: DataFrame, idCol: String,
       tokenCol: String, salt: String): (DataFrame, DataFrame) = {
     val tokC = freshName("__tok", df.columns)
@@ -99,7 +99,7 @@ object PackOps {
     val (out, sub) = packOffsetsRetaining(df, idCol, tokenCol, salt)
     retained.synchronized { retained += sub }
     log.info(s"packOffsets: retaining range-shuffled substrate #" +
-      s"${retainedSubstrates} (MEMORY_AND_DISK) — call " +
+      s"${retainedSubstrates} — call " +
       "PackOps.releaseSubstrates() after results are consumed")
     out
   }
@@ -119,7 +119,7 @@ object PackOps {
     * blow up the way an unbounded per-key collect would.
     *
     * Footprint note: the token arrays ride through the pack range
-    * shuffle and its persisted substrate (MEMORY_AND_DISK — spills,
+    * shuffle and its cached substrate (serialized, spilling to disk —
     * never OOMs), so the whole tokenized corpus is resident on
     * executor storage while the job runs. That buys a single
     * corpus-wide shuffle; the alternative — offsets over narrow
@@ -129,8 +129,8 @@ object PackOps {
     * [[packBlocks]] on counts with your own token join).
     *
     * EAGER, and retains nothing: the block-level result (orders of
-    * magnitude smaller than the corpus) is localCheckpoint'ed and the
-    * tokenized-corpus substrate unpersisted before returning, so
+    * magnitude smaller than the corpus) is checkpointed and the
+    * tokenized-corpus substrate released before returning, so
     * repeated packs in a long-lived session don't accumulate cache —
     * unlike the lazy [[packOffsets]]/[[packBlocks]], whose
     * corpus-sized results make retention the only sound contract. */
@@ -146,7 +146,7 @@ object PackOps {
       val spans = blockSpans(withOff, "__n_tokens", blockTokens)
       val localOff = greatest(
         col("block_id") * blockTokens - col("start_off"), lit(0L))
-      spans
+      Materialize.checkpoint(spans
         .withColumn("__slice", slice(col("__toks"),
           (localOff + 1).cast("int"), col("span_tokens").cast("int")))
         .groupBy(col("block_id"))
@@ -156,9 +156,8 @@ object PackOps {
           md5(concat_ws(" ", flatten(transform(
             array_sort(collect_list(
               struct(col("start_in_block").as("o"), col("__slice").as("s")))),
-            x => x.getField("s"))))).as("content_md5"))
-        .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
-    } finally sub.unpersist(blocking = false)
+            x => x.getField("s"))))).as("content_md5")))
+    } finally Materialize.release(sub)
   }
 
   /** Explode each document into the fixed-size blocks it overlaps:
@@ -183,7 +182,7 @@ object PackOps {
     * the span table (one narrow row per (block, doc) overlap — input
     * columns + 5 longs, NEVER token content) is eagerly materialized
     * (serialized local checkpoint) and the range-shuffled substrate
-    * unpersisted before returning. Retains nothing — the right
+    * released before returning. Retains nothing — the right
     * variant for long-lived sessions and benches; the lazy
     * [[packBlocks]] remains for pipelines that compose further
     * narrow work before materializing. */
@@ -191,9 +190,8 @@ object PackOps {
       blockTokens: Int, salt: String): DataFrame = {
     require(blockTokens > 0, "blockTokens must be positive")
     val (withOff, sub) = packOffsetsRetaining(df, idCol, tokenCol, salt)
-    try blockSpans(withOff, tokenCol, blockTokens)
-      .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
-    finally sub.unpersist(blocking = false)
+    try Materialize.checkpoint(blockSpans(withOff, tokenCol, blockTokens))
+    finally Materialize.release(sub)
   }
 
   /** Span explosion of a pack-offsets frame (shared by the lazy

@@ -2,8 +2,9 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.functions.CheckNonNegative
+import graft.operators.Materialize
 import graft.operators.PrefixScan
 import graft.operators.PrefixScan.freshName
 
@@ -289,12 +290,8 @@ object SampleOps {
   def samplePpsSystematic(df: DataFrame, idCol: String,
       weightCol: String, k: Long, salt: String): DataFrame = {
     require(k >= 1, s"samplePpsSystematic: k=$k")
-    val wChecked = when(col(weightCol) < 0, raise_error(concat(
-        lit(s"samplePpsSystematic($weightCol): negative weight "),
-        col(weightCol).cast("string"))))
-      .otherwise(col(weightCol))
-    val staged = df.withColumn("__w",
-      coalesce(wChecked.cast("long"), lit(0L)))
+    val staged = df.withColumn("__w", coalesce(CheckNonNegative(
+      col(weightCol), s"samplePpsSystematic($weightCol)", "weight"), lit(0L)))
     // coalesce: an empty input (or all-null weights) sums to NULL —
     // fold to 0 so the require below fires with the designed
     // diagnostic instead of a generic null-value error (ADVICE r18).
@@ -365,12 +362,11 @@ object SampleOps {
         val (num, den) = fracs.getOrElse(s, (defaultNum, defaultDen))
         s -> (BigInt(t(0)) * num / den).toLong
       }
-      scan.rows
+      Materialize.checkpoint(scan.rows
         .withColumn("sample_rank", col(exclC) + 1L)
         .withColumn("sampled", col("sample_rank") <= coalesce(
           try_element_at(typedLit(budgets), col(stratC)), lit(0L)))
-        .drop(stratC, hC, exclC)
-        .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+        .drop(stratC, hC, exclC))
     } finally scan.release()
   }
 
@@ -442,9 +438,8 @@ object SampleOps {
         }
         .fold(lit(splits.last._1))(_.otherwise(splits.last._1))
       val assignment = scan.rows.select(col("__g"), split.as("split"))
-      out.join(assignment.hint("shuffle_hash"), Seq("__g"))
-        .drop("__g")
-        .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+      Materialize.checkpoint(
+        out.join(assignment.hint("shuffle_hash"), Seq("__g")).drop("__g"))
     } finally scan.release()
   }
 

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize
+
 /** Bounded-state heavy-hitter vocabulary — exact tokens above a
   * corpus-frequency threshold WITHOUT a full-vocabulary shuffle.
   *
@@ -84,11 +86,10 @@ object VocabOps {
     // the pass itself cheap (r17 A/B at sf0.1: staged 0.98 s vs
     // recompute 1.12 s) — unlike single-action consumers on a shared
     // shuffle key, where removal won (firstOccurrenceNovelty, q148)
-    val staged = docs.select(TextOps.tokens(col(textCol)).as("__toks"))
-      .localCheckpoint(true)
-    try {
-      heavyHittersStaged(staged, num, den, k)
-    } finally staged.unpersist()
+    val staged = Materialize.checkpoint(
+      docs.select(TextOps.tokens(col(textCol)).as("__toks")))
+    try heavyHittersStaged(staged, num, den, k)
+    finally Materialize.release(staged)
   }
 
   private def heavyHittersStaged(staged: DataFrame, num: Long,
@@ -122,11 +123,10 @@ object VocabOps {
     // The checkpoint is RETAINED (the returned frame reads it); it
     // holds ≤ k·P + 1 rows — parameter-bounded, the house rule for
     // tiny kept checkpoints (keylessIntervalHistogram's hist)
-    val grouped = toks.toDF("token")
+    val grouped = Materialize.checkpoint(toks.toDF("token")
       .join(broadcast(cdf), Seq("token"), "left")
       .groupBy(when(col("__isc").isNotNull, col("token")).as("token"))
-      .agg(count(lit(1)).as("n_tok"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("n_tok")))
     val nTotal = grouped.agg(sum("n_tok")).head().getLong(0)
     grouped.filter(col("token").isNotNull &&
         col("n_tok") * lit(den) > lit(nTotal) * lit(num))

@@ -64,13 +64,13 @@ class SamplePpsSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     PackOps.releaseSubstrates()
     assert(got.subsetOf(Set(0L, 3L)) && got.nonEmpty)
-    val ex = intercept[Exception] {
+    val ex = intercept[org.apache.spark.SparkException] {
       SampleOps.samplePpsSystematic(
         Seq((0L, -1L)).toDF("doc_id", "w"), "doc_id", "w", 1L, "n")
         .count()
     }
-    assert(ex.getMessage.contains("negative weight") ||
-      Option(ex.getCause).exists(_.getMessage.contains("negative weight")))
+    assert(ex.getCause.isInstanceOf[IllegalArgumentException], ex)
+    assert(ex.getCause.getMessage.contains("negative weight"))
   }
 
   /** BigInt replay for the overflow regime — the Long-based [[brute]]

@@ -112,12 +112,12 @@ class StatsOpsSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2),
         r.getLong(3))).toSet
     assert(merged == whole)
-    val ex = intercept[Exception] {
+    val ex = intercept[org.apache.spark.SparkException] {
       StatsOps.rankSketchCells(
         Seq((0L, -3L, "x")).toDF("id", "v", "grp"), "v", "grp").count()
     }
-    assert(ex.getMessage.contains("negative value") ||
-      Option(ex.getCause).exists(_.getMessage.contains("negative value")))
+    assert(ex.getCause.isInstanceOf[IllegalArgumentException], ex)
+    assert(ex.getCause.getMessage.contains("negative value"))
   }
 
   test("rankSketchQuantile clamps hi at 19 digits (ADVICE r18)") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.Materialize
+import graft.operators.{BucketPairs, Materialize}
 
 /** Image NEAR-duplicate tier (VERDICT r18 ask #1) — the gap between
   * byte-exact media fingerprints and embedding SemDeDup: a 64-bit
@@ -457,23 +457,9 @@ object MediaDedup {
       idCol: String = "media_id", hashCol: String = "dhash",
       maxVideosPerHash: Long = 0L): DataFrame = {
     require(minShared >= 1, s"minShared=$minShared")
-    val fh0 = frameHashes
-      .filter(col(hashCol).isNotNull) // undecodable-video sentinels
-      .select(col(idCol).cast("long").as("id"),
-        col(hashCol).cast("long").as("h"))
-      .distinct()
-    // Cap via a window count on the hash key (r21, the q107/ngram
-    // shape): the groupBy + shuffle_hash anti-join this replaced
-    // paid two extra exchanges to learn a per-hash count one
-    // exchange computes in place; per-key window work is row-linear.
-    val fh = Materialize.checkpoint(if (maxVideosPerHash > 0L)
-      fh0.withColumn("__n", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("h")))
-        .filter(col("__n") <= maxVideosPerHash)
-        .drop("__n")
-    else fh0)
-    fh.as("a").join(fh.as("b").hint("merge"),
-        col("a.h") === col("b.h") && col("a.id") < col("b.id"))
+    BucketPairs(frameBuckets(frameHashes, idCol, hashCol), Seq("h"),
+        Some(maxVideosPerHash).filter(_ > 0L),
+        stage = Materialize.checkpoint(_))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
@@ -669,7 +655,6 @@ object MediaDedup {
     val sh = if (materializedLeaf(hashed)) sh0
       else Materialize.checkpoint(sh0)
     val dh = Materialize.checkpoint(sh.select("h").distinct())
-    val banded0 = bandExplode(dh)
     // Optional oversize-bucket cap (the LSH/q107 discipline): a
     // (band, word) bucket holding > maxBucket DISTINCT signatures
     // is quadratic in it — on near-degenerate corpora (the
@@ -680,18 +665,6 @@ object MediaDedup {
     // key, n) rows are a first-class report frame,
     // [[nearDupDroppedBuckets]], sharing this exact grouping. 0 =
     // off (the exact pigeonhole contract; q154/q157 run uncapped).
-    // Cap via a window count on the band join's OWN (band, key)
-    // partitioning (r21, the q107/ngram shape): the groupBy +
-    // shuffle_hash anti-join this replaced paid two extra exchanges
-    // to learn a per-bucket count the join's exchange computes in
-    // place; per-bucket window work is row-linear.
-    val banded = if (maxBucket > 0L)
-      banded0.withColumn("__n", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("band", "key")))
-        .filter(col("__n") <= maxBucket)
-        .drop("__n")
-    else banded0
     // distinct-hash pairs within the radius (hdist ≥ 1: ha < hb).
     // The radius filter runs BEFORE the multi-band dedup aggregate
     // (r22, guide §2.3 shuffle-fewer-bytes): hdist is a pure function
@@ -700,9 +673,8 @@ object MediaDedup {
     // multi-band hits, and far pairs (most band collisions) can die
     // before the aggregate's hash table and exchange instead of
     // after it. Result set unchanged.
-    val hp = banded.as("a").join(banded.as("b").hint("merge"),
-        col("a.band") === col("b.band") &&
-        col("a.key") === col("b.key") && col("a.h") < col("b.h"))
+    val hp = BucketPairs(bandExplode(dh), Seq("band", "key"),
+        Some(maxBucket).filter(_ > 0L), id = "h")
       .select(col("a.h").as("ha"), col("b.h").as("hb"),
         bit_count(col("a.h").bitwiseXOR(col("b.h"))).cast("int")
           .as("hdist"))
@@ -804,6 +776,18 @@ object MediaDedup {
       case r => r.getClass.getSimpleName == "InMemoryRelation"
     }
 
+  /** The distinct (id, h) frame-hash buckets — ONE definition shared
+    * by [[sharedFrameVideoPairs]]' join and [[sharedFrameHotHashes]]'
+    * report. Undecodable-video sentinels (null hashes) are dropped,
+    * and a video repeating a frame counts once. */
+  private def frameBuckets(frameHashes: DataFrame, idCol: String,
+      hashCol: String): DataFrame =
+    frameHashes
+      .filter(col(hashCol).isNotNull)
+      .select(col(idCol).cast("long").as("id"),
+        col(hashCol).cast("long").as("h"))
+      .distinct()
+
   /** The 4x16-bit rotated-band explosion over a distinct-signature
     * frame — ONE definition shared by [[nearDupPairs]]'s band join
     * and [[nearDupDroppedBuckets]]'s report, so what the report says
@@ -838,9 +822,8 @@ object MediaDedup {
       .filter(col(hashCol).isNotNull)
       .select(col(hashCol).cast("long").as("h"))
       .distinct()
-    bandExplode(dh).groupBy("band", "key")
-      .agg(count(lit(1)).as("n_hashes"))
-      .filter(col("n_hashes") > maxBucket)
+    BucketPairs.hot(bandExplode(dh), Seq("band", "key"), maxBucket)
+      .withColumnRenamed("n", "n_hashes")
   }
 
   /** Cap-drop REPORT for [[sharedFrameVideoPairs]]
@@ -858,13 +841,8 @@ object MediaDedup {
     require(maxVideosPerHash > 0L,
       s"sharedFrameHotHashes reports an active cap; got " +
       s"$maxVideosPerHash")
-    frameHashes
-      .filter(col(hashCol).isNotNull)
-      .select(col(idCol).cast("long").as("id"),
-        col(hashCol).cast("long").as(hashCol))
-      .distinct()
-      .groupBy(hashCol)
-      .agg(count(lit(1)).as("n_videos"))
-      .filter(col("n_videos") > maxVideosPerHash)
+    BucketPairs.hot(frameBuckets(frameHashes, idCol, hashCol), Seq("h"),
+        maxVideosPerHash)
+      .select(col("h").as(hashCol), col("n").as("n_videos"))
   }
 }

@@ -599,11 +599,13 @@ object PqOps {
       quantize(col(vecCol), scaleBits).as("qv")))
     val cents: Array[Array[Long]] =
       coarseSeedSet(qcorp, stride, numCoarse, coarseSeed, coarseIters)
-    if (cents.isEmpty)
+    if (cents.isEmpty) {
+      Materialize.release(qcorp)
       return queries.sparkSession.emptyDataFrame
         .withColumn("q_id", lit(0L)).withColumn("rank", lit(1))
         .withColumn("n_id", lit(0L)).withColumn("adist", lit(0L))
         .limit(0)
+    }
     val cl = cbLit(cents)
     // Narrow per-row residual: assigned list + re-offset subtraction.
     // Cached (NOT checkpointed) so training iterations and
@@ -623,10 +625,11 @@ object PqOps {
       .select(col("id"), col("list_id"),
         zip_with(col("qv"), element_at(cl, col("list_id") + 1),
           (a, b) => a - b + lit(offR)).as("qv")))
-    // The corpus-scale residual cache is released once the (query·k
-    // bounded) result is materialized — without the eager checkpoint
-    // + finally-release, each call would leak a cached corpus RDD
-    // for the session lifetime (ADVICE r14).
+    // The corpus-scale residual cache and the quantized corpus under
+    // it are released once the (query·k bounded) result is
+    // materialized — without the eager checkpoint + finally-release,
+    // each call would leak two corpus-sized block sets for the
+    // session lifetime (ADVICE r14).
     try {
       val model = pqTrainOnQuantized(resCorp.select("id", "qv"),
         subspaces, codes, iters, scaleBits)
@@ -656,6 +659,9 @@ object PqOps {
           .select(col("q_id"), col("n_id"),
             adcSum(model.subspaces).as("adist")),
         k, col("adist"), "adist"))
-    } finally Materialize.release(resCorp)
+    } finally {
+      Materialize.release(resCorp)
+      Materialize.release(qcorp)
+    }
   }
 }

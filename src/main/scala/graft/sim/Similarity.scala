@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Materialize
+import graft.operators.{BucketPairs, Materialize}
 
 /** Approximate-nearest-neighbor search over embedding columns.
   *
@@ -100,22 +100,6 @@ object Similarity {
         }.reduce(_ + _).as("key"))
     }: _*)
 
-  /** Keys-below-cap filter: drops (band, key) buckets holding more
-    * than `maxBucketSize` rows BEFORE the self-join, the same posting-
-    * list cap production near-dup pipelines apply (a degenerate bucket
-    * — e.g. the all-zero region of the embedding space — would
-    * otherwise contribute O(bucket²) candidate pairs on its own). */
-  private def capBuckets(banded: DataFrame, maxBucketSize: Long): DataFrame = {
-    val ok = banded.groupBy("band", "key")
-      .agg(count(lit(1)).as("__freq"))
-      .filter(col("__freq") <= maxBucketSize)
-      .select("band", "key")
-      // corpus-derived key set: pin the build so an estimate-driven
-      // broadcast can never collect it driver-side at scale
-      .hint("shuffle_hash")
-    banded.join(ok, Seq("band", "key"), "left_semi")
-  }
-
   /** Embedding-cosine near-duplicate pairs: banded random-hyperplane
     * LSH prunes the pair space (same key in ≥1 band), then candidates
     * are rescored with exact cosine and thresholded. The scale path
@@ -130,8 +114,9 @@ object Similarity {
     * per band before the cap), 8 bands for recall ≈ 1−(1−p¹⁶)⁸ — at
     * cosine 0.95 about 0.8. For small dense demo corpora where most
     * pairs should collide, pass wider buckets (e.g. bands=4,
-    * rowsPerBand=4). `maxBucketSize` bounds any residual degenerate
-    * bucket so candidate volume stays ≤ bands·cap·n. */
+    * rowsPerBand=4). `maxBucketSize` drops any residual degenerate
+    * bucket (e.g. the all-zero region of the embedding space) before
+    * the self-join, so candidate volume stays ≤ bands·cap·n. */
   def cosineNearDupPairs(df: DataFrame, threshold: Double,
       bands: Int = 8, rowsPerBand: Int = 16, idCol: String = "vec_id",
       vecCol: String = "embedding", dim: Int = 64, seed: Long = 42L,
@@ -145,21 +130,16 @@ object Similarity {
     // Checkpointed: the banded sliver feeds both sides of the
     // self-join, and its hyperplane-expression lineage stays out of
     // the join plan.
-    val banded = capBuckets(df
+    val banded = Materialize.checkpoint(df
       .select(col(idCol).as("id"), col(vecCol).as("vec"))
       .withColumn("norm", sqrt(dot(col("vec"), col("vec"))))
       .select(col("id"), col("vec"), col("norm"),
         posexplode(graft.functions.HyperplaneBits.bandKeys(col("vec"),
           hp.map(_.toIndexedSeq).toIndexedSeq, bands, rowsPerBand))
-          .as(Seq("band", "key")))
-      .transform(Materialize.checkpoint(_)), maxBucketSize)
-    val scored = banded.as("a").join(banded.as("b").hint("merge"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key")
-          && col("a.id") < col("b.id"))
+          .as(Seq("band", "key"))))
+    val scored = BucketPairs(banded, Seq("band", "key"), Some(maxBucketSize))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        (floor(when(col("a.norm") > 0.0 && col("b.norm") > 0.0,
-          dot(col("a.vec"), col("b.vec")) / (col("a.norm") * col("b.norm")))
-          * p + 0.5) / p).as("cos"))
+        pairCos(p).as("cos"))
     // threshold BEFORE the multi-band dedup aggregate (r22, guide
     // §2.3 — the q50/q154 band-join shape): cos is a pure function of
     // the pair's vectors, identical in every band-copy, so min() is
@@ -319,6 +299,13 @@ object Similarity {
       .toDF("centroid_id", "centroid")
   }
 
+  /** Rounded cosine of a [[BucketPairs]] pair, from the `vec` and
+    * `norm` columns of its `a` and `b` sides (`p` = 10^roundScale). */
+  private def pairCos(p: Double): Column =
+    floor(when(col("a.norm") > 0.0 && col("b.norm") > 0.0,
+      dot(col("a.vec"), col("b.vec")) / (col("a.norm") * col("b.norm")))
+      * p + 0.5) / p
+
   /** Plane count for [[lshTopK]] when the caller doesn't pin one:
     * grows with corpus size so the expected bucket occupancy stays
     * ~`targetBucket` (in-bucket work O(n·targetBucket), not O(n²/2^c)
@@ -335,7 +322,10 @@ object Similarity {
     * planes from the corpus size via [[autoPlanes]] so bucket
     * occupancy — and with it the in-bucket quadratic term — stays
     * bounded as the corpus grows. `maxBucketSize` drops any residual
-    * oversize bucket before the self-join. */
+    * oversize bucket before the self-join. Each bucket pair is scored
+    * once and mirrored into both queries' candidate lists: cosine is
+    * symmetric bit for bit (the products commute and the sum runs in
+    * the same order). */
   def lshTopK(df: DataFrame, k: Int, planes: Int = 0,
       idCol: String = "vec_id", vecCol: String = "embedding",
       dim: Int = 64, roundScale: Int = 6,
@@ -344,21 +334,22 @@ object Similarity {
     val nPlanes = if (planes > 0) planes else autoPlanes(df.count())
     val hp = hyperplanes(nPlanes, dim)
     // single-band HyperplaneBits: the bucket id is band 0's key
-    val bucketed = capBuckets(
+    val bucketed = Materialize.checkpoint(
       df.select(col(idCol).as("id"), col(vecCol).as("vec"))
-        .withColumn("key", element_at(
+        .withColumn("bucket", element_at(
           graft.functions.HyperplaneBits.bandKeys(col("vec"),
             hp.map(_.toIndexedSeq).toIndexedSeq, 1, nPlanes), 1))
-        .withColumn("norm", sqrt(dot(col("vec"), col("vec"))))
-        .withColumn("band", lit(0))
-        .transform(Materialize.checkpoint(_)), maxBucketSize)
-      .withColumnRenamed("key", "bucket").drop("band")
-    val pairs = bucketed.as("a").join(bucketed.as("b").hint("merge"),
-        col("a.bucket") === col("b.bucket") && col("a.id") =!= col("b.id"))
-      .select(col("a.id").as("q_id"), col("b.id").as("n_id"),
-        (floor(when(col("a.norm") > 0.0 && col("b.norm") > 0.0,
-          dot(col("a.vec"), col("b.vec")) / (col("a.norm") * col("b.norm")))
-          * p + 0.5) / p).as("cos"))
+        .withColumn("norm", sqrt(dot(col("vec"), col("vec")))))
+    val pairs = BucketPairs(bucketed, Seq("bucket"), Some(maxBucketSize))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+        pairCos(p).as("cos"))
+      // cos is projected before the explode: once per pair, not per copy
+      .select(explode(array(
+          struct(col("id_a").as("q_id"), col("id_b").as("n_id")),
+          struct(col("id_b").as("q_id"), col("id_a").as("n_id")))).as("qn"),
+        col("cos"))
+      .select(col("qn.q_id").as("q_id"), col("qn.n_id").as("n_id"),
+        col("cos"))
     // column order as the historical window form (q_id, n_id, cos, rank)
     topKCut(pairs, k).select("q_id", "n_id", "cos", "rank")
   }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Materialize
+import graft.operators.{BucketPairs, Materialize}
 
 /** Corpus-scale deduplication operators.
   *
@@ -72,28 +72,6 @@ object DedupOps {
     // (and every shuffle fed from it) never carries shingle text.
     val sh = Materialize.checkpoint(shingleRows(docs, idCol, textCol, k)
       .select(col("id"), xxhash64(col("shingle")).as("shingle")))
-    // Pair-join prune: a shingle held by a single doc cannot produce a
-    // pair, and most shingles are singletons — dropping them up front
-    // shrinks the self-join input without changing the result. The
-    // per-shingle frequency comes from a count(*) window on the
-    // shingle key (r21): the groupBy + shuffle_hash left-semi this
-    // replaced paid two extra exchanges of the shingle table to learn
-    // a count ONE exchange computes in place. Per-key window work is
-    // row-linear; the hot-bucket exposure is identical to the
-    // semi-join probe it replaces, and the same never-broadcast rule
-    // holds trivially (no join side exists at all now — the earlier
-    // shape's AQE broadcast of the corpus-derived shared set is the
-    // documented factor-100 failure).
-    // Checkpoint adjudicated by a warm-JVM alternating A/B at sf0.1
-    // (4 rounds each, same session, on the earlier semi-join shape):
-    // with it min 2.64 s / median 2.75 s, without it 2.71 / 2.82 —
-    // materializing the capped table once beats recomputing it for
-    // both sides of the self-join, so it stays.
-    val capped = Materialize.checkpoint(sh
-      .withColumn("__freq",
-        count(lit(1)).over(Window.partitionBy("shingle")))
-      .filter(col("__freq") >= 2 && col("__freq") <= maxShingleFreq)
-      .drop("__freq"))
     // sh is distinct per (id, shingle) by construction, so plain count
     // (map-side combinable) equals countDistinct without its extra
     // dedup shuffle.
@@ -101,12 +79,14 @@ object DedupOps {
     // Corpus-derived sides are strategy-PINNED (the factor-1000
     // ngram run proved why: the unpinned downstream joins here were
     // planned as BroadcastHashJoin off post-aggregation estimates and
-    // collected a multi-GB side into the driver at 5M docs). Self-
-    // join: merge (spillable, AQE-skew-splittable). Size attach:
-    // shuffled-hash (two longs per doc, per-partition bounded) —
-    // never an estimate-driven broadcast.
-    val pairs = capped.as("a").join(capped.as("b").hint("merge"),
-        col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
+    // collected a multi-GB side into the driver at 5M docs). Size
+    // attach: shuffled-hash (two longs per doc, per-partition
+    // bounded) — never an estimate-driven broadcast.
+    // The capped shingle table is checkpointed once for both join
+    // sides: a warm-JVM alternating A/B at sf0.1 (4 rounds each) read
+    // min 2.64 s / median 2.75 s with it, 2.71 / 2.82 without.
+    val pairs = BucketPairs(sh, Seq("shingle"), Some(maxShingleFreq),
+        stage = Materialize.checkpoint(_))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("n_shared"))
     pairs
@@ -285,30 +265,15 @@ object DedupOps {
     * docs is 10¹² candidate pairs), so buckets larger than the cap
     * are dropped wholesale before pairing, exactly as the q33 LSH-ANN
     * oversize-bucket cap and production posting-list caps do. The
-    * default is a no-op (plans are unchanged when uncapped); the cap
-    * semi-join is corpus-derived and therefore SHUFFLE_HASH-pinned. */
+    * default is a no-op (plans are unchanged when uncapped). */
   def minhashCandidatePairs(docs: DataFrame, idCol: String,
       textCol: String, k: Int, bands: Int, rows: Int,
       maxBandFreq: Long = Long.MaxValue): DataFrame = {
     // feeds both sides of the candidate-pair self-join
-    val banded0 = Materialize.checkpoint(
+    val banded = Materialize.checkpoint(
       minhashBandKeys(docs, idCol, textCol, k, bands, rows))
-    // Cap via a window count on the self-join's OWN (band, key)
-    // partitioning (r21): the groupBy + shuffle_hash left-semi this
-    // replaced paid three extra exchanges to learn a per-bucket count
-    // the join's exchange can compute in place — the window sorts by
-    // its partition keys, which is exactly the merge join's required
-    // ordering, so the capped frame re-exchanges nothing. Per-bucket
-    // work is row-linear (the quadratic bucket is what the filter
-    // then drops), same skew exposure as the semi-join probe.
-    val banded = if (maxBandFreq == Long.MaxValue) banded0 else
-      banded0.withColumn("__freq",
-          count(lit(1)).over(Window.partitionBy("band", "key")))
-        .filter(col("__freq") <= maxBandFreq)
-        .drop("__freq")
-    banded.as("a").join(banded.as("b").hint("merge"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key")
-          && col("a.id") < col("b.id"))
+    BucketPairs(banded, Seq("band", "key"),
+        Some(maxBandFreq).filter(_ != Long.MaxValue))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("n_shared_bands"))
   }
@@ -643,9 +608,8 @@ object DedupOps {
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int): DataFrame = {
     val sh = Materialize.checkpoint(simhashTable(docs, idCol, textCol))
-    val bucketed = sh.withColumn("bucket", shiftright(col("sh"), 8))
-    bucketed.as("a").join(bucketed.as("b").hint("merge"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
+    BucketPairs(sh.withColumn("bucket", shiftright(col("sh"), 8)),
+        Seq("bucket"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         TextOps.hammingDistance(col("a.sh"), col("b.sh")).as("hamming"))
       .filter(col("hamming") <= maxHamming)
@@ -696,9 +660,7 @@ object DedupOps {
     // word columns, identical in every band-copy, so min() is only a
     // dedup — far pairs (most band collisions) die before the
     // aggregate's exchange instead of after it. Result set unchanged.
-    banded.as("a").join(banded.as("b").hint("merge"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key")
-          && col("a.id") < col("b.id"))
+    BucketPairs(banded, Seq("band", "key"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         ham.as("hamming"))
       .filter(col("hamming") <= maxHamming)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 
 import graft.core.{FileInfo, TableMeta, VariableMeta}
 import graft.pipeline.MergeLegality
+import graft.sim.PqOps
 import graft.text.VocabOps
 
 /** Persisted-RDD bookkeeping over `SparkContext.getPersistentRDDs`. */
@@ -45,6 +46,22 @@ class MaterializeReleaseSpec extends SparkSpec {
     val kept = leafRdds(hh)
     assert(ids.subsetOf(kept), s"persisted $ids, result reads $kept")
     assert(hh.as[(String, Long, Long)].collect().toSeq == Seq(("a", 8L, 16L)))
+    val before = persistent.size - ids.size
+    unpersist(spark, kept)
+    assert(persistent.size <= before)
+  }
+
+  test("PqOps.ivfPqTopKResidual keeps only the checkpoint its result reads") {
+    val vecs = (0L until 12L).map(i => (i, Seq(math.sin(i.toDouble),
+      math.cos(i.toDouble), (i % 3) * 0.3 - 0.3, (i % 4) * 0.2 - 0.3)
+      .map(_.toFloat)))
+    val corpus = vecs.toDF("vec_id", "embedding")
+    val (res, ids) = persistedBy(spark)(PqOps.ivfPqTopKResidual(
+      corpus.filter($"vec_id" < 3L), corpus, 2, subspaces = 2, codes = 4,
+      iters = 1, nProbe = 2, centroidStride = 3L))
+    val kept = leafRdds(res)
+    assert(ids.subsetOf(kept), s"persisted $ids, result reads $kept")
+    assert(res.count() == 6L)
     val before = persistent.size - ids.size
     unpersist(spark, kept)
     assert(persistent.size <= before)

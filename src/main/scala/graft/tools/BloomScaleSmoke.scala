@@ -22,8 +22,7 @@ object BloomScaleSmoke {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(100)
     val spark = graft.GraftSession()
-    val metrics = new StageMetrics
-    spark.sparkContext.addSparkListener(metrics)
+    val meter = graft.obs.Meter.on(spark)
     import graft.text.{SketchOps, TextOps}
 
     val mBits = 1 << 18
@@ -49,13 +48,10 @@ object BloomScaleSmoke {
     val shingled = corpus.select(col("doc_id"), docShingles)
 
     def timed(tag: String)(mk: => Array[(Long, Long)]): Array[(Long, Long)] = {
-      val w0 = metrics.shufWrite.get()
-      val t0 = System.nanoTime()
-      val out = mk
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (out, r) = meter.span(tag)(mk)
       println(f"""{"smoke":"bloom_$tag%s","factor":$factor,""" +
-        f""""docs":$nDocs,"sec":$sec%.1f,"hit_docs":${out.length},""" +
-        f""""shuf_write_mb":${(metrics.shufWrite.get() - w0) >> 20}}""")
+        f""""docs":$nDocs,"sec":${r.wallS}%.1f,"hit_docs":${out.length},""" +
+        f""""shuf_write_mb":${r.shuffleWriteBytes >> 20}}""")
       out
     }
 

@@ -2,9 +2,12 @@ package graft.tools
 
 
 /** Runtime join-strategy audit over the WHOLE oracle surface: runs
-  * every registry query to completion and prints the
-  * EXECUTED (post-AQE) join strategy counts per query — static plan
-  * dumps ([[Plans]]) cannot see runtime broadcast conversions, and
+  * every registry query to completion in a `graft.obs.Meter` span
+  * (building it, then writing every row and column to the `noop`
+  * sink, so no join is pruned away as under `count()`) and prints the
+  * join strategy counts of every execution that span ran, each read
+  * from its final (post-AQE) plan — static plan dumps ([[Plans]])
+  * cannot see runtime broadcast conversions, and
   * the round-13 factor-1000 failures came exactly from
   * estimate-driven BroadcastHashJoins the static audit had passed.
   *
@@ -23,24 +26,19 @@ object ExecutedJoins {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val which = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
     val spark = graft.GraftSession()
-    val kinds = Seq("BroadcastHashJoin" -> "bhj", "SortMergeJoin" -> "smj",
-      "ShuffledHashJoin" -> "shj", "BroadcastNestedLoopJoin" -> "bnlj",
-      "CartesianProduct" -> "cart")
+    val meter = graft.obs.Meter.on(spark)
     var flagged = 0
     graft.SparkEntry.registry.foreach { q =>
       val (name, fn) = (q.name, q.run)
       if (which.isEmpty || which.exists(name.startsWith)) {
         try {
-          val df = fn(spark, dir)
-          df.count() // execute so AQE finalizes every stage's strategy
-          val s = df.queryExecution.executedPlan.toString
-          val counts = kinds.map { case (k, a) =>
-            a -> k.r.findAllIn(s).length }
-          val line = counts.map { case (a, n) => s"$a=$n" }.mkString(",")
-          val hasB = counts.toMap.getOrElse("bhj", 0) > 0 ||
-            counts.toMap.getOrElse("bnlj", 0) > 0
-          if (hasB) flagged += 1
-          println(s"""{"query":"$name","joins":"$line"}""")
+          val (_, r) = meter.span(name) {
+            fn(spark, dir).write.format("noop").mode("overwrite").save()
+          }
+          val census = r.census
+          if (census.joins.contains("bhj") || census.joins.contains("bnlj"))
+            flagged += 1
+          println(s"""{"query":"$name","joins":"${census.joinLine}"}""")
         } catch { case e: Throwable =>
           val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
           println(s"""{"query":"$name","error":"${msg

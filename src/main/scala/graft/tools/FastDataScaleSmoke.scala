@@ -4,7 +4,6 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.{FileInfo, TableMeta, VariableMeta}
@@ -91,16 +90,11 @@ object FastDataScaleSmoke {
     } finally out.close()
   }
 
-  private def exchanges(df: DataFrame): Int =
-    "(?i)exchange".r
-      .findAllIn(df.queryExecution.executedPlan.toString).length
-
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(100)
     val rowsPerDay = args.lift(1).map(_.toInt).getOrElse(864000)
     val spark = graft.GraftSession()
-    val metrics = new StageMetrics
-    spark.sparkContext.addSparkListener(metrics)
+    val meter = graft.obs.Meter.on(spark)
 
     val meta = TableMeta(FileInfo.dummy, Seq(
       VariableMeta("TIMESTAMP", "TS", ""),
@@ -125,14 +119,10 @@ object FastDataScaleSmoke {
         Files.size(p.asInstanceOf[java.nio.file.Path])).sum
 
       def timed(phase: String)(body: => (Long, Int)): Unit = {
-        val tm0 = metrics.taskMs.get(); val g0 = metrics.gcMs.get()
-        val t0 = System.nanoTime()
-        val (n, exch) = body
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"""{"phase":"$phase","factor":$f,"sec":$sec%.1f,""" +
+        val ((n, exch), r) = meter.span(phase)(body)
+        println(f"""{"phase":"$phase","factor":$f,"sec":${r.wallS}%.1f,""" +
           f""""n":$n,"exchanges":$exch,""" +
-          f""""task_sec":${(metrics.taskMs.get() - tm0) / 1e3}%.1f,""" +
-          f""""gc_sec":${(metrics.gcMs.get() - g0) / 1e3}%.1f}""")
+          f""""cpu_sec":${r.cpuS}%.1f,"gc_sec":${r.gcS}%.1f}""")
       }
 
       println(f"""{"phase":"synth","factor":$f,"sec":$synthSec%.1f,""" +
@@ -142,7 +132,7 @@ object FastDataScaleSmoke {
         val ws = FastData.windowStats(
           df.select(col("DATETIME")), "DATETIME", 30, 10.0)
         val total = ws.agg(sum(col("n_rows"))).collect()(0).getLong(0)
-        (total, exchanges(ws))
+        (total, graft.obs.Census.of(ws.queryExecution.executedPlan).exchanges)
       }
       timed("shard_write") {
         val names = FastData.writeShards(

@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   * carrying the whole corpus) and asserts: (a) the operator
   * completes, (b) the cap semantics held (the hot bucket contributed
   * NOTHING — pair counts are exactly the small-bucket residue), and
-  * (c) reports task-metric spill so the buffered-group cost is
+  * (c) reports each arm's own spill and peak task execution memory,
+  * from its `graft.obs.Meter` span, so the buffered-group cost is
   * observable, not guessed. OOM/failure = smoke red.
   *
   * Run: `sbt 'runMain graft.tools.HotKeyCapSmoke [nHot]'`
@@ -28,32 +29,15 @@ object HotKeyCapSmoke {
   def main(args: Array[String]): Unit = {
     val nHot = args.headOption.map(_.toLong).getOrElse(1000000L)
     val spark = graft.GraftSession()
-    val spillMem = new java.util.concurrent.atomic.AtomicLong
-    val spillDisk = new java.util.concurrent.atomic.AtomicLong
-    val peakExec = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) {
-            spillMem.addAndGet(m.memoryBytesSpilled)
-            spillDisk.addAndGet(m.diskBytesSpilled)
-            peakExec.getAndAccumulate(m.peakExecutionMemory, math.max)
-          }
-        }
-      })
+    val meter = graft.obs.Meter.on(spark)
     def arm(name: String)(f: => (Long, Long)): Unit = {
-      val s0m = spillMem.get(); val s0d = spillDisk.get()
-      val t0 = System.nanoTime()
-      val (got, expect) = f
-      val sec = (System.nanoTime() - t0) / 1e9
+      val ((got, expect), r) = meter.span(name)(f)
       val ok = got == expect
       println(f"""{"arm":"$name","rows_hot":$nHot,"pairs":$got,""" +
-        f""""expect":$expect,"ok":$ok,"sec":$sec%.1f,""" +
-        f""""spill_mem_mb":${(spillMem.get() - s0m) >> 20},""" +
-        f""""spill_disk_mb":${(spillDisk.get() - s0d) >> 20},""" +
-        f""""peak_exec_mb":${peakExec.get() >> 20}}""")
+        f""""expect":$expect,"ok":$ok,"sec":${r.wallS}%.1f,""" +
+        f""""spill_mem_mb":${r.spillMemBytes >> 20},""" +
+        f""""spill_disk_mb":${r.spillDiskBytes >> 20},""" +
+        f""""peak_exec_mb":${r.peakExecBytes >> 20}}""")
       require(ok, s"$name: pair count $got != expected $expect")
     }
 

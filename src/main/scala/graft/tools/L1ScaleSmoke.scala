@@ -46,8 +46,7 @@ object L1ScaleSmoke {
     val outRoot = args.lift(1).getOrElse(
       s"${System.getProperty("java.io.tmpdir")}/graft_l1smoke")
     val spark = graft.GraftSession()
-    val metrics = new StageMetrics
-    spark.sparkContext.addSparkListener(metrics)
+    val meter = graft.obs.Meter.on(spark)
 
     val step = 1800L // half-hourly, the reference's native interval
     val yearTicks = 365L * 48
@@ -69,14 +68,11 @@ object L1ScaleSmoke {
     }
 
     def timed[A](label: String, f: Int)(body: => A): A = {
-      val w0 = metrics.shufWrite.get(); val r0 = metrics.shufRead.get()
-      val g0 = metrics.gcMs.get(); val t0 = System.nanoTime()
-      val out = body
-      println(f"""{"phase":"$label","factor":$f,""" +
-        f""""sec":${(System.nanoTime() - t0) / 1e9}%.1f,""" +
-        f""""shuf_write_mb":${(metrics.shufWrite.get() - w0) >> 20},""" +
-        f""""shuf_read_mb":${(metrics.shufRead.get() - r0) >> 20},""" +
-        f""""gc_sec":${(metrics.gcMs.get() - g0) / 1e3}%.1f}""")
+      val (out, r) = meter.span(label)(body)
+      println(f"""{"phase":"$label","factor":$f,"sec":${r.wallS}%.1f,""" +
+        f""""shuf_write_mb":${r.shuffleWriteBytes >> 20},""" +
+        f""""shuf_read_mb":${r.shuffleReadBytes >> 20},""" +
+        f""""gc_sec":${r.gcS}%.1f}""")
       out
     }
 
@@ -129,12 +125,7 @@ object L1ScaleSmoke {
         val masked = L1Pipeline.maskPlausible(converted)
         val out = L1Pipeline.withQcFlags(masked.df, "hour_ts")
           .withColumn("year", L1Pipeline.labelYear(col("hour_ts"), step))
-        val planStr = out.queryExecution.executedPlan.toString
-        val exch = "(?i)exchange".r.findAllIn(planStr).length
-        if (sys.env.contains("L1SMOKE_PLAN"))
-          planStr.linesIterator.filter(_.toLowerCase.contains("exchange"))
-            .foreach(l => println(s"[plan f$f] ${l.trim.take(120)}"))
-        (out, exch)
+        (out, graft.obs.Census.of(out.queryExecution.executedPlan).exchanges)
       }
 
       val dataDir = s"$outRoot/f$f/data"

@@ -2,11 +2,13 @@ package graft.tools
 
 /** Generic converged-floor probe — the q54 methodology (BENCH_NOTES
   * "Round 16: q54_merge_legality re-adjudicated", VERDICT r16 ask #1)
-  * for ANY registry query: N warm in-JVM timings plus a Spark-job
-  * tally per rep, so a drifted bench reading can be split into (a) steady-state plan cost vs (b)
-  * first-touch/JIT noise, and a recomputed-aggregation chain (the
-  * q54 defect class: job count far above the plan's natural action
-  * count) is visible directly. Usage:
+  * for ANY registry query: N warm in-JVM timings plus the jobs,
+  * stages, executed exchanges and executor CPU of each rep, read from
+  * one `graft.obs.Meter` span. Equal counters across a slow and a fast
+  * rep mean the wall moved with load; different jobs or exchanges
+  * mean the plan changed, and a recomputed-aggregation chain (the q54
+  * defect class: job count far above the plan's natural action count)
+  * is visible directly. Usage:
   * `runMain graft.tools.QueryProbe <sfDir> <reps> <query> [query…]`
   * — prints one JSON line per rep and a converged summary per query.
   */
@@ -28,24 +30,15 @@ object QueryProbe {
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", adv)
       case None => b0
     }).getOrCreate()
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      })
+    val meter = graft.obs.Meter.on(spark)
     queries.foreach { q =>
       val (name, fn) = (q.name, q.run)
       val times = (1 to reps).map { i =>
-        val j0 = jobs.get()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300)
-        println(f"""{"probe":"$name%s","rep":$i,"sec":$sec%.3f,""" +
-          s""""jobs":${jobs.get() - j0}}""")
-        sec
+        val (_, r) = meter.span(name)(fn(spark, sfDir).count())
+        println(f"""{"probe":"$name%s","rep":$i,"sec":${r.wallS}%.3f,""" +
+          s""""jobs":${r.jobs.size},"stages":${r.stages},""" +
+          f""""exchanges":${r.census.exchanges},"cpu_s":${r.cpuS}%.3f}""")
+        r.wallS
       }
       println(f"""{"probe":"$name%s","min":${times.min}%.3f,""" +
         f""""median":${times.sorted.apply(reps / 2)}%.3f,""" +

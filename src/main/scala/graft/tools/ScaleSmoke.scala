@@ -32,10 +32,6 @@ import org.apache.spark.sql.functions._
   * (phase, factor) plus a summary comparing Exchange counts.
   */
 object ScaleSmoke {
-  private def exchanges(df: DataFrame): Int =
-    "(?i)exchange".r
-      .findAllIn(df.queryExecution.executedPlan.toString).length
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(100)
@@ -50,8 +46,7 @@ object ScaleSmoke {
       .config("spark.driver.maxResultSize",
         sys.env.getOrElse("SPARK_GRAFT_MAX_RESULT", "8g"))
       .getOrCreate()
-    val metrics = new StageMetrics
-    spark.sparkContext.addSparkListener(metrics)
+    val meter = graft.obs.Meter.on(spark)
 
     // Normalize with the tokenizer's own alphabet, then fuse `q<copy>`
     // into every token ($1 backref keeps it inside the alnum run).
@@ -71,45 +66,32 @@ object ScaleSmoke {
 
     // Times CONSTRUCTION + count: packOffsets and ngramJaccardPairs
     // run eager internal materializations at call time, so the work
-    // must happen inside the clock, not before it. `mk` returns
-    // (result, planFrame): the Exchange count comes from planFrame
-    // (planning only, no re-execution) so a checkpointed result can
+    // must happen inside the span, not before it. `mk` returns
+    // (result, planFrame): the Exchange count is the census of
+    // planFrame's plan (no re-execution) so a checkpointed result can
     // still report its real pipeline shape.
     def timed(phase: String, f: Int)
         (mk: => (DataFrame, DataFrame)): DataFrame = {
-      val w0 = metrics.shufWrite.get(); val r0 = metrics.shufRead.get()
-      val s0 = metrics.nStages.get(); val tm0 = metrics.taskMs.get()
-      val g0 = metrics.gcMs.get()
-      val t0 = System.nanoTime()
-      val (df, planDf) = mk
-      val n = df.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // EXECUTED join strategies (post-AQE): the planning-time count
-      // can't see runtime broadcast conversions, and a broadcast of a
-      // corpus-derived side is exactly the 100 TB failure this smoke
-      // hunts — surface it per phase.
-      val executed = planDf.queryExecution.executedPlan.toString
-      def joins(s: String): String = Seq(
-        "BroadcastHashJoin" -> "bhj", "SortMergeJoin" -> "smj",
-        "ShuffledHashJoin" -> "shj", "BroadcastNestedLoopJoin" -> "bnlj")
-        .map { case (k, a) => s"$a=${k.r.findAllIn(s).length}" }
-        .mkString(",")
+      val ((df, planDf, n), r) = meter.span(phase) {
+        val (df, planDf) = mk
+        (df, planDf, df.count())
+      }
+      // EXECUTED join strategies (post-AQE) of every execution the
+      // phase ran: the planning-time count can't see runtime broadcast
+      // conversions, and a broadcast of a corpus-derived side is
+      // exactly the 100 TB failure this smoke hunts.
       println(s"""{"phase":"$phase","factor":$f,""" +
-        s""""joins":"${joins(executed)}"}""")
-      val storage = spark.sparkContext.getRDDStorageInfo
-        .map(i => i.memSize + i.diskSize).sum
-      val rd = Reading(phase, f, sec, n, df.rdd.getNumPartitions,
-        exchanges(planDf),
-        (metrics.shufWrite.get() - w0) >> 20,
-        (metrics.shufRead.get() - r0) >> 20, storage >> 20)
+        s""""joins":"${r.census.joinLine}"}""")
+      val rd = Reading(phase, f, r.wallS, n, df.rdd.getNumPartitions,
+        graft.obs.Census.of(planDf.queryExecution.executedPlan).exchanges,
+        r.shuffleWriteBytes >> 20, r.shuffleReadBytes >> 20,
+        r.peakStorageBytes >> 20)
       readings += rd
       println(f"""{"phase":"$phase","factor":$f,"sec":${rd.sec}%.1f,""" +
         f""""rows":$n,"parts":${rd.parts},"exchanges":${rd.exch},""" +
         f""""shuf_write_mb":${rd.shufWriteMb},"shuf_read_mb":${rd.shufReadMb},""" +
-        f""""peak_storage_mb":${rd.storageMb},""" +
-        f""""stages":${metrics.nStages.get() - s0},""" +
-        f""""task_sec":${(metrics.taskMs.get() - tm0) / 1e3}%.1f,""" +
-        f""""gc_sec":${(metrics.gcMs.get() - g0) / 1e3}%.1f}""")
+        f""""peak_storage_mb":${rd.storageMb},"stages":${r.stages},""" +
+        f""""cpu_sec":${r.cpuS}%.1f,"gc_sec":${r.gcS}%.1f}""")
       df
     }
 

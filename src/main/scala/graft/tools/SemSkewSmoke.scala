@@ -37,8 +37,7 @@ object SemSkewSmoke {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val spark = graft.GraftSession()
-    val metrics = new StageMetrics
-    spark.sparkContext.addSparkListener(metrics)
+    val meter = graft.obs.Meter.on(spark)
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select("vec_id", "embedding")
@@ -56,20 +55,19 @@ object SemSkewSmoke {
       s""""pairs_unguarded":${n * (n - 1) / 2}}""")
 
     def arm(name: String, budget: Long): Set[Long] = {
-      val w0 = metrics.shufWrite.get(); val r0 = metrics.shufRead.get()
-      val t0 = System.nanoTime()
-      val out = graft.sim.SemDedup.semDedup(emb, 0.5,
-          centroidStride = n, maxPairsPerCluster = budget)
-        .localCheckpoint(eager = true)
-      val kept = out.filter(col("keep")).select("id")
-        .collect().map(_.getLong(0)).toSet
-      val comps = out.select("component").distinct().count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"""{"arm":"$name","sec":$sec%.1f,"kept":${kept.size},""" +
+      val ((kept, comps), r) = meter.span(name) {
+        val out = graft.sim.SemDedup.semDedup(emb, 0.5,
+            centroidStride = n, maxPairsPerCluster = budget)
+          .localCheckpoint(eager = true)
+        (out.filter(col("keep")).select("id")
+          .collect().map(_.getLong(0)).toSet,
+          out.select("component").distinct().count())
+      }
+      println(f"""{"arm":"$name","sec":${r.wallS}%.1f,"kept":${kept.size},""" +
         f""""components":$comps,""" +
-        f""""shuf_write_mb":${(metrics.shufWrite.get() - w0) >> 20},""" +
-        f""""shuf_read_mb":${(metrics.shufRead.get() - r0) >> 20},""" +
-        f""""task_sec":${metrics.taskMs.get() / 1e3}%.1f}""")
+        f""""shuf_write_mb":${r.shuffleWriteBytes >> 20},""" +
+        f""""shuf_read_mb":${r.shuffleReadBytes >> 20},""" +
+        f""""cpu_sec":${r.cpuS}%.1f}""")
       kept
     }
 

@@ -37,16 +37,11 @@ import org.apache.spark.sql.functions._
   * (defaults `/root/testdata/sf0.1`, 100).
   */
 object SimScaleSmoke {
-  private def exchanges(df: DataFrame): Int =
-    "(?i)exchange".r
-      .findAllIn(df.queryExecution.executedPlan.toString).length
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(100)
     val spark = graft.GraftSession()
-    val metrics = new StageMetrics
-    spark.sparkContext.addSparkListener(metrics)
+    val meter = graft.obs.Meter.on(spark)
 
     // Copy c of vector v: ids re-keyed to `vec_id * f + c` (copy 0 is
     // id-isomorphic to the base under id -> id * f), elements
@@ -75,26 +70,20 @@ object SimScaleSmoke {
 
     def timed(phase: String, f: Int)
         (mk: => (DataFrame, DataFrame)): DataFrame = {
-      val w0 = metrics.shufWrite.get(); val r0 = metrics.shufRead.get()
-      val s0 = metrics.nStages.get(); val tm0 = metrics.taskMs.get()
-      val g0 = metrics.gcMs.get()
-      val t0 = System.nanoTime()
-      val (df, planDf) = mk
-      val n = df.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val storage = spark.sparkContext.getRDDStorageInfo
-        .map(i => i.memSize + i.diskSize).sum
-      val rd = Reading(phase, f, sec, n, exchanges(planDf),
-        (metrics.shufWrite.get() - w0) >> 20,
-        (metrics.shufRead.get() - r0) >> 20, storage >> 20)
+      val ((df, planDf, n), r) = meter.span(phase) {
+        val (df, planDf) = mk
+        (df, planDf, df.count())
+      }
+      val rd = Reading(phase, f, r.wallS, n,
+        graft.obs.Census.of(planDf.queryExecution.executedPlan).exchanges,
+        r.shuffleWriteBytes >> 20, r.shuffleReadBytes >> 20,
+        r.peakStorageBytes >> 20)
       readings += rd
       println(f"""{"phase":"$phase","factor":$f,"sec":${rd.sec}%.1f,""" +
         f""""rows":$n,"exchanges":${rd.exch},""" +
         f""""shuf_write_mb":${rd.shufWriteMb},"shuf_read_mb":${rd.shufReadMb},""" +
-        f""""peak_storage_mb":${rd.storageMb},""" +
-        f""""stages":${metrics.nStages.get() - s0},""" +
-        f""""task_sec":${(metrics.taskMs.get() - tm0) / 1e3}%.1f,""" +
-        f""""gc_sec":${(metrics.gcMs.get() - g0) / 1e3}%.1f}""")
+        f""""peak_storage_mb":${rd.storageMb},"stages":${r.stages},""" +
+        f""""cpu_sec":${r.cpuS}%.1f,"gc_sec":${r.gcS}%.1f}""")
       df
     }
 

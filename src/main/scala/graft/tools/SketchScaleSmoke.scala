@@ -36,8 +36,7 @@ object SketchScaleSmoke {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(1000)
     val spark = graft.GraftSession()
-    val metrics = new StageMetrics
-    spark.sparkContext.addSparkListener(metrics)
+    val meter = graft.obs.Meter.on(spark)
     import graft.text.SketchOps
 
     val nPart = spark.sessionState.conf.numShufflePartitions
@@ -67,19 +66,17 @@ object SketchScaleSmoke {
       println(s"""{"factor":$f,"docs":$nDocs}""")
       def run(op: String, mk: => org.apache.spark.sql.DataFrame,
           maxRows: Long, maxPartials: Long): Unit = {
-        val w0 = metrics.shufWrite.get(); val r0 = metrics.shufRecs.get()
-        val t0 = System.nanoTime()
-        val df = mk
-        val rows = df.count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        val exch = "(?i)exchange".r
-          .findAllIn(df.queryExecution.executedPlan.toString).length
-        val partials = metrics.shufRecs.get() - r0
+        val ((df, rows), m) = meter.span(op) {
+          val df = mk
+          (df, df.count())
+        }
+        val exch = graft.obs.Census.of(df.queryExecution.executedPlan).exchanges
+        val partials = m.shuffleWriteRecords
         assert(rows <= maxRows, s"$op: $rows rows > saturation $maxRows")
         assert(partials <= maxPartials,
           s"$op: $partials shuffle rows > cap $maxPartials")
-        val r = R(op, f, sec, rows, exch,
-          (metrics.shufWrite.get() - w0) / 1048576.0, partials)
+        val r = R(op, f, m.wallS, rows, exch,
+          m.shuffleWriteBytes / 1048576.0, partials)
         readings += r
         println(f"""{"op":"$op","factor":$f,"sec":${r.sec}%.1f,""" +
           f""""rows":$rows,"exchanges":$exch,""" +

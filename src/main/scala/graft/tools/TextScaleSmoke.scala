@@ -20,16 +20,11 @@ import org.apache.spark.sql.functions._
   * (defaults `/root/testdata/sf0.1`, 100).
   */
 object TextScaleSmoke {
-  private def exchanges(df: DataFrame): Int =
-    "(?i)exchange".r
-      .findAllIn(df.queryExecution.executedPlan.toString).length
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(100)
     val spark = graft.GraftSession()
-    val metrics = new StageMetrics
-    spark.sparkContext.addSparkListener(metrics)
+    val meter = graft.obs.Meter.on(spark)
 
     def amplified(f: Int): DataFrame =
       spark.read.parquet(s"$sfDir/documents.parquet")
@@ -54,19 +49,17 @@ object TextScaleSmoke {
 
     def timed(phase: String, f: Int)(mk: => DataFrame): Unit = {
       if (only.nonEmpty && !only.exists(phase.startsWith)) return
-      val w0 = metrics.shufWrite.get(); val r0 = metrics.shufRead.get()
-      val tm0 = metrics.taskMs.get(); val g0 = metrics.gcMs.get()
-      val t0 = System.nanoTime()
-      val df = mk
-      val n = df.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      readings += Reading(phase, f, sec, n, exchanges(df))
-      println(f"""{"phase":"$phase","factor":$f,"sec":$sec%.1f,""" +
-        f""""rows":$n,"exchanges":${exchanges(df)},""" +
-        f""""shuf_write_mb":${(metrics.shufWrite.get() - w0) >> 20},""" +
-        f""""shuf_read_mb":${(metrics.shufRead.get() - r0) >> 20},""" +
-        f""""task_sec":${(metrics.taskMs.get() - tm0) / 1e3}%.1f,""" +
-        f""""gc_sec":${(metrics.gcMs.get() - g0) / 1e3}%.1f}""")
+      val ((df, n), r) = meter.span(phase) {
+        val df = mk
+        (df, df.count())
+      }
+      val exch = graft.obs.Census.of(df.queryExecution.executedPlan).exchanges
+      readings += Reading(phase, f, r.wallS, n, exch)
+      println(f"""{"phase":"$phase","factor":$f,"sec":${r.wallS}%.1f,""" +
+        f""""rows":$n,"exchanges":$exch,""" +
+        f""""shuf_write_mb":${r.shuffleWriteBytes >> 20},""" +
+        f""""shuf_read_mb":${r.shuffleReadBytes >> 20},""" +
+        f""""cpu_sec":${r.cpuS}%.1f,"gc_sec":${r.gcS}%.1f}""")
     }
 
     Seq(1, factor).foreach { f =>

@@ -34,8 +34,6 @@ object VocabFertilitySmoke {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(100)
     val spark = graft.GraftSession()
-    val metrics = new StageMetrics
-    spark.sparkContext.addSparkListener(metrics)
     import graft.text.{BpeOps, TextOps, VocabOps}
 
     // TextScaleSmoke amplification: per-token copy markers keep texts
@@ -59,9 +57,7 @@ object VocabFertilitySmoke {
         salt = "fsmoke")
       val rep = BpeOps.fertilityReport(amplified, "text",
         Seq("source", "lang"), model)
-      val ex = "(?i)exchange".r
-        .findAllIn(rep.queryExecution.executedPlan.toString).length
-      (rep.count(), ex)
+      (rep.count(), graft.obs.Census.of(rep.queryExecution.executedPlan).exchanges)
     }
 
     // ---- 2. streaming vocab through three drains ----

@@ -8,6 +8,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.{FileInfo, TableMeta, VariableMeta}
+import graft.obs.Meter
 import graft.pipeline.FastData
 import graft.sources.Toa5
 
@@ -34,22 +35,6 @@ class FastDataSpec extends SparkSpec {
       (ts, ux, s"d$i")
     }
     rows.toDF("DATETIME", "Ux", "Diag")
-  }
-
-  /** Jobs run inside `body`, via a job group + status tracker (the
-    * listener bus is async, so poll until the count is stable). */
-  private def jobsRun(group: String)(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, group, interruptOnCancel = false)
-    try body finally sc.clearJobGroup()
-    var last = -1
-    var cur = sc.statusTracker.getJobIdsForGroup(group).length
-    while (cur != last) {
-      Thread.sleep(200)
-      last = cur
-      cur = sc.statusTracker.getJobIdsForGroup(group).length
-    }
-    cur
   }
 
   test("writeShards is byte-identical to per-window Toa5.write") {
@@ -101,14 +86,14 @@ class FastDataSpec extends SparkSpec {
   test("writeShards job count is independent of window count") {
     val out1 = Files.createTempDirectory("shards_j1")
     val out2 = Files.createTempDirectory("shards_j2")
-    val jobsSmall = jobsRun("shards-small") {
+    val jobsSmall = Meter.on(spark).span("shards-small") {
       FastData.writeShards(frame(2), meta, "DATETIME", 1,
         out1.toString, "Site_fast")
-    }
-    val jobsBig = jobsRun("shards-big") {
+    }._2.jobs.size
+    val jobsBig = Meter.on(spark).span("shards-big") {
       FastData.writeShards(frame(8), meta, "DATETIME", 1,
         out2.toString, "Site_fast")
-    }
+    }._2.jobs.size
     assert(jobsBig == jobsSmall,
       s"job count grew with windows: $jobsSmall -> $jobsBig")
     // One action: under AQE the window shuffle materializes as its own
@@ -129,38 +114,12 @@ class FastDataSpec extends SparkSpec {
   }
 
   test("writeShards is one SQL execution with one exchange") {
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.Exchange
-    def exchanges(p: SparkPlan): Int =
-      (p match { case _: Exchange => 1; case _ => 0 }) + (p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case _ => p.children
-      }).map(exchanges).sum
-    val marker = "writeShards-execution-marker"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      private def record(f: String, qe: QueryExecution) =
-        seen.add(if (qe.logical.toString.contains(marker)) (marker, 0)
-          else (f, exchanges(qe.executedPlan)))
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = record(f, qe)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = record(f, qe)
-    }
     val out = Files.createTempDirectory("shards_qe")
     val df = frame(2)
-    spark.listenerManager.register(listener)
-    try {
+    val (_, r) = Meter.on(spark).span("writeShards") {
       FastData.writeShards(df, meta, "DATETIME", 1, out.toString, "Site_fast")
-      // the listener bus is FIFO: once the marker query is seen, every
-      // execution writeShards started has been delivered before it
-      spark.sql(s"SELECT '$marker'").collect()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.toArray.exists(_ == ((marker, 0))) && System.nanoTime() < deadline)
-        Thread.sleep(50)
-    } finally spark.listenerManager.unregister(listener)
-    val events = seen.toArray.toSeq.map(_.asInstanceOf[(String, Int)])
-    assert(events.lastOption.contains((marker, 0)), s"marker not delivered: $events")
-    assert(events.init == Seq(("writeShards", 1)), s"executions: $events")
+    }
+    val events = r.executions.map(e => (e.funcName, e.census.exchanges))
+    assert(events == Seq(("writeShards", 1)), s"executions: $events")
   }
 }

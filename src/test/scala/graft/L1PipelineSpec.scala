@@ -93,29 +93,11 @@ class L1PipelineSpec extends SparkSpec {
       (ts("2024-01-01 00:30:00"), 1.0), (ts("2024-01-01 01:00:00"), 2.0))
       .toDF("DATETIME", "Ta"), meta(("Ta", "degC")))
     val dir = Files.createTempDirectory("lake1").toString
-    val marker = "writeLake-execution-marker"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      private def record(qe: org.apache.spark.sql.execution.QueryExecution) =
-        seen.add(if (qe.logical.toString.contains(marker)) marker else "run")
-      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit = record(qe)
-      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = record(qe)
-    }
-    spark.listenerManager.register(listener)
-    try {
+    val (_, r) = graft.obs.Meter.on(spark).span("writeLake") {
       L1Pipeline.writeLake(c, "DATETIME", 1800, dir, "TestSite")
-      // the listener bus is FIFO: once the marker query is seen, every
-      // execution writeLake started has been delivered before it
-      spark.sql(s"SELECT '$marker'").collect()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains(marker) && System.nanoTime() < deadline)
-        Thread.sleep(50)
-    } finally spark.listenerManager.unregister(listener)
-    val events = seen.toArray.toSeq
-    assert(events.lastOption.contains(marker), s"marker not delivered: $events")
-    assert(events.count(_ == "run") == 1, s"executions: $events")
+    }
+    val events = r.executions.map(_.funcName)
+    assert(events.size == 1, s"executions: $events")
   }
 
   test("writeLake refuses a frame with no rows by site name") {

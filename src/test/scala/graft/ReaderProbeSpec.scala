@@ -2,10 +2,10 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.core.{FileInfo, TableMeta, VariableMeta}
+import graft.obs.Meter
 import graft.pipeline.L1Pipeline
 import graft.sources.{CsiXml, NetCdf}
 
@@ -15,31 +15,8 @@ class ReaderProbeSpec extends SparkSpec {
 
   /** `read`'s result and the number of Spark jobs it started. */
   private def jobsDuring[A](read: => A): (A, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val fenced = new java.util.concurrent.CountDownLatch(1)
-    // listener events arrive in order: once the fence job's start is
-    // seen, any job the read ran has been counted
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some("probe-read") => jobs.incrementAndGet()
-          case Some("probe-fence") => fenced.countDown()
-          case _ =>
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("probe-read", "read")
-      val out = read
-      sc.setJobGroup("probe-fence", "fence")
-      sc.parallelize(Seq(1), 1).count()
-      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (out, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val (out, r) = Meter.on(spark).span("read")(read)
+    (out, r.jobs.size)
   }
 
   test("readNetCdf of a directory runs no Spark job before an action") {

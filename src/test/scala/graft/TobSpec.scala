@@ -326,36 +326,13 @@ class TobSpec extends SparkSpec {
   }
 
   test("Tob.read plans from the header alone and runs no Spark job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val dir = Files.createTempDirectory("tobjobs")
     Files.write(dir.resolve("a.dat"), tob1Fixture())
-    val readJobs = new java.util.concurrent.atomic.AtomicInteger
-    val fenced = new java.util.concurrent.CountDownLatch(1)
-    // listener events arrive in order: once the fence job's start is
-    // seen, any job the read ran has been counted
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some("tob-read") => readJobs.incrementAndGet()
-          case Some("tob-fence") => fenced.countDown()
-          case _ =>
-        }
+    val (parsed, r) = graft.obs.Meter.on(spark).span("Tob.read") {
+      Tob.read(spark, dir.toString)
     }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("tob-read", "Tob.read")
-      val parsed = Tob.read(spark, dir.toString)
-      sc.setJobGroup("tob-fence", "fence")
-      sc.parallelize(Seq(1), 1).count()
-      sc.clearJobGroup()
-      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      assert(readJobs.get == 0)
-      assert(parsed.meta.info.tableName == "fast")
-      assert(parsed.data.count() == 3)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    assert(r.jobs.size == 0)
+    assert(parsed.meta.info.tableName == "fast")
+    assert(parsed.data.count() == 3)
   }
 }

@@ -2,8 +2,9 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
-import graft.operators.{BucketPairs, Materialize}
+import graft.operators.{BucketPairs, Materialize, UnionFind}
 
 /** Corpus-scale deduplication operators.
   *
@@ -326,50 +327,112 @@ object DedupOps {
         size(filter(zip_with(col("sig_a"), col("sig_b"),
           (x, y) => x === y), b => b)).cast("double") / size(col("sig_a")))
 
-  /** Connected components over candidate pairs: every doc is labeled
-    * with the minimum doc id reachable through the pair graph (its
-    * dedup cluster's canonical id). Iterative min-label propagation
-    * with a pointer-jump each round — the hop takes the min over the
-    * closed neighborhood, the jump then adopts the label's own label,
-    * so the reachable-min spreads with doubling depth and the loop
-    * converges in O(log diameter) rounds, not O(diameter). Near-dup
-    * graphs are unions of small cliques (1–2 rounds), but a
-    * pathological template-spam chain of diameter d now needs only
-    * ~log2(d) rounds, so the default `maxIters` covers diameters into
-    * the thousands instead of aborting the job.
-    */
-  /** Instrumentation only: rounds taken by the most recent
-    * [[connectedComponents]] call in this JVM (scale smokes record
-    * it next to wall/exchange metrics); not part of the operator
-    * contract and not synchronized across concurrent callers. */
-  @volatile private[graft] var lastCcRounds: Int = -1
-
+  /** Connected components over candidate pairs: every node is labeled
+    * with the minimum id reachable through the pair graph (its dedup
+    * cluster's canonical id); a node in no pair is its own component.
+    * Extra `nodes` columns pass through, so a caller that carries a
+    * payload needs no second join; `markLabeled` adds `__labeled`.
+    *
+    * Only the edge sliver (pairs and their endpoints) is labeled; one
+    * job fills its lazy checkpoint and counts its edges, and the count
+    * picks one of two paths:
+    *  - union-find ([[graft.operators.UnionFind]]): when the edges fit
+    *    one task's execution-memory share
+    *    ([[graft.operators.UnionFind.taskShare]], derived from the
+    *    executor memory, `spark.memory.fraction` and the task slots;
+    *    no knob) and the ids are integral, one task reads every edge
+    *    through a narrow `coalesce(1)` and labels the endpoints. One
+    *    more job, whatever the graph's diameter; its arrays are
+    *    accounted execution memory, so a graph that outgrows the
+    *    estimate fails by name and never returns partial labels;
+    *  - label-propagation rounds, for graphs that do not fit: each
+    *    round's hop takes the min label over a node's closed
+    *    neighborhood and, from round 3, a pointer jump adopts the
+    *    label's own label, so the loop converges in O(log diameter)
+    *    rounds; `maxIters` bounds them and a graph that needs more
+    *    fails loudly rather than being mislabeled.
+    * Both give the same labels, in the ids' (widened) type. */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
-      maxIters: Int = 10, markLabeled: Boolean = false): DataFrame = {
-    // checkpoint rather than cache: an iterative dataflow must
-    // CUT LINEAGE each round, or each round's plan embeds the
-    // previous round's twice over and Catalyst re-analysis grows
-    // exponentially with the iteration count. Checkpointed frames
-    // here are sliver-sized (edges + their endpoints only — docs in
-    // no candidate pair keep component = id and never enter the
-    // loop), so materializing them is cheap even at corpus scale.
-    // materialize the (expensive) pair pipeline once, then symmetrize
-    // the checkpointed sliver by unioning with its own swap
+      maxIters: Int = 10, markLabeled: Boolean = false): DataFrame =
+    components(nodes, pairs, maxIters, markLabeled,
+      UnionFind.taskShare(pairs.sparkSession))._1
+
+  /** [[connectedComponents]] under a task-memory `budget` in bytes,
+    * with the label-propagation rounds it ran: 0 when the edges fit
+    * `budget` and the union-find task labeled them. */
+  private[graft] def components(nodes: DataFrame, pairs: DataFrame,
+      maxIters: Int, markLabeled: Boolean,
+      budget: Long): (DataFrame, Int) = {
+    val carry = nodes.columns.filter(_ != "id").toSeq
+    require(!carry.contains("c") && !carry.contains("component") &&
+      !carry.contains("__labeled"),
+      "connectedComponents: nodes must not carry 'c'/'component'/" +
+      "'__labeled' columns")
+    // the pair pipeline runs once: every later read is of this sliver
     val half = Materialize.checkpoint(
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
-    // Symmetrized edges hash-partitioned on dst ONCE and CACHED
-    // (r22, guide §2.4 establish-the-partitioning-once): every
-    // round's neighbor join keys on dst, and round 1's min-neighbor
-    // aggregate keys on dst as well (the edge list is symmetric, so
-    // groupBy(dst).min(src) ≡ groupBy(src).min(dst)) — so one
-    // exchange serves the whole loop and the per-round edge-side
-    // re-exchange of this STATIC table (the loop's single biggest
-    // stage-count driver: 7 rounds on the SemDedup ε-graph = 7
-    // identical shuffles) disappears. A cache, because a checkpoint
-    // loses the dst partitioning. Lineage stays shallow — the
-    // cached plan reads the half CHECKPOINT, so nothing of the pair
-    // pipeline re-enters any round's plan — and the entry is
-    // released at loop end.
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst")),
+      eager = false)
+    val n = countRows(half)
+    val types = Seq(half.schema("src").dataType, half.schema("dst").dataType)
+    val integral = types.forall {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    val (labels, rounds) =
+      if (integral && UnionFind.fits(n, budget))
+        (Materialize.checkpoint(UnionFind(half, n, types.maxBy(_.defaultSize))),
+          0)
+      else propagate(half, maxIters)
+    Materialize.release(half)
+    // Relabel the full node set lazily — the big table is never
+    // materialized here. labels is corpus-derived (edge-endpoint-sized):
+    // the build side is strategy-PINNED shuffle_hash — an AQE broadcast
+    // that fits at test SF would be a driver-resident blowup at 100×.
+    val relabeled = nodes
+      .join(labels.withColumnRenamed("component", "c")
+        .hint("shuffle_hash"), Seq("id"), "left")
+    val outCols = (col("id") +: carry.map(col)) :+
+      coalesce(col("c"), col("id")).as("component")
+    // `__labeled` ⇔ the id is an edge endpoint ⇔ its component has ≥ 2
+    // members (every member of a multi-node component touches an edge;
+    // a node in no pair is its own singleton). Survivor policies use it
+    // to run their per-component exemplar stage over ONLY the labeled
+    // sliver — singletons are their own survivor with zero shuffle —
+    // instead of exchanging the whole corpus on the component key.
+    val out =
+      if (markLabeled)
+        relabeled.select(outCols :+ col("c").isNotNull.as("__labeled"): _*)
+      else relabeled.select(outCols: _*)
+    (out, rounds)
+  }
+
+  /** Rows of `df`, counted in ONE job over every partition — which is
+    * also what completes a lazy checkpoint of `df`. */
+  private def countRows(df: DataFrame): Long =
+    df.sparkSession.sparkContext.runJob(df.queryExecution.toRdd,
+      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+        var c = 0L
+        while (it.hasNext) { it.next(); c += 1 }
+        c
+      }).sum
+
+  /** The rounds path of [[connectedComponents]] over the checkpointed
+    * `half` edges: (id, component) for every endpoint, checkpointed,
+    * and the rounds it took. */
+  private def propagate(half: DataFrame, maxIters: Int): (DataFrame, Int) = {
+    // Each round's frame is checkpointed rather than cached: an
+    // iterative dataflow must CUT LINEAGE each round, or each round's
+    // plan embeds the previous round's twice over and Catalyst
+    // re-analysis grows exponentially with the iteration count.
+    //
+    // Symmetrized edges, hash-partitioned on dst ONCE and CACHED:
+    // every round's neighbor join keys on dst, and round 1's
+    // min-neighbor aggregate keys on dst as well (the edge list is
+    // symmetric, so groupBy(dst).min(src) ≡ groupBy(src).min(dst)), so
+    // one exchange serves the whole loop instead of one re-exchange of
+    // this static table per round. A cache, because a checkpoint loses
+    // the dst partitioning; the cached plan reads the half checkpoint,
+    // so nothing of the pair pipeline re-enters any round's plan.
     val edges = Materialize.cache(half.union(
         half.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(half.sparkSession.sessionState.conf.numShufflePartitions,
@@ -379,32 +442,28 @@ object DedupOps {
     var converged = false
     while (iter < maxIters && !converged) {
       // One round = one aggregation: each node's next label is the min
-      // over {its own label} ∪ {neighbors' labels}. Unioning the self
-      // labels into the neighbor stream replaces the old
-      // join+groupBy+left-join round with a single shuffle on id
-      // (map-side combinable), and the same materialized pass carries
-      // the convergence signal (min(neighbor) < own ⇒ not converged).
+      // over {its own label} ∪ {neighbors' labels}; the self labels
+      // ride the neighbor stream, so the round is one map-side-
+      // combinable shuffle on id, and `own` carries the convergence
+      // signal (min(neighbor) < own ⇒ not converged).
       val hop =
         if (iter == 0)
-          // Round 1 fused (r21): labels start as the identity
-          // (component = id), so the neighbor join against them IS
-          // the edge list — the round reduces to ONE map-side-
-          // combinable aggregation over the edge sliver (min
-          // neighbor per node, least'd with the node's own id), with
-          // no labels-init distinct/checkpoint pass and no join.
-          // own = id carries the convergence signal unchanged.
-          // Keyed on dst (r22): symmetry makes groupBy(dst).min(src)
-          // the same table, and dst is the partitioning the edges
-          // checkpoint already carries — round 1 exchanges nothing.
+          // labels start as the identity (component = id), so the
+          // neighbor join against them IS the edge list: round 1 is
+          // one aggregation over the edges, keyed on their dst
+          // partitioning, with no join and no exchange
           edges.groupBy(col("dst").as("id"))
             .agg(min(col("src")).as("__mn"))
             .select(col("id"),
               least(col("id"), col("__mn")).as("component"),
               col("id").as("own"))
         else {
+          // labels is edge-endpoint-sized: the build side is PINNED
+          // shuffle_hash, never an AQE size-estimate broadcast
           val viaNeighbors = edges
             .join(labels.withColumnRenamed("id", "dst")
-              .withColumnRenamed("component", "n_comp"), Seq("dst"))
+              .withColumnRenamed("component", "n_comp")
+              .hint("shuffle_hash"), Seq("dst"))
             .select(col("src").as("id"), col("n_comp"),
               lit(null).cast(labels.schema("component").dataType)
                 .as("own"))
@@ -415,63 +474,24 @@ object DedupOps {
             .agg(min(col("n_comp")).as("component"),
                  min(col("own")).as("own"))
         }
-      // LAZY checkpoint + per-partition convergence fold: ONE job,
-      // ZERO exchanges, both materializes the round's checkpoint
-      // blocks and returns the changed count. r21 rode the count on
-      // an agg over ck (one action, but its partial→final aggregate
-      // still planned an exchange, which AQE materialized as its own
-      // stage job per round); r22 (VERDICT r21 ask #6) folds it into
-      // a raw runJob over the projected internal rows — the job
-      // covers EVERY partition by construction (runJob enumerates
-      // them all), so the checkpoint-completeness invariant the lazy
-      // checkpoint needs is now structural, not a property of the
-      // chosen action. The test reads the PRE-jump frame: a hop that
-      // moved no label means labels are constant per component
-      // (stable under every edge), so the jump is the identity there
-      // and the stop decision is unchanged from testing the
-      // post-jump frame.
+      // LAZY checkpoint + one counting job: the job both fills the
+      // round's checkpoint and returns the changed count, with no
+      // exchange. The test reads the PRE-jump frame: a hop that moved
+      // no label means labels are constant per component (stable under
+      // every edge), so the jump is the identity there.
       val ck = Materialize.checkpoint(hop, eager = false)
-      val changed = {
-        // when/otherwise fixes the output to non-null LONG whatever
-        // integral type the caller's ids carry
-        val chg = ck.select(when(col("component") < col("own"), 1L)
-          .otherwise(0L).as("__chg"))
-        chg.sparkSession.sparkContext.runJob(
-          chg.queryExecution.toRdd,
-          (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-            var c = 0L
-            while (it.hasNext) { c += it.next().getLong(0) }
-            c
-          }).sum
-      }
+      converged = countRows(ck.filter(col("component") < col("own"))) == 0
       // Pointer jump: adopt my label's label. Labels are node ids, so
       // the label's own row is in `ck`; the left join + coalesce only
       // guards the (impossible under symmetrized edges) missing case.
       // A hop moves the min one edge; the jump halves the remaining
-      // pointer depth — together the reachable-min covers ~2^k nodes
-      // after k rounds. ADAPTIVE: clique-union graphs (the near-dup
-      // norm) converge in <=2 plain hops, so the jump's per-round join
-      // would be pure overhead there — it engages only from round 3,
-      // when still-unconverged labels mean a long chain is present.
-      // The jump stays LAZY over the materialized hop: both join sides
-      // read the checkpoint, so lineage stays shallow without a second
-      // eager materialization per round.
-      // Both jump-join sides are the round's checkpointed sliver —
-      // corpus-derived, so the build side is strategy-PINNED
-      // shuffle_hash (never an AQE size-estimate broadcast; also
-      // drops the SMJ's two per-round sorts). (A double-jump
-      // escalation — jump∘jump = L⁴ per round — was measured in r22
-      // and REJECTED: the SemDedup ε-graph's 7 rounds did not drop,
-      // while the extra join added ~6 AQE stage jobs per query; the
-      // round count there is min-propagation-bound across graph
-      // edges, not pointer-chain-bound.)
-      converged = changed == 0
-      // CONVERGED round: the jump is provably the identity (the stop
-      // test's own argument — no label moved ⇒ labels constant per
-      // component), so the returned labels skip the final jump join
-      // outright (r22): every CC consumer whose loop ran ≥ 3 rounds
-      // otherwise carried one dead join + two exchanges of the label
-      // sliver in its RELABEL plan.
+      // pointer depth. It engages only from round 3: clique-union
+      // graphs (the near-dup norm) converge in <= 2 plain hops. A
+      // converged round skips it (it is the identity there). Both
+      // join sides read the round's checkpoint, so the build side is
+      // PINNED shuffle_hash. A double jump (L⁴ per round) did not cut
+      // the SemDedup ε-graph's rounds, which are bound by
+      // min-propagation across edges, not by pointer chains.
       val next =
         if (iter < 2 || converged) ck
         else ck
@@ -484,45 +504,11 @@ object DedupOps {
       labels = next.select(col("id"), col("component"))
       iter += 1
     }
-    lastCcRounds = iter
-    // the loop is the only consumer of the cached edges (the relabel
-    // below reads checkpointed labels) — release before any exit
+    // the loop is the only consumer of the cached edges
     Materialize.release(edges)
-    // Hop+jump covers ~2^maxIters diameter, so hitting this bound
-    // means the graph is far outside any plausible near-dup shape —
-    // fail loudly rather than silently mislabel.
     require(converged,
       s"connectedComponents did not converge in $maxIters rounds")
-    // Relabel the full node set lazily — the big table is never
-    // materialized here. Extra `nodes` columns PASS THROUGH (r21):
-    // every caller that carries a payload (quality, cluster, cos_c)
-    // previously re-joined the labeled frame against its own source
-    // on id — one corpus-sized shuffle join per caller that this
-    // left join already subsumes for free.
-    val carry = nodes.columns.filter(_ != "id").toSeq
-    require(!carry.contains("c") && !carry.contains("component") &&
-      !carry.contains("__labeled"),
-      "connectedComponents: nodes must not carry 'c'/'component'/" +
-      "'__labeled' columns")
-    // labels is corpus-derived (edge-endpoint-sized): the build side
-    // is strategy-PINNED shuffle_hash (ADVICE r21) — an AQE broadcast
-    // that fits at test SF would be the documented driver-resident
-    // blowup at 100×, and the pin also drops the relabel SMJ's sorts.
-    val relabeled = nodes
-      .join(labels.withColumnRenamed("component", "c")
-        .hint("shuffle_hash"), Seq("id"), "left")
-    val outCols = (col("id") +: carry.map(col)) :+
-      coalesce(col("c"), col("id")).as("component")
-    // markLabeled (r22, guide §2.3): `__labeled` ⇔ the id is an edge
-    // endpoint ⇔ its component has ≥ 2 members (every member of a
-    // multi-node component touches an edge; a node in no pair is its
-    // own singleton). Survivor policies use it to run their
-    // per-component exemplar stage over ONLY the labeled sliver —
-    // singletons are their own survivor with zero shuffle — instead
-    // of exchanging the whole corpus on the component key.
-    if (markLabeled)
-      relabeled.select(outCols :+ col("c").isNotNull.as("__labeled"): _*)
-    else relabeled.select(outCols: _*)
+    (labels, iter)
   }
 
   /** Canonical-document selection: keep the minimum-id doc of every

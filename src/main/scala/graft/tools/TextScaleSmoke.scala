@@ -47,8 +47,9 @@ object TextScaleSmoke {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty)
 
-    def timed(phase: String, f: Int)(mk: => DataFrame): Unit = {
-      if (only.nonEmpty && !only.exists(phase.startsWith)) return
+    def timed(phase: String, f: Int)(mk: => DataFrame)
+        : Option[graft.obs.Reading] = {
+      if (only.nonEmpty && !only.exists(phase.startsWith)) return None
       val ((df, n), r) = meter.span(phase) {
         val df = mk
         (df, df.count())
@@ -60,6 +61,7 @@ object TextScaleSmoke {
         f""""shuf_write_mb":${r.shuffleWriteBytes >> 20},""" +
         f""""shuf_read_mb":${r.shuffleReadBytes >> 20},""" +
         f""""cpu_sec":${r.cpuS}%.1f,"gc_sec":${r.gcS}%.1f}""")
+      Some(r)
     }
 
     Seq(1, factor).foreach { f =>
@@ -146,10 +148,14 @@ object TextScaleSmoke {
       timed("fuzzyDedupBest", f) {
         graft.text.DedupOps.fuzzyDedupDocsBest(docs, "doc_id", "text",
           graft.text.TextOps.tokenCount(col("text")).cast("long"))
-      }
-      if (only.isEmpty || only.exists("fuzzyDedupBest".startsWith))
+      }.foreach { r =>
+        // connectedComponents counts with one `runJob at DedupOps.scala`
+        // job for its edges, then one per label-propagation round
+        val counts = r.jobs.count(_.name.startsWith("runJob at DedupOps.scala"))
+        val path = if (counts == 1) "union-find" else s"rounds:${counts - 1}"
         println(s"""{"phase":"fuzzyDedupBest","factor":$f,""" +
-          s""""cc_rounds":${graft.text.DedupOps.lastCcRounds}}""")
+          s""""cc_path":"$path","jobs":${r.jobs.size}}""")
+      }
       // md5 over chunk_text forces the slices to materialize
       timed("chunkDocs", f) {
         graft.text.ChunkOps.chunkDocs(docs, "doc_id", "text", 64, 48)

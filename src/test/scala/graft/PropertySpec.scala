@@ -29,31 +29,97 @@ class PropertySpec extends SparkSpec {
     assert(holds(p, 10))  // each trial runs a Spark job; keep few
   }
 
+  /** The two paths of `connectedComponents`, by the task-memory budget
+    * that selects them: every graph fits an unbounded budget, and none
+    * (not even an empty one) fits a negative one. */
+  private val ccPaths = Seq("union-find" -> Long.MaxValue, "rounds" -> -1L)
+
+  /** `body` at `n` shuffle partitions, with AQE's coalescing off so
+    * that a tiny input is not folded back into one partition. */
+  private def atParts[T](n: Int)(body: => T): T = {
+    val confs = Map("spark.sql.shuffle.partitions" -> n.toString,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val old = confs.keys.map(k => k -> spark.conf.get(k)).toMap
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally old.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  /** Edges over nodes 0..19: random graphs, chains, stars and the
+    * empty graph; nodes outside every edge stay isolated. */
+  private val genGraph: Gen[List[(Long, Long)]] = {
+    val node = Gen.choose(0L, 19L)
+    val random = Gen.listOf(for {
+      a <- node; b <- node if a != b
+    } yield (math.min(a, b), math.max(a, b)))
+    val chain = Gen.someOf(0L to 19L).map(_.toList.sorted)
+      .map(ns => ns.zip(ns.drop(1)))
+    val star = for { c <- node; ls <- Gen.someOf(0L to 19L) }
+      yield ls.toList.filter(_ != c).map(l => (math.min(c, l), math.max(c, l)))
+    Gen.frequency(3 -> random, 1 -> chain, 1 -> star,
+      1 -> Gen.const(Nil))
+  }
+
+  private def pairsOf(edges: List[(Long, Long)]) =
+    if (edges.isEmpty) Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    else edges.toDF("id_a", "id_b")
+
+  /** Driver union-find with min-label roots over nodes 0..19. */
+  private def reference(edges: List[(Long, Long)]): Int => Long = {
+    val parent = Array.tabulate(20)(identity)
+    def find(x: Int): Int =
+      if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a.toInt), find(b.toInt))
+      if (ra != rb) { val (lo, hi) = (math.min(ra, rb), math.max(ra, rb))
+        parent(hi) = lo }
+    }
+    i => find(i).toLong
+  }
+
   test("connected components matches driver union-find on random graphs") {
     import graft.text.DedupOps
-    val genEdges = Gen.listOf(for {
-      a <- Gen.choose(0L, 19L); b <- Gen.choose(0L, 19L) if a != b
-    } yield (math.min(a, b), math.max(a, b)))
-    val p = Prop.forAll(genEdges) { edges =>
-      val nodes = (0L until 20L).toDF("id")
-      val pairs = if (edges.isEmpty)
-        Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-      else edges.toDF("id_a", "id_b")
-      // maxIters >= max possible diameter (19) so chains converge
-      val got = DedupOps.connectedComponents(nodes, pairs, maxIters = 25)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // reference: driver-side union-find with min-label roots
-      val parent = Array.tabulate(20)(identity)
-      def find(x: Int): Int =
-        if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) { val (lo, hi) = (math.min(ra, rb), math.max(ra, rb))
-          parent(hi) = lo }
+    for ((path, budget) <- ccPaths; n <- Seq(1, 3, 7)) atParts(n) {
+      val p = Prop.forAll(genGraph) { edges =>
+        val nodes = (0L until 20L).toDF("id")
+        // maxIters >= max possible diameter (19) so chains converge
+        val (df, rounds) = DedupOps.components(nodes, pairsOf(edges),
+          maxIters = 25, markLabeled = false, budget = budget)
+        val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val ref = reference(edges)
+        (rounds == 0) == (path == "union-find") &&
+          (0 until 20).forall(i => got(i.toLong) == ref(i))
       }
-      (0 until 20).forall(i => got(i.toLong) == find(i).toLong)
+      assert(holds(p, 10), s"$path at $n shuffle partitions")
     }
-    assert(holds(p, 10))
+  }
+
+  test("connected components keeps int-typed ids on both paths") {
+    import graft.text.DedupOps
+    import org.apache.spark.sql.types.IntegerType
+    val nodes = (0 until 8).toDF("id")
+    val pairs = Seq((1, 2), (2, 5), (3, 4)).toDF("id_a", "id_b")
+    for ((path, budget) <- ccPaths) {
+      val (df, _) = DedupOps.components(nodes, pairs, 10, false, budget)
+      assert(df.schema("component").dataType == IntegerType, path)
+      val got = df.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+      assert(got == Map(0 -> 0, 1 -> 1, 2 -> 1, 3 -> 3, 4 -> 3, 5 -> 1,
+        6 -> 6, 7 -> 7), path)
+    }
+  }
+
+  test("connected components labels the other end of a null-ended pair " +
+      "alone on both paths") {
+    import graft.text.DedupOps
+    val nodes = (0L until 4L).toDF("id")
+    val pairs = Seq((Some(1L), Some(2L)), (Some(3L), None), (None, None))
+      .toDF("id_a", "id_b")
+    for ((path, budget) <- ccPaths) {
+      val got = DedupOps.components(nodes, pairs, 10, true, budget)._1
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2))))
+        .toMap
+      assert(got == Map(0L -> ((0L, false)), 1L -> ((1L, true)),
+        2L -> ((1L, true)), 3L -> ((3L, true))), path)
+    }
   }
 
   test("connected components converges on a diameter-25 chain within " +
@@ -64,40 +130,38 @@ class PropertySpec extends SparkSpec {
     // hop+jump scheme must close it within the default maxIters=10.
     val nodes = (0L to 25L).toDF("id")
     val pairs = (0L until 25L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val got = DedupOps.connectedComponents(nodes, pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (df, rounds) = DedupOps.components(nodes, pairs, maxIters = 10,
+      markLabeled = false, budget = -1L)
+    val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((0L to 25L).forall(got(_) == 0L))
+    assert(rounds > 2 && rounds <= 10, s"rounds: $rounds")
   }
 
   test("connected components markLabeled marks exactly the edge " +
       "endpoints == the multi-member components (r22 survivor-split " +
       "invariant)") {
     import graft.text.DedupOps
-    val genEdges = Gen.listOf(for {
-      a <- Gen.choose(0L, 19L); b <- Gen.choose(0L, 19L) if a != b
-    } yield (math.min(a, b), math.max(a, b)))
-    val p = Prop.forAll(genEdges) { edges =>
-      val nodes = (0L until 20L).toDF("id")
-      val pairs = if (edges.isEmpty)
-        Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-      else edges.toDF("id_a", "id_b")
-      val got = DedupOps.connectedComponents(nodes, pairs,
-          maxIters = 25, markLabeled = true)
-        .collect()
-        .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2))))
-        .toMap
-      val endpoints = edges.flatMap(e => Seq(e._1, e._2)).toSet
-      val sizes = got.values.groupBy(_._1).map { case (c, ms) =>
-        c -> ms.size }
-      (0L until 20L).forall { i =>
-        val (comp, labeled) = got(i)
-        // __labeled ⇔ the id touches an edge ⇔ |component| ≥ 2 —
-        // the invariant the survivor split's singleton branch needs
-        labeled == endpoints.contains(i) &&
-          labeled == (sizes(comp) >= 2)
+    for ((path, budget) <- ccPaths) {
+      val p = Prop.forAll(genGraph) { edges =>
+        val nodes = (0L until 20L).toDF("id")
+        val got = DedupOps.components(nodes, pairsOf(edges),
+            maxIters = 25, markLabeled = true, budget = budget)._1
+          .collect()
+          .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2))))
+          .toMap
+        val endpoints = edges.flatMap(e => Seq(e._1, e._2)).toSet
+        val sizes = got.values.groupBy(_._1).map { case (c, ms) =>
+          c -> ms.size }
+        (0L until 20L).forall { i =>
+          val (comp, labeled) = got(i)
+          // __labeled ⇔ the id touches an edge ⇔ |component| ≥ 2 —
+          // the invariant the survivor split's singleton branch needs
+          labeled == endpoints.contains(i) &&
+            labeled == (sizes(comp) >= 2)
+        }
       }
+      assert(holds(p, 10), path)
     }
-    assert(holds(p, 10))
   }
 
   test("P5: masking never changes row count") {

@@ -61,13 +61,15 @@ private[graft] object Census {
 
 /** What one [[Meter.span]] ran: its wall time, the jobs that ended in
   * it, and the stage, task and SQL-execution counters of its job
-  * group. `peakExecBytes` is the largest execution memory of one task;
-  * `peakStorageBytes` the most RDD-block bytes resident at once while
-  * the span was open, whoever cached them. */
+  * group. `tasks` counts the tasks that ended; `peakExecBytes` is the
+  * largest execution memory of one task; `peakStorageBytes` the most
+  * RDD-block bytes resident at once while the span was open, whoever
+  * cached them. */
 private[graft] final case class Reading(
     wallNs: Long,
     jobs: Seq[Reading.Job],
     stages: Int,
+    tasks: Int,
     cpuNs: Long,
     gcMs: Long,
     shuffleReadBytes: Long,
@@ -107,12 +109,12 @@ private[graft] final class Meter private (private val sc: SparkContext)
   private final class Acc {
     val jobs = mutable.ArrayBuffer.empty[Reading.Job]
     val executions = mutable.ArrayBuffer.empty[Reading.Execution]
-    var stages, cpuNs, gcMs, readBytes, readRecs, writeBytes, writeRecs,
-      spillMem, spillDisk, peakExec, peakStorage = 0L
+    var stages, tasks, cpuNs, gcMs, readBytes, readRecs, writeBytes,
+      writeRecs, spillMem, spillDisk, peakExec, peakStorage = 0L
 
     def reading(wallNs: Long): Reading = Reading(wallNs, jobs.toSeq,
-      stages.toInt, cpuNs, gcMs, readBytes, readRecs, writeBytes,
-      writeRecs, spillMem, spillDisk, peakExec, peakStorage,
+      stages.toInt, tasks.toInt, cpuNs, gcMs, readBytes, readRecs,
+      writeBytes, writeRecs, spillMem, spillDisk, peakExec, peakStorage,
       executions.toSeq)
   }
 
@@ -180,6 +182,7 @@ private[graft] final class Meter private (private val sc: SparkContext)
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
     val m = e.taskMetrics
     if (m != null) stageSpans.get(e.stageId).foreach { a =>
+      a.tasks += 1
       a.cpuNs += m.executorCpuTime + m.executorDeserializeCpuTime
       a.gcMs += m.jvmGCTime
       a.readBytes += m.shuffleReadMetrics.totalBytesRead

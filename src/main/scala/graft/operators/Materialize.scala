@@ -33,6 +33,20 @@ private[graft] object Materialize {
       reliable: Boolean = false): DataFrame =
     if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager, level)
 
+  /** Fails unless the lazy checkpoint `ck` has every partition stored.
+    * Spark marks a local checkpoint done only after the first job that
+    * reads it, once every partition is stored: partitions the job did
+    * not compute (a `limit`, say) are computed then by a job of its
+    * own. So this holds after any action over `ck`, and fails by name
+    * for a checkpoint that no job has read. */
+  def requireFilled(ck: DataFrame): Unit = ck.queryExecution.logical match {
+    case r: LogicalRDD => if (!r.rdd.isCheckpointed)
+      throw new IllegalStateException("lazy checkpoint not filled: no " +
+        s"job has stored all ${r.rdd.partitions.length} partitions of RDD ${r.rdd.id}")
+    case p => throw new IllegalArgumentException(
+      s"requireFilled: not a checkpoint but ${p.nodeName}")
+  }
+
   /** `df` cached, filled by its first action. */
   def cache(df: DataFrame): DataFrame = df.persist(level)
 

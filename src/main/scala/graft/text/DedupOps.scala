@@ -373,6 +373,7 @@ object DedupOps {
       pairs.select(col("id_a").as("src"), col("id_b").as("dst")),
       eager = false)
     val n = countRows(half)
+    Materialize.requireFilled(half)
     val types = Seq(half.schema("src").dataType, half.schema("dst").dataType)
     val integral = types.forall {
       case ByteType | ShortType | IntegerType | LongType => true
@@ -481,6 +482,7 @@ object DedupOps {
       // every edge), so the jump is the identity there.
       val ck = Materialize.checkpoint(hop, eager = false)
       converged = countRows(ck.filter(col("component") < col("own"))) == 0
+      Materialize.requireFilled(ck)
       // Pointer jump: adopt my label's label. Labels are node ids, so
       // the label's own row is in `ck`; the left join + coalesce only
       // guards the (impossible under symmetrized edges) missing case.

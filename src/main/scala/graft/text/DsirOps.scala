@@ -113,8 +113,9 @@ object DsirOps {
 
     // λ per bucket, micro-quantized BIGINT. B rows by construction —
     // the one table in this operator that is CORRECT to broadcast.
-    val lam = qTab.join(pTab.withColumnRenamed("c", "c_p"),
-        Seq("bucket"), "left")
+    // Its own join is pinned: only an explicit broadcast() broadcasts.
+    val lam = qTab.join(pTab.withColumnRenamed("c", "c_p")
+        .hint("shuffle_hash"), Seq("bucket"), "left")
       .select(col("bucket"),
         floor(log(
           ((coalesce(col("c_p"), lit(0L)) + 1.0)

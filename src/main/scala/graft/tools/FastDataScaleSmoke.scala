@@ -21,12 +21,14 @@ import graft.pipeline.FastData
   * logger file is cut into frame-aligned byte ranges sized by
   * Spark's file-split rule, so N files decode at least N-way with no
   * driver involvement), `windowStats` is one partial-aggregated
-  * groupBy on the window key, and `writeShards` runs ONE shuffle and
-  * ONE write job regardless of window count. So wall should scale
+  * groupBy on the window key, and `writeShards` runs a counting pass
+  * and one write, each with one shuffle, regardless of window count,
+  * in tasks packed to one Tungsten page of rows. So wall should scale
   * far sublinearly with N on a 32-core box until the splits exceed
-  * the core count, exchange counts must be factor-invariant, and
-  * shard count must scale exactly linearly (48 half-hour shards per
-  * day).
+  * the core count, shard count must scale exactly linearly (48
+  * half-hour shards per day), and the smoke asserts that each phase's
+  * exchange count and the shard write's per-task peak execution
+  * memory are the same at factor 1 and factor N.
   *
   * Usage: `runMain graft.tools.FastDataScaleSmoke [factor] [rowsPerDay]`
   * (defaults 100, 864000). Files land under /tmp/graft_fastsmoke.
@@ -95,6 +97,7 @@ object FastDataScaleSmoke {
     val rowsPerDay = args.lift(1).map(_.toInt).getOrElse(864000)
     val spark = graft.GraftSession()
     val meter = graft.obs.Meter.on(spark)
+    val readings = scala.collection.mutable.Map.empty[(String, Int), graft.obs.Reading]
 
     val meta = TableMeta(FileInfo.dummy, Seq(
       VariableMeta("TIMESTAMP", "TS", ""),
@@ -118,10 +121,12 @@ object FastDataScaleSmoke {
       val inBytes = Files.list(inDir).toArray.map(p =>
         Files.size(p.asInstanceOf[java.nio.file.Path])).sum
 
-      def timed(phase: String)(body: => (Long, Int)): Unit = {
-        val ((n, exch), r) = meter.span(phase)(body)
+      def timed(phase: String)(body: => Long): Unit = {
+        val (n, r) = meter.span(phase)(body)
+        readings((phase, f)) = r
         println(f"""{"phase":"$phase","factor":$f,"sec":${r.wallS}%.1f,""" +
-          f""""n":$n,"exchanges":$exch,""" +
+          f""""n":$n,"exchanges":${r.census.exchanges},""" +
+          f""""peak_exec_mb":${r.peakExecBytes / 1048576.0}%.2f,""" +
           f""""cpu_sec":${r.cpuS}%.1f,"gc_sec":${r.gcS}%.1f}""")
       }
 
@@ -129,21 +134,29 @@ object FastDataScaleSmoke {
         f""""files":$f,"mb":${inBytes >> 20}}""")
       val df = spark.read.format("tob").load(inDir.toString)
       timed("decode_windowStats") {
-        val ws = FastData.windowStats(
-          df.select(col("DATETIME")), "DATETIME", 30, 10.0)
-        val total = ws.agg(sum(col("n_rows"))).collect()(0).getLong(0)
-        (total, graft.obs.Census.of(ws.queryExecution.executedPlan).exchanges)
+        FastData.windowStats(df.select(col("DATETIME")), "DATETIME", 30, 10.0)
+          .agg(sum(col("n_rows"))).collect()(0).getLong(0)
       }
       timed("shard_write") {
-        val names = FastData.writeShards(
-          df, meta, "DATETIME", 30, outDir.toString, "Site_fast")
-        (names.length.toLong, -1)
+        FastData.writeShards(
+          df, meta, "DATETIME", 30, outDir.toString, "Site_fast").length
       }
       val outBytes = Files.list(outDir).toArray.map(p =>
         Files.size(p.asInstanceOf[java.nio.file.Path])).sum
       println(f"""{"phase":"out","factor":$f,""" +
         f""""shard_mb":${outBytes >> 20}}""")
     }
+    def at(phase: String, f: Int) = readings((phase, f))
+    Seq("decode_windowStats", "shard_write").foreach { p =>
+      val (e1, eN) = (at(p, 1).census.exchanges, at(p, factor).census.exchanges)
+      require(e1 == eN, s"$p exchanges grew with the factor: $e1 -> $eN")
+    }
+    val (m1, mN) = (at("shard_write", 1).peakExecBytes,
+      at("shard_write", factor).peakExecBytes)
+    require(m1 == mN,
+      s"shard_write per-task peak execution memory grew: $m1 -> $mN bytes")
+    println(s"""{"smoke":"fast_data","factors":[1,$factor],""" +
+      s""""exch_invariant":true,"peak_exec_invariant":true}""")
     spark.stop()
   }
 }

@@ -7,9 +7,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession, classic}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 
-/** Bridge into Spark's `private[spark]` task-memory API and the
-  * `private[sql]` frame-over-Catalyst-rows constructor, for an operator
-  * that keeps accounted state inside one task and hands back rows.
+/** Bridge into Spark's `private[spark]` task-memory API and page size
+  * and the `private[sql]` frame-over-Catalyst-rows constructor, for an
+  * operator that keeps accounted state inside one task and hands back
+  * rows, or sizes its tasks to the memory one task holds.
   * Lives under org.apache.spark.sql to satisfy the access modifiers. */
 object TaskBridge {
   /** The memory manager of the running task. */
@@ -21,6 +22,11 @@ object TaskBridge {
     * it from the task's end event. */
   def reportPeakExecutionMemory(ctx: TaskContext, bytes: Long): Unit =
     ctx.taskMetrics().incPeakExecutionMemory(bytes)
+
+  /** The Tungsten page size of `spark`'s memory manager; in local mode
+    * the executor is the driver JVM. */
+  def pageSizeBytes(spark: SparkSession): Long =
+    spark.sparkContext.env.memoryManager.pageSizeBytes
 
   /** A frame over `rows`, which must match `schema`. */
   def frame(spark: SparkSession, rows: RDD[InternalRow],

@@ -95,6 +95,31 @@ class MaterializeSpec extends SparkSpec {
     assert(n == 2000L && evaluated.sum == 2000L)
     assert(ck.orderBy("id").as[Long].collect().toSeq == (0L until 2000L))
     assert(evaluated.sum == 2000L, "the later action recomputed the source")
+    Materialize.requireFilled(ck)
+    Materialize.release(ck)
+  }
+
+  test("requireFilled fails by name until a job has read the checkpoint") {
+    val ck = Materialize.checkpoint(frame, eager = false)
+    val e = intercept[IllegalStateException](Materialize.requireFilled(ck))
+    assert(e.getMessage.startsWith("lazy checkpoint not filled"), e)
+    // reading the source instead of the checkpoint leaves it unfilled
+    frame.count()
+    intercept[IllegalStateException](Materialize.requireFilled(ck))
+    Materialize.release(ck)
+    intercept[IllegalArgumentException](Materialize.requireFilled(frame))
+  }
+
+  test("a limit(1) read fills a lazy checkpoint with a job of its own") {
+    val ck = Materialize.checkpoint(frame, eager = false)
+    val (_, r) = graft.obs.Meter.on(spark).span("limit") {
+      ck.limit(1).collect()
+    }
+    // Spark's local-checkpoint finalizer computes the partitions the
+    // take did not reach, so a short-circuiting action costs a job,
+    // never a partially stored checkpoint
+    Materialize.requireFilled(ck)
+    assert(r.jobs.size == 2, s"jobs: ${r.jobs.map(_.name)}")
     Materialize.release(ck)
   }
 }

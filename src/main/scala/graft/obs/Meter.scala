@@ -62,9 +62,11 @@ private[graft] object Census {
 /** What one [[Meter.span]] ran: its wall time, the jobs that ended in
   * it, and the stage, task and SQL-execution counters of its job
   * group. `tasks` counts the tasks that ended; `peakExecBytes` is the
-  * largest execution memory of one task; `peakStorageBytes` the most
-  * RDD-block bytes resident at once while the span was open, whoever
-  * cached them. */
+  * largest execution memory one task's operators reported;
+  * `stagePeaks` the concurrent execution memory of each stage, in
+  * completion order;
+  * `peakStorageBytes` the most RDD-block bytes resident at once while
+  * the span was open, whoever cached them. */
 private[graft] final case class Reading(
     wallNs: Long,
     jobs: Seq[Reading.Job],
@@ -79,11 +81,17 @@ private[graft] final case class Reading(
     spillMemBytes: Long,
     spillDiskBytes: Long,
     peakExecBytes: Long,
+    stagePeaks: Seq[Reading.StagePeak],
     peakStorageBytes: Long,
     executions: Seq[Reading.Execution]) {
   def wallS: Double = wallNs / 1e9
   def cpuS: Double = cpuNs / 1e9
   def gcS: Double = gcMs / 1e3
+
+  /** The stage whose tasks could report the most execution memory at
+    * once: perfbench's `mem_peak_mb` less the resident blocks. */
+  def stagePeak: Reading.StagePeak =
+    stagePeaks.maxByOption(_.execBytes).getOrElse(Reading.StagePeak.None)
 
   /** Exchanges and join strategies summed over the executions. */
   def census: Census = executions.map(_.census).foldLeft(Census.Empty)(_ + _)
@@ -96,6 +104,24 @@ private[graft] object Reading {
   /** `funcName` is the action's name ("collect", "save", ...), empty
     * for an unnamed execution; the census is of the executed plan. */
   final case class Execution(id: Long, funcName: String, census: Census)
+
+  /** A stage's concurrent execution memory: the sum of the peaks of
+    * its `slots` hungriest tasks, the most that can run at once on the
+    * cluster's task slots. `execBytes` sums the peaks that operators
+    * report (a task's `peakExecutionMemory`, the figure perfbench's
+    * `mem_peak_mb` adds up); `acquiredBytes` sums each task's peak
+    * of the memory its task memory manager granted, on and off heap,
+    * which also holds what no operator reports (a shuffled hash join's
+    * hashed side) and counts once what two operators held at different
+    * times. `maxTaskBytes` is the hungriest task's reported peak. `job`
+    * names the first job that ran the stage (as [[Job.name]]); `tasks`
+    * counts the stage's ended tasks. */
+  final case class StagePeak(execBytes: Long, acquiredBytes: Long,
+      maxTaskBytes: Long, job: String, tasks: Int)
+
+  object StagePeak {
+    val None: StagePeak = StagePeak(0L, 0L, 0L, "", 0)
+  }
 }
 
 /** The engine's one run instrument: a listener on one SparkContext
@@ -111,17 +137,28 @@ private[graft] final class Meter private (private val sc: SparkContext)
     val executions = mutable.ArrayBuffer.empty[Reading.Execution]
     var stages, tasks, cpuNs, gcMs, readBytes, readRecs, writeBytes,
       writeRecs, spillMem, spillDisk, peakExec, peakStorage = 0L
+    val stagePeaks = mutable.ArrayBuffer.empty[Reading.StagePeak]
 
     def reading(wallNs: Long): Reading = Reading(wallNs, jobs.toSeq,
       stages.toInt, tasks.toInt, cpuNs, gcMs, readBytes, readRecs,
-      writeBytes, writeRecs, spillMem, spillDisk, peakExec, peakStorage,
-      executions.toSeq)
+      writeBytes, writeRecs, spillMem, spillDisk, peakExec,
+      stagePeaks.toSeq, peakStorage, executions.toSeq)
+  }
+
+  /** A running stage of a span: its first job's name and the
+    * reported and acquired execution-memory peaks of its ended tasks. */
+  private final class Stage(val acc: Acc, val job: String) {
+    val taskPeaks, taskAcquired = mutable.ArrayBuffer.empty[Long]
   }
 
   // all state below is guarded by `this`
   private val open = mutable.HashMap.empty[String, Acc]
-  private val jobSpans = mutable.HashMap.empty[Int, (Acc, String, Long)]
-  private val stageSpans = mutable.HashMap.empty[Int, Acc]
+  private val jobSpans =
+    mutable.HashMap.empty[Int, (Acc, String, Long, Seq[Int])]
+  private val stageSpans = mutable.HashMap.empty[Int, Stage]
+  // the name of the first open job of each of its stages; a skipped
+  // stage is never submitted, so its entry goes when its job ends
+  private val stageJobs = mutable.HashMap.empty[Int, String]
   private val executionSpans = mutable.HashMap.empty[Long, Acc]
   private val blocks = mutable.HashMap.empty[(BlockManagerId, BlockId), Long]
   private var live = 0L
@@ -159,29 +196,47 @@ private[graft] final class Meter private (private val sc: SparkContext)
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     spanOf(e.properties).foreach { a =>
       val name = e.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("")
-      jobSpans(e.jobId) = (a, name, e.time)
+      jobSpans(e.jobId) = (a, name, e.time, e.stageIds)
+      e.stageIds.foreach(stageJobs.getOrElseUpdate(_, name))
     }
   }
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-    jobSpans.remove(e.jobId).foreach { case (a, name, t0) =>
+    jobSpans.remove(e.jobId).foreach { case (a, name, t0, stageIds) =>
+      stageJobs --= stageIds
       a.jobs += Reading.Job(e.jobId, name, e.time - t0)
     }
   }
 
   override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
     synchronized {
-      spanOf(e.properties).foreach(stageSpans(e.stageInfo.stageId) = _)
+      val id = e.stageInfo.stageId
+      spanOf(e.properties).foreach { a =>
+        stageSpans(id) = new Stage(a, stageJobs.getOrElse(id, ""))
+      }
     }
 
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
     synchronized {
-      stageSpans.remove(e.stageInfo.stageId).foreach(_.stages += 1)
+      stageSpans.remove(e.stageInfo.stageId).foreach { s =>
+        val a = s.acc
+        a.stages += 1
+        val slots = math.max(1, MeterBridge.taskSlots(sc))
+        def concurrent(peaks: Seq[Long]) =
+          peaks.sorted(Ordering[Long].reverse).take(slots).sum
+        a.stagePeaks += Reading.StagePeak(concurrent(s.taskPeaks.toSeq),
+          concurrent(s.taskAcquired.toSeq), s.taskPeaks.maxOption.getOrElse(0L),
+          s.job, s.taskPeaks.size)
+      }
     }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
     val m = e.taskMetrics
-    if (m != null) stageSpans.get(e.stageId).foreach { a =>
+    if (m != null) stageSpans.get(e.stageId).foreach { s =>
+      val a = s.acc
+      s.taskPeaks += m.peakExecutionMemory
+      s.taskAcquired +=
+        m.peakOnHeapExecutionMemory + m.peakOffHeapExecutionMemory
       a.tasks += 1
       a.cpuNs += m.executorCpuTime + m.executorDeserializeCpuTime
       a.gcMs += m.jvmGCTime

@@ -15,12 +15,22 @@ import org.apache.spark.sql.functions._
 object JoinOps {
 
   /** J3: horizontal merge of per-source frames on the time axis — fold
-    * of full-outer joins on (keys, ts). All frames shuffle once on the
-    * same join key, so Catalyst reuses the exchange across the fold.
+    * of full-outer joins on (keys, ts), each step a shuffled hash join
+    * that builds the frame being added. Both sides of a step shuffle on
+    * the join key, as a sort-merge join's would, but a task then holds
+    * one hashed page instead of two sort pages: each of the sort-merge
+    * join's input sorts reserves a whole Tungsten page, however few
+    * rows a task gets, and a site's per-logger tables are a few
+    * thousand rows per task. The hashed side takes a page too, but
+    * Spark's hash join does not report it as the task's peak execution
+    * memory; only the task memory manager's peak (the `acquiredBytes`
+    * of a `graft.obs.Reading.StagePeak`) shows it. The build side is
+    * bounded by one frame's rows per shuffle partition and cannot
+    * spill, the same trade as the engine's other `shuffle_hash` pins.
     * Reference: file_handler.py:534-605 (column-wise concat).
     */
   def mergeOnTime(frames: Seq[DataFrame], on: Seq[String]): DataFrame =
-    frames.reduce((a, b) => a.join(b, on, "full_outer"))
+    frames.reduce((a, b) => a.join(b.hint("shuffle_hash"), on, "full_outer"))
 
   /** J1/E3: vertical concat with master precedence — union frames (by
     * name, missing columns null-filled), then keep the first occurrence

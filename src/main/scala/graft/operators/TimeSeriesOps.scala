@@ -275,9 +275,15 @@ object TimeSeriesOps {
   /** A1: regularize to a monotonic fixed-interval grid per key group:
     * generate the [min, max] tick sequence per group, left-join the
     * data back on (keys, tick). Missing ticks appear as all-null rows.
-    * The grid side is tiny relative to data (one row per tick) and the
-    * join shuffles both sides by (keys, ts) — the same partitioning
-    * later window ops reuse.
+    * The join is unhinted, so Spark picks its strategy from size
+    * estimates. A left join can build only its right side, the data:
+    * while the data's estimate is under the broadcast threshold (a
+    * deduplicated site table of ~17.5k half-hourly rows is), the data
+    * is broadcast and every grid task holds a hashed copy of it; above
+    * the threshold both sides shuffle on (keys, ts) and sort-merge.
+    * ROADMAP item 6 (broadcast only on an explicit hint) decides the
+    * strategy; this join is one of the estimate-driven broadcasts it
+    * retires.
     */
   def regularize(df: DataFrame, tsCol: String, intervalSec: Long,
       keys: Seq[String] = Nil, ticksPerChunk: Int = 65536): DataFrame = {

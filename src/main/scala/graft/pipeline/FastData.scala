@@ -1,7 +1,11 @@
 package graft.pipeline
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{ArrayBinarySearch, UnsafeRow}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{ArrayBinarySearch, Ascending, BoundReference, SortOrder, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
+import org.apache.spark.sql.execution.{SortPrefixUtils, UnsafeExternalRowSorter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{ColumnBridge, TaskBridge}
 import org.apache.spark.sql.types.StructType
@@ -83,7 +87,8 @@ object FastData {
     * names in window order.
     *
     * Scale shape: two SQL executions whatever the window count, and
-    * no task sorts more rows than fit one Tungsten page.
+    * a task's sort memory follows its rows, up to about one Tungsten
+    * page of the session's page size.
     *  - A counting pass ([[windowStats]]' grouping) returns each
     *    non-empty window's row count to the driver: one row per shard,
     *    the same bound as the shard names returned.
@@ -93,10 +98,15 @@ object FastData {
     *    the data span over the session's shuffle partitions.
     *  - The write shuffles each row to its window's task
     *    (`repartitionById` over a binary search of the tasks' first
-    *    windows), sorts within partitions on the timestamp (the window
-    *    is monotone in it, so windows come out contiguous and rows
-    *    time-ordered with no window column in the shuffle or the
-    *    sort), then streams each partition straight to its shard files.
+    *    windows). Each task sorts its rows on the timestamp with a
+    *    sorter of its own ([[sortOnTime]]) that takes 1 MiB pages, so
+    *    a task of a few thousand rows holds a few MiB, not the whole
+    *    page of the session's page size (1 to 64 MiB, from executor
+    *    memory over cores) that a planned sort's first row reserves.
+    *    The window is monotone in the timestamp, so windows come out
+    *    contiguous and rows time-ordered with no window column in the
+    *    shuffle or the sort; each partition then streams straight to
+    *    its shard files.
     *    Tasks read Catalyst rows, derive each row's window from its
     *    epoch micros, and encode lines with [[Toa5.LineEncoder]], the
     *    encoder [[Toa5.write]] uses; the write is one SQL execution, so
@@ -147,7 +157,7 @@ object FastData {
       ColumnBridge.expression(unix_micros(windowEnd(col(tsCol), stepMin)))))
     val rows = df.select((col(tsCol) +: dataCols.map(col)): _*)
       .repartitionById(starts.length, greatest(hit, -hit - 2))
-      .sortWithinPartitions(col(tsCol))
+    val schema = rows.schema
     val enc = Toa5.lineEncoder(rows)
     Toa5.inExecution(rows, "writeShards") { plan =>
       plan.execute().mapPartitions { it =>
@@ -157,7 +167,7 @@ object FastData {
         var cur = Long.MinValue
         var out: java.io.OutputStream = null
         try {
-          it.foreach { r =>
+          sortOnTime(it, schema).foreach { r =>
             val us = r.getLong(0)
             val w = us + Math.floorMod(-us, stepUs)
             if (out == null || w != cur) {
@@ -197,11 +207,14 @@ object FastData {
   }
 
   /** The most rows whose sort fits one Tungsten page of `pageBytes`
-    * bytes, at `rowBytes` per row in the sorter's data page. The
-    * sorter's pointer array holds 4 longs per row (record pointer and
-    * key prefix, doubled as the radix sort's buffer) at a power-of-two
-    * capacity of at least 1024 rows, and while it doubles it holds the
-    * half-size array too: 48 bytes per row of capacity at its peak. */
+    * bytes, at `rowBytes` per row of sorted data. The sorter's pointer
+    * array holds 4 longs per row (record pointer and key prefix,
+    * doubled as the radix sort's buffer) at a power-of-two capacity of
+    * at least 1024 rows, and while it doubles it holds the half-size
+    * array too: 48 bytes per row of capacity at its peak. With the
+    * session's page size this caps a task's sort at what one page
+    * holds; [[sortOnTime]] takes it in 1 MiB pages, so a task holds
+    * that much only when its rows fill it. */
   private[graft] def rowBudget(pageBytes: Long, rowBytes: Long): Long =
     Iterator.iterate(1024L)(_ * 2).takeWhile(48 * _ < pageBytes)
       .map(cap => math.min(cap, (pageBytes - 48 * cap) / rowBytes))
@@ -216,6 +229,30 @@ object FastData {
       .map(t => (t.defaultSize + 7) / 8 * 8L).sum
     UnsafeRow.calculateBitSetWidthInBytes(schema.length) +
       8L * schema.length + varLen + UnsafeAlignedOffset.getUaoSize
+  }
+
+  /** The shard sorter's page size: Spark's smallest default page. */
+  private val SortPageBytes = 1L << 20
+
+  /** `rows` of `schema` sorted on their first column, ascending, by an
+    * `UnsafeExternalRowSorter` over pages of [[SortPageBytes]]: the
+    * radix sort on the key prefix and spilling of Spark's sort, with
+    * memory taken a page at a time as the rows need it. The sorter's
+    * peak is reported as the task's peak execution memory, as Spark's
+    * own sort does. The rows must be `UnsafeRow`s, as a shuffle's are. */
+  private def sortOnTime(rows: Iterator[InternalRow],
+      schema: StructType): Iterator[InternalRow] = {
+    val key = SortOrder(BoundReference(0, schema.head.dataType,
+      nullable = true), Ascending)
+    val sorter = UnsafeExternalRowSorter.create(schema,
+      GenerateOrdering.generate(Seq(key)),
+      SortPrefixUtils.getPrefixComparator(schema),
+      SortPrefixUtils.createPrefixGenerator(schema), SortPageBytes,
+      SortPrefixUtils.canSortFullyWithPrefix(schema.head))
+    val sorted = sorter.sort(rows.asInstanceOf[Iterator[UnsafeRow]])
+    TaskBridge.reportPeakExecutionMemory(TaskContext.get(),
+      sorter.getPeakMemoryUsage)
+    sorted
   }
 
   private val ShardStamp = java.time.format.DateTimeFormatter

@@ -40,8 +40,8 @@ object L1Pipeline {
       c.meta.subset(usecols.keys.toSeq).withRenames(usecols))
   }
 
-  /** J3 horizontal merge: fold of full-outer joins on the timestamp.
-    * All sides shuffle once on ts; Catalyst reuses the exchange. */
+  /** J3 horizontal merge: fold of full-outer shuffled hash joins on the
+    * timestamp ([[JoinOps.mergeOnTime]]). */
   def mergeOnTime(frames: Seq[Conditioned], tsCol: String): Conditioned = {
     val df = JoinOps.mergeOnTime(frames.map(_.df), Seq(tsCol))
     val meta = frames.head.meta.copy(

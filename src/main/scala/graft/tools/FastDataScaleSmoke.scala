@@ -23,12 +23,14 @@ import graft.pipeline.FastData
   * driver involvement), `windowStats` is one partial-aggregated
   * groupBy on the window key, and `writeShards` runs a counting pass
   * and one write, each with one shuffle, regardless of window count,
-  * in tasks packed to one Tungsten page of rows. So wall should scale
-  * far sublinearly with N on a 32-core box until the splits exceed
-  * the core count, shard count must scale exactly linearly (48
-  * half-hour shards per day), and the smoke asserts that each phase's
-  * exchange count and the shard write's per-task peak execution
-  * memory are the same at factor 1 and factor N.
+  * in tasks packed to one Tungsten page of rows and sorted in 1 MiB
+  * pages. So wall should scale far sublinearly with N on a 32-core
+  * box until the splits exceed the core count, shard count must
+  * scale exactly linearly (48 half-hour shards per day), and the
+  * smoke asserts that each phase's exchange count and the shard
+  * write's per-task peak execution memory are the same at factor 1
+  * and factor N, and that the write stage's hungriest sort task
+  * reports the same peak, above 0, at both.
   *
   * Usage: `runMain graft.tools.FastDataScaleSmoke [factor] [rowsPerDay]`
   * (defaults 100, 864000). Files land under /tmp/graft_fastsmoke.
@@ -155,8 +157,20 @@ object FastDataScaleSmoke {
       at("shard_write", factor).peakExecBytes)
     require(m1 == mN,
       s"shard_write per-task peak execution memory grew: $m1 -> $mN bytes")
+    require(m1 > 0 && mN > 0,
+      s"shard_write reported no execution memory: $m1, $mN bytes")
+    // the span's hungriest task is the counting pass's one-page final
+    // aggregate, so the equality above does not see the sort: the
+    // write's result stage, which ends last, must report its sorters'
+    // peaks, and its hungriest task must not grow with the factor
+    val (w1, wN) = (at("shard_write", 1).stagePeaks.last.maxTaskBytes,
+      at("shard_write", factor).stagePeaks.last.maxTaskBytes)
+    require(w1 > 0 && wN > 0, s"the shard sort reported no peak: $w1, $wN")
+    require(w1 == wN,
+      s"shard sort per-task peak execution memory grew: $w1 -> $wN bytes")
     println(s"""{"smoke":"fast_data","factors":[1,$factor],""" +
-      s""""exch_invariant":true,"peak_exec_invariant":true}""")
+      s""""exch_invariant":true,"peak_exec_invariant":true,""" +
+      s""""sort_peak_bytes":$w1}""")
     spark.stop()
   }
 }

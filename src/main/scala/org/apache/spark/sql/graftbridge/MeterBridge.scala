@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.SparkContext
+import org.apache.spark.resource.ResourceProfile
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 
@@ -14,6 +15,11 @@ object MeterBridge {
     * SQL-execution-end events before the action returns, so after this
     * call a listener has seen all of them. */
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** How many tasks of the default resource profile can run at once on
+    * the executors `sc` has now; in local mode, its cores. */
+  def taskSlots(sc: SparkContext): Int =
+    sc.maxNumConcurrentTasks(ResourceProfile.getOrCreateDefaultProfile(sc.conf))
 
   /** The action's name ("collect", "save", ...), if it was given one. */
   def executionName(e: SparkListenerSQLExecutionEnd): Option[String] =

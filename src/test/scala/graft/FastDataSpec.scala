@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.TaskBridge
 
 import graft.core.{FileInfo, TableMeta, VariableMeta}
 import graft.obs.Meter
@@ -101,6 +102,23 @@ class FastDataSpec extends SparkSpec {
     }._2.tasks
     val (one, packed) = (tasks(600), tasks(1200))
     assert(one - packed == 5 - 3, s"tasks: $one at 600 rows, $packed at 1200")
+  }
+
+  test("the shard sort reports its peak, under one Tungsten page") {
+    // 1,200 rows: one write task under the default budget
+    val (names, r) = Meter.on(spark).span("shard-peak") {
+      FastData.writeShards(frame(2), meta, "DATETIME", 1,
+        Files.createTempDirectory("shards_peak").toString, "Site_fast")
+    }
+    assert(names.length == 2)
+    // the write's result stage ends last; the counting pass's final
+    // aggregate, earlier in the span, holds a whole page of its own
+    val write = r.stagePeaks.last
+    assert(write.job.startsWith("collect at FastData.scala") &&
+      write.tasks == 1, r.stagePeaks)
+    val page = TaskBridge.pageSizeBytes(spark)
+    assert(write.execBytes > 0 && write.execBytes < page,
+      s"write stage ${write.execBytes} B at a $page B page")
   }
 
   test("a null timestamp fails the write by name and writes nothing") {

@@ -4,9 +4,11 @@ import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.TaskBridge
 
 import graft.core.{FileInfo, TableMeta, VariableMeta}
 import graft.functions.Conversions
+import graft.operators.JoinOps
 import graft.pipeline.{L1Pipeline, MergeLegality}
 import graft.pipeline.L1Pipeline.Conditioned
 
@@ -50,6 +52,55 @@ class L1PipelineSpec extends SparkSpec {
     assert(m.df.count() == 2)
     assert(m.df.columns.toSet == Set("DATETIME", "Ta", "RH"))
     assert(m.meta.variableNames.sorted == Seq("RH", "Ta"))
+  }
+
+  /** Three half-hourly frames on `DATETIME`: `Ta` and `RH` overlap on
+    * four ticks, `Fc` is disjoint from both, and each has null cells,
+    * some on shared ticks. */
+  private def mergeInputs: Seq[Seq[(Timestamp, Option[Double])]] = {
+    val t0 = ts("2024-01-01 00:00:00").getTime
+    def at(i: Int) = new Timestamp(t0 + i * 1800000L)
+    Seq(
+      (0 until 8).map(i => (at(i), Option.when(i % 3 != 0)(i * 1.0))),
+      (4 until 12).map(i => (at(i), Option.when(i % 4 != 1)(i * 10.0))),
+      (20 until 24).map(i => (at(i), Option.when(i != 21)(i * 100.0))))
+  }
+
+  for (n <- Seq(1, 3, 7)) {
+    test(s"mergeOnTime equals a driver-side merge at $n shuffle partitions") {
+      val confs = Map("spark.sql.shuffle.partitions" -> n.toString,
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+      val old = confs.keys.map(k => k -> spark.conf.get(k)).toMap
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val names = Seq("Ta", "RH", "Fc")
+        val inputs = mergeInputs
+        val frames = inputs.zip(names).map { case (rows, v) =>
+          rows.toDF("DATETIME", v) }
+        val merged = JoinOps.mergeOnTime(frames, Seq("DATETIME"))
+        val (got, r) = graft.obs.Meter.on(spark).span("mergeOnTime") {
+          merged.select((col("DATETIME") +: names.map(col)): _*).collect()
+            .map(row => (row.getTimestamp(0), (1 to 3).map(i =>
+              Option.unless(row.isNullAt(i))(row.getDouble(i)))))
+            .sortBy(_._1.getTime).toSeq
+        }
+        val cells = inputs.map(_.toMap)
+        val want = cells.flatMap(_.keys).distinct.sortBy(_.getTime)
+          .map(t => (t, cells.map(_.getOrElse(t, None))))
+        assert(got == want)
+        // one shuffled hash join per fold step: no sort-merge join's
+        // input sorts, and no broadcast
+        assert(r.census.joins == Map("shj" -> (frames.size - 1)),
+          r.census.joinLine)
+        // both steps run in the last stage, and their hashed sides take
+        // a page that the join does not report: the meter sees it in
+        // the task memory manager's peak
+        val merge = r.stagePeaks.last
+        assert(merge.tasks == n, r.stagePeaks)
+        assert(merge.acquiredBytes >= TaskBridge.pageSizeBytes(spark) &&
+          merge.acquiredBytes > merge.execBytes, merge)
+      } finally old.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
   }
 
   test("convertUnits updates frame and catalog in lockstep (F12/#9)") {

@@ -4,6 +4,7 @@ import java.util.concurrent.{CyclicBarrier, TimeUnit}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.MeterBridge
 
 import graft.obs.{Census, Meter, Reading}
 import graft.operators.Materialize
@@ -99,6 +100,28 @@ class MeterSpec extends SparkSpec {
       assert(inner.jobs.head.id != outer.jobs.head.id)
       assert(group == "caller")
     } finally sc.clearJobGroup()
+  }
+
+  test("a stage's concurrent peak sums its hungriest tasks, one per slot") {
+    val slots = MeterBridge.taskSlots(spark.sparkContext)
+    // more sort tasks than slots: the concurrent peak counts `slots`
+    // of them, not every task
+    val parts = slots + 2
+    val (_, r) = meter.span("sorts") {
+      spark.range(0, 2000L * parts, 1, parts).sortWithinPartitions(-col("id"))
+        .write.format("noop").mode("overwrite").save()
+    }
+    val sort = r.stagePeaks.maxBy(_.execBytes)
+    assert(r.stagePeak == sort)
+    assert(sort.tasks == parts && sort.job.nonEmpty, r.stagePeaks)
+    // every task sorts 2,000 longs, so every task peaks alike
+    assert(r.peakExecBytes > 0)
+    assert(sort.execBytes == slots * r.peakExecBytes, sort)
+    assert(sort.maxTaskBytes == r.peakExecBytes, sort)
+    // the sorter's pages are granted by the task memory manager too
+    assert(sort.acquiredBytes >= sort.execBytes, sort)
+    assert(r.stagePeaks.size == r.stages)
+    assert(meter.span("none")(())._2.stagePeak == Reading.StagePeak.None)
   }
 
   test("the storage peak sees blocks released before the span ends") {

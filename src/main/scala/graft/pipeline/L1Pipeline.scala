@@ -227,69 +227,11 @@ object L1Pipeline {
     NetCdf.write(outPath, Dataset(dims, globals, vars))
   }
 
-  /** Record variables of an L1 product (everything over the record
-    * dim except the time coordinate and crs). */
-  private def ncDataVars(ds: graft.sources.NetCdf.Dataset)
-      : Seq[graft.sources.NetCdf.Var] = {
-    val recId = ds.dims.indexWhere(_.length == 0)
-    ds.vars.filter(v => v.name != "time" && v.name != "crs" &&
-      v.dimIds.headOption.contains(recId))
-  }
-
-  private def ncSchema(ds: graft.sources.NetCdf.Dataset)
-      : org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(StructField("DATETIME", TimestampType) +:
-      ncDataVars(ds).map(v => StructField(v.name,
-        if (v.ncType == graft.sources.NetCdf.NcInt) IntegerType
-        else DoubleType)))
-  }
-
-  /** Rows of (epoch micros, values...) for one decoded product. */
-  private def ncRows(ds: graft.sources.NetCdf.Dataset)
-      : Seq[org.apache.spark.sql.Row] = {
-    import graft.sources.NetCdf
-    val time = ds.vars.find(_.name == "time")
-      .getOrElse(throw new IllegalArgumentException("no time var"))
-    val dataVars = ncDataVars(ds)
-    time.data.indices.map { i =>
-      val us = ((time.data(i) + NetCdf.Epoch1800Sec) * 1000.0).toLong * 1000L
-      org.apache.spark.sql.Row.fromSeq(us +: dataVars.map { v =>
-        val d = v.data(i)
-        if (v.ncType == NetCdf.NcInt) d.toInt
-        else if (d.isNaN) null else d
-      })
-    }
-  }
-
-  /** S11/J4 netCDF scan seam: a yearly product file, or a directory
-    * of them, back to a frame (DATETIME + data/flag columns; NaN ->
-    * null). Files decode one per task (binaryFile source), so a
-    * decade of site-years parallelizes across executors with no
-    * driver materialization. The schema comes from the first listed
-    * file, parsed on the driver, so the read runs no Spark job; every
-    * file must carry that schema (mismatches fail loudly with the
-    * decoded schema). */
-  def readNetCdf(spark: SparkSession, path: String): DataFrame = {
-    import graft.sources.NetCdf
-    val (bin, first) = graft.sources.BinaryFiles.scan(spark, path)
-    val schema = ncSchema(NetCdf.parse(first))
-    val decodeSchema = org.apache.spark.sql.types.StructType(
-      schema.fields.map(f => if (f.name == "DATETIME")
-        f.copy(dataType = org.apache.spark.sql.types.LongType) else f))
-    implicit val enc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
-      org.apache.spark.sql.Encoders.row(decodeSchema)
-    val expectCols = schema.fieldNames.toSeq
-    val decoded = bin.flatMap { r =>
-      val ds = NetCdf.parse(r.getAs[Array[Byte]](1))
-      val cols = "DATETIME" +: ncDataVars(ds).map(_.name)
-      require(cols == expectCols,
-        s"netCDF schema mismatch in ${r.getString(0)}: $cols vs probe " +
-        s"$expectCols — decode a homogeneous directory")
-      ncRows(ds)
-    }
-    decoded.withColumn("DATETIME", timestamp_micros(col("DATETIME")))
-  }
+  /** S11/J4: a yearly product file, or a directory of them, back to
+    * a frame (DATETIME + data/flag columns; NaN -> null) through the
+    * logger-file scan seam ([[graft.sources.v2.NetCdfDataSource]]). */
+  def readNetCdf(spark: SparkSession, path: String): DataFrame =
+    spark.read.format("netcdf").load(path)
 
   /** J4 multi-year read-back: partitioned parquet scan (year pruning
     * is free); QC flag columns dropped for analysis reads. */

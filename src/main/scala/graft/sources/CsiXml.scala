@@ -3,11 +3,10 @@ package graft.sources
 import java.io.ByteArrayInputStream
 import javax.xml.parsers.DocumentBuilderFactory
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.SparkSession
 
 import graft.core.{FileInfo, TableMeta, VariableMeta}
+import graft.sources.v2.CsiXmlV2
 
 /** S10: CSIXML source — Campbell's XML data format: a <head> with
   * environment + per-field metadata, and a <data> section of <r>
@@ -15,15 +14,14 @@ import graft.core.{FileInfo, TableMeta, VariableMeta}
   * values (reference behavior:
   * code/file_handling/read_cs_files.py:204-243,152-174).
   *
-  * Files are small (logger pulls); decode uses the JDK DOM parser in
-  * executors via the binaryFile source — one file per task, no
+  * Files are small (logger pulls); [[read]] is the logger-file scan
+  * seam (`format("csixml")`, [[graft.sources.v2.CsiXmlDataSource]]),
+  * which parses each file with the JDK DOM parser in one task, no
   * external XML dependency.
   */
 object CsiXml {
 
-  final case class Parsed(data: DataFrame, meta: TableMeta)
-
-  private def parseDoc(bytes: Array[Byte]) = {
+  private[sources] def parseDoc(bytes: Array[Byte]) = {
     val f = DocumentBuilderFactory.newInstance()
     f.setNamespaceAware(false)
     // hardening: no external entities (untrusted logger input)
@@ -31,15 +29,14 @@ object CsiXml {
     f.newDocumentBuilder().parse(new ByteArrayInputStream(bytes))
   }
 
-  private def childElems(n: org.w3c.dom.Node): Seq[org.w3c.dom.Element] = {
+  private[sources] def childElems(n: org.w3c.dom.Node): Seq[org.w3c.dom.Element] = {
     val nl = n.getChildNodes
     (0 until nl.getLength).map(nl.item)
       .collect { case e: org.w3c.dom.Element => e }
   }
 
-  /** Driver-side header probe: field names/types from <head>. */
-  def probeMeta(bytes: Array[Byte]): TableMeta = {
-    val doc = parseDoc(bytes)
+  /** Header metadata: field names/types from <head>. */
+  def probeMeta(doc: org.w3c.dom.Document): TableMeta = {
     val root = doc.getDocumentElement
     val head = childElems(root).find(_.getTagName == "head").get
     val fields = childElems(head).find(_.getTagName == "fields").get
@@ -59,22 +56,6 @@ object CsiXml {
         "", envVal("table-name")),
       VariableMeta("TIMESTAMP", "TS", "") +:
         VariableMeta("RECORD", "RN", "") +: vars)
-  }
-
-  /** Decode one file: (time attr, record no, field values as double). */
-  def decode(bytes: Array[Byte], nFields: Int): Seq[Row] = {
-    val doc = parseDoc(bytes)
-    val root = doc.getDocumentElement
-    val data = childElems(root).find(_.getTagName == "data").get
-    childElems(data).filter(_.getTagName == "r").map { r =>
-      val time = r.getAttribute("time")     // ISO "2024-01-01T00:30:00"
-      val no = r.getAttribute("no").toLong
-      val vals: Seq[Any] = childElems(r).filter(_.getTagName == "v")
-        .map(v => v.getTextContent.toDoubleOption
-          .map(java.lang.Double.valueOf).orNull)
-        .padTo(nFields, null)
-      Row.fromSeq(time +: no +: vals.take(nFields))
-    }
   }
 
   private def xmlEscape(s: String): String =
@@ -133,26 +114,8 @@ object CsiXml {
 
   /** Reads a CSIXML file, directory or glob, one file per task, with
     * the first listed file's head (parsed on the driver, so the read
-    * runs no Spark job) as the [[TableMeta]]. */
-  def read(spark: SparkSession, path: String): Parsed = {
-    val (bin, first) = BinaryFiles.scan(spark, path)
-    val meta = probeMeta(first)
-    val valueVars = meta.variables.drop(2)
-    val decodeSchema = StructType(
-      StructField("time_str", StringType) ::
-      StructField("RECORD", LongType) ::
-      valueVars.map(v => StructField(v.name, DoubleType)).toList)
-    implicit val enc: Encoder[Row] = Encoders.row(decodeSchema)
-    val n = valueVars.length
-    val rows = bin.flatMap(r => decode(r.getAs[Array[Byte]](1), n))
-    val df = rows
-      .withColumn("DATETIME",
-        try_to_timestamp(col("time_str"),
-          lit("yyyy-MM-dd'T'HH:mm:ss")))
-      .drop("time_str")
-      .select(col("DATETIME") +: col("RECORD") +:
-        valueVars.map(v => col(v.name)): _*)
-      .filter(col("DATETIME").isNotNull)
-    Parsed(df, meta)
-  }
+    * runs no Spark job) as the [[TableMeta]]. Every file's <fields>
+    * must match that head (D7), else its reader throws naming it. */
+  def read(spark: SparkSession, path: String): Parsed =
+    Parsed(spark.read.format("csixml").load(path), probeMeta(CsiXmlV2.probe(path)))
 }

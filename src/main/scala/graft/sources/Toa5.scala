@@ -24,14 +24,12 @@ import graft.sources.v2.Toa5V2
   *
   * Spark-first design: the header block is probed driver-side (a few
   * hundred bytes, no job), producing a `StructType` + [[TableMeta]];
-  * the body scans distributedly through the V2 source
-  * `format("toa5")`, one task per file, each task checking its file's
-  * header against the scan schema (reference D7:
-  * code/utils/fast_file_io.py:294-341).
+  * the body scans distributedly through the logger-file scan seam
+  * (`format("toa5")`, [[graft.sources.v2.LoggerSource]]), one task per
+  * file, each task checking its file's header against the scan schema
+  * (reference D7: code/utils/fast_file_io.py:294-341).
   */
 object Toa5 {
-
-  final case class Parsed(data: DataFrame, meta: TableMeta)
 
   /** Driver-side header probe (S3/S4/S5): first `headerLines` lines. */
   def probeHeader(path: String): (FileFormat, Seq[String]) = {
@@ -79,9 +77,10 @@ object Toa5 {
     })
 
   /** Reads a file, a directory or a glob leaf (a pattern such as
-    * `*.dat` as the last path element) of header-identical files through the V2 scan
+    * `*.dat` as the last path element) of header-identical files
+    * through the logger-file scan seam
     * ([[graft.sources.v2.Toa5DataSource]]), with the first file's
-    * header as the [[TableMeta]].
+    * header as the [[TableMeta]]. Building the frame runs no Spark job.
     *
     * Produces the conditioned frame: DATETIME built (F27), unparseable
     * timestamps dropped (D4), value columns coerced (D3), every file's
@@ -89,10 +88,8 @@ object Toa5 {
     * separate operators (TimeSeriesOps) — same separation as the
     * reference's FileHandler vs file_io.
     */
-  def read(spark: SparkSession, path: String): Parsed = {
-    val (fmt, header) = probeHeader(Toa5V2.listFiles(path).head)
-    Parsed(spark.read.format("toa5").load(path), parseHeader(fmt, header))
-  }
+  def read(spark: SparkSession, path: String): Parsed =
+    Parsed(spark.read.format("toa5").load(path), Toa5V2.probe(path)._2)
 
   /** K1/K2 writer: byte-stable single-file TOA5 output — header block
     * then body rows, QUOTE_NONNUMERIC quoting, NA token, timestamp as

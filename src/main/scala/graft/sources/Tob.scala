@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.types._
@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{FileInfo, TableMeta, VariableMeta}
 import graft.functions.Fp2
-import graft.sources.v2.{Toa5V2, TobV2}
+import graft.sources.v2.TobV2
 
 /** Campbell Scientific TOB1/TOB3 binary sources (S8/S9).
   *
@@ -34,8 +34,9 @@ import graft.sources.v2.{Toa5V2, TobV2}
   *    holding only `offset bytes / record size` records. Sub-record i
   *    timestamps at header.seconds + i*subStep + subScale*subseconds.
   *
-  * Scale shape: [[read]] is `spark.read.format("tob")`
-  * ([[graft.sources.v2.TobDataSource]]), which cuts each file into
+  * Scale shape: [[read]] is `spark.read.format("tob")`, the
+  * logger-file scan seam ([[graft.sources.v2.TobDataSource]]), which
+  * cuts each file into
   * frame-aligned splits and runs the [[Records]] walker into reused
   * Catalyst rows. The whole-file `decodeTob*` views are the reference
   * the specs hold the splits to.
@@ -412,14 +413,9 @@ object Tob {
   /** Decode one TOB1 file's bytes to rows of (DATETIME us, fields...).
     * Leading SECONDS/NANOSECONDS channels collapse into the timestamp. */
   def decodeTob1(bytes: Array[Byte]): (Seq[Row], TobHeader) = {
-    val (it, h) = decodeTob1Rows(bytes)
+    val (it, h) = rowView(bytes, "TOB1", recordOrder = false)
     (it.toVector, h)
   }
-
-  /** Streaming TOB1 decode: records are stored sequentially (no frame
-    * reordering exists in TOB1), so file order IS the contract order. */
-  def decodeTob1Rows(bytes: Array[Byte]): (Iterator[Row], TobHeader) =
-    rowView(bytes, "TOB1", recordOrder = false)
 
   // --- TOB3 -----------------------------------------------------------
 
@@ -551,15 +547,11 @@ object Tob {
         StructField("RECORD", LongType) +: fields)
   }
 
-  final case class Parsed(data: DataFrame, meta: TableMeta)
-
   /** Reads a file, a directory or a glob leaf of TOB files through
-    * the V2 scan ([[graft.sources.v2.TobDataSource]]), with the first
-    * file's header as the [[TableMeta]]. Planning reads headers only
-    * and runs no Spark job; each split's reader rejects a file whose
-    * header differs from the first. */
-  def read(spark: SparkSession, path: String): Parsed = {
-    val (h, _) = TobV2.header(Toa5V2.listFiles(path).head)
-    Parsed(spark.read.format("tob").load(path), tableMeta(h))
-  }
+    * the logger-file scan seam ([[graft.sources.v2.TobDataSource]]),
+    * with the first file's header as the [[TableMeta]]. Planning reads
+    * headers only and runs no Spark job; each split's reader rejects a
+    * file whose header differs from the first. */
+  def read(spark: SparkSession, path: String): Parsed =
+    Parsed(spark.read.format("tob").load(path), tableMeta(TobV2.probe(path)._1))
 }

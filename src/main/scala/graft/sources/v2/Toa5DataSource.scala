@@ -2,184 +2,51 @@ package graft.sources.v2
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import java.time.{LocalDateTime, ZoneId}
+import java.time.ZoneId
 import java.time.format.{DateTimeFormatter, ResolverStyle}
-import java.util.OptionalLong
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics}
-import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
+import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.FileFormat
+import graft.core.{FileFormat, TableMeta}
 import graft.sources.Toa5
 
-/** DataSource V2 for TOA5 and EddyPro logger files:
-  * `spark.read.format("toa5").load(path)`, where `path` is a file, a
-  * directory or a glob leaf (a pattern such as `*.dat` as the last
-  * path element). This is the one TOA5
-  * reader: [[graft.sources.Toa5.read]] is this scan plus the header's
-  * [[graft.core.TableMeta]].
-  *
-  *  - '''Column pruning into the parse''': only the fields Catalyst
-  *    asks for (ReadSchema) are converted, so a 2-column projection
-  *    over a 200-column logger table does ~1% of the conversion work.
-  *  - '''Size statistics''': the scan reports the listed files' total
-  *    size, so AQE and the join planner plan against a real size.
-  *  - '''One partition per file''': a site-year is hundreds of daily
-  *    files, natural parallelism across executors with no shuffle. A
-  *    file larger than `maxPartitionBytes` is still one task.
+/** TOA5 and EddyPro logger files through the logger-file scan seam
+  * ([[LoggerSource]]): `spark.read.format("toa5").load(path)`. This is
+  * the one TOA5 reader: [[graft.sources.Toa5.read]] is this scan plus
+  * the header's [[graft.core.TableMeta]]. A 2-column projection over
+  * a 200-column logger table converts ~1% of the cells.
   *
   * Row semantics (reference: code/file_handling/file_io.py:61-262):
-  * the schema comes from the first file's header, and every file's
-  * own header must name the same columns in the same order (D7), else
-  * its reader throws naming the file. Header lines are skipped per
-  * format; a line splits at the separator outside double quotes and
-  * each cell loses its enclosing quotes. Declared non-numeric columns
-  * are strings, all else double with NA and bad cells -> null (D3).
-  * DATETIME is TIMESTAMP (TOA5) or date + time (EddyPro) read as
-  * wall-clock time in the session time zone, the zone the TOA5
-  * writers render; a row with an unparseable timestamp is dropped (D4).
+  * header lines are skipped per format; a line splits at the
+  * separator outside double quotes and each cell loses its enclosing
+  * quotes. Declared non-numeric columns are strings, all else double
+  * with NA and bad cells -> null (D3). DATETIME is TIMESTAMP (TOA5) or
+  * date + time (EddyPro) read as wall-clock time in the session time
+  * zone, the zone the TOA5 writers render; a row with an unparseable
+  * timestamp is dropped (D4).
   */
-class Toa5DataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "toa5"
+class Toa5DataSource extends LoggerSource(Toa5V2)
 
-  override def supportsExternalMetadata(): Boolean = true
+/** The header is the file's format and [[TableMeta]]; the schema its
+  * columns, then DATETIME. A split is a whole file. */
+object Toa5V2 extends LoggerFormat[(FileFormat, TableMeta)] {
+  val name = "toa5"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    Toa5V2.fullSchema(Toa5V2.pathOf(options))
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new Toa5Table(schema, properties.get("path"))
-}
-
-private[v2] class Toa5Table(tableSchema: StructType, path: String)
-    extends Table with SupportsRead {
-  override def name(): String = s"toa5:$path"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new Toa5ScanBuilder(tableSchema, Toa5V2.pathOf(options))
-}
-
-private[v2] class Toa5ScanBuilder(fullSchema: StructType, path: String)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = fullSchema
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan = new Toa5Scan(path, fullSchema, required,
-    SQLConf.get.sessionLocalTimeZone)
-}
-
-private[v2] case class Toa5InputPartition(file: String) extends InputPartition
-
-private[v2] class Toa5Scan(path: String, fullSchema: StructType,
-    required: StructType, timeZone: String)
-    extends Scan with Batch with SupportsReportStatistics {
-  private lazy val files = Toa5V2.listFiles(path)
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  override def estimateStatistics(): Statistics = {
-    val bytes = files.map(f => Files.size(Paths.get(f))).sum
-    new Statistics {
-      override def sizeInBytes(): OptionalLong = OptionalLong.of(bytes)
-      override def numRows(): OptionalLong = OptionalLong.empty()
-    }
+  def header(file: String): (FileFormat, TableMeta) = {
+    val (fmt, lines) = Toa5.probeHeader(file)
+    (fmt, Toa5.parseHeader(fmt, lines))
   }
 
-  override def planInputPartitions(): Array[InputPartition] =
-    files.map(f => Toa5InputPartition(f): InputPartition).toArray
+  def schema(header: (FileFormat, TableMeta)): StructType =
+    Toa5.schemaFor(header._1, header._2).add("DATETIME", TimestampType)
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new Toa5ReaderFactory(fullSchema, required, timeZone)
-}
-
-private[v2] class Toa5ReaderFactory(fullSchema: StructType,
-    required: StructType, timeZone: String) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new Toa5PartitionReader(partition.asInstanceOf[Toa5InputPartition].file,
-      fullSchema, required, ZoneId.of(timeZone))
-}
-
-/** Streams one file: checks its header against the scan schema, skips
-  * the header block, splits each row, converts ONLY the required
-  * fields, drops rows with unparseable timestamps. */
-private[v2] class Toa5PartitionReader(file: String,
-    fullSchema: StructType, required: StructType, zone: ZoneId)
-    extends PartitionReader[InternalRow] {
-  private val (fmt, names) = {
-    val (fmt, header) = Toa5.probeHeader(file)
-    (fmt, Toa5.parseHeader(fmt, header).variableNames)
-  }
-  private val scanNames = fullSchema.fieldNames.toSeq.filter(_ != "DATETIME")
-  if (names != scanNames) throw new IllegalArgumentException(
-    s"TOA5 header mismatch in $file: columns ${names.mkString(",")} " +
-    s"differ from the scan's ${scanNames.mkString(",")}")
-  private val ts = new Toa5V2.TsSpec(fmt, names)
-  // own-header index of each required output column (DATETIME is
-  // derived: TIMESTAMP for TOA5, date+time for EddyPro)
-  private val srcIdx: Array[Int] = required.fields.map {
-    case f if f.name == "DATETIME" => -1
-    case f => names.indexOf(f.name)
-  }
-  private val isDouble = required.fields.map(_.dataType == DoubleType)
-  private val cells = new Toa5V2.Cells(fmt.separator.head)
-  private val reader = Files.newBufferedReader(
-    Paths.get(file), StandardCharsets.UTF_8)
-  (0 until fmt.headerLines).foreach(_ => reader.readLine())
-
-  private var row: InternalRow = _
-
-  override def next(): Boolean = {
-    var line = reader.readLine()
-    while (line != null) {
-      if (line.nonEmpty) {
-        cells.split(line)
-        val micros = ts.micros(cells, zone)
-        if (micros != Long.MinValue) {      // D4: bad timestamp -> drop
-          val out = new GenericInternalRow(srcIdx.length)
-          var i = 0
-          while (i < srcIdx.length) {
-            val si = srcIdx(i)
-            if (si < 0) out.update(i, micros)
-            else if (si >= cells.count) out.update(i, null) // short row
-            else {
-              val raw = cells(si)
-              if (!isDouble(i)) out.update(i, UTF8String.fromString(raw))
-              else if (raw == fmt.naToken || raw.isEmpty) out.update(i, null)
-              else try out.update(i, raw.toDouble)
-              catch { case _: NumberFormatException => out.update(i, null) }
-            }
-            i += 1
-          }
-          row = out
-          return true
-        }
-      }
-      line = reader.readLine()
-    }
-    false
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = reader.close()
-}
-
-/** Pure helpers shared by planner and reader (unit-tested directly). */
-object Toa5V2 {
+  def reader(split: FileSplit, header: (FileFormat, TableMeta),
+      fields: Array[Int], zone: ZoneId): PartitionReader[InternalRow] =
+    new Toa5Reader(split.file, header._1, schema(header), fields, zone)
 
   /** The cells of one line split at `sep` outside double quotes, as
     * Spark's CSV parser splits it: a quote opens a quoted cell only at
@@ -249,40 +116,58 @@ object Toa5V2 {
       * time read in `zone`; Long.MinValue if missing or unparseable. */
     def micros(cells: Cells, zone: ZoneId): Long =
       if (idxs.exists(i => i < 0 || i >= cells.count)) Long.MinValue
-      else try {
-        val s = if (idxs.length == 1) cells(idxs(0))
-          else idxs.map(cells(_)).mkString(" ")
-        val t = LocalDateTime.parse(s, formatter).atZone(zone)
-        t.toEpochSecond * 1000000L + t.getNano / 1000L
-      } catch { case _: java.time.DateTimeException => Long.MinValue }
+      else LoggerFormat.micros(if (idxs.length == 1) cells(idxs(0))
+        else idxs.map(cells(_)).mkString(" "), formatter, zone)
   }
+}
 
-  def pathOf(options: CaseInsensitiveStringMap): String = {
-    val p = options.get("path")
-    require(p != null, "toa5 source requires a path")
-    p
-  }
+/** Streams one file: skips its header block, splits each line,
+  * converts ONLY the required fields into one reused row, and drops
+  * lines with unparseable timestamps. */
+private[v2] final class Toa5Reader(file: String, fmt: FileFormat,
+    schema: StructType, fields: Array[Int], zone: ZoneId)
+    extends PartitionReader[InternalRow] {
+  private val names = schema.fieldNames.toSeq.init   // the header's
+  private val ts = new Toa5V2.TsSpec(fmt, names)
+  // the cell of each output column; -1 for DATETIME, the last column,
+  // derived from TIMESTAMP (TOA5) or date + time (EddyPro)
+  private val src: Array[Int] = fields.map(f => if (f == names.length) -1 else f)
+  private val types = fields.map(schema(_).dataType)
+  private val isDouble = types.map(_ == DoubleType)
+  private val row = new SpecificInternalRow(types.toSeq)
+  private val cells = new Toa5V2.Cells(fmt.separator.head)
+  private val in = Files.newBufferedReader(Paths.get(file), StandardCharsets.UTF_8)
+  (0 until fmt.headerLines).foreach(_ => in.readLine())
 
-  /** The files of a file, a directory or a glob leaf, sorted. */
-  def listFiles(path: String): Seq[String] = {
-    val p = Paths.get(path)
-    val name = Option(p.getFileName).map(_.toString).getOrElse("")
-    val glob = name.exists(c => c == '*' || c == '?' || c == '[')
-    if (!glob && !Files.isDirectory(p)) Seq(path)
-    else {
-      // a glob leaf (dir/*.dat) matches within the parent directory
-      val stream =
-        if (glob) Files.newDirectoryStream(p.getParent, name)
-        else Files.newDirectoryStream(p)
-      try stream.iterator().asScala
-        .filter(f => !Files.isDirectory(f)).map(_.toString).toSeq.sorted
-      finally stream.close()
+  override def next(): Boolean = {
+    var line = in.readLine()
+    while (line != null) {
+      if (line.nonEmpty) {
+        cells.split(line)
+        val micros = ts.micros(cells, zone)
+        if (micros != Long.MinValue) {      // D4: bad timestamp -> drop
+          var i = 0
+          while (i < src.length) {
+            val si = src(i)
+            if (si < 0) row.setLong(i, micros)
+            else if (si >= cells.count) row.setNullAt(i) // short row
+            else {
+              val raw = cells(si)
+              if (!isDouble(i)) row.update(i, UTF8String.fromString(raw))
+              else if (raw == fmt.naToken || raw.isEmpty) row.setNullAt(i)
+              else try row.setDouble(i, raw.toDouble)
+              catch { case _: NumberFormatException => row.setNullAt(i) }
+            }
+            i += 1
+          }
+          return true
+        }
+      }
+      line = in.readLine()
     }
+    false
   }
 
-  def fullSchema(path: String): StructType = {
-    val (fmt, header) = Toa5.probeHeader(listFiles(path).head)
-    val meta = Toa5.parseHeader(fmt, header)
-    Toa5.schemaFor(fmt, meta).add("DATETIME", TimestampType)
-  }
+  override def get(): InternalRow = row
+  override def close(): Unit = in.close()
 }

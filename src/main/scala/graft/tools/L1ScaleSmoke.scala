@@ -30,12 +30,21 @@ import graft.pipeline.L1Pipeline.Conditioned
   *
   * Evidence recorded per factor: wall seconds per phase (condition+
   * legality / concat+merge+convert+mask+QC / partitioned write),
-  * physical-plan Exchange count of the merged frame, rows written,
-  * files per year partition, shuffle bytes, GC seconds. The
-  * assertions that matter at 100 TB: exchange counts FACTOR-
-  * INVARIANT, wall ~linear in f, and no driver-side materialization
-  * anywhere (legality's actions are bounded: interval inference is a
-  * two-row collect, the new-dates probe a count).
+  * the planned Exchange count and join strategies of the merged frame
+  * ([[graft.obs.Census]] of the plan before it runs), rows written,
+  * years written, shuffle MiB (whole MiB, so a sub-MiB phase reads 0)
+  * and GC seconds. It records; it asserts nothing. Legality's actions
+  * are bounded: interval inference is a two-row collect, the
+  * new-dates probe a count.
+  *
+  * The exchange count is NOT factor-invariant today: it reads 5 at
+  * factor 1 and 4 at factor 100. The merged frame plans two joins.
+  * The J3 merge (`JoinOps.mergeOnTime`) is pinned `shuffle_hash`
+  * and reads shj at both factors. The second table's A1 grid join
+  * (`TimeSeriesOps.regularize`'s unhinted `grid.join(df, ..., "left")`)
+  * is a broadcast hash join at factor 1, where the conditioned side's
+  * size estimate is under the auto-broadcast threshold, and a
+  * sort-merge join at factor 100.
   *
   * Usage: `runMain graft.tools.L1ScaleSmoke [factor] [outDir]`
   * (defaults 100, java.io.tmpdir/graft_l1smoke).
@@ -125,7 +134,7 @@ object L1ScaleSmoke {
         val masked = L1Pipeline.maskPlausible(converted)
         val out = L1Pipeline.withQcFlags(masked.df, "hour_ts")
           .withColumn("year", L1Pipeline.labelYear(col("hour_ts"), step))
-        (out, graft.obs.Census.of(out.queryExecution.executedPlan).exchanges)
+        (out, graft.obs.Census.of(out.queryExecution.executedPlan))
       }
 
       val dataDir = s"$outRoot/f$f/data"
@@ -135,8 +144,10 @@ object L1ScaleSmoke {
       }
       val back = spark.read.parquet(dataDir)
       val nYears = back.select("year").distinct().count()
+      val joins = exch.joins.toSeq.sorted
+        .map { case (k, n) => s""""$k":$n""" }.mkString("{", ",", "}")
       println(f"""{"summary":"l1_lifecycle","factor":$f,""" +
-        f""""exchanges":$exch,"rows":${back.count()},""" +
+        f""""exchanges":${exch.exchanges},"joins":$joins,"rows":${back.count()},""" +
         f""""years":$nYears,"legal":${rep.legal}}""")
       spark.catalog.clearCache()
     }

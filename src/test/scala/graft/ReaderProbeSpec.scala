@@ -7,10 +7,10 @@ import org.apache.spark.sql.functions._
 import graft.core.{FileInfo, TableMeta, VariableMeta}
 import graft.obs.Meter
 import graft.pipeline.L1Pipeline
-import graft.sources.{CsiXml, NetCdf}
+import graft.sources.{CsiXml, NetCdf, Toa5}
 
-/** The whole-file readers (netCDF, CSIXML) take their schema from the
-  * first file on the driver: building the frame runs no Spark job. */
+/** Every logger-file reader takes its schema from the first file on
+  * the driver: building the frame runs no Spark job. */
 class ReaderProbeSpec extends SparkSpec {
 
   /** `read`'s result and the number of Spark jobs it started. */
@@ -51,6 +51,19 @@ class ReaderProbeSpec extends SparkSpec {
     CsiXml.write(dir.resolve("a.xml").toString, meta,
       Seq((t0, 1L, Seq[Any](21.5)), (t0.plusMinutes(30), 2L, Seq[Any](null))))
     val (parsed, jobs) = jobsDuring(CsiXml.read(spark, dir.toString))
+    assert(jobs == 0)
+    assert(parsed.meta.info.stationName == "Site")
+    assert(parsed.data.count() == 2)
+  }
+
+  test("Toa5.read of a directory runs no Spark job before an action") {
+    val dir = Files.createTempDirectory("toa5probe")
+    val header =
+      "\"TOA5\",\"Site\",\"CR1000\",\"1\",\"os\",\"prog\",\"1\",\"Tab\"\r\n" +
+      "\"TIMESTAMP\",\"Ta\"\r\n\"TS\",\"degC\"\r\n\"\",\"Avg\"\r\n"
+    for ((f, ts) <- Seq("a.dat" -> "2024-01-01 00:30:00", "b.dat" -> "2024-01-02 00:30:00"))
+      Files.writeString(dir.resolve(f), header + s"\"$ts\",1.5\r\n")
+    val (parsed, jobs) = jobsDuring(Toa5.read(spark, dir.toString))
     assert(jobs == 0)
     assert(parsed.meta.info.stationName == "Site")
     assert(parsed.data.count() == 2)

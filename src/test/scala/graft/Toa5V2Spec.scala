@@ -167,4 +167,31 @@ class Toa5V2Spec extends SparkSpec {
     assert(scan.map(_.stats.sizeInBytes) ==
       Seq(BigInt(files.map(f => Files.size(java.nio.file.Paths.get(f))).sum)))
   }
+
+  test("the listing skips names starting with . or _") {
+    val dir = Files.createTempDirectory("toa5v2hidden")
+    writeFile(dir, "a.dat", Seq("\"2024-01-01 00:30:00\",1,1"))
+    // both sort before a.dat: the probe used to read them as the header
+    Files.write(dir.resolve("_SUCCESS"), Array.emptyByteArray)
+    Files.write(dir.resolve(".a.dat.crc"), "crc".getBytes(UTF_8))
+    assert(Toa5V2.listFiles(dir.toString).map(
+      p => p.substring(p.lastIndexOf('/') + 1)) == Seq("a.dat"))
+    assert(graft.sources.Toa5.read(spark, dir.toString).data.count() == 1)
+  }
+
+  test("an empty listing or a missing path fails naming the format") {
+    val dir = Files.createTempDirectory("toa5v2empty")
+    val e = intercept[IllegalArgumentException] {
+      graft.sources.Toa5.read(spark, dir.toString)
+    }
+    assert(e.getMessage == s"no toa5 files under $dir")
+    for (format <- Seq("tob", "csixml", "netcdf")) {
+      val e2 = intercept[IllegalArgumentException] {
+        spark.read.format(format).load(dir.toString)
+      }
+      assert(e2.getMessage == s"no $format files under $dir")
+      val e3 = intercept[IllegalArgumentException](spark.read.format(format).load())
+      assert(e3.getMessage.endsWith(s"$format source requires a path"))
+    }
+  }
 }

@@ -76,6 +76,27 @@ class VisCsiXmlSpec extends SparkSpec {
       Timestamp.valueOf("2024-06-01 01:30:00"))
   }
 
+  test("a CSIXML file whose fields differ from the first fails naming it (D7)") {
+    def meta(fields: String*) = TableMeta(
+      FileInfo("CSIXML", "Site", "CR1000X", "1", "os", "prog", "1", "slow"),
+      Seq(VariableMeta("TIMESTAMP", "TS", ""), VariableMeta("RECORD", "RN", "")) ++
+        fields.map(VariableMeta(_, "", "Avg")))
+    val t0 = java.time.LocalDateTime.parse("2024-06-01T00:30:00")
+    val dir = Files.createTempDirectory("csixml_d7")
+    CsiXml.write(dir.resolve("a.xml").toString, meta("Ta", "RH"),
+      Seq((t0, 1L, Seq[Any](21.5, 45.0))))
+    // the same quantities, fields swapped: bound by position, RH
+    // would read as Ta
+    CsiXml.write(dir.resolve("b.xml").toString, meta("RH", "Ta"),
+      Seq((t0.plusMinutes(30), 2L, Seq[Any](46.5, 22.0))))
+    val e = intercept[Exception] {
+      CsiXml.read(spark, dir.toString).data.collect()
+    }
+    val bad = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case x: IllegalArgumentException => x }
+    assert(bad.exists(_.getMessage.contains("b.xml")), e)
+  }
+
   test("E2 vis pipeline: select nearest, normalise, mask, derive, write") {
     val df = Seq(
       (Timestamp.valueOf("2024-01-01 00:30:00"), 21.5, 18.0, 45.0, 101.3, 9999.0),

@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * WHY a kernel and not explode+slice or transform+slice: both
   * relational formulations were measured at factor 100 in
-  * `TextScaleSmoke` (500k docs, 794k chunks) — explode-then-slice
+  * the `text` smoke (500k docs, 794k chunks) — explode-then-slice
   * carries the FULL token array through the Generate (one UnsafeRow
   * copy of the whole array per chunk row; 59.3 s / 1,859 task-s),
   * and building the chunks with a `transform` lambda re-enters HOF

@@ -658,7 +658,7 @@ object MediaDedup {
     // Optional oversize-bucket cap (the LSH/q107 discipline): a
     // (band, word) bucket holding > maxBucket DISTINCT signatures
     // is quadratic in it — on near-degenerate corpora (the
-    // MediaAvScaleSmoke finding) a handful of hot 16-bit words can
+    // `mediaAv` smoke's finding) a handful of hot 16-bit words can
     // carry most of the work. Dropping a bucket loses ONLY pairs
     // whose every other agreeing band is also dropped — one-sided
     // recall reduction, documented not silent: the dropped (band,

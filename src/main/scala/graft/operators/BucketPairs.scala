@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *     the very key the merge join needs, so the capped frame
   *     re-exchanges nothing; the groupBy plus pinned semi-join it
   *     replaced paid two or three more exchanges. Window work per
-  *     bucket is row-linear (`tools/HotKeyCapSmoke` runs a 10⁶-row
+  *     bucket is row-linear (`tools/Smokes` `hotKeyCap` runs a 10⁶-row
   *     bucket through it). No cap, no window.
   *   - the SELF-JOIN: merge-pinned (spillable, AQE-skew-splittable,
   *     never an estimate-driven broadcast of a corpus-derived side),

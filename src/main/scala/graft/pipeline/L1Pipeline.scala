@@ -19,19 +19,23 @@ object L1Pipeline {
 
   /** Condition one source frame (reference DataHandler
     * get_conditioned_data, file_handler.py:21-125): subset+rename
-    * (P1), exact dedup (D1), drop dup-timestamp rows (D2, keep-first
-    * policy), regularize to the site interval (A1). An `intervalSec`
-    * <= 0 means "infer": the interval is taken from the data via
-    * [[TimeSeriesOps.requireUniformInterval]], which enforces the
-    * reference's min==mode policy (file_io.py:1079-1087) and throws
-    * when sub-interval rows survive the dedup. */
+    * (P1), drop dup-timestamp rows (D2, keep-first policy), regularize
+    * to the site interval (A1). D2 subsumes the reference's exact
+    * dedup (D1): exact duplicates share their timestamp, and D2's
+    * per-timestamp `first` aggregate does not depend on duplicate
+    * rows, so Catalyst's `RemoveRedundantAggregates` folded a D1
+    * `dropDuplicates()` before it into D2 and never ran it (D1 stays
+    * a query of its own, [[TimeSeriesOps.dropExactDuplicates]]). An
+    * `intervalSec` <= 0 means "infer": the interval is taken from the
+    * data via [[TimeSeriesOps.requireUniformInterval]], which enforces
+    * the reference's min==mode policy (file_io.py:1079-1087) and
+    * throws when sub-interval rows survive the dedup. */
   def condition(c: Conditioned, tsCol: String, intervalSec: Long,
       usecols: Map[String, String]): Conditioned = {
     val selected = c.df.select(
       col(tsCol) +: usecols.toSeq.sortBy(_._1).map {
         case (from, to) => col(from).as(to) }: _*)
-    val deduped = selected.dropDuplicates()
-      .dropDuplicates(tsCol)    // D2 keep-one policy
+    val deduped = selected.dropDuplicates(tsCol)    // D2 keep-one policy
     val step =
       if (intervalSec > 0) intervalSec
       else TimeSeriesOps.requireUniformInterval(deduped, tsCol)

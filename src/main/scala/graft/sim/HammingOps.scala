@@ -160,8 +160,8 @@ object HammingOps {
     * cos) ranked (cos DESC nulls last, n_id ASC); requires
     * shortlist ≥ k.
     *
-    * SIZING (the d=768 recall panel, `tools/Wide768Recall`,
-    * BENCH_NOTES r17 — measured, not derived): at real embedding
+    * SIZING (the d=768 recall panel, BENCH_NOTES "Round 17: d=768
+    * wide-Hamming recall point" — measured, not derived): at real embedding
     * dimensionality the RAW wide-Hamming ranking is a candidate
     * generator only (≤ 10% recall@10 even at 256 bits), so this
     * two-stage form is the operating level, and the shortlist is the
@@ -177,8 +177,8 @@ object HammingOps {
     * fetches) while the corpus-wide stage-1 scan still moves only
     * 8 BIGINT words per row ≈ 0.4% of the d=768 float payload. */
   /** The measured shortlist floor for [[hammingRerankTopK]] at real
-    * embedding dimensionality: 40·k (the `tools/Wide768Recall`
-    * operating point — recall@10 ≥ 0.9995 on the panel's clean and
+    * embedding dimensionality: 40·k (the BENCH_NOTES r17 d=768
+    * panel's operating point — recall@10 ≥ 0.9995 on the panel's clean and
     * noisy arms at 256 bits). Callers with adversarial near-ties
     * (the panel's hardest arm read 0.650) should raise the
     * multiplier or the plane count, not skip the rerank. */

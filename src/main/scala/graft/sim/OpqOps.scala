@@ -34,9 +34,9 @@ import org.apache.spark.sql.functions._
   * Apply is the fused [[graft.functions.PermuteArray]] gather —
   * narrow, constant codegen size at any d. L1 and cosine are
   * permutation-invariant, so exact ground truths computed on the
-  * unpermuted corpus remain valid for permuted-space search
-  * ([[graft.tools.RecallSweep]] uses exactly this to measure the
-  * recall gain).
+  * unpermuted corpus remain valid for permuted-space search (the
+  * recall sweeps recorded in BENCH_NOTES, "ANN recall@10 sweep" and
+  * "full-family recall@10", used exactly this to measure the gain).
   *
   * Reference scope: the reference pipeline (a flux-tower ETL) has no
   * ANN operator; this extends the quantizer tier ([[PqOps]],

@@ -113,9 +113,13 @@ object CsiXml {
   }
 
   /** Reads a CSIXML file, directory or glob, one file per task, with
-    * the first listed file's head (parsed on the driver, so the read
-    * runs no Spark job) as the [[TableMeta]]. Every file's <fields>
-    * must match that head (D7), else its reader throws naming it. */
-  def read(spark: SparkSession, path: String): Parsed =
-    Parsed(spark.read.format("csixml").load(path), probeMeta(CsiXmlV2.probe(path)))
+    * the first listed file's head (parsed once, on the driver, so the
+    * read runs no Spark job) as the [[TableMeta]] and as the scan's
+    * declared schema. Every file's <fields> must match that head (D7),
+    * else its reader throws naming it. */
+  def read(spark: SparkSession, path: String): Parsed = {
+    val doc = CsiXmlV2.probe(path)
+    Parsed(spark.read.format("csixml").schema(CsiXmlV2.schema(doc)).load(path),
+      probeMeta(doc))
+  }
 }

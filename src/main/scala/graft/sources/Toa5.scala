@@ -80,7 +80,8 @@ object Toa5 {
     * `*.dat` as the last path element) of header-identical files
     * through the logger-file scan seam
     * ([[graft.sources.v2.Toa5DataSource]]), with the first file's
-    * header as the [[TableMeta]]. Building the frame runs no Spark job.
+    * header, probed once, as the [[TableMeta]] and as the scan's
+    * declared schema. Building the frame runs no Spark job.
     *
     * Produces the conditioned frame: DATETIME built (F27), unparseable
     * timestamps dropped (D4), value columns coerced (D3), every file's
@@ -88,8 +89,11 @@ object Toa5 {
     * separate operators (TimeSeriesOps) — same separation as the
     * reference's FileHandler vs file_io.
     */
-  def read(spark: SparkSession, path: String): Parsed =
-    Parsed(spark.read.format("toa5").load(path), Toa5V2.probe(path)._2)
+  def read(spark: SparkSession, path: String): Parsed = {
+    val header = Toa5V2.probe(path)
+    Parsed(spark.read.format("toa5").schema(Toa5V2.schema(header)).load(path),
+      header._2)
+  }
 
   /** K1/K2 writer: byte-stable single-file TOA5 output — header block
     * then body rows, QUOTE_NONNUMERIC quoting, NA token, timestamp as

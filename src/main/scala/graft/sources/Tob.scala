@@ -549,9 +549,13 @@ object Tob {
 
   /** Reads a file, a directory or a glob leaf of TOB files through
     * the logger-file scan seam ([[graft.sources.v2.TobDataSource]]),
-    * with the first file's header as the [[TableMeta]]. Planning reads
-    * headers only and runs no Spark job; each split's reader rejects a
-    * file whose header differs from the first. */
-  def read(spark: SparkSession, path: String): Parsed =
-    Parsed(spark.read.format("tob").load(path), tableMeta(TobV2.probe(path)._1))
+    * with the first file's header, probed once, as the [[TableMeta]]
+    * and as the scan's declared schema. Planning reads headers only
+    * and runs no Spark job; each split's reader rejects a file whose
+    * header differs from the first. */
+  def read(spark: SparkSession, path: String): Parsed = {
+    val header = TobV2.probe(path)
+    Parsed(spark.read.format("tob").schema(TobV2.schema(header)).load(path),
+      tableMeta(header._1))
+  }
 }

@@ -43,6 +43,25 @@ class L1PipelineSpec extends SparkSpec {
     assert(out.meta.variableNames == Seq("Ta"))
   }
 
+  test("condition plans one timestamp-keyed aggregate: D2 subsumes D1") {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    val df = Seq(
+      (ts("2024-01-01 00:30:00"), 1.0, 9.9),
+      (ts("2024-01-01 00:30:00"), 1.0, 9.9),
+      (ts("2024-01-01 01:30:00"), 3.0, 9.9)
+    ).toDF("DATETIME", "Ta_site", "junk")
+    val out = L1Pipeline.condition(
+      Conditioned(df, meta(("Ta_site", "degC"), ("junk", ""))),
+      "DATETIME", 1800, Map("Ta_site" -> "Ta"))
+    val aggs = out.df.queryExecution.optimizedPlan.collect { case a: Aggregate => a }
+    // the other aggregate is regularize's global min/max grid bounds
+    val keyed = aggs.filter(_.groupingExpressions.nonEmpty)
+    assert(keyed.size == 1, aggs.mkString("\n"))
+    assert(keyed.head.groupingExpressions.flatMap(_.references.map(_.name)) ==
+      Seq("DATETIME"))
+    assert(out.df.count() == 3)
+  }
+
   test("mergeOnTime full-outer aligns sources (J3)") {
     val a = Conditioned(Seq((ts("2024-01-01 00:30:00"), 1.0))
       .toDF("DATETIME", "Ta"), meta(("Ta", "degC")))

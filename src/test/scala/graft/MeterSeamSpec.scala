@@ -24,7 +24,7 @@ class MeterSeamSpec extends AnyFunSuite {
 
   test("the filter sees the seam, the tools and the specs") {
     val names = files.map(_.toString.replace('\\', '/'))
-    Seq("graft/tools/HotKeyCapSmoke.scala", "graft/FastDataSpec.scala",
+    Seq("graft/tools/TextSmokes.scala", "graft/FastDataSpec.scala",
       "graft/obs/Meter.scala").foreach(n =>
       assert(names.exists(_.endsWith(n)), n))
   }

@@ -49,6 +49,17 @@ class ReaderSeamSpec extends AnyFunSuite {
       assert(containing(scalaFiles("src"), needle) == Seq(Base), needle)
   }
 
+  test("each logger read declares its probed schema, so it probes once") {
+    for (f <- Seq("Toa5.scala", "Tob.scala", "CsiXml.scala")) {
+      val text = Files.readString(Paths.get("src/main/scala/graft/sources", f))
+      val at = text.indexOf("def read(spark: SparkSession")
+      assert(at >= 0, f)
+      val body = text.substring(at, text.indexOf("\n  }", at))
+      val (schema, load) = (body.indexOf(".schema("), body.indexOf(".load("))
+      assert(schema >= 0 && load > schema, s"$f: $body")
+    }
+  }
+
   test("no file under src names the retired span-pruning option") {
     assert(containing(scalaFiles("src"), "span" + "Pruning").isEmpty)
   }
